@@ -26,7 +26,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
+    val runs = graft.core.Knobs.int("SPARK_GRAFT_RUNS", default = 3, min = 1)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     // 1-minute load average at start: timings on a co-tenant machine can
     // double with zero code change, so the JSON self-identifies busy runs
@@ -67,8 +67,8 @@ object Bench {
     // until other-process CPU drops below the threshold. Default budget 0 =
     // never wait (dev loop); a certification run sets SPARK_GRAFT_IDLE_WAIT_S
     // so a co-tenant burst delays the measurement instead of poisoning it.
-    val maxExt = sys.env.getOrElse("SPARK_GRAFT_MAX_EXT_CPUS", "2.0").toDouble
-    var idleWaitBudgetMs = sys.env.getOrElse("SPARK_GRAFT_IDLE_WAIT_S", "0").toLong * 1000L
+    val maxExt = graft.core.Knobs.double("SPARK_GRAFT_MAX_EXT_CPUS", default = 2.0, min = 0.0)
+    var idleWaitBudgetMs = graft.core.Knobs.long("SPARK_GRAFT_IDLE_WAIT_S", default = 0L, min = 0L) * 1000L
     def awaitIdle(): Double = {
       var ext = extBusyCores()
       while (ext >= 0 && ext > maxExt && idleWaitBudgetMs > 0) {

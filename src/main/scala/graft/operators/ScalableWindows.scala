@@ -60,8 +60,8 @@ object ScalableWindows {
     * and far under Spark's 8 GB / 512 M-row hard cap — while any sanely
     * sized deployment (chunkWidth 1-10 M ids) stays under it up to
     * ~10^13 input rows. Env-overridable for experiments. */
-  val MaxBroadcastCarryRows: Long =
-    sys.env.get("GRAFT_MAX_BROADCAST_CARRY_ROWS").map(_.toLong).getOrElse(2000000L)
+  lazy val MaxBroadcastCarryRows: Long =
+    graft.core.Knobs.long("GRAFT_MAX_BROADCAST_CARRY_ROWS", default = 2000000L, min = 0L)
 
   /** Materialize the model-sized carry table and pick the join strategy
     * from its MEASURED size: persist + count (the aggregate runs exactly

@@ -21,6 +21,24 @@ import org.apache.spark.sql.functions._
   */
 object SketchQueries {
 
+  /** q_approx_distinct over any frame with `event_type` and `user_id`. The
+    * two aggregates are joined null-safely (`<=>`): a NULL event_type is a
+    * group of its own, as in the oracle's `GROUP BY 1`, and a plain
+    * equi-join would drop it. The bound is checked without a division, so
+    * a group whose user_ids are all NULL (exact count 0) passes instead of
+    * dividing by zero. */
+  private[queries] def approxDistinct(ev: DataFrame): DataFrame = {
+    val sketch = ev.groupBy(col("event_type"))
+      .agg(approx_count_distinct(col("user_id"), 0.01).as("approx_users"),
+        count(lit(1)).as("n"))
+    val exact = ev.groupBy(col("event_type").as("exact_type"))
+      .agg(countDistinct(col("user_id")).as("exact_users"))
+    sketch.join(exact, col("event_type") <=> col("exact_type"))
+      .select(col("event_type"), col("exact_users"), col("n"),
+        (abs(col("approx_users") - col("exact_users")).cast("double") <=
+          col("exact_users") * 0.05).as("approx_ok"))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // HLL++ distinct users per event type at 1% target rsd. The sketch
@@ -38,18 +56,7 @@ object SketchQueries {
     // event_type per task — and the join side is |event_type| rows
     // (broadcast). Emitted values are identical: HLL register merge is
     // order-free, so the sketch estimate is the same either way.
-    "q_approx_distinct" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val sketch = ev.groupBy(col("event_type"))
-        .agg(approx_count_distinct(col("user_id"), 0.01).as("approx_users"),
-          count(lit(1)).as("n"))
-      val exact = ev.groupBy(col("event_type"))
-        .agg(countDistinct(col("user_id")).as("exact_users"))
-      sketch.join(exact, "event_type")
-        .select(col("event_type"), col("exact_users"), col("n"),
-          (abs(col("approx_users") - col("exact_users")).cast("double") /
-            col("exact_users") <= 0.05).as("approx_ok"))
-    }),
+    "q_approx_distinct" -> ((s, dir) => approxDistinct(Tables.events(s, dir))),
 
     // GK quantile summary: p50/p95/p99 of `value` per event type at
     // accuracy 10000 (guarantee: some element with rank within n/10000 of

@@ -2,14 +2,77 @@ package graft.queries
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated parquet testdata (see TESTDATA.md). */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+
+  /** Read `$sfDir/$name.parquet` with a schema inferred once per file
+    * version. A bare `spark.read.parquet` runs a one-task Spark job to read
+    * the footers on EVERY call; a catalogue query reading four tables paid
+    * four of them before it ran. Here the inferred schema is kept in a
+    * process-wide cache and later reads pass it to `spark.read.schema`.
+    *
+    * The cache key is the qualified path, the (path, length, modification
+    * time) of every leaf file under it, and the session values of the confs
+    * parquet inference reads ([[InferenceConfs]]): rewriting the table or
+    * flipping one of those confs infers again. The cache holds only
+    * `StructType`s, one per path. Each call still builds a fresh relation,
+    * with its own file listing and fresh attribute ids, so two calls can be
+    * self-joined and no relation keeps a session alive. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+  }
+
+  /** The session confs that change what parquet schema inference returns. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles")
+
+  private final case class SchemaVersion(files: Seq[(String, Long, Long)], confs: Seq[Option[String]])
+
+  // qualified path -> (the version the schema was inferred at, the schema)
+  private val schemaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (SchemaVersion, StructType)]()
+
+  /** The parquet schema `spark.read.parquet(path)` would infer, from the
+    * cache when the path's files and the inference confs are unchanged. A
+    * path with no files is not cached: Spark's own read reports it. */
+  private def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files =
+      try {
+        val it = fs.listFiles(p, true)
+        val b = Seq.newBuilder[(String, Long, Long)]
+        while (it.hasNext) {
+          val f = it.next()
+          b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+        }
+        b.result().sorted
+      } catch { case _: java.io.FileNotFoundException => Nil }
+    if (files.isEmpty) spark.read.parquet(path).schema
+    else {
+      val key = fs.makeQualified(p).toString
+      val version = SchemaVersion(files, InferenceConfs.map(spark.conf.getOption))
+      val hit = schemaCache.get(key)
+      if (hit != null && hit._1 == version) hit._2
+      else {
+        val schema = spark.read.parquet(path).schema
+        schemaCache.put(key, (version, schema))
+        schema
+      }
+    }
+  }
 
   /** `events.ts` has shipped in two physical parquet encodings across
     * driver rounds, and every downstream operator (watermarks above all —
@@ -49,7 +112,7 @@ object Tables {
   // table accessor must not create a fresh temp dir / batch scan / conf
   // mutation per invocation (the bench calls it 3+ times per round)
   private val streamEventsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.sql.types.StructType)]()
+    String, (String, StructType)]()
 
   /** The events table replayed through Structured Streaming: `readStream`
     * over the same parquet with the batch read's schema (and the same
@@ -70,14 +133,14 @@ object Tables {
       val d = graft.core.TempDirs.create("graft_events_src_")
       java.nio.file.Files.createSymbolicLink(
         d.resolve("events.parquet"), java.nio.file.Paths.get(path))
-      (d.toString, spark.read.parquet(path).schema)
+      (d.toString, parquetSchema(spark, path))
     })
     val raw = spark.readStream.schema(schema).parquet(dir)
     normalizeTs(schema("ts").dataType)(raw)
   }
 
   private val chunkedCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.sql.types.StructType)]()
+    String, (String, StructType)]()
 
   /** The events table split into (at most) `nChunks` time-contiguous
     * parquet files with strictly increasing mtimes, replayed with
@@ -109,9 +172,10 @@ object Tables {
   }
 
   private def chunkedEventsDir(spark: SparkSession, sfDir: String,
-      nChunks: Int): (String, org.apache.spark.sql.types.StructType) =
+      nChunks: Int): (String, StructType) =
     chunkedCache.computeIfAbsent(s"$sfDir#$nChunks", { _ =>
-      val ev = events(spark, sfDir).withColumn("__us", unix_micros(col("ts")))
+      val normalized = events(spark, sfDir)
+      val ev = normalized.withColumn("__us", unix_micros(col("ts")))
       val cuts = ev.stat
         .approxQuantile("__us", (1 until nChunks).map(_.toDouble / nChunks).toArray, 0.001)
         .map(_.toLong).distinct.sorted
@@ -130,11 +194,11 @@ object Tables {
         java.nio.file.Files.setLastModifiedTime(target,
           java.nio.file.attribute.FileTime.fromMillis(base + i * 10000L))
       }
-      (d.toString, events(spark, sfDir).schema)
+      (d.toString, normalized.schema)
     })
 
   private val flushChunkedCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.sql.types.StructType)]()
+    String, (String, StructType)]()
 
   /** [[streamEventsChunked]] plus a FLUSH SENTINEL: a final single-event
     * micro-batch stamped 1 hour past max(ts) with `event_id = -1`. A
@@ -192,7 +256,7 @@ object Tables {
   }
 
   private val docsChunkedCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.sql.types.StructType)]()
+    String, (String, StructType)]()
 
   /** The documents table split into (at most) `nChunks` doc_id-contiguous
     * parquet files with strictly increasing mtimes, replayed with
@@ -228,7 +292,7 @@ object Tables {
     * FileStreamSource order). Shared by [[streamDocsChunked]] and gates
     * that replay a DERIVED frame (e.g. a CDC changeset) incrementally. */
   private[queries] def writeChunkedReplay(df: DataFrame, keyCol: String, nChunks: Int,
-      prefix: String): (String, org.apache.spark.sql.types.StructType) = {
+      prefix: String): (String, StructType) = {
     val cuts = df.stat
       .approxQuantile(keyCol, (1 until nChunks).map(_.toDouble / nChunks).toArray, 0.001)
       .map(_.toLong).distinct.sorted

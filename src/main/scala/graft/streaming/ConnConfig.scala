@@ -15,7 +15,7 @@ object ConnConfig {
   private def read(env: Map[String, String], side: String): Conn = Conn(
     kind = env.getOrElse(s"GRAFT_${side}_TYPE", "socket").toLowerCase,
     host = env.getOrElse(s"GRAFT_${side}_HOST", "localhost"),
-    port = env.getOrElse(s"GRAFT_${side}_PORT", "9001").toInt,
+    port = graft.core.Knobs.int(s"GRAFT_${side}_PORT", default = 9001, min = 0, env),
     topic = env.getOrElse(s"GRAFT_${side}_TOPIC", "graft"))
 
   def ingress(env: Map[String, String] = sys.env): Conn = read(env, "INGRESS")

@@ -18,8 +18,8 @@ object GateTuning {
     * shape — multiple stores, keys hash-routed between them) at half the
     * per-batch commit tax of the previous 4. 1 would be cheaper still but
     * would stop demonstrating sharded state. */
-  val statePartitions: Int =
-    sys.env.get("GRAFT_STREAM_STATE_PARTITIONS").map(_.toInt).getOrElse(2)
+  lazy val statePartitions: Int =
+    graft.core.Knobs.int("GRAFT_STREAM_STATE_PARTITIONS", default = 2, min = 1)
 
   /** The same value as the string `conf.set` wants. */
   def statePartitionsStr: String = statePartitions.toString

@@ -31,6 +31,18 @@ class SketchesSpec extends SparkSuite {
     gated.foreach(r => assert(r.getBoolean(3), s"approx_ok false for ${r.getString(0)}"))
   }
 
+  test("q_approx_distinct keeps NULL-key and all-NULL-user groups, as the oracle's GROUP BY does") {
+    import spark.implicits._
+    val ev = Seq[(Option[String], Option[Long])](
+      (Some("click"), Some(1L)), (Some("click"), Some(2L)), (Some("view"), Some(1L)),
+      (None, Some(1L)), (None, Some(3L)), (None, Some(3L)),
+      (Some("ghost"), None), (Some("ghost"), None)).toDF("event_type", "user_id")
+    val got = SketchQueries.approxDistinct(ev).collect()
+      .map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(2), r.getBoolean(3))).toSet
+    assert(got == Set((Some("click"), 2L, 2L, true), (Some("view"), 1L, 1L, true),
+      (None, 2L, 3L, true), (Some("ghost"), 0L, 2L, true)))
+  }
+
   test("GK quantiles within the rank-error guarantee of exact quantiles; query bounds hold") {
     val got = Tables.events(spark, sfDir)
       .groupBy(col("event_type"))
