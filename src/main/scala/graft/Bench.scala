@@ -23,11 +23,20 @@ import org.apache.spark.sql.SparkSession
   *    machine-detectable next to the numbers it would distort.
   */
 object Bench {
+  /** The artifact a full run writes and reads its retry priors from:
+    * `bench.json` on the whole host, `bench_c<cpus>.json` when
+    * SPARK_GRAFT_CPUS is below the host's cpus — a run pinned to fewer
+    * cores must not overwrite the whole-host priors, nor be judged by
+    * them. A non-numeric SPARK_GRAFT_CPUS counts as the whole host. */
+  def benchFile(cpus: String, hostCpus: Int): String =
+    cpus.toIntOption.filter(_ < hostCpus).fold("bench.json")(c => s"bench_c$c.json")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = graft.core.Knobs.int("SPARK_GRAFT_RUNS", default = 3, min = 1)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+    val ownFile = benchFile(cpus, Runtime.getRuntime.availableProcessors())
     // 1-minute load average at start: timings on a co-tenant machine can
     // double with zero code change, so the JSON self-identifies busy runs
     // (compare load_before/load_after against host_cpus)
@@ -184,7 +193,7 @@ object Bench {
     // co-tenant load inflated a handful of queries 2-5x with zero code
     // change; a same-process re-measurement separates "machine was busy"
     // from a real regression without a human in the loop. Primary source is
-    // our own bench.json (the previous full run's complete line, committed
+    // our own `benchFile` (the previous full run's complete line, committed
     // each round); the driver-written BENCH_r*.json is a wrapper whose
     // "tail" field truncates the queries map, so it is only a fallback —
     // parsing it found ZERO priors in round 9 and the retry silently
@@ -217,7 +226,7 @@ object Bench {
       try parsePriors(java.nio.file.Files.readString(p))
       catch { case _: Throwable => Map.empty }
     val prior: Map[String, Double] = {
-      val own = readPriors(java.nio.file.Paths.get("bench.json"))
+      val own = readPriors(java.nio.file.Paths.get(ownFile))
       if (own.nonEmpty) own
       else {
         val files = Option(new java.io.File(".").listFiles(
@@ -431,7 +440,7 @@ object Bench {
     // parsePriors (and any per-query consumer) must keep reading the full
     // artifact, never mistake this summary for a 0-query run.
     val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (only.isDefined) "bench_dev.json" else "bench.json")
+      if (only.isDefined) "bench_dev.json" else ownFile)
     val summary = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n":${ok.size},"n_errors":${errors.size},"sf":"$sfDir","runs":$runs,"force":"$force","harness":"$harness","cpu_probe_ms":$cpuProbe,"io_probe_ms":$ioProbe,"canary_start":${canaryJson(canaryStart)},"canary_end":${canaryJson(canaryEnd)},"queries_file":"$benchOut"}"""
     println(summary)
     // also land the line on disk: log-capture pipelines truncate long stdout

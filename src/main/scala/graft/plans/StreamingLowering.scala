@@ -7,11 +7,25 @@ import graft.core.Event
 
 /** Lower a [[StreamGraph]] onto Structured Streaming. The reference's
   * program is ONE totally-ordered stream consumed by a single-threaded
-  * interpreter (`Nodes.hs`); the streaming equivalent keeps the stateful
-  * operators' state in a single `flatMapGroupsWithState` group (constant
-  * key), processing each micro-batch in event-time order — the honest
-  * streaming translation of that contract. Stateless operators lower to
-  * ordinary streaming transformations and parallelize freely.
+  * interpreter (`Nodes.hs`) that pipelines its operators over one lazy
+  * list; the streaming equivalent keeps stateful state in a single
+  * `flatMapGroupsWithState` group (constant key), processing each
+  * micro-batch in event-time order — the honest streaming translation of
+  * that contract. Stateless operators lower to ordinary streaming
+  * transformations and parallelize freely.
+  *
+  * ONE STATE MACHINE PER LINEAR STATEFUL RUN. The stateful vertices
+  * (FilterAcc, Scan, Window in every lowered form) are first grouped into
+  * maximal linear runs: a chain of stateful members, possibly with
+  * stateless Map/Filter/Expand vertices between two members, where every
+  * link is the unique successor of the previous vertex and has it as its
+  * unique predecessor — so fan-out, Merge and Join end a run. Each run
+  * lowers to ONE [[statefulLower]] group whose step folds the micro-batch
+  * through the members' steps in graph order, re-sorting by
+  * `Event.orderKey` between members exactly as a member's own group would,
+  * so emitted events are bit-identical to one group per operator — minus
+  * one exchange, one stateful stage and its state-store commits per extra
+  * member and trigger. A single-operator run is the one-step case.
   *
   * Supported: Source, Map, Filter, Expand, Merge (unordered union —
   * downstream event-time logic re-imposes order, matching SURVEY §2.1's
@@ -19,7 +33,7 @@ import graft.core.Event
   * sides buffered per-side in state, k-th paired with k-th), and Window
   * for the RECOGNIZED window-maker forms (`chop N`, `chopTime MS`,
   * `sliding N`, `slidingTime MS`, by param source string — the same
-  * convention [[Bandwidth]] uses): each lowers to a stateful pass whose
+  * convention [[Bandwidth]] uses): each lowers to a stateful step whose
   * state is one open window (plus, for sliding forms, the pending tail),
   * emitted exactly when the reference's lazy-list semantics would close it
   * (a window closes when the first event beyond it arrives; trailing
@@ -28,7 +42,7 @@ import graft.core.Event
   *
   * Window with an ARBITRARY window-maker closure (any
   * `Stream a -> [Stream a]`, `FunctionalProcessing.hs:74-86`) lowers via
-  * [[genericWindowLower]] — a bounded-buffer fallback that re-applies the
+  * [[genericWindowStep]] — a bounded-buffer fallback that re-applies the
   * closure to the buffered stream prefix each micro-batch and emits every
   * produced window but the last. It is faithful for prefix-monotone
   * makers (checked at runtime, directed error otherwise) at O(prefix)
@@ -44,153 +58,235 @@ object StreamingLowering {
     Encoders.tuple(Encoders.scalaInt, enc)
   implicit private val encState: Encoder[Any] = Encoders.kryo[Any]
 
+  /** Lower every vertex. A run's Dataset is built once, for its last
+    * vertex; a vertex INSIDE a run has no Dataset of its own in the
+    * lowered plan, so the returned map builds one on demand (the run's
+    * prefix up to it) instead of eagerly analysing plans nothing runs. */
   def lower(spark: SparkSession, g: StreamGraph,
             sources: Map[Int, Dataset[Event[Any]]]): Map[Int, Dataset[Event[Any]]] = {
+    val runs = statefulRuns(g)
+    // vertex id -> (its run, the index of the member it belongs to)
+    val runAt: Map[Int, (List[RunMember], Int)] = runs.flatMap { run =>
+      run.zipWithIndex.flatMap { case (m, k) => m.vertices.map(_.id -> (run, k)) }
+    }.toMap
+    def runInput(run: List[RunMember]): Int = g.predecessors(run.head.v.id).head
     var out = Map.empty[Int, Dataset[Event[Any]]]
-    // WINDOW-CHAIN FUSION: a recognized window form followed by a linear
-    // chain of stateless Filter/Map vertices absorbs the chain INTO the
-    // window state machine — each closed window runs the same closures in
-    // the same order, but inside flatMapGroupsWithState, so the window's
-    // CONTENTS never cross an operator boundary. Unfused, every window
-    // emits its full event list into the downstream Dataset (kryo
-    // round-trip per operator hop); for sliding forms that volume is
-    // O(events × window size) — measured ~230× wall-clock at 26× density
-    // on q_streaming_slidingtime, where the post-fusion output is one
-    // O(1) aggregate row per window. The streaming analog of the batch
-    // lowering's window+aggregate frame fusion; emitted values are
-    // bit-identical to the unfused pipeline by construction.
-    val fusedChains: Map[Int, List[StreamVertex]] = g.vertices.collect {
-      case v if v.op == OpWindow && recognizedWindowLower(v).isDefined =>
-        v.id -> fusionChain(g, v.id)
-    }.filter(_._2.nonEmpty).toMap
-    val absorbedToWindow: Map[Int, Int] =
-      fusedChains.flatMap { case (w, chain) => chain.map(_.id -> w) }
-    for (v <- g.topoOrder) {
-      if (absorbedToWindow.contains(v.id)) {
-        // an absorbed vertex's output IS the fused window output (the
-        // chain's closures already ran inside the state machine)
-        out += v.id -> out(absorbedToWindow(v.id))
-      } else {
-      val ins = g.predecessors(v.id).map(out)
-      def in0 = ins.head
-      val ds: Dataset[Event[Any]] = v.op match {
-        case OpSource(_) => sources(v.id)
-        case OpSink      => in0
-        case OpMap =>
-          val f = v.params.head.fn.asInstanceOf[Any => Any]
-          in0.map(e => Event(e.time, e.value.map(f)))
-        case OpFilter(_) =>
-          val p = v.params.head.fn.asInstanceOf[Any => Boolean]
-          in0.filter((e: Event[Any]) => e.value.forall(p))
-        case OpExpand =>
-          in0.flatMap { e =>
-            e.value match {
-              case Some(vs: Seq[_]) => vs.map(x => Event(e.time, Some(x: Any)))
-              case Some(other)      => Seq(Event(e.time, Some(other)))
-              case None             => Seq(Event[Any](e.time, None))
-            }
-          }
-        case OpMerge => ins.reduce(_ union _)
-        case OpFilterAcc(_) =>
-          val accfn = v.params(0).fn.asInstanceOf[(Any, Any) => Any]
-          val init = v.params(1).fn
-          val pred = v.params(2).fn.asInstanceOf[(Any, Any) => Boolean]
-          statefulLower(in0) { (events, acc0) =>
-            var acc = if (acc0 == null) init else acc0
-            val kept = events.flatMap { e =>
-              e.value match {
-                case Some(x) =>
-                  val keep = pred(x, acc); acc = accfn(acc, x)
-                  if (keep) Some(e) else None
-                case None => Some(e)
-              }
-            }
-            (kept, acc)
-          }
-        case OpScan =>
-          val f = v.params(0).fn.asInstanceOf[(Any, Any) => Any]
-          val init = v.params(1).fn
-          statefulLower(in0) { (events, acc0) =>
-            var acc = if (acc0 == null) init else acc0
-            val outEvs = events.map { e =>
-              e.value match {
-                case Some(x) => acc = f(acc, x); Event(e.time, Some(acc))
-                case None    => Event[Any](e.time, None)
-              }
-            }
-            (outEvs, acc)
-          }
-        case OpWindow =>
-          recognizedWindowLower(v) match {
-            case Some(mk) => mk(in0, chainEmit(fusedChains.getOrElse(v.id, Nil)))
-            case None =>
-              v.params.head.fn match {
-                // BoundedLookback IS a Function1 — match the declaration
-                // first or it silently takes the O(prefix) generic path
-                case bl: graft.core.BoundedLookback[_] =>
-                  boundedWindowLower(in0,
-                    bl.maker.asInstanceOf[List[Event[Any]] => List[List[Event[Any]]]],
-                    bl.maxEvents)
-                case maker: Function1[_, _] =>
-                  genericWindowLower(in0,
-                    maker.asInstanceOf[List[Event[Any]] => List[List[Event[Any]]]])
-                case _ =>
-                  throw new UnsupportedOperationException(
-                    "Window with a non-function window-maker parameter has no " +
-                      "streaming lowering (recognized param forms: 'chop N', " +
-                      "'chopTime MS', 'sliding N', 'slidingTime MS', or an " +
-                      "executable WindowMaker closure for the bounded-buffer " +
-                      "fallback); use graft.streaming.StreamingOps watermarked " +
-                      "aggregations for column-typed pipelines")
-              }
-          }
-        case OpJoin => zipJoinLower(ins(0), ins(1))
-      }
-      out += v.id -> ds
-      }
+    for (v <- g.topoOrder) runAt.get(v.id) match {
+      case Some((run, _)) =>
+        if (v.id == run.last.lastId)
+          out += v.id -> statefulLower(out(runInput(run)), run.map(_.member))
+      case None =>
+        val ins = g.predecessors(v.id).map(out)
+        out += v.id -> (v.op match {
+          case OpSource(_) => sources(v.id)
+          case OpSink      => ins.head
+          case OpMerge     => ins.reduce(_ union _)
+          case OpJoin      => zipJoinLower(ins(0), ins(1))
+          case _           => statelessLower(v, ins.head)
+        })
     }
-    out
+    lazy val all: Map[Int, Dataset[Event[Any]]] = out.withDefault { id =>
+      val (run, k) = runAt(id)
+      if (run(k).pre.exists(_.id == id)) statelessLower(g.byId(id), all(g.predecessors(id).head))
+      // a member, or a vertex of its fused chain (the chain's closures
+      // run inside the member's emit)
+      else statefulLower(all(runInput(run)), run.take(k + 1).map(_.member))
+    }
+    all
   }
 
-  /** How each recognized window window-maker form lowers, parameterized by
+  /** Map, Filter and Expand as Dataset transformations. */
+  private def statelessLower(v: StreamVertex, in: Dataset[Event[Any]]): Dataset[Event[Any]] =
+    v.op match {
+      case OpMap =>
+        val f = v.params.head.fn.asInstanceOf[Any => Any]
+        in.map(e => Event(e.time, e.value.map(f)))
+      case OpFilter(_) =>
+        val p = v.params.head.fn.asInstanceOf[Any => Boolean]
+        in.filter((e: Event[Any]) => e.value.forall(p))
+      case OpExpand => in.flatMap(expandEvent)
+      case other    => throw new IllegalStateException(s"not a stateless operator: $other")
+    }
+
+  private def expandEvent(e: Event[Any]): Seq[Event[Any]] = e.value match {
+    case Some(vs: Seq[_]) => vs.map(x => Event(e.time, Some(x: Any)))
+    case Some(other)      => Seq(Event(e.time, Some(other)))
+    case None             => Seq(Event[Any](e.time, None))
+  }
+
+  /** Map, Filter and Expand per event, with the semantics of
+    * [[statelessLower]] — their form between two members of a run. */
+  private def eventStep(v: StreamVertex): Event[Any] => IterableOnce[Event[Any]] =
+    v.op match {
+      case OpExpand => expandEvent
+      case _        => chainStep(v)
+    }
+
+  /** A stateful member's per-micro-batch step: its input events in stream
+    * order and its state slot (null before its first event) in, emitted
+    * events and the new slot out. */
+  private type Step = (IndexedSeq[Event[Any]], Any) => (IndexedSeq[Event[Any]], Any)
+
+  /** A member as [[statefulLower]] runs it: the per-event steps of the
+    * stateless vertices before it in the run, then its own step. */
+  private[plans] final case class Member(
+      pre: List[Event[Any] => IterableOnce[Event[Any]]], step: Step)
+
+  /** One member of a linear stateful run, as vertices: the stateless
+    * vertices between the previous member and it (`pre`, empty for the
+    * first), the stateful vertex, and — for a recognized window — the
+    * Filter/Map chain fused into its emit (see [[fusionChain]]). */
+  private[plans] final case class RunMember(
+      pre: List[StreamVertex], v: StreamVertex, chain: List[StreamVertex]) {
+    def vertices: List[StreamVertex] = pre ++ (v :: chain)
+    def lastId: Int = chain.lastOption.getOrElse(v).id
+    def member: Member = Member(pre.map(eventStep), stepOf(v, chain))
+  }
+
+  private def isStateful(v: StreamVertex): Boolean = v.op match {
+    case _: OpFilterAcc | OpScan | OpWindow => true
+    case _                                  => false
+  }
+
+  private def isStateless(v: StreamVertex): Boolean = v.op match {
+    case OpMap | OpExpand | _: OpFilter => true
+    case _                              => false
+  }
+
+  /** The vertex after `id` on a LINEAR link: `id`'s unique successor,
+    * provided `id` is that successor's unique predecessor. */
+  private def linearNext(g: StreamGraph, id: Int): Option[StreamVertex] =
+    g.successors(id) match {
+      case Vector(n) if g.predecessors(n) == Vector(id) => Some(g.byId(n))
+      case _                                            => None
+    }
+
+  /** The graph's maximal linear stateful runs, each in graph order. A run
+    * starts at a stateful vertex no earlier run claimed and extends over
+    * linear links: past the member's fused chain, then across stateless
+    * Map/Filter/Expand vertices, to the next stateful vertex. Stateless
+    * vertices after the last member stay outside the run. Every stateful
+    * vertex lands in exactly one run (possibly of one member). */
+  private[plans] def statefulRuns(g: StreamGraph): List[List[RunMember]] = {
+    def member(pre: List[StreamVertex], v: StreamVertex) =
+      RunMember(pre, v,
+        if (v.op == OpWindow && recognizedWindowStep(v).isDefined) fusionChain(g, v.id) else Nil)
+    val claimed = scala.collection.mutable.Set.empty[Int]
+    g.topoOrder.toList.filter(isStateful).flatMap { head =>
+      if (claimed(head.id)) None
+      else {
+        val run = List.newBuilder[RunMember]
+        var cur = member(Nil, head)
+        var extending = true
+        while (extending) {
+          run += cur
+          claimed += cur.v.id
+          val pre = List.newBuilder[StreamVertex]
+          var next = linearNext(g, cur.lastId)
+          while (next.exists(isStateless)) {
+            pre += next.get
+            next = linearNext(g, next.get.id)
+          }
+          next.filter(isStateful) match {
+            case Some(n) => cur = member(pre.result(), n)
+            case None    => extending = false
+          }
+        }
+        Some(run.result())
+      }
+    }
+  }
+
+  /** The step of one stateful vertex; a recognized window's emit runs its
+    * fused `chain`. */
+  private def stepOf(v: StreamVertex, chain: List[StreamVertex]): Step = v.op match {
+    case OpFilterAcc(_) =>
+      val accfn = v.params(0).fn.asInstanceOf[(Any, Any) => Any]
+      val init = v.params(1).fn
+      val pred = v.params(2).fn.asInstanceOf[(Any, Any) => Boolean]
+      (events, acc0) => {
+        var acc = if (acc0 == null) init else acc0
+        val kept = events.flatMap { e =>
+          e.value match {
+            case Some(x) =>
+              val keep = pred(x, acc); acc = accfn(acc, x)
+              if (keep) Some(e) else None
+            case None => Some(e)
+          }
+        }
+        (kept, acc)
+      }
+    case OpScan =>
+      val f = v.params(0).fn.asInstanceOf[(Any, Any) => Any]
+      val init = v.params(1).fn
+      (events, acc0) => {
+        var acc = if (acc0 == null) init else acc0
+        val outEvs = events.map { e =>
+          e.value match {
+            case Some(x) => acc = f(acc, x); Event(e.time, Some(acc))
+            case None    => Event[Any](e.time, None)
+          }
+        }
+        (outEvs, acc)
+      }
+    case OpWindow =>
+      recognizedWindowStep(v) match {
+        case Some(mk) => mk(chainEmit(chain))
+        case None =>
+          v.params.head.fn match {
+            // BoundedLookback IS a Function1 — match the declaration
+            // first or it silently takes the O(prefix) generic path
+            case bl: graft.core.BoundedLookback[_] =>
+              boundedWindowStep(
+                bl.maker.asInstanceOf[List[Event[Any]] => List[List[Event[Any]]]],
+                bl.maxEvents)
+            case maker: Function1[_, _] =>
+              genericWindowStep(
+                maker.asInstanceOf[List[Event[Any]] => List[List[Event[Any]]]])
+            case _ =>
+              throw new UnsupportedOperationException(
+                "Window with a non-function window-maker parameter has no " +
+                  "streaming lowering (recognized param forms: 'chop N', " +
+                  "'chopTime MS', 'sliding N', 'slidingTime MS', or an " +
+                  "executable WindowMaker closure for the bounded-buffer " +
+                  "fallback); use graft.streaming.StreamingOps watermarked " +
+                  "aggregations for column-typed pipelines")
+          }
+      }
+    case other => throw new IllegalStateException(s"not a stateful operator: $other")
+  }
+
+  /** How each recognized window window-maker form steps, parameterized by
     * the per-closed-window emit (identity, or a fused Filter/Map chain).
     * Range-checked extractors, not `forall(_.isDigit)`: an out-of-range
     * count like "chop 9999999999" must fall through to the generic/error
     * path, not throw a bare NumberFormatException. */
-  private def recognizedWindowLower(v: StreamVertex)
-      : Option[(Dataset[Event[Any]], WindowEmit) => Dataset[Event[Any]]] =
+  private def recognizedWindowStep(v: StreamVertex): Option[WindowEmit => Step] =
     v.params.head.src.trim.split("\\s+").toList match {
-      case "chop" :: AsPosInt(n) :: Nil          => Some((ds, em) => chopLower(ds, n, em))
-      case "chopTime" :: AsPosLong(ms) :: Nil    => Some((ds, em) => chopTimeLower(ds, ms, em))
-      case "sliding" :: AsPosInt(n) :: Nil       => Some((ds, em) => slidingLower(ds, n, em))
-      case "slidingTime" :: AsPosLong(ms) :: Nil => Some((ds, em) => slidingTimeLower(ds, ms, em))
+      case "chop" :: AsPosInt(n) :: Nil          => Some(chopStep(n, _))
+      case "chopTime" :: AsPosLong(ms) :: Nil    => Some(chopTimeStep(ms, _))
+      case "sliding" :: AsPosInt(n) :: Nil       => Some(slidingStep(n, _))
+      case "slidingTime" :: AsPosLong(ms) :: Nil => Some(slidingTimeStep(ms, _))
       case _                                     => None
     }
 
-  /** The maximal linear chain of stateless Filter/Map vertices strictly
-    * downstream of `wid` — each link must be the unique successor AND have
-    * the previous link as its unique predecessor (fan-out or fan-in
-    * anywhere breaks fusion: another consumer would need the unfused
-    * window contents). */
-  private def fusionChain(g: StreamGraph, wid: Int): List[StreamVertex] = {
-    val chain = List.newBuilder[StreamVertex]
-    var cur = wid
-    var continue = true
-    while (continue) {
-      continue = false
-      g.successors(cur) match {
-        case Vector(nid) if g.predecessors(nid) == Vector(cur) =>
-          val nv = g.byId(nid)
-          nv.op match {
-            case OpMap | _: OpFilter =>
-              chain += nv; cur = nid; continue = true
-            case _ => ()
-          }
-        case _ => ()
-      }
-    }
-    chain.result()
-  }
+  /** WINDOW-CHAIN FUSION: the maximal linear chain of stateless Filter/Map
+    * vertices strictly downstream of a recognized window `wid` — each link
+    * must be the unique successor AND have the previous link as its unique
+    * predecessor (fan-out or fan-in anywhere breaks fusion: another
+    * consumer would need the unfused window contents). The chain runs
+    * INSIDE the window's emit: each closed window runs the same closures in
+    * the same order, so the window's CONTENTS never cross an operator
+    * boundary. Unfused, every window emits its full event list downstream
+    * (kryo round-trip per operator hop); for sliding forms that volume is
+    * O(events × window size) — measured ~230× wall-clock at 26× density
+    * on q_streaming_slidingtime, where the post-fusion output is one O(1)
+    * aggregate row per window. Emitted values are bit-identical to the
+    * unfused pipeline by construction. */
+  private def fusionChain(g: StreamGraph, wid: Int): List[StreamVertex] =
+    Iterator.iterate(linearNext(g, wid))(_.flatMap(nv => linearNext(g, nv.id)))
+      .takeWhile(_.exists(nv => nv.op == OpMap || nv.op.isInstanceOf[OpFilter]))
+      .map(_.get).toList
 
   /** Per-closed-window emission hook for the recognized window lowerings:
     * `apply` consumes the materialized window list; `fromIterator` lets a
@@ -199,7 +295,7 @@ object StreamingLowering {
     * recognized fold can run allocation-free; `fromRange` goes one step
     * further and hands over a PRIMITIVE mirror of the window (parallel
     * `vals`/`isData` arrays built once per micro-batch by
-    * [[slidingTimeLower]]), so a recognized fold touches no Event
+    * [[slidingTimeStep]]), so a recognized fold touches no Event
     * object, no Option, no cast per element — the per-element cost drops
     * from a kryo'd-object walk to two or three flops. Defaults
     * materialize the list, so un-fused pipelines are untouched. */
@@ -264,18 +360,7 @@ object StreamingLowering {
     Set("count", "sum", "min", "max", "first", "last", "countAndSum", "stats")
 
   private[plans] def chainEmit(chain: List[StreamVertex]): WindowEmit = {
-    val steps: List[Event[Any] => Option[Event[Any]]] = chain.map { cv =>
-      cv.op match {
-        case OpMap =>
-          val f = cv.params.head.fn.asInstanceOf[Any => Any]
-          (e: Event[Any]) => Some(Event(e.time, e.value.map(f)))
-        case _: OpFilter =>
-          val p = cv.params.head.fn.asInstanceOf[Any => Boolean]
-          (e: Event[Any]) => if (e.value.forall(p)) Some(e) else None
-        case other =>
-          throw new IllegalStateException(s"unfusable operator in window chain: $other")
-      }
-    }
+    val steps = chain.map(chainStep)
     val listEmit: List[Event[Any]] => Option[Event[Any]] =
       w => steps.foldLeft(Option(windowEvent(w))) {
         case (None, _)       => None
@@ -290,6 +375,21 @@ object StreamingLowering {
         }
     }
   }
+
+  /** Map or Filter on one event, with exactly the per-operator semantics of
+    * [[statelessLower]]: Filter keeps an event iff `value.forall(p)`, Map
+    * transforms the value, time untouched. */
+  private def chainStep(cv: StreamVertex): Event[Any] => Option[Event[Any]] =
+    cv.op match {
+      case OpMap =>
+        val f = cv.params.head.fn.asInstanceOf[Any => Any]
+        e => Some(Event(e.time, e.value.map(f)))
+      case _: OpFilter =>
+        val p = cv.params.head.fn.asInstanceOf[Any => Boolean]
+        e => if (e.value.forall(p)) Some(e) else None
+      case other =>
+        throw new IllegalStateException(s"unfusable operator in window chain: $other")
+    }
 
   /** The streaming fold behind every recognized `nonEmpty`→aggregate
     * chain: one pass accumulating (n, sum, min, max, first, last) —
@@ -421,11 +521,21 @@ object StreamingLowering {
   private def badState(op: String, expected: String, got: Any, e: Throwable) =
     new IllegalStateException(
       s"incompatible streaming checkpoint state for operator '$op': expected " +
-        s"$expected, got ${got.getClass.getName} (state encoding '$StateVersion'). " +
+        s"$expected, got ${got.getClass.getName}" +
+        (got match { case xs: Seq[_] => s" of length ${xs.length}"; case _ => "" }) +
+        s" (state encoding '$StateVersion'). " +
         "The checkpoint was written by a build with a different state shape — " +
         "restart the query with a fresh checkpointLocation (streaming state is " +
         "not migrated across shape changes), and bump StateVersion in the build " +
         "that changed the shape.", e)
+
+  /** A run's state: one slot per member, in graph order (see
+    * [[statefulLower]]). The member decoders below then check each slot. */
+  private[plans] def decodeRunState(st: Any, arity: Int): Array[Any] = st match {
+    case null                                    => new Array[Any](arity)
+    case slots: List[_] if slots.length == arity => slots.toArray[Any]
+    case _ => throw badState("stateful-run", s"a List of $arity member states", st, null)
+  }
 
   private[plans] def decodeChopState(st: Any): (Int, List[Event[Any]]) =
     if (st == null) (0, Nil)
@@ -471,9 +581,8 @@ object StreamingLowering {
     * count so each event costs O(1) (a `buf :+ e` + `buf.length` formulation
     * is O(buffer) per event — O(n²) per window on this single-threaded hot
     * path). */
-  private def chopLower(ds: Dataset[Event[Any]], n: Int,
-      emit: WindowEmit): Dataset[Event[Any]] =
-    statefulLower(ds) { (events, st) =>
+  private def chopStep(n: Int, emit: WindowEmit): Step = {
+    (events, st) =>
       var (count, rev) = decodeChopState(st)
       val out = IndexedSeq.newBuilder[Event[Any]]
       events.filter(_.isData).foreach { e =>
@@ -502,13 +611,12 @@ object StreamingLowering {
     * gaps keep the faithful one-empty-per-period semantics. */
   private[plans] val MaxEmptyWindowsPerGap = 10000L
 
-  private def chopTimeLower(ds: Dataset[Event[Any]], ms: Long,
-      emit: WindowEmit): Dataset[Event[Any]] =
-    statefulLower(ds) { (events, st) =>
+  private def chopTimeStep(ms: Long, emit: WindowEmit): Step = {
+    (events, st) =>
       // Long.MinValue = "no window open yet": a -1 sentinel would re-trigger
       // initialization on every PRE-EPOCH (negative) timestamp, resetting
       // the origin forever and never closing a window. Buffer kept reversed
-      // for O(1) append (see chopLower). All arithmetic in MICROSECONDS
+      // for O(1) append (see chopStep). All arithmetic in MICROSECONDS
       // (state stores a µs origin — part of the StateVersion contract):
       // getTime's ms granularity would misplace events within 1 ms of a
       // window boundary on µs-granular streams.
@@ -539,9 +647,8 @@ object StreamingLowering {
     * of the next n events; state = the last ≤ n−1 data events, in a FIFO
     * queue with an explicit count so enqueue/dequeue are O(1) per event
     * (the window materializes O(n) only when one closes — unavoidable). */
-  private def slidingLower(ds: Dataset[Event[Any]], n: Int,
-      emit: WindowEmit): Dataset[Event[Any]] =
-    statefulLower(ds) { (events, st) =>
+  private def slidingStep(n: Int, emit: WindowEmit): Step = {
+    (events, st) =>
       var (count, buf) = decodeSlidingState(st)
       val out = IndexedSeq.newBuilder[Event[Any]]
       events.filter(_.isData).foreach { e =>
@@ -575,10 +682,9 @@ object StreamingLowering {
     * element of every window). Payloads that are not Doubles fall back
     * to the original queue-iterator path (same order, same windows —
     * the arrays are an acceleration, never a semantic). */
-  private def slidingTimeLower(ds: Dataset[Event[Any]], ms: Long,
-      emit: WindowEmit): Dataset[Event[Any]] =
-    statefulLower(ds) { (events, st) =>
-      // µs arithmetic (see chopTimeLower)
+  private def slidingTimeStep(ms: Long, emit: WindowEmit): Step = {
+    (events, st) =>
+      // µs arithmetic (see chopTimeStep)
       val msUs = ms * 1000L
       val buf = decodeSlidingTimeState(st)
       val out = IndexedSeq.newBuilder[Event[Any]]
@@ -706,10 +812,9 @@ object StreamingLowering {
     * prefix into checkpoint state — inherent to an arbitrary closure
     * (it may window any of the prefix), and the reason the recognized
     * forms keep their dedicated O(window) lowerings. */
-  private[plans] def genericWindowLower(ds: Dataset[Event[Any]],
-      maker: List[Event[Any]] => List[List[Event[Any]]],
-      maxBuffer: Int = MaxGenericWindowBufferedEvents): Dataset[Event[Any]] =
-    statefulLower(ds) { (events, st) =>
+  private def genericWindowStep(maker: List[Event[Any]] => List[List[Event[Any]]],
+      maxBuffer: Int = MaxGenericWindowBufferedEvents): Step = {
+    (events, st) =>
       var (emitted, emittedHash, lastEmitted, rev) = decodeGenericWindowState(st)
       events.foreach { e => rev = e :: rev }
       val buffered = rev.length
@@ -802,10 +907,9 @@ object StreamingLowering {
     * window) falls back to the exhaustive ≤ maxEvents+1 applications.
     * O(batch) per batch and O(maxEvents) checkpoint state either way,
     * vs the generic fallback's O(prefix) both ways. */
-  private[plans] def boundedWindowLower(ds: Dataset[Event[Any]],
-      maker: List[Event[Any]] => List[List[Event[Any]]],
-      maxEvents: Int): Dataset[Event[Any]] =
-    statefulLower(ds) { (events, st) =>
+  private def boundedWindowStep(maker: List[Event[Any]] => List[List[Event[Any]]],
+      maxEvents: Int): Step = {
+    (events, st) =>
       var rev = decodeBoundedWindowState(st) // retained suffix, reversed
       events.foreach { e => rev = e :: rev }
       val windows = maker(rev.reverse)
@@ -861,6 +965,17 @@ object StreamingLowering {
     * naming the side that fell behind. */
   private[plans] val MaxZipBufferedEvents: Int = 1000000
 
+  /** [[genericWindowStep]] and [[boundedWindowStep]] as one-member runs. */
+  private[plans] def genericWindowLower(ds: Dataset[Event[Any]],
+      maker: List[Event[Any]] => List[List[Event[Any]]],
+      maxBuffer: Int = MaxGenericWindowBufferedEvents): Dataset[Event[Any]] =
+    statefulLower(ds, List(Member(Nil, genericWindowStep(maker, maxBuffer))))
+
+  private[plans] def boundedWindowLower(ds: Dataset[Event[Any]],
+      maker: List[Event[Any]] => List[List[Event[Any]]],
+      maxEvents: Int): Dataset[Event[Any]] =
+    statefulLower(ds, List(Member(Nil, boundedWindowStep(maker, maxEvents))))
+
   /** `streamJoin` pairwise zip (FunctionalProcessing.hs:148-155): both
     * sides' data events buffered per-side in state, k-th paired with k-th,
     * output stamped from the LEFT event. State grows with the rate
@@ -871,7 +986,11 @@ object StreamingLowering {
                                   maxBuffer: Int = MaxZipBufferedEvents): Dataset[Event[Any]] = {
     val tagged = left.map(e => Event(e.time, e.value.map(v => (0, v): Any)))
       .union(right.map(e => Event(e.time, e.value.map(v => (1, v): Any))))
-    statefulLower(tagged) { (events, st) =>
+    statefulLower(tagged, List(Member(Nil, zipJoinStep(maxBuffer))))
+  }
+
+  private def zipJoinStep(maxBuffer: Int): Step = {
+    (events, st) =>
       var (lq, rq) = decodeZipJoinState(st)
       // batch arrivals collected in builders, appended to the carried
       // lists ONCE: the previous `lq = lq :+ e` per event was O(len) per
@@ -908,11 +1027,25 @@ object StreamingLowering {
       }.toIndexedSeq
       lq = lq.drop(k); rq = rq.drop(k)
       (out, (lq, rq))
-    }
   }
 
-  /** Single-group stateful pass: micro-batch events sorted by event time,
-    * folded through `step`, state carried across batches.
+  /** Checkpoint state-shape version. Every run's state is stored wrapped
+    * as `(StateVersion, payload)`; a checkpoint written by a build with a
+    * DIFFERENT state encoding (the shapes changed in round 3: List →
+    * (Int, List)/Queue) fails the unwrap match and gets a DIRECTED error
+    * naming the fix, instead of a bare ClassCastException deep in an
+    * operator. Bump the version string whenever any operator's state shape
+    * changes. (v3: chopTime's stored window origin switched from ms to µs —
+    * same Long shape, incompatible meaning. v4: generic-window state grew
+    * the last-emitted window for the exact boundary monotonicity check.
+    * v5: a linear stateful run shares one group, so the payload is the
+    * List of its members' states — see [[decodeRunState]].) */
+  private[plans] val StateVersion = "graft-state-v5"
+
+  /** The state machine of one linear stateful run (see the object
+    * header): the micro-batch's events sorted into stream order, folded
+    * through each member's step in graph order, state carried across
+    * batches as one slot per member.
     *
     * TIMED events with equal timestamps are tiebroken by a content hash of
     * the payload, so the fold order — and hence e.g. which k-th left event
@@ -922,28 +1055,23 @@ object StreamingLowering {
     * for untimed streams. Equal-time events split ACROSS micro-batch
     * boundaries still fold in batch order: that is inherent to incremental
     * consumption (a source sequence number would not fix it either without
-    * a reorder buffer). */
-  /** Checkpoint state-shape version. Every stateful operator's state is
-    * stored wrapped as `(StateVersion, payload)`; a checkpoint written by a
-    * build with a DIFFERENT state encoding (the shapes changed in round 3:
-    * List → (Int, List)/Queue) fails the unwrap match and gets a DIRECTED
-    * error naming the fix, instead of a bare ClassCastException deep in an
-    * operator. Bump the version string whenever any operator's state shape
-    * changes. (v3: chopTime's stored window origin switched from ms to µs —
-    * same Long shape, incompatible meaning. v4: generic-window state grew
-    * the last-emitted window for the exact boundary monotonicity check.) */
-  private[plans] val StateVersion = "graft-state-v4"
-
-  private def statefulLower(ds: Dataset[Event[Any]])(
-      step: (IndexedSeq[Event[Any]], Any) => (IndexedSeq[Event[Any]], Any)): Dataset[Event[Any]] =
+    * a reorder buffer).
+    *
+    * Between members, the previous member's output passes through the
+    * stateless vertices between them and is re-sorted by `Event.orderKey`
+    * — exactly what that member's own group would have done to its input —
+    * so the run emits the events a chain of one group per operator would.
+    * A member whose input is empty is not stepped (a group with no rows is
+    * not invoked) and keeps its slot. */
+  private[plans] def statefulLower(ds: Dataset[Event[Any]], members: List[Member]): Dataset[Event[Any]] = {
+    val arity = members.length
     ds.map(e => (0, e))
       .groupByKey(_._1)(Encoders.scalaInt)
       .flatMapGroupsWithState[Any, Event[Any]](OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_: Int, it: Iterator[(Int, Event[Any])], state: GroupState[Any]) =>
-          val sorted = it.map(_._2).toIndexedSeq.sortBy(Event.orderKey)
-          val acc0 = state.getOption.orNull match {
-            case null                       => null
-            case (StateVersion, payload)    => payload
+          val slots = state.getOption.orNull match {
+            case null                    => decodeRunState(null, arity)
+            case (StateVersion, payload) => decodeRunState(payload, arity)
             case other => throw new IllegalStateException(
               s"incompatible streaming checkpoint state (${other.getClass.getName}): " +
                 s"this build's state encoding is '$StateVersion'; the checkpoint was " +
@@ -951,8 +1079,20 @@ object StreamingLowering {
                 "a fresh checkpointLocation (streaming state is not migrated across " +
                 "encoding changes).")
           }
-          val (outEvs, acc) = step(sorted, acc0)
-          state.update((StateVersion, acc))
-          outEvs.iterator
+          var evs = inStreamOrder(it.map(_._2).toIndexedSeq)
+          members.iterator.zipWithIndex.foreach { case (m, i) =>
+            if (i > 0) evs = inStreamOrder(m.pre.foldLeft(evs)((xs, f) => xs.flatMap(f)))
+            if (evs.nonEmpty) {
+              val (o, s) = m.step(evs, slots(i))
+              evs = o; slots(i) = s
+            }
+          }
+          state.update((StateVersion, slots.toList))
+          evs.iterator
       }
+  }
+
+  /** Stable sort by `Event.orderKey`, each key computed once. */
+  private def inStreamOrder(evs: IndexedSeq[Event[Any]]): IndexedSeq[Event[Any]] =
+    evs.map(e => (Event.orderKey(e), e)).sortBy(_._1).map(_._2)
 }

@@ -1192,7 +1192,7 @@ object StreamQueries {
 
     // sliding(n) executed THROUGH the stateful streaming lowering: the
     // count-based sliding window's FIFO-queue state machine
-    // (StreamingLowering.slidingLower — a window emits when its n-th event
+    // (StreamingLowering.slidingStep — a window emits when its n-th event
     // arrives, the queue drops its head) fed the 4-file time-ordered
     // replay, so open windows span micro-batch boundaries and the
     // checkpointed queue carry is what's gated. Clicks only: their event

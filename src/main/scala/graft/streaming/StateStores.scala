@@ -1,6 +1,9 @@
 package graft.streaming
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path, PathFilter}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 
 /** State-store provider selection for the streaming surface.
   *
@@ -69,15 +72,21 @@ object StateStores {
     * keeps the identical write-temp-then-rename protocol but renames via
     * `File.renameTo` — no fork, atomic on POSIX — so it is the right
     * manager for local checkpoint dirs at ANY scale (the tax is per
-    * metadata write, not per row). Deployments checkpointing to HDFS/S3
-    * should keep Spark's default: set SPARK_GRAFT_CKPT_MANAGER=default
-    * (or a custom manager class name). */
+    * metadata write, not per row). It is not pinned: the session default is
+    * [[SchemeCheckpointFileManager]], which uses it for `file:` locations
+    * only and leaves HDFS/S3/… to Spark's own choice. */
   val LocalFsCheckpointManager =
     "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 
+  /** The session conf that names the checkpoint file-manager class. */
+  val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** `SPARK_GRAFT_CKPT_MANAGER`: unset → [[SchemeCheckpointFileManager]],
+    * `default` → Spark's own choice for every scheme, anything else → that
+    * manager class. */
   private[streaming] def checkpointManagerFromEnv(env: Map[String, String]): Option[String] =
     env.get("SPARK_GRAFT_CKPT_MANAGER") match {
-      case None => Some(LocalFsCheckpointManager)
+      case None => Some(classOf[SchemeCheckpointFileManager].getName)
       case Some("default") => None // Spark's own choice (FileContext-based)
       case Some(cls) => Some(cls)
     }
@@ -87,12 +96,44 @@ object StateStores {
     * when SPARK_GRAFT_STATE_STORE is unset — Spark's default applies). */
   def configure(b: SparkSession.Builder, env: Map[String, String] = sys.env)
       : SparkSession.Builder = {
-    val withCkpt = checkpointManagerFromEnv(env).fold(b)(
-      b.config("spark.sql.streaming.checkpointFileManagerClass", _))
+    val withCkpt = checkpointManagerFromEnv(env).fold(b)(b.config(CheckpointManagerKey, _))
     fromEnv(env).fold(withCkpt) { case (provider, extras) =>
       extras.foldLeft(withCkpt.config("spark.sql.streaming.stateStore.providerClass", provider)) {
         case (bb, (k, v)) => bb.config(k, v)
       }
     }
   }
+}
+
+/** Checkpoint file manager chosen by the checkpoint location's URI scheme
+  * (a path without one takes the default filesystem's): `file:` gets the
+  * FileSystem-based manager ([[StateStores.LocalFsCheckpointManager]] says
+  * why), every other scheme gets what `CheckpointFileManager.create` picks
+  * when no manager class is configured — the FileContext-based manager
+  * where the scheme has an `AbstractFileSystem`, as on HDFS. */
+final class SchemeCheckpointFileManager(path: Path, hadoopConf: Configuration)
+    extends CheckpointFileManager {
+
+  private[streaming] val delegate: CheckpointFileManager = {
+    val scheme = Option(path.toUri.getScheme)
+      .getOrElse(FileSystem.getDefaultUri(hadoopConf).getScheme)
+    if (scheme == "file") new FileSystemBasedCheckpointFileManager(path, hadoopConf)
+    else {
+      val sparkChoice = new Configuration(hadoopConf)
+      sparkChoice.unset(StateStores.CheckpointManagerKey)
+      CheckpointFileManager.create(path, sparkChoice)
+    }
+  }
+
+  def createAtomic(p: Path, overwriteIfPossible: Boolean): CheckpointFileManager.CancellableFSDataOutputStream =
+    delegate.createAtomic(p, overwriteIfPossible)
+  def open(p: Path): org.apache.hadoop.fs.FSDataInputStream = delegate.open(p)
+  def list(p: Path, filter: PathFilter): Array[org.apache.hadoop.fs.FileStatus] = delegate.list(p, filter)
+  override def list(p: Path): Array[org.apache.hadoop.fs.FileStatus] = delegate.list(p)
+  def mkdirs(p: Path): Unit = delegate.mkdirs(p)
+  def exists(p: Path): Boolean = delegate.exists(p)
+  def delete(p: Path): Unit = delegate.delete(p)
+  def isLocal: Boolean = delegate.isLocal
+  def createCheckpointDirectory(): Path = delegate.createCheckpointDirectory()
+  override def close(): Unit = delegate.close()
 }

@@ -55,25 +55,12 @@ object StreamingOps {
       .option("subscribe", topic)
       .option("startingOffsets", "earliest").load()
 
-  /** File-replay source: stream an events-shaped parquet directory (the
-    * batch testdata replayed as a stream). */
-  def fileReplaySource(spark: SparkSession, dir: String, schemaOf: DataFrame): DataFrame =
-    spark.readStream.schema(schemaOf.schema).parquet(dir)
-
   /** Tumbling event-time window aggregate (streaming `chopTime` analog;
     * epoch-aligned like the relational formulation). */
   def tumblingAgg(df: DataFrame, tsName: String, duration: String, watermark: String,
                   keys: Seq[Column], aggs: Seq[Column]): DataFrame =
     df.withWatermark(tsName, watermark)
       .groupBy(window(col(tsName), duration) +: keys: _*)
-      .agg(aggs.head, aggs.tail: _*)
-
-  /** Sliding event-time window aggregate (streaming `slidingTime`
-    * analog: overlapping windows of `duration` every `slide`). */
-  def slidingAgg(df: DataFrame, tsName: String, duration: String, slide: String,
-                 watermark: String, keys: Seq[Column], aggs: Seq[Column]): DataFrame =
-    df.withWatermark(tsName, watermark)
-      .groupBy(window(col(tsName), duration, slide) +: keys: _*)
       .agg(aggs.head, aggs.tail: _*)
 
   /** Session event-time window aggregate: per-key sessions closed by a
@@ -648,12 +635,6 @@ object StreamingOps {
       .option("kafka.bootstrap.servers", servers)
       .option("topic", topic)
       .save()
-
-  /** Write a streaming DataFrame through `foreachBatch` (the reference's
-    * arbitrary-IO sink, `Nodes.hs:119-159`). */
-  def foreachBatchSink(df: DataFrame, name: String)(f: (DataFrame, Long) => Unit) =
-    df.writeStream.queryName(name).outputMode("update")
-      .foreachBatch((batch: Dataset[org.apache.spark.sql.Row], id: Long) => f(batch.toDF(), id))
 
   /** Memory sink for tests/debug: returns the started query. */
   def memorySink(df: DataFrame, name: String, mode: String = "append") =

@@ -77,6 +77,27 @@ class CheckpointStateSpec extends AnyFunSuite {
     assert(e6.getMessage.contains("'generic-window'"))
   }
 
+  test("stateful-run state decodes to one slot per member; wrong arity or shape is directed") {
+    assert(StreamingLowering.decodeRunState(null, 2).toList == List(null, null))
+    val slots = List((3, goodEvents), Some(1.0))
+    assert(StreamingLowering.decodeRunState(slots, 2).toList == slots)
+
+    val arity = intercept[IllegalStateException] {
+      StreamingLowering.decodeRunState(slots, 3)
+    }
+    assert(arity.getMessage.contains("'stateful-run'"))
+    assert(arity.getMessage.contains("a List of 3 member states"))
+    assert(arity.getMessage.contains("of length 2"))
+    assert(arity.getMessage.contains("fresh checkpointLocation"))
+
+    // a one-operator payload from before runs shared a group
+    val shape = intercept[IllegalStateException] {
+      StreamingLowering.decodeRunState((3, goodEvents): Any, 1)
+    }
+    assert(shape.getMessage.contains("'stateful-run'"))
+    assert(shape.getMessage.contains(StreamingLowering.StateVersion))
+  }
+
   test("the error names the current state encoding version") {
     val e = intercept[IllegalStateException] {
       StreamingLowering.decodeChopState("not a tuple": Any)
