@@ -27,13 +27,13 @@ object Bench {
     * `bench.json` on the whole host, `bench_c<cpus>.json` when
     * SPARK_GRAFT_CPUS is below the host's cpus — a run pinned to fewer
     * cores must not overwrite the whole-host priors, nor be judged by
-    * them. A non-numeric SPARK_GRAFT_CPUS counts as the whole host. */
-  def benchFile(cpus: String, hostCpus: Int): String =
-    cpus.toIntOption.filter(_ < hostCpus).fold("bench.json")(c => s"bench_c$c.json")
+    * them. */
+  def benchFile(cpus: Int, hostCpus: Int): String =
+    if (cpus < hostCpus) s"bench_c$cpus.json" else "bench.json"
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus()
     val runs = graft.core.Knobs.int("SPARK_GRAFT_RUNS", default = 3, min = 1)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val ownFile = benchFile(cpus, Runtime.getRuntime.availableProcessors())
@@ -137,45 +137,7 @@ object Bench {
       math.rint(best * 1000) / 1000
     } catch { case _: Throwable => -1.0 }
     val cpuProbe = cpuProbeMs()
-    val spark = graft.streaming.StateStores.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same session timezone as Verify: otherwise a non-UTC host would
-      // benchmark different window/date groupings than were validated
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.catalyst.GraftExtensions")
-      // shuffle/spill on the same tmpfs-first scratch as checkpoints: host
-      // disk latency must not leak into query timings (see TempDirs)
-      .config("spark.local.dir", graft.core.TempDirs.sparkLocalDir())
-      .config("spark.ui.enabled", "false")
-      // ui.enabled=false does NOT stop the in-memory status stores:
-      // AppStatusListener and SQLAppStatusListener retain up to 1000
-      // executions/jobs/stages of metrics + full SparkPlanInfo trees by
-      // default. Over a multi-hundred-run bench session that is old-gen
-      // ballast that grows with every query run — measured at the 100x
-      // scale step as graded inflation of heavy entries with co-resident
-      // query count (q_dsir 11.0s isolated, 13.6s in a 5-query run,
-      // 19.5s in a 19-query run, runs=3 each). Keep only what the
-      // current query needs.
-      // The janino codegen cache holds 100 compiled units by default; a
-      // multi-query pass generates far more (each query contributes 5-15
-      // WholeStageCodegen/expression units), so round-robin passes evict
-      // and recompile EVERY unit inside every timed run — and the freshly
-      // loaded classes run interpreted until the JIT re-warms them. The
-      // thrash is invisible on small subsets (under ~100 units) and grows
-      // with co-resident query count — the graded heavy-query inflation
-      // measured at the 100x step (q_dsir 11s isolated vs 18-19s in a
-      // 19-query run). Size the cache to the whole surface.
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      .config("spark.ui.retainedDeadExecutors", "1")
-      )
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.streaming.StreamDebug.installIfRequested(spark)
+    val spark = Session.local(cpus)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     // untimed warmup: JIT/codegen + parquet reader init, so the first timed

@@ -1,21 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the formatted physical plan of named driver queries —
   * the plan-audit loop ("is the filter pushed, is the small side
   * broadcast, does codegen span the hot path"). Usage:
-  * `runMain graft.Explain <sfDir> <query> [<query> ...]` */
+  * `runMain graft.Explain <sfDir> <query> [<query> ...]`, on the session
+  * Bench times (`Session.local`, SPARK_GRAFT_CPUS threads). */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.plans.catalyst.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus())
     names.foreach { n =>
       println(s"\n===== $n =====")
       try SparkEntry.queries(n)(spark, sfDir).explain("formatted")

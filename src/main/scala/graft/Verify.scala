@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,33 +10,9 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def keep(name: String) = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_STATE_STORE=rocksdb runs the whole surface (all streaming
     // gates included) on the RocksDB provider — the 100 TB state path
-    val spark = graft.streaming.StateStores.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.catalyst.GraftExtensions")
-      // shuffle/spill on the same tmpfs-first scratch as checkpoints (see
-      // TempDirs): identical policy to Bench so the two surfaces agree
-      .config("spark.local.dir", graft.core.TempDirs.sparkLocalDir())
-      .config("spark.ui.enabled", "false")
-      // same harness hygiene as Bench (r16 finding): the janino codegen
-      // cache defaults to 100 units while the 193-query surface generates
-      // far more, so a full Verify pass otherwise recompiles every plan it
-      // revisits; the status stores retain 1000 executions of metrics +
-      // SparkPlanInfo trees as old-gen ballast. Correctness is unaffected
-      // either way — this only cuts wall-clock of the round ritual.
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      .config("spark.ui.retainedDeadExecutors", "1"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.streaming.StreamDebug.installIfRequested(spark)
+    val spark = Session.local(Session.cpus())
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -311,9 +311,6 @@ object Dedup {
       .select(col("doc_id"), fp.as("simhash"))
   }
 
-  /** Hamming distance between two 64-bit fingerprints. */
-  def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
   /** Connected components over a candidate-pair edge list — the stage that
     * turns near-duplicate PAIRS into duplicate GROUPS (one keeper per
     * group = the component's minimum id).

@@ -32,8 +32,6 @@ sealed trait StreamOperator {
     case OpSource(_)     => "Source"
     case OpSink          => "Sink"
   }
-  /** Operator comparison ignoring annotations (reference `cmpOps`). */
-  def sameKind(o: StreamOperator): Boolean = name == o.name
 }
 case object OpMap extends StreamOperator
 /** @param sel estimated selectivity (fraction of events passing) */
@@ -160,13 +158,6 @@ final case class StreamGraph(vertices: Vector[StreamVertex], edges: Vector[(Int,
   def show: String =
     vertexList.map(v => s"${v.id}: ${v.op} ${v.params.mkString("[", ", ", "]")} :: ${v.inType} -> ${v.outType} @${v.serviceRate}")
       .mkString("\n") + "\nedges: " + edges.sorted.mkString(", ")
-
-  /** GraphViz dot output (reference VizGraph module). */
-  def toDot: String = {
-    val ns = vertexList.map(v => s"""  n${v.id} [label="${v.op.name}\\n${v.params.map(_.src).mkString(",").take(40)}"];""")
-    val es = edges.sorted.map { case (a, b) => s"  n$a -> n$b;" }
-    (Seq("digraph streamgraph {") ++ ns ++ es ++ Seq("}")).mkString("\n")
-  }
 }
 
 object StreamGraph {
@@ -176,7 +167,4 @@ object StreamGraph {
     StreamGraph(vs.toVector, vs.toVector.sliding(2).collect {
       case Vector(a, b) => (a.id, b.id)
     }.toVector)
-
-  def overlayAll(gs: Seq[StreamGraph]): StreamGraph =
-    gs.reduceLeft(_ overlay _)
 }

@@ -2,6 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
+
+import graft.streaming.{Gate, GateTuning}
 
 /** Sketch aggregates — the scale path for cardinality and quantile
   * questions a training-data pipeline asks of a 100 TB corpus ("how many
@@ -165,27 +168,17 @@ object SketchQueries {
         .agg(mg(col("word")).as("mg"), count(lit(1)).as("total"))
       val exact = toWords(Tables.documents(s, dir))
         .groupBy(col("word")).agg(count(lit(1)).as("n"))
-      val tmp = graft.core.TempDirs.create("graft_stream_freq_").toAbsolutePath
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", graft.streaming.GateTuning.statePartitionsStr)
-        summary.writeStream.outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            val sm = b.select(col("total"),
-              explode(col("mg")).as(Seq("word", "mg_est")))
-            exact.join(broadcast(sm), "word")
-              .filter(col("n") > col("total") / (k + 1))
-              .select(col("word"), col("n"), col("total"),
-                (col("mg_est") <= col("n") &&
-                  col("n") - col("mg_est") <= col("total") / (k + 1)).as("mg_ok"))
-              .write.mode("overwrite").parquet(s"$tmp/result")
-          }
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/result")
+      val gateDir = graft.core.TempDirs.create("graft_stream_freq_").toAbsolutePath
+      Gate.run(summary, OutputMode.Complete, gateDir, GateTuning.statePartitions) { (b, batchId) =>
+        val sm = b.select(col("total"), explode(col("mg")).as(Seq("word", "mg_est")))
+        val verified = exact.join(broadcast(sm), "word")
+          .filter(col("n") > col("total") / (k + 1))
+          .select(col("word"), col("n"), col("total"),
+            (col("mg_est") <= col("n") &&
+              col("n") - col("mg_est") <= col("total") / (k + 1)).as("mg_ok"))
+        Gate.writeBatch(OutputMode.Complete, gateDir)(verified, batchId)
+      }
+      Gate.readBack(s, gateDir)
     })
   )
 

@@ -3,9 +3,11 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.operators.Relational
 import graft.operators.Relational.roundp
+import graft.streaming.{Gate, GateTuning}
 
 /** The reference's stream-operator semantics expressed over the `events`
   * table (event_id, ts, user_id, event_type, value, props), each paired with
@@ -30,44 +32,6 @@ object StreamQueries {
     * tiebreaker (reference streams are totally ordered lists). */
   private val byUser = Seq(col("user_id"))
   private val inOrder = Seq(col("ts"), col("event_id"))
-
-  /** Shared harness for the driver-gated STATEFUL streaming queries: run a
-    * lowered single-state-machine stream to parquet and read it back.
-    * Pins the STREAM's shuffle partitions to 1 (the lowering is a
-    * single-group state machine — one ordered stream; at the default 32
-    * every micro-batch would create, snapshot, and commit 32 state stores,
-    * 31 forever empty). The pin is captured into the checkpoint at query
-    * start and restored immediately after, so the batch read-back gets the
-    * session default. Sink = foreachBatch append (each closed window /
-    * pair is emitted exactly once — state carries partials across
-    * micro-batches, so the appended result needs no merging). */
-  private def runLoweredToDf(s: SparkSession, stream: DataFrame, tmpPrefix: String,
-                             statePartitions: Int = 1): DataFrame = {
-    val tmp = graft.core.TempDirs.create(tmpPrefix).toAbsolutePath
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val q = try {
-      s.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-      stream.writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          b.write.mode("append").parquet(s"$tmp/result")
-        }
-        .start()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    q.awaitTermination()
-    // SPARK_GRAFT_STREAM_DEBUG=1: per-micro-batch duration breakdown on
-    // stderr (queryPlanning / addBatch / walCommit / ...) — the replay
-    // floor is scheduling overhead, and this is how it gets attributed
-    // before anyone tunes anything (see NOTES round 16)
-    if (graft.streaming.StreamDebug.requested)
-      q.recentProgress.foreach { p =>
-        System.err.println(s"[stream-debug] $tmpPrefix batch=${p.batchId} " +
-          s"rows=${p.numInputRows} durationMs=${p.durationMs}")
-      }
-    s.read.parquet(s"$tmp/result")
-  }
 
   /** The chunked events replay as a typed single stream of (ts, value)
     * events, optionally filtered to one event_type (whose timestamps are
@@ -133,7 +97,7 @@ object StreamQueries {
       val (n, sum) = e.value.get.asInstanceOf[(Long, Double)]
       (e.time.get, n, sum)
     }(Encoders.tuple(Encoders.TIMESTAMP, Encoders.scalaLong, Encoders.scalaDouble))
-    runLoweredToDf(s, typed.toDF("window_start", "n", "sum_raw"), tmpPrefix)
+    Gate.toParquet(typed.toDF("window_start", "n", "sum_raw"), OutputMode.Append, tmpPrefix, 1)
   }
 
   /** [[loweredWindowAgg]]'s four-moment sibling: Source→Window(form)→
@@ -177,8 +141,8 @@ object StreamQueries {
       (e.time.get, n, sum, mn, mx)
     }(Encoders.tuple(Encoders.TIMESTAMP, Encoders.scalaLong,
       Encoders.scalaDouble, Encoders.scalaDouble, Encoders.scalaDouble))
-    runLoweredToDf(s,
-      typed.toDF("window_start", "n", "sum_raw", "min_raw", "max_raw"), tmpPrefix)
+    Gate.toParquet(typed.toDF("window_start", "n", "sum_raw", "min_raw", "max_raw"),
+      OutputMode.Append, tmpPrefix, 1)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -272,16 +236,7 @@ object StreamQueries {
           aggs = Seq(count(lit(1)).as("n"), roundp(sum(col("value")), 2).as("sum_value")))
         .select(col("window.start").as("window_start"), col("event_type"),
           col("n"), col("sum_value"))
-      val tmp = graft.core.TempDirs.create("graft_stream_").toAbsolutePath
-      val q = agg.writeStream.outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          b.write.mode("overwrite").parquet(s"$tmp/result")
-        }
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/result")
+      Gate.toParquet(agg, OutputMode.Complete, "graft_stream_", GateTuning.statePartitions)
     }),
 
     // The KEYED stateful streaming forms — the production 100 TB path
@@ -317,8 +272,8 @@ object StreamQueries {
       val typed = scanned.flatMap { case (u, e) =>
         e.value.map { case (id, sum) => (id, u, sum) }
       }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaDouble))
-      runLoweredToDf(s, typed.toDF("event_id", "user_id", "sum_raw"),
-        "graft_stream_sbk_", statePartitions = graft.streaming.GateTuning.statePartitions)
+      Gate.toParquet(typed.toDF("event_id", "user_id", "sum_raw"),
+        OutputMode.Append, "graft_stream_sbk_", GateTuning.statePartitions)
         .select(col("event_id"), col("user_id"), roundp(col("sum_raw"), 2).as("running_sum"))
     }),
 
@@ -348,8 +303,8 @@ object StreamQueries {
       val typed = kept.flatMap { case (u, e) =>
         e.value.map { case (id, t) => (id, u, t) }
       }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.STRING))
-      runLoweredToDf(s, typed.toDF("event_id", "user_id", "event_type"),
-        "graft_stream_cbk_", statePartitions = graft.streaming.GateTuning.statePartitions)
+      Gate.toParquet(typed.toDF("event_id", "user_id", "event_type"),
+        OutputMode.Append, "graft_stream_cbk_", GateTuning.statePartitions)
     }),
 
     // Streaming as-of enrichment through StreamingOps.asofEnrichByKey:
@@ -383,9 +338,9 @@ object StreamQueries {
         for { (p, lastOpt) <- e.value.toSeq; c <- lastOpt.toSeq }
           yield (p._2, u, p._3, p._4, c._2, c._3)
       }(Encoders.product[(Long, Long, Long, Double, Long, Long)])
-      runLoweredToDf(s,
+      Gate.toParquet(
         typed.toDF("event_id", "user_id", "p_us", "value", "click_id", "c_us"),
-        "graft_stream_asof_", statePartitions = graft.streaming.GateTuning.statePartitions)
+        OutputMode.Append, "graft_stream_asof_", GateTuning.statePartitions)
         .select(col("event_id"), col("user_id"),
           timestamp_micros(col("p_us")).as("ts"), col("value"),
           col("click_id"), timestamp_micros(col("c_us")).as("click_ts"),
@@ -445,7 +400,8 @@ object StreamQueries {
         val (id, v, _) = e.value.get.asInstanceOf[(Long, Double, Long)]
         (e.time.get, id, v)
       }(Encoders.tuple(Encoders.TIMESTAMP, Encoders.scalaLong, Encoders.scalaDouble))
-      runLoweredToDf(s, typed.toDF("ts2", "event_id", "value"), "graft_stream_cw_")
+      Gate.toParquet(typed.toDF("ts2", "event_id", "value"),
+        OutputMode.Append, "graft_stream_cw_", 1)
         // the flush sentinel (event_id -1) is the one withheld pending
         // window and never reaches the sink; the filter is defensive —
         // it must not appear in the oracle-compared output either way
@@ -467,52 +423,42 @@ object StreamQueries {
     // over batches therefore equals the BATCH q_minhash_lsh output
     // row-for-row, and the gate reuses its bit-exact XXH64 oracle.
     "q_streaming_minhash" -> ((s, dir) => {
-      val idxDir = graft.core.TempDirs.create("graft_mh_idx_").toAbsolutePath
-      val outDir = graft.core.TempDirs.create("graft_mh_out_").toAbsolutePath
-      val ckpt = graft.core.TempDirs.create("graft_mh_ckpt_").toAbsolutePath
+      val gateDir = graft.core.TempDirs.create("graft_mh_").toAbsolutePath
+      val (idxDir, outDir) = (s"$gateDir/idx", s"$gateDir/out")
       val bandSchema = "doc_id BIGINT, band_idx INT, band_hash BIGINT"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", graft.streaming.GateTuning.statePartitionsStr)
-        Tables.streamDocsChunked(s, dir)
-          .writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$ckpt/ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-            if (!b.isEmpty) {
-              val bandsNew = graft.dedup.Dedup.minhashBands(
-                graft.dedup.Dedup.minhashSignatures(b.toDF(), col("doc_id"), col("text"),
-                  n = 3, numPerms = 32),
-                numPerms = 32, rowsPerBand = 4).localCheckpoint()
-              val histDirs = (0L until batchId).map(i => s"$idxDir/b$i")
-                .filter(p => new java.io.File(p).exists())
-              val newL = bandsNew.select(col("band_idx"), col("band_hash"),
-                col("doc_id").as("id_a"))
-              val newR = bandsNew.select(col("band_idx"), col("band_hash"),
-                col("doc_id").as("id_b"))
-              val vsHistory =
-                if (histDirs.isEmpty) s.emptyDataFrame
-                    .withColumn("id_a", lit(0L)).withColumn("id_b", lit(0L))
-                    .select("id_a", "id_b").limit(0)
-                else s.read.schema(bandSchema).parquet(histDirs: _*)
-                  .select(col("band_idx"), col("band_hash"), col("doc_id").as("id_a"))
-                  .join(newR, Seq("band_idx", "band_hash"))
-                  .select("id_a", "id_b")
-              val withinBatch = newL.join(newR, Seq("band_idx", "band_hash"))
-                .filter(col("id_a") < col("id_b"))
-                .select("id_a", "id_b")
-              vsHistory.unionByName(withinBatch)
-                .select(least(col("id_a"), col("id_b")).as("id_a"),
-                  greatest(col("id_a"), col("id_b")).as("id_b"))
-                .groupBy(col("id_a"), col("id_b"))
-                .agg(count(lit(1)).as("n_shared_bands"))
-                .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-              bandsNew.write.mode("overwrite").parquet(s"$idxDir/b$batchId")
-            }
-          }
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      q.awaitTermination()
+      Gate.run(Tables.streamDocsChunked(s, dir), OutputMode.Append, gateDir,
+          GateTuning.statePartitions) { (b, batchId) =>
+        if (!b.isEmpty) {
+          val bandsNew = graft.dedup.Dedup.minhashBands(
+            graft.dedup.Dedup.minhashSignatures(b, col("doc_id"), col("text"),
+              n = 3, numPerms = 32),
+            numPerms = 32, rowsPerBand = 4).localCheckpoint()
+          val histDirs = (0L until batchId).map(i => s"$idxDir/b$i")
+            .filter(p => new java.io.File(p).exists())
+          val newL = bandsNew.select(col("band_idx"), col("band_hash"),
+            col("doc_id").as("id_a"))
+          val newR = bandsNew.select(col("band_idx"), col("band_hash"),
+            col("doc_id").as("id_b"))
+          val vsHistory =
+            if (histDirs.isEmpty) s.emptyDataFrame
+                .withColumn("id_a", lit(0L)).withColumn("id_b", lit(0L))
+                .select("id_a", "id_b").limit(0)
+            else s.read.schema(bandSchema).parquet(histDirs: _*)
+              .select(col("band_idx"), col("band_hash"), col("doc_id").as("id_a"))
+              .join(newR, Seq("band_idx", "band_hash"))
+              .select("id_a", "id_b")
+          val withinBatch = newL.join(newR, Seq("band_idx", "band_hash"))
+            .filter(col("id_a") < col("id_b"))
+            .select("id_a", "id_b")
+          vsHistory.unionByName(withinBatch)
+            .select(least(col("id_a"), col("id_b")).as("id_a"),
+              greatest(col("id_a"), col("id_b")).as("id_b"))
+            .groupBy(col("id_a"), col("id_b"))
+            .agg(count(lit(1)).as("n_shared_bands"))
+            .write.mode("overwrite").parquet(s"$outDir/b$batchId")
+          bandsNew.write.mode("overwrite").parquet(s"$idxDir/b$batchId")
+        }
+      }
       s.read.parquet(s"$outDir/b*")
     }),
 
@@ -533,25 +479,13 @@ object StreamQueries {
       val cbs = graft.similarity.Pq.seedCodebooks(e, "vec_id", "embedding", m = 4, ksub = 8)
       val (srcDir, schema) = Tables.writeChunkedReplay(
         e.filter(col("vec_id") < 50), "vec_id", nChunks = 3, "graft_knn_src_")
-      val outDir = graft.core.TempDirs.create("graft_knn_out_").toAbsolutePath
-      val ckpt = graft.core.TempDirs.create("graft_knn_ckpt_").toAbsolutePath
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", graft.streaming.GateTuning.statePartitionsStr)
-        s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$ckpt/ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-            if (!b.isEmpty) {
-              graft.similarity.Pq.adcKnn(e, b.toDF(), cbs, k = 5)
-                .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-            }
-          }
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      q.awaitTermination()
-      s.read.parquet(s"$outDir/b*")
+      val gateDir = graft.core.TempDirs.create("graft_knn_").toAbsolutePath
+      Gate.run(s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(srcDir),
+          OutputMode.Append, gateDir, GateTuning.statePartitions) { (b, batchId) =>
+        if (!b.isEmpty) Gate.writeBatch(OutputMode.Append, gateDir)(
+          graft.similarity.Pq.adcKnn(e, b, cbs, k = 5), batchId)
+      }
+      Gate.readBack(s, gateDir)
     }),
 
     // Streaming DSIR SERVING — the online face of q_dsir's data
@@ -567,32 +501,19 @@ object StreamQueries {
       val base = Tables.documents(s, dir)
       val lam = graft.text.Dsir.model(base, targetLang = "en", buckets = 256)
         .localCheckpoint()
-      val outDir = graft.core.TempDirs.create("graft_dsir_out_").toAbsolutePath
-      val ckpt = graft.core.TempDirs.create("graft_dsir_ckpt_").toAbsolutePath
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", graft.streaming.GateTuning.statePartitionsStr)
-        Tables.streamDocsChunked(s, dir)
-          .writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$ckpt/ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-            if (!b.isEmpty) {
-              // per-batch widen STAYS ON: a chunk-file micro-batch
-              // arrives as ONE partition, so scoring 1/4 of the corpus
-              // would run single-threaded — measured at 26x data, the
-              // widened batch scores in 10.0 s vs 71.9 s without (the
-              // toy-scale cost is ~1 s of exchange per gate). Callers
-              // with genuinely small or already-parallel batches can
-              // pass widenScan = false.
-              graft.text.Dsir.scoreAgainst(b.toDF(), lam, buckets = 256)
-                .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-            }
-          }
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      q.awaitTermination()
-      s.read.parquet(s"$outDir/b*")
+      val gateDir = graft.core.TempDirs.create("graft_dsir_").toAbsolutePath
+      Gate.run(Tables.streamDocsChunked(s, dir), OutputMode.Append, gateDir,
+          GateTuning.statePartitions) { (b, batchId) =>
+        // per-batch widen STAYS ON: a chunk-file micro-batch arrives as
+        // ONE partition, so scoring 1/4 of the corpus would run
+        // single-threaded — measured at 26x data, the widened batch
+        // scores in 10.0 s vs 71.9 s without (the toy-scale cost is ~1 s
+        // of exchange per gate). Callers with genuinely small or
+        // already-parallel batches can pass widenScan = false.
+        if (!b.isEmpty) Gate.writeBatch(OutputMode.Append, gateDir)(
+          graft.text.Dsir.scoreAgainst(b, lam, buckets = 256), batchId)
+      }
+      Gate.readBack(s, gateDir)
     }),
 
     // Streaming ordered funnel through StreamingOps.funnelByKey: per-user
@@ -617,8 +538,8 @@ object StreamQueries {
           Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[String]]))
       val trans = graft.streaming.StreamingOps.funnelByKey[Long](keyed,
         Seq("view", "click", "purchase"))
-      runLoweredToDf(s, trans.toDF("user_id", "stage", "us"),
-        "graft_stream_funnel_", statePartitions = graft.streaming.GateTuning.statePartitions)
+      Gate.toParquet(trans.toDF("user_id", "stage", "us"),
+        OutputMode.Append, "graft_stream_funnel_", GateTuning.statePartitions)
         .select(col("user_id"), col("stage"),
           timestamp_micros(col("us")).as("ts"))
     }),
@@ -646,23 +567,13 @@ object StreamQueries {
       // transient failure re-applies IDEMPOTENTLY — same input version,
       // same output path — instead of crashing on errorifexists.
       @volatile var lastVersion = 0L
-      val ckpt = graft.core.TempDirs.create("graft_merge_ckpt_").toAbsolutePath
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", graft.streaming.GateTuning.statePartitionsStr)
-        s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$ckpt/ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-            val cur = s.read.parquet(s"$tableDir/v$batchId")
-            graft.operators.Relational.mergeUpsert(cur, b.toDF(), "doc_id")
-              .write.mode("overwrite").parquet(s"$tableDir/v${batchId + 1}")
-            lastVersion = batchId + 1
-          }
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      q.awaitTermination()
+      Gate.run(s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(srcDir),
+          OutputMode.Append, tableDir, GateTuning.statePartitions) { (b, batchId) =>
+        val cur = s.read.parquet(s"$tableDir/v$batchId")
+        graft.operators.Relational.mergeUpsert(cur, b, "doc_id")
+          .write.mode("overwrite").parquet(s"$tableDir/v${batchId + 1}")
+        lastVersion = batchId + 1
+      }
       s.read.parquet(s"$tableDir/v$lastVersion")
     }),
 
@@ -698,8 +609,8 @@ object StreamQueries {
           (u, Event(Some(ts), Some((id, math.floor(v * 100 + 0.5).toLong))))
         }(Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[(Long, Long)]]))
       val stats = graft.streaming.StreamingOps.ewmaByKey[Long](keyed, lookback = 16)
-      runLoweredToDf(s, stats.toDF("user_id", "event_id", "cents", "ewma_num", "n_terms"),
-        "graft_stream_ewma_", statePartitions = graft.streaming.GateTuning.statePartitions)
+      Gate.toParquet(stats.toDF("user_id", "event_id", "cents", "ewma_num", "n_terms"),
+        OutputMode.Append, "graft_stream_ewma_", GateTuning.statePartitions)
         .select(col("event_id"), col("user_id"), col("cents"),
           col("ewma_num"), col("n_terms"))
     }),
@@ -718,20 +629,7 @@ object StreamQueries {
         .groupBy(col("bin"))
         .agg(count(lit(1)).as("n"), sum(col("c")).as("sum_cents"),
           min(col("c")).as("min_cents"), max(col("c")).as("max_cents"))
-      val tmp = graft.core.TempDirs.create("graft_stream_hist_").toAbsolutePath
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", graft.streaming.GateTuning.statePartitionsStr)
-        binned.writeStream.outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            b.write.mode("overwrite").parquet(s"$tmp/result")
-          }
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/result")
+      Gate.toParquet(binned, OutputMode.Complete, "graft_stream_hist_", GateTuning.statePartitions)
     }),
 
     // Streaming last-touch attribution: purchases credited at ARRIVAL to
@@ -757,8 +655,8 @@ object StreamQueries {
         }(Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[(Long, String, Long)]]))
       val credited = graft.streaming.StreamingOps.attributeByKey[Long](
         keyed, creditType = "purchase", defaultChannel = "direct")
-      runLoweredToDf(s, credited.toDF("user_id", "event_id", "channel", "cents"),
-        "graft_stream_attr_", statePartitions = graft.streaming.GateTuning.statePartitions)
+      Gate.toParquet(credited.toDF("user_id", "event_id", "channel", "cents"),
+        OutputMode.Append, "graft_stream_attr_", GateTuning.statePartitions)
         .select(col("event_id"), col("user_id"), col("channel"), col("cents"))
     }),
 
@@ -782,8 +680,8 @@ object StreamQueries {
           (u, Event(Some(ts), Some((id, math.floor(v * 100 + 0.5).toLong))))
         }(Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[(Long, Long)]]))
       val stats = graft.streaming.StreamingOps.trailingStatsByKey[Long](keyed, lookback = 10)
-      runLoweredToDf(s, stats.toDF("user_id", "event_id", "cents", "n_win", "s", "q"),
-        "graft_stream_zscore_", statePartitions = graft.streaming.GateTuning.statePartitions)
+      Gate.toParquet(stats.toDF("user_id", "event_id", "cents", "n_win", "s", "q"),
+        OutputMode.Append, "graft_stream_zscore_", GateTuning.statePartitions)
         .select(col("event_id"), col("user_id"), col("cents"),
           col("n_win"), col("s"), col("q"),
           ((col("n_win") * col("cents") - col("s"))
@@ -815,8 +713,8 @@ object StreamQueries {
         e.value.map { w => (u, e.time.get, w.length.toLong, w.sum) }
       }(Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
         Encoders.scalaLong, Encoders.scalaDouble))
-      runLoweredToDf(s, typed.toDF("user_id", "window_start", "n", "sum_raw"),
-        "graft_stream_chbk_", statePartitions = graft.streaming.GateTuning.statePartitions)
+      Gate.toParquet(typed.toDF("user_id", "window_start", "n", "sum_raw"),
+        OutputMode.Append, "graft_stream_chbk_", GateTuning.statePartitions)
         .select(col("user_id"), col("window_start"), col("n"),
           roundp(col("sum_raw"), 2).as("sum_value"))
     }),
@@ -845,8 +743,8 @@ object StreamQueries {
         e.value.map { w => (u, e.time.get, w.length.toLong, w.sum) }
       }(Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
         Encoders.scalaLong, Encoders.scalaDouble))
-      runLoweredToDf(s, typed.toDF("user_id", "window_start", "n", "sum_raw"),
-        "graft_stream_slbk_", statePartitions = graft.streaming.GateTuning.statePartitions)
+      Gate.toParquet(typed.toDF("user_id", "window_start", "n", "sum_raw"),
+        OutputMode.Append, "graft_stream_slbk_", GateTuning.statePartitions)
         .select(col("user_id"), col("window_start"), col("n"),
           roundp(col("sum_raw"), 2).as("sum_value"))
     }),
@@ -877,8 +775,8 @@ object StreamQueries {
         e.value.map { w => (u, e.time.get, w.length.toLong, w.sum) }
       }(Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
         Encoders.scalaLong, Encoders.scalaDouble))
-      runLoweredToDf(s, typed.toDF("user_id", "window_start", "n", "sum_raw"),
-        "graft_stream_stbk_", statePartitions = graft.streaming.GateTuning.statePartitions)
+      Gate.toParquet(typed.toDF("user_id", "window_start", "n", "sum_raw"),
+        OutputMode.Append, "graft_stream_stbk_", GateTuning.statePartitions)
         .select(col("user_id"), col("window_start"), col("n"),
           roundp(col("sum_raw"), 2).as("sum_value"))
     }),
@@ -893,24 +791,7 @@ object StreamQueries {
       val dedup = Tables.streamEventsChunked(s, dir)
         .select(col("user_id"), col("event_type"))
         .dropDuplicates("user_id", "event_type")
-      val tmp = graft.core.TempDirs.create("graft_stream_dd_").toAbsolutePath
-      // state stores scale with shuffle partitions and every micro-batch
-      // commits all of them: at the gate's key count a handful suffice
-      // (the pin is captured into the checkpoint at start, the batch
-      // read-back gets the session default — same move as runLoweredToDf)
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", graft.streaming.GateTuning.statePartitionsStr)
-        dedup.writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            b.write.mode("append").parquet(s"$tmp/result")
-          }
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/result")
+      Gate.toParquet(dedup, OutputMode.Append, "graft_stream_dd_", GateTuning.statePartitions)
     }),
 
     // STREAM-STREAM interval join — Structured Streaming's hardest
@@ -938,20 +819,7 @@ object StreamQueries {
           watermark = "2 hours", windowMs = 3600000L,
           keys = col("user_id") === col("p_user"))
         .select(col("click_id"), col("purchase_id"), col("user_id"))
-      val tmp = graft.core.TempDirs.create("graft_stream_ij_").toAbsolutePath
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", graft.streaming.GateTuning.statePartitionsStr)
-        joined.writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            b.write.mode("append").parquet(s"$tmp/result")
-          }
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/result")
+      Gate.toParquet(joined, OutputMode.Append, "graft_stream_ij_", GateTuning.statePartitions)
     }),
 
     // streamJoinW executed as a STREAMING aggregate→join chain (Spark 4
@@ -969,20 +837,7 @@ object StreamQueries {
         leftAggs = Seq(count(lit(1)).as("n_clicks")),
         rightAggs = Seq(roundp(sum(col("value")), 2).as("purchase_total")))
         .select(col("w.start").as("window_start"), col("n_clicks"), col("purchase_total"))
-      val tmp = graft.core.TempDirs.create("graft_stream_wj_").toAbsolutePath
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", graft.streaming.GateTuning.statePartitionsStr)
-        joined.writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            b.write.mode("append").parquet(s"$tmp/result")
-          }
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/result")
+      Gate.toParquet(joined, OutputMode.Append, "graft_stream_wj_", GateTuning.statePartitions)
     }),
 
     // streamJoinW with DIFFERING per-side window lengths — the reference's
@@ -1004,20 +859,7 @@ object StreamQueries {
         rightAggs = Seq(roundp(sum(col("value")), 2).as("purchase_total")))
         .select(col("w.start").as("window_start"), col("wl.start").as("sub_start"),
           col("n_clicks"), col("purchase_total"))
-      val tmp = graft.core.TempDirs.create("graft_stream_wj2_").toAbsolutePath
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", graft.streaming.GateTuning.statePartitionsStr)
-        joined.writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            b.write.mode("append").parquet(s"$tmp/result")
-          }
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/result")
+      Gate.toParquet(joined, OutputMode.Append, "graft_stream_wj2_", GateTuning.statePartitions)
     }),
 
     // STREAMING session windows — Spark's native session_window aggregate
@@ -1030,21 +872,7 @@ object StreamQueries {
         .agg(count(lit(1)).as("n"), roundp(sum(col("value")), 2).as("sum_value"))
         .select(col("w.start").as("session_start"), col("user_id"),
           col("n"), col("sum_value"))
-      val tmp = graft.core.TempDirs.create("graft_stream_ss_").toAbsolutePath
-      // same state-store partition pin as q_streaming_dedup
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", graft.streaming.GateTuning.statePartitionsStr)
-        agg.writeStream.outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            b.write.mode("overwrite").parquet(s"$tmp/result")
-          }
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/result")
+      Gate.toParquet(agg, OutputMode.Complete, "graft_stream_ss_", GateTuning.statePartitions)
     }),
 
     // APPEND-MODE session windows — the unbounded-stream configuration:
@@ -1064,20 +892,7 @@ object StreamQueries {
           aggs = Seq(count(lit(1)).as("n"), roundp(sum(col("value")), 2).as("sum_value")))
         .select(col("session_window.start").as("session_start"), col("user_id"),
           col("n"), col("sum_value"))
-      val tmp = graft.core.TempDirs.create("graft_stream_ssa_").toAbsolutePath
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", graft.streaming.GateTuning.statePartitionsStr)
-        agg.writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            b.write.mode("append").parquet(s"$tmp/result")
-          }
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/result")
+      Gate.toParquet(agg, OutputMode.Append, "graft_stream_ssa_", GateTuning.statePartitions)
     }),
 
     // streamJoinE as a STREAMING stream-stream join (the last §2.3
@@ -1105,20 +920,7 @@ object StreamQueries {
         // the epoch-aligned 1h window start IS date_trunc('hour', c_ts)
         .select(col("w.start").as("hour"), col("user_id"),
           col("click_id"), col("purchase_id"))
-      val tmp = graft.core.TempDirs.create("graft_stream_je_").toAbsolutePath
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", graft.streaming.GateTuning.statePartitionsStr)
-        joined.writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            b.write.mode("append").parquet(s"$tmp/result")
-          }
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/result")
+      Gate.toParquet(joined, OutputMode.Append, "graft_stream_je_", GateTuning.statePartitions)
     }),
 
     // chopTime executed THROUGH the stateful streaming lowering
@@ -1244,9 +1046,9 @@ object StreamQueries {
         (cid, pid, cv, pv)
       }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
         Encoders.scalaDouble, Encoders.scalaDouble))
-      runLoweredToDf(s,
+      Gate.toParquet(
         typed.toDF("click_id", "purchase_id", "click_value", "purchase_value"),
-        "graft_stream_zip_")
+        OutputMode.Append, "graft_stream_zip_", 1)
     }),
 
     // streamFilterAcc executed THROUGH the stateful streaming lowering:
@@ -1280,7 +1082,7 @@ object StreamQueries {
         val (id, b) = e.value.get.asInstanceOf[(Long, Long)]
         (id, b)
       }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-      runLoweredToDf(s, typed.toDF("event_id", "bucket"), "graft_stream_chg_")
+      Gate.toParquet(typed.toDF("event_id", "bucket"), OutputMode.Append, "graft_stream_chg_", 1)
     }),
 
     // streamScan executed THROUGH the stateful streaming lowering
@@ -1307,7 +1109,7 @@ object StreamQueries {
         val (id, sum) = e.value.get.asInstanceOf[(Long, Double)]
         (id, sum)
       }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble))
-      runLoweredToDf(s, typed.toDF("event_id", "sum_raw"), "graft_stream_scan_")
+      Gate.toParquet(typed.toDF("event_id", "sum_raw"), OutputMode.Append, "graft_stream_scan_", 1)
         .select(col("event_id"), roundp(col("sum_raw"), 2).as("running_sum"))
     }),
 
@@ -1348,8 +1150,8 @@ object StreamQueries {
         val (id, part, v) = e.value.get.asInstanceOf[(Long, Long, Long)]
         (id, part, v)
       }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong))
-      runLoweredToDf(s, typed.toDF("event_id", "part_idx", "part_val"),
-        "graft_stream_sl2_")
+      Gate.toParquet(typed.toDF("event_id", "part_idx", "part_val"),
+        OutputMode.Append, "graft_stream_sl2_", 1)
     }),
 
     // streamMerge (FunctionalProcessing.hs:135-144): order-preserving UNION
@@ -1534,20 +1336,7 @@ object StreamQueries {
         .groupBy(window(col("ts"), "1 hour"))                   // stepCount
         .agg(count(lit(1)).as("n_steps"))
         .select(col("window.start").as("window_start"), col("n_steps"))
-      val tmp = graft.core.TempDirs.create("graft_stream_wear_").toAbsolutePath
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", graft.streaming.GateTuning.statePartitionsStr)
-        counts.writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            b.write.mode("append").parquet(s"$tmp/result")
-          }
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/result")
+      Gate.toParquet(counts, OutputMode.Append, "graft_stream_wear_", GateTuning.statePartitions)
     })
   )
 

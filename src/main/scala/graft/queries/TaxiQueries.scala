@@ -2,10 +2,12 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.examples.Taxi
 import graft.operators.Relational
 import graft.operators.Relational.roundp
+import graft.streaming.{Gate, GateTuning}
 
 /** The reference's flagship DEBS 2015 taxi queries re-shaped onto the
   * `events` table (no taxi CSV in the testdata): trip coordinates are
@@ -148,22 +150,13 @@ object TaxiQueries {
         .agg(count(lit(1)).as("n"))
         .select(col("w.start").as("window_start"), col("s_clat"), col("s_clon"),
           col("e_clat"), col("e_clon"), col("n"))
-      val tmp = graft.core.TempDirs.create("graft_stream_taxi1_").toAbsolutePath
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", graft.streaming.GateTuning.statePartitionsStr)
-        counts.writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            Relational.topKPerGroup(b.toDF(), 10, Seq(col("window_start")),
-              Seq(col("n").desc, col("s_clat"), col("s_clon"), col("e_clat"), col("e_clon")))
-              .write.mode("append").parquet(s"$tmp/result")
-          }
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/result")
+      val gateDir = graft.core.TempDirs.create("graft_stream_taxi1_").toAbsolutePath
+      Gate.run(counts, OutputMode.Append, gateDir, GateTuning.statePartitions) { (b, batchId) =>
+        val top = Relational.topKPerGroup(b, 10, Seq(col("window_start")),
+          Seq(col("n").desc, col("s_clat"), col("s_clon"), col("e_clat"), col("e_clon")))
+        Gate.writeBatch(OutputMode.Append, gateDir)(top, batchId)
+      }
+      Gate.readBack(s, gateDir)
     }),
 
     // COMPOSED STREAMING FLAGSHIP #2 — the full Q2 pipeline (Taxi.hs:
@@ -208,20 +201,7 @@ object TaxiQueries {
         .select(col("w.start").as("window_start"), col("wl.start").as("sub_start"),
           col("clat"), col("clon"), col("n_empty"),
           roundp(col("profit"), 2).as("profit"), col("profitability"))
-      val tmp = graft.core.TempDirs.create("graft_stream_taxi2_").toAbsolutePath
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", graft.streaming.GateTuning.statePartitionsStr)
-        joined.writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            b.write.mode("append").parquet(s"$tmp/result")
-          }
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/result")
+      Gate.toParquet(joined, OutputMode.Append, "graft_stream_taxi2_", GateTuning.statePartitions)
     })
   )
 

@@ -2,9 +2,11 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.dedup.Dedup
 import graft.operators.Relational.roundp
+import graft.streaming.{Gate, GateTuning}
 import graft.text.{Bm25, TextAnalysis}
 
 /** Training-data text pipeline over `documents` (doc_id, text, lang, source,
@@ -305,76 +307,65 @@ object TextQueries {
     // are batchId-keyed and overwritten, so retried micro-batches
     // re-apply idempotently (the q_streaming_minhash discipline).
     "q_streaming_export" -> ((s, dir) => {
-      val idxDir = graft.core.TempDirs.create("graft_sexp_idx_").toAbsolutePath
-      val binDir = graft.core.TempDirs.create("graft_sexp_bin_").toAbsolutePath
-      val carryDir = graft.core.TempDirs.create("graft_sexp_carry_").toAbsolutePath
-      val ckpt = graft.core.TempDirs.create("graft_sexp_ckpt_").toAbsolutePath
+      val gateDir = graft.core.TempDirs.create("graft_sexp_").toAbsolutePath
+      val (idxDir, binDir, carryDir) = (s"$gateDir/idx", s"$gateDir/bin", s"$gateDir/carry")
       val nearNon = nearDupNonKeepers(docs(s, dir)).localCheckpoint()
       val md5Schema = "doc_id BIGINT, h STRING"
       val binSchema = "doc_id BIGINT, source STRING, n_tokens BIGINT, bin BIGINT"
       val carrySchema = "source STRING, carry BIGINT"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", graft.streaming.GateTuning.statePartitionsStr)
-        Tables.streamDocsChunked(s, dir)
-          .writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$ckpt/ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-            if (!b.isEmpty) {
-              val withH = b.toDF().select(col("doc_id"), col("source"), col("text"))
-                .withColumn("h", md5(col("text")))
-              def existing(d: java.nio.file.Path) = (0L until batchId)
-                .map(i => s"$d/b$i").filter(p => new java.io.File(p).exists())
-              val histDirs = existing(idxDir)
-              // index ALL arriving docs (a low-quality keeper still
-              // shadows later duplicates — dedup before quality, exactly
-              // the batch order), then keep only batch keepers: smallest
-              // id of their hash within the batch AND hash never seen
-              def emptyOf(ddl: String) = s.createDataFrame(
-                s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                org.apache.spark.sql.types.StructType.fromDDL(ddl))
-              val seenH =
-                if (histDirs.isEmpty) emptyOf(md5Schema).select("h")
-                else s.read.schema(md5Schema).parquet(histDirs: _*).select("h").distinct()
-              val keeper = withH.withColumn("minid", min(col("doc_id")).over(
-                  org.apache.spark.sql.expressions.Window.partitionBy(col("h"))))
-                .filter(col("doc_id") === col("minid"))
-                .join(seenH, Seq("h"), "left_anti")
-              val kept = keeper.join(nearNon, Seq("doc_id"), "left_anti")
-                .select(col("doc_id"), col("source"),
-                  TextAnalysis.tokenCount(col("text")).cast("bigint").as("n_tokens"))
-                .filter(col("n_tokens") >= 10)
-                .localCheckpoint()
-              // latest persisted carry (a batch may be empty: take the
-              // newest existing, not batchId-1)
-              val carry = existing(carryDir).lastOption
-                .map(p => s.read.schema(carrySchema).parquet(p))
-                .getOrElse(emptyOf(carrySchema))
-              val w = org.apache.spark.sql.expressions.Window
-                .partitionBy(col("source")).orderBy(col("doc_id"))
-                .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-              // budget 500 (not q_export's 2000): at sf0.01 every source
-              // totals < 2000 tokens, so a 2000 budget would leave every
-              // bin open and the closed-manifest contract untested
-              kept.join(carry, Seq("source"), "left")
-                .withColumn("bin", floor(
-                  (coalesce(sum(col("n_tokens")).over(w), lit(0L))
-                    + coalesce(col("carry"), lit(0L))) / 500).cast("long"))
-                .select("doc_id", "source", "n_tokens", "bin")
-                .write.mode("overwrite").parquet(s"$binDir/b$batchId")
-              carry.join(kept.groupBy(col("source")).agg(sum(col("n_tokens")).as("add")),
-                  Seq("source"), "full_outer")
-                .select(col("source"),
-                  (coalesce(col("carry"), lit(0L)) + coalesce(col("add"), lit(0L))).as("carry"))
-                .write.mode("overwrite").parquet(s"$carryDir/b$batchId")
-              withH.select(col("doc_id"), col("h"))
-                .write.mode("overwrite").parquet(s"$idxDir/b$batchId")
-            }
-          }
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      q.awaitTermination()
+      Gate.run(Tables.streamDocsChunked(s, dir), OutputMode.Append, gateDir,
+          GateTuning.statePartitions) { (b, batchId) =>
+        if (!b.isEmpty) {
+          val withH = b.select(col("doc_id"), col("source"), col("text"))
+            .withColumn("h", md5(col("text")))
+          def existing(d: String) = (0L until batchId)
+            .map(i => s"$d/b$i").filter(p => new java.io.File(p).exists())
+          val histDirs = existing(idxDir)
+          // index ALL arriving docs (a low-quality keeper still
+          // shadows later duplicates — dedup before quality, exactly
+          // the batch order), then keep only batch keepers: smallest
+          // id of their hash within the batch AND hash never seen
+          def emptyOf(ddl: String) = s.createDataFrame(
+            s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            org.apache.spark.sql.types.StructType.fromDDL(ddl))
+          val seenH =
+            if (histDirs.isEmpty) emptyOf(md5Schema).select("h")
+            else s.read.schema(md5Schema).parquet(histDirs: _*).select("h").distinct()
+          val keeper = withH.withColumn("minid", min(col("doc_id")).over(
+              org.apache.spark.sql.expressions.Window.partitionBy(col("h"))))
+            .filter(col("doc_id") === col("minid"))
+            .join(seenH, Seq("h"), "left_anti")
+          val kept = keeper.join(nearNon, Seq("doc_id"), "left_anti")
+            .select(col("doc_id"), col("source"),
+              TextAnalysis.tokenCount(col("text")).cast("bigint").as("n_tokens"))
+            .filter(col("n_tokens") >= 10)
+            .localCheckpoint()
+          // latest persisted carry (a batch may be empty: take the
+          // newest existing, not batchId-1)
+          val carry = existing(carryDir).lastOption
+            .map(p => s.read.schema(carrySchema).parquet(p))
+            .getOrElse(emptyOf(carrySchema))
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy(col("source")).orderBy(col("doc_id"))
+            .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
+          // budget 500 (not q_export's 2000): at sf0.01 every source
+          // totals < 2000 tokens, so a 2000 budget would leave every
+          // bin open and the closed-manifest contract untested
+          kept.join(carry, Seq("source"), "left")
+            .withColumn("bin", floor(
+              (coalesce(sum(col("n_tokens")).over(w), lit(0L))
+                + coalesce(col("carry"), lit(0L))) / 500).cast("long"))
+            .select("doc_id", "source", "n_tokens", "bin")
+            .write.mode("overwrite").parquet(s"$binDir/b$batchId")
+          carry.join(kept.groupBy(col("source")).agg(sum(col("n_tokens")).as("add")),
+              Seq("source"), "full_outer")
+            .select(col("source"),
+              (coalesce(col("carry"), lit(0L)) + coalesce(col("add"), lit(0L))).as("carry"))
+            .write.mode("overwrite").parquet(s"$carryDir/b$batchId")
+          withH.select(col("doc_id"), col("h"))
+            .write.mode("overwrite").parquet(s"$idxDir/b$batchId")
+        }
+      }
       val P = 2147483647L
       val seqs = s.read.schema(binSchema).parquet(s"$binDir/b*")
         .groupBy(col("source"), col("bin"))

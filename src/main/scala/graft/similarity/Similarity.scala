@@ -191,14 +191,12 @@ object Similarity {
   private def planeSign(plane: Int, dim: Int): Int =
     graft.functions.SrpBuckets.planeSign(plane, dim).toInt
 
-  /** Random-hyperplane (SRP) LSH bucket id: one sign bit per plane, packed
-    * into a long. Vectors with small angle collide with high probability.
-    * Each plane's projection is a `zip_with` against a literal ±1 weight
-    * array (one array op per plane) rather than `dims` scalar terms — keeps
-    * the codegen'd expression tree small at any dimensionality. */
-  def srpBucket(emb: Column, dims: Int, numPlanes: Int): Column =
-    srpBucketFrom(emb, dims, numPlanes, planeOffset = 0)
-
+  /** Random-hyperplane (SRP) LSH bucket id over planes `planeOffset` ..
+    * `planeOffset + numPlanes - 1`: one sign bit per plane, packed into a
+    * long. Vectors with small angle collide with high probability. Each
+    * plane's projection is a `zip_with` against a literal ±1 weight array
+    * (one array op per plane) rather than `dims` scalar terms — keeps the
+    * codegen'd expression tree small at any dimensionality. */
   private def srpBucketFrom(emb: Column, dims: Int, numPlanes: Int, planeOffset: Int): Column =
     (0 until numPlanes).map { p =>
       val weights = array((0 until dims).map(d => lit(planeSign(planeOffset + p, d).toDouble)): _*)

@@ -73,10 +73,6 @@ object TextAnalysis {
       .otherwise(roundp(hits.cast("double") / size(toks), 4))
   }
 
-  /** Count of punctuation characters. */
-  def punctCount(text: Column): Column =
-    length(text) - length(regexp_replace(text, "[.,;:!?'\"()]", ""))
-
   /** Count of digit characters. */
   def digitCount(text: Column): Column =
     length(text) - length(regexp_replace(text, "[0-9]", ""))

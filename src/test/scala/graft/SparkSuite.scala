@@ -9,21 +9,8 @@ trait SparkSuite extends AnyFunSuite {
 }
 
 object SparkSuite {
-  lazy val session: SparkSession = {
-    // Same extensions as the Verify/Bench sessions, so specs exercise the
-    // exact runtime surface (optimizer rule + SQL function registry), and
-    // the same streaming session policy (state-store provider env switch +
-    // local-FS checkpoint file manager — StateStores.configure), so the
-    // streaming specs cover the manager the gates actually run on.
-    val s = graft.streaming.StateStores.configure(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.plans.catalyst.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The Verify/Bench session policy (`Session.local`), so specs exercise
+    * the exact runtime surface, at 4 threads and 4 shuffle partitions
+    * whatever the host. */
+  lazy val session: SparkSession = Session.local(4)
 }

@@ -1,28 +1,25 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.rules.RuleExecutor
-import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Diagnostic main (test scope): per-micro-batch phase attribution plus
   * Catalyst rule-level timing for selected streaming gates.
   *
-  * The bench's SPARK_GRAFT_STREAM_DEBUG listener answers "WHICH phase is
-  * slow per batch" (queryPlanning / addBatch / walCommit ...); this probe
-  * additionally answers "WHICH optimizer/analyzer rules the repeated
+  * The `StreamDebug` listener, always on here, answers "WHICH phase is
+  * slow per batch" (queryPlanning / addBatch / walCommit ...) on stderr;
+  * this probe additionally answers "WHICH optimizer/analyzer rules the repeated
   * incremental planning spends its time in", via
   * `RuleExecutor.dumpTimeSpent()` deltas around each query — the
   * measurement VERDICT r19 task #1 needs before touching gate plan shapes.
   *
   * Usage: sbt "Test/runMain graft.dev.StreamPlanProbe q_streaming_join_w q_streaming_taxi_q2"
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 4),
   *      SPARK_GRAFT_PROBE_RUNS (default 2; run >1 so the second run's
   *      numbers are JIT-warm — the bench's steady state).
   */
 object StreamPlanProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // a bare integer argument sets the run count (fork env vars are awkward
     // to set per-invocation from the sbt shell); query names follow.
     // --ab=key=value runs each query `runs` times WITHOUT the conf (A) then
@@ -37,30 +34,9 @@ object StreamPlanProbe {
     }
     val qargs = args.filterNot(a => a.matches("\\d+") || a.startsWith("--ab=")).toSeq
     val names = if (qargs.nonEmpty) qargs else Seq("q_streaming_join_w")
-    val spark = graft.streaming.StateStores.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.catalyst.GraftExtensions")
-      .config("spark.local.dir", graft.core.TempDirs.sparkLocalDir())
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.ui.retainedExecutions", "8"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus())
     // per-batch phase breakdown for every stream the probe runs
-    spark.streams.addListener(new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        val ops = p.stateOperators.map { o =>
-          s"${o.operatorName}(commit=${o.commitTimeMs}ms upd+rm=${o.allUpdatesTimeMs + o.allRemovalsTimeMs}ms rows=${o.numRowsTotal})"
-        }.mkString(" ")
-        println(s"[probe-batch] batch=${p.batchId} rows=${p.numInputRows} " +
-          s"durationMs=${p.durationMs} $ops")
-      }
-    })
+    graft.streaming.StreamDebug.install(spark)
     val phases: Seq[(String, Boolean)] = abConf match {
       case Some(_) => Seq(("A", false), ("B", true))
       case None => Seq(("", false))
