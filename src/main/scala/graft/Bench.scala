@@ -215,12 +215,10 @@ object Bench {
     // default here. SPARK_GRAFT_FORCE=count keeps the old behavior for
     // comparing against pre-r14 artifacts (the JSON self-identifies via
     // the "force" field).
-    val force = sys.env.getOrElse("SPARK_GRAFT_FORCE", "noop")
     // fail fast on anything else: a typo ("Count", "cnt") would silently
     // run the noop sink while the artifact's "force" field records the
     // raw string — a self-misidentifying measurement
-    require(Set("noop", "count").contains(force),
-      s"SPARK_GRAFT_FORCE must be 'noop' or 'count', got '$force'")
+    val force = graft.core.Knobs.oneOf("SPARK_GRAFT_FORCE", "noop", Seq("noop", "count"))
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Double = {
       val t0 = System.nanoTime()

@@ -29,4 +29,25 @@ class KnobsSpec extends AnyFunSuite {
       assert(e.getMessage.contains(name) && e.getMessage.contains(s"'$value'"), e.getMessage)
     }
   }
+
+  test("a string knob takes one of its values, or any non-blank value") {
+    val allowed = Seq("noop", "count")
+    assert(Knobs.oneOf("SPARK_GRAFT_FORCE", "noop", allowed, env = Map.empty) == "noop")
+    assert(Knobs.oneOf("SPARK_GRAFT_FORCE", "noop", allowed,
+      env = Map("SPARK_GRAFT_FORCE" -> " count")) == "count")
+    assert(Knobs.string("SPARK_GRAFT_CKPT_MANAGER", env = Map.empty).isEmpty)
+    assert(Knobs.string("SPARK_GRAFT_CKPT_MANAGER",
+      env = Map("SPARK_GRAFT_CKPT_MANAGER" -> "com.example.M ")).contains("com.example.M"))
+    for (bad <- Seq("Count", "", "noop,count")) {
+      val e = intercept[IllegalArgumentException] {
+        Knobs.oneOf("SPARK_GRAFT_FORCE", "noop", allowed, env = Map("SPARK_GRAFT_FORCE" -> bad))
+      }
+      assert(e.getMessage.contains("SPARK_GRAFT_FORCE") && e.getMessage.contains(s"'$bad'") &&
+        e.getMessage.contains("'noop' or 'count'"), e.getMessage)
+    }
+    val blank = intercept[IllegalArgumentException] {
+      Knobs.string("SPARK_GRAFT_CKPT_MANAGER", env = Map("SPARK_GRAFT_CKPT_MANAGER" -> "  "))
+    }
+    assert(blank.getMessage.contains("SPARK_GRAFT_CKPT_MANAGER"), blank.getMessage)
+  }
 }

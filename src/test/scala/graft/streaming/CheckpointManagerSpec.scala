@@ -1,12 +1,24 @@
 package graft.streaming
 
+import java.io.RandomAccessFile
 import java.net.URI
+import java.nio.file.{Files, Path => JPath}
+import java.nio.file.attribute.PosixFilePermission
 
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumException, DelegateToFileSystem, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryException}
 
 import graft.SparkSuite
+import graft.core.TempDirs
 
 /** The checkpoint file-manager swap (StateStores.LocalFsCheckpointManager —
   * round 20) must be RESULT-INVISIBLE: the manager only changes how the
@@ -15,7 +27,10 @@ import graft.SparkSuite
   * every stateful gate must produce identical rows under Spark's default
   * FileContext-based manager and the FileSystem-based one the graft entry
   * points use for their tmpfs checkpoints — and that choice follows the
-  * checkpoint location's scheme. */
+  * checkpoint location's scheme. On `file:` the manager runs on
+  * [[ForkFreeLocalFileSystem]], which must write what the stock local
+  * FileSystem writes (modes, `.crc` files, checksum checks on read) and
+  * start no process doing it. */
 class CheckpointManagerSpec extends SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -57,6 +72,10 @@ class CheckpointManagerSpec extends SparkSuite {
     assert(StateStores.checkpointManagerFromEnv(
       Map("SPARK_GRAFT_CKPT_MANAGER" -> "com.example.MyManager"))
       .contains("com.example.MyManager"))
+    val e = intercept[IllegalArgumentException] {
+      StateStores.checkpointManagerFromEnv(Map("SPARK_GRAFT_CKPT_MANAGER" -> " "))
+    }
+    assert(e.getMessage.contains("SPARK_GRAFT_CKPT_MANAGER"), e.getMessage)
   }
 
   test("the session's checkpoint manager is chosen by the location's scheme") {
@@ -79,6 +98,142 @@ class CheckpointManagerSpec extends SparkSuite {
     val other = s"graftck://$dir"
     assert(picked(other).getClass == CheckpointFileManager.create(new Path(other), sparkDefault).getClass)
     assert(picked(other).getClass.getName == FileContextManager)
+  }
+
+  /** A conf that resolves every checkpoint location through
+    * [[SchemeCheckpointFileManager]]. */
+  private def schemeConf(extra: (String, String)*): Configuration = {
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    conf.set(confKey, classOf[SchemeCheckpointFileManager].getName)
+    extra.foreach { case (k, v) => conf.set(k, v) }
+    conf
+  }
+
+  private def mode(p: JPath): Set[PosixFilePermission] =
+    Files.getPosixFilePermissions(p).asScala.toSet
+
+  test("file: checkpoint files and directories get the stock local FileSystem's modes and .crc files") {
+    for (umask <- Seq(None, Some("077"))) {
+      val conf = schemeConf(umask.map("fs.permissions.umask-mode" -> _).toSeq: _*)
+      val dir = TempDirs.create("graft_ckpt_mode_")
+      val stock = FileSystem.newInstance(URI.create("file:///"), conf)
+      try {
+        // whatever `file:` resolves to without the manager (Hive's
+        // ProxyLocalFileSystem when hive-exec is on the classpath)
+        assert(stock.isInstanceOf[LocalFileSystem] && !stock.isInstanceOf[ForkFreeLocalFileSystem])
+        val manager = CheckpointFileManager.create(new Path(dir.toUri), conf)
+        manager.mkdirs(new Path(s"$dir/ckpt/a/b"))
+        val viaManager = manager.createAtomic(new Path(s"$dir/ckpt/a/b/f"), false)
+        viaManager.write("v1\n{}".getBytes)
+        viaManager.close()
+        stock.mkdirs(new Path(s"$dir/stock/a/b"), FsPermission.getDirDefault)
+        val viaStock = stock.create(new Path(s"$dir/stock/a/b/f"), true)
+        viaStock.write("v1\n{}".getBytes)
+        viaStock.close()
+        for (rel <- Seq("a", "a/b", "a/b/f", "a/b/.f.crc")) {
+          val (got, want) = (dir.resolve(s"ckpt/$rel"), dir.resolve(s"stock/$rel"))
+          assert(Files.exists(got), s"umask=$umask: $rel was not written")
+          assert(mode(got) == mode(want), s"umask=$umask: $rel")
+        }
+      } finally stock.close()
+    }
+  }
+
+  test("an overwriting createAtomic on file: replaces the file and leaves no temp file") {
+    val dir = TempDirs.create("graft_ckpt_overwrite_")
+    val manager = CheckpointFileManager.create(new Path(dir.toUri), schemeConf())
+    for (v <- Seq("first", "second")) {
+      val out = manager.createAtomic(new Path(s"$dir/1.delta"), true)
+      out.write(v.getBytes)
+      out.close()
+    }
+    assert(Using.resource(manager.open(new Path(s"$dir/1.delta")))(in => new String(in.readAllBytes())) == "second")
+    assert(Using.resource(Files.list(dir))(_.iterator.asScala.map(_.getFileName.toString).toSet) ==
+      Set("1.delta", ".1.delta.crc"))
+  }
+
+  /** Three parquet files of 100 rows each, replayed one file per
+    * micro-batch. */
+  private lazy val srcDir: String = {
+    val d = TempDirs.create("graft_ckpt_src_").resolve("data").toString
+    spark.range(0, 300).selectExpr("id", "id % 7 AS k").repartition(3).write.parquet(d)
+    d
+  }
+  private def counts(): DataFrame =
+    spark.readStream.schema("id BIGINT, k BIGINT").option("maxFilesPerTrigger", 1)
+      .parquet(srcDir).groupBy("k").count()
+
+  test("a flipped byte in an offsets-log file fails its checksum on read through the manager") {
+    val dir = TempDirs.create("graft_ckpt_crc_").toAbsolutePath
+    Gate.run(counts(), OutputMode.Complete, dir, statePartitions = 1) { (b, _) =>
+      b.write.format("noop").mode("overwrite").save()
+    }
+    val log = dir.resolve("ckpt/offsets/0")
+    assert(Files.exists(dir.resolve("ckpt/offsets/.0.crc")))
+    Using.resource(new RandomAccessFile(log.toFile, "rw")) { f =>
+      val b = f.readByte()
+      f.seek(0)
+      f.writeByte(b ^ 1)
+    }
+    val manager = CheckpointFileManager.create(new Path(s"file://$dir/ckpt/offsets"), schemeConf())
+    intercept[ChecksumException] {
+      Using.resource(manager.open(new Path(log.toUri)))(_.readAllBytes())
+    }
+  }
+
+  /** The stacks (`class.method` frames) of every process the JVM started
+    * while `body` ran, from an in-process flight recording. */
+  private def processStarts(body: => Unit): Seq[Seq[String]] = {
+    val rec = new Recording()
+    val out = Files.createTempFile("graft-ckpt-", ".jfr")
+    try {
+      rec.enable("jdk.ProcessStart").withStackTrace()
+      rec.start()
+      try body finally rec.stop()
+      rec.dump(out)
+      RecordingFile.readAllEvents(out).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(e => Option(e.getStackTrace).fold(Seq.empty[String])(
+          _.getFrames.asScala.toSeq.map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}")))
+    } finally {
+      rec.close()
+      Files.deleteIfExists(out)
+    }
+  }
+
+  test("file: checkpoint I/O starts no chmod process") {
+    srcDir // written before recording: the parquet writer runs on the stock FileSystem
+    val dir = TempDirs.create("graft_ckpt_nofork_").toAbsolutePath
+    val starts = processStarts {
+      val manager = CheckpointFileManager.create(new Path(s"file://$dir/direct"), schemeConf())
+      for (i <- 0 until 10) {
+        manager.mkdirs(new Path(s"file://$dir/direct/d$i"))
+        val out = manager.createAtomic(new Path(s"file://$dir/direct/d$i/f"), false)
+        out.write(i)
+        out.close()
+      }
+      // a stateful gate that fails after batch 1 and restarts from its checkpoint
+      @volatile var injected = false
+      intercept[StreamingQueryException] {
+        Gate.run(counts(), OutputMode.Complete, dir, statePartitions = 2) { (b, batchId) =>
+          b.write.format("noop").mode("overwrite").save()
+          if (batchId == 1 && !injected) {
+            injected = true
+            throw new IllegalStateException("injected failure after batch 1")
+          }
+        }
+      }
+      var batches = Set.empty[Long]
+      Gate.run(counts(), OutputMode.Complete, dir, statePartitions = 2) { (b, batchId) =>
+        b.write.format("noop").mode("overwrite").save()
+        batches += batchId
+      }
+      assert(injected && batches == Set(1L, 2L))
+    }
+    val chmods = starts.filter(_.contains("org.apache.hadoop.fs.RawLocalFileSystem.setPermission"))
+    assert(chmods.isEmpty,
+      s"${chmods.size} of ${starts.size} process starts under setPermission; first: " +
+        chmods.headOption.fold("")(_.take(16).mkString(" <- ")))
   }
 }
 
