@@ -32,10 +32,10 @@ object Bench {
     if (cpus < hostCpus) s"bench_c$cpus.json" else "bench.json"
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = graft.core.Knobs.string("SPARK_GRAFT_SF_DIR").getOrElse("/root/testdata/sf0.1")
     val cpus = Session.cpus()
     val runs = graft.core.Knobs.int("SPARK_GRAFT_RUNS", default = 3, min = 1)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+    val only = graft.core.Knobs.string("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val ownFile = benchFile(cpus, Runtime.getRuntime.availableProcessors())
     // 1-minute load average at start: timings on a co-tenant machine can
     // double with zero code change, so the JSON self-identifies busy runs
@@ -399,8 +399,8 @@ object Bench {
     // file artifact ("queries_file"). No "queries" key here on purpose:
     // parsePriors (and any per-query consumer) must keep reading the full
     // artifact, never mistake this summary for a 0-query run.
-    val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (only.isDefined) "bench_dev.json" else ownFile)
+    val benchOut = graft.core.Knobs.string("SPARK_GRAFT_BENCH_OUT")
+      .getOrElse(if (only.isDefined) "bench_dev.json" else ownFile)
     val summary = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n":${ok.size},"n_errors":${errors.size},"sf":"$sfDir","runs":$runs,"force":"$force","harness":"$harness","cpu_probe_ms":$cpuProbe,"io_probe_ms":$ioProbe,"canary_start":${canaryJson(canaryStart)},"canary_end":${canaryJson(canaryEnd)},"queries_file":"$benchOut"}"""
     println(summary)
     // also land the line on disk: log-capture pipelines truncate long stdout

@@ -23,11 +23,13 @@ import java.nio.file.{Files, Path, Paths}
 object TempDirs {
   private val registered = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
 
-  private val base: Option[Path] = {
-    val candidate = sys.env.get("GRAFT_TMP_BASE").map(Paths.get(_))
-      .orElse(Some(Paths.get("/dev/shm")))
-    candidate.filter(p => Files.isDirectory(p) && Files.isWritable(p))
-  }
+  private val base: Option[Path] = baseDir(sys.env)
+
+  /** `GRAFT_TMP_BASE` (a blank value fails), else `/dev/shm`; None when
+    * that is not a writable directory. */
+  private[core] def baseDir(env: Map[String, String]): Option[Path] =
+    Some(Paths.get(Knobs.string("GRAFT_TMP_BASE", env).getOrElse("/dev/shm")))
+      .filter(p => Files.isDirectory(p) && Files.isWritable(p))
 
   // Reap leftovers from crashed/SIGKILLed sibling JVMs: the shutdown hook
   // never ran for them, and on tmpfs a leaked dir is leaked RAM until

@@ -17,6 +17,19 @@ import org.apache.spark.sql.functions._
   */
 object Relational {
 
+  /** `keep` plus the fields of the struct `fields`, with `fields`
+    * evaluated once per input row. Catalyst's `PushPredicateThroughNonJoin`
+    * substitutes a projected expression into every pushed-down conjunct
+    * that reads it, so an expensive projection (a 17-field `from_csv`, a
+    * `get_json_object`) runs once per such conjunct and once more in the
+    * projection, for every row. A generator's output is an attribute that no
+    * rule inlines: `inline(array(fields))` puts the struct behind a
+    * `Generate` node that yields exactly one row per input row (a null
+    * struct yields a row of nulls, as `fields.*` does). Conjuncts over
+    * `keep` alone still push below it. */
+  def evalOnce(df: DataFrame, fields: Column, keep: Column*): DataFrame =
+    df.select(keep :+ inline(array(fields)): _*)
+
   /** Deterministic intra-key ordering: event time plus a tiebreaker. */
   def ordering(time: Column, tiebreak: Column*): Seq[Column] = time +: tiebreak
 

@@ -2,7 +2,7 @@ package graft.queries
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
@@ -51,15 +51,8 @@ object Tables {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files =
-      try {
-        val it = fs.listFiles(p, true)
-        val b = Seq.newBuilder[(String, Long, Long)]
-        while (it.hasNext) {
-          val f = it.next()
-          b += ((f.getPath.toString, f.getLen, f.getModificationTime))
-        }
-        b.result().sorted
-      } catch { case _: java.io.FileNotFoundException => Nil }
+      try leafFiles(fs, p).sorted
+      catch { case _: java.io.FileNotFoundException => Nil }
     if (files.isEmpty) spark.read.parquet(path).schema
     else {
       val key = fs.makeQualified(p).toString
@@ -73,6 +66,16 @@ object Tables {
       }
     }
   }
+
+  /** (path, length, modification time) of every file under `p`, walked
+    * with `listStatus`. `listFiles` would yield `LocatedFileStatus`es, whose
+    * constructor loads each file's permissions: without native Hadoop that
+    * is one `ls -ld` child process per file per read. */
+  private def leafFiles(fs: FileSystem, p: Path): Seq[(String, Long, Long)] =
+    fs.listStatus(p).toSeq.flatMap { f =>
+      if (f.isDirectory) leafFiles(fs, f.getPath)
+      else Seq((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
 
   /** `events.ts` has shipped in two physical parquet encodings across
     * driver rounds, and every downstream operator (watermarks above all —

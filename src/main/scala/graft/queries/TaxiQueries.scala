@@ -24,15 +24,25 @@ import graft.streaming.{Gate, GateTuning}
   */
 object TaxiQueries {
 
-  /** Deterministic synthetic geo: fractional part of `value` spreads
-    * ±0.5° around the grid centre; user_id/props.k give the other axes.
+  /** Deterministic synthetic pickup geo: the fractional part of `value`
+    * spreads latitude ±0.5° around the grid centre, user_id the longitude.
     * Mirrored verbatim in the oracle SQL. */
-  private[queries] def withGeo(df: DataFrame): DataFrame = {
-    val k = get_json_object(col("props"), "$.k").cast("int")
+  private[queries] def withPickup(df: DataFrame): DataFrame =
     df.withColumn("p_lat", lit(Taxi.Centre11Lat) + (col("value") - floor(col("value"))) - 0.5)
       .withColumn("p_lon", lit(Taxi.Centre11Lon) + ((col("user_id") % 200) / 200.0) - 0.5)
+
+  /** [[withPickup]] plus dropoff geo from user_id and props.k. `k` is
+    * parsed once per row ([[Relational.evalOnce]]): as a plain projection
+    * the range filters on the dropoff cells copied its `get_json_object`
+    * into every conjunct. Queries that read no dropoff column take
+    * [[withPickup]], which parses no JSON at all. */
+  private[queries] def withGeo(df: DataFrame): DataFrame = {
+    val k = col("__k")
+    withPickup(Relational.evalOnce(df,
+        struct(get_json_object(col("props"), "$.k").cast("int").as("__k")), col("*")))
       .withColumn("d_lat", lit(Taxi.Centre11Lat) + ((k % 100) / 100.0) - 0.5)
       .withColumn("d_lon", lit(Taxi.Centre11Lon) + (((col("user_id") * 13 + k) % 400) / 400.0) - 0.5)
+      .drop("__k")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -73,7 +83,7 @@ object TaxiQueries {
     // max-pickup-per-(cell,user) left-joined against dropoffs, inequality
     // filtered, counted per cell.
     "q_taxi_empty" -> ((s, dir) => {
-      val g = withGeo(Tables.events(s, dir))
+      val g = withPickup(Tables.events(s, dir))
         .select(col("ts"), col("user_id"), col("event_type"),
           Taxi.cellLatQ2(col("p_lat")).as("clat"), Taxi.cellLonQ2(col("p_lon")).as("clon"))
         .filter(Taxi.inRangeQ2(col("clat"), col("clon")))
@@ -95,16 +105,15 @@ object TaxiQueries {
     // the window starts align (the reference pairs windows of DIFFERENT
     // lengths via its zip join).
     "q_taxi_q2" -> ((s, dir) => {
-      val g = withGeo(Tables.events(s, dir))
-      val profit = g
+      val events = Tables.events(s, dir)
+      val profit = withPickup(events)
         .select(col("ts"), col("value"),
           Taxi.cellLatQ2(col("p_lat")).as("clat"), Taxi.cellLonQ2(col("p_lon")).as("clon"))
         .filter(Taxi.inRangeQ2(col("clat"), col("clon")))
         .groupBy(window(col("ts"), "15 minutes").as("w"), col("clat"), col("clon"))
         .agg(Relational.medianUpper(col("value")).as("profit"))
         .select(col("w.start").as("window_start"), col("clat"), col("clon"), col("profit"))
-      val empty = g
-        .filter(col("event_type") === "error") // stand-in for empty-taxi dropoffs
+      val empty = withGeo(events.filter(col("event_type") === "error")) // stand-in for empty-taxi dropoffs
         .select(col("ts"),
           Taxi.cellLatQ2(col("d_lat")).as("clat"), Taxi.cellLonQ2(col("d_lon")).as("clon"))
         .filter(Taxi.inRangeQ2(col("clat"), col("clon")))
@@ -180,7 +189,7 @@ object TaxiQueries {
     // same-cell pairs at sf0.01) and stand in for dropoffs only in the
     // single-sided q_taxi_empty/q_taxi_q2 aggregates.
     "q_streaming_taxi_q2" -> ((s, dir) => {
-      val g = withGeo(Tables.streamEventsChunked(s, dir))
+      val g = withPickup(Tables.streamEventsChunked(s, dir))
       val profitSide = g
         .select(col("ts"), col("value"),
           Taxi.cellLatQ2(col("p_lat")).as("clat"), Taxi.cellLonQ2(col("p_lon")).as("clon"))

@@ -50,4 +50,21 @@ class KnobsSpec extends AnyFunSuite {
     }
     assert(blank.getMessage.contains("SPARK_GRAFT_CKPT_MANAGER"), blank.getMessage)
   }
+
+  test("the path and query-list knobs take any non-blank value; a blank one names the variable") {
+    val dir = TempDirs.create("graft_knobs_base_")
+    assert(TempDirs.baseDir(Map("GRAFT_TMP_BASE" -> dir.toString)).contains(dir))
+    assert(TempDirs.baseDir(Map("GRAFT_TMP_BASE" -> s"$dir/missing")).isEmpty)
+    assert(Knobs.string("SPARK_GRAFT_ONLY", env = Map("SPARK_GRAFT_ONLY" -> "q1_agg,q_taxi_q1"))
+      .contains("q1_agg,q_taxi_q1"))
+    val reads: Seq[(String, Map[String, String] => Any)] = Seq(
+      "GRAFT_TMP_BASE" -> (TempDirs.baseDir(_)),
+      "SPARK_GRAFT_SF_DIR" -> (Knobs.string("SPARK_GRAFT_SF_DIR", _)),
+      "SPARK_GRAFT_ONLY" -> (Knobs.string("SPARK_GRAFT_ONLY", _)),
+      "SPARK_GRAFT_BENCH_OUT" -> (Knobs.string("SPARK_GRAFT_BENCH_OUT", _)))
+    for ((name, read) <- reads; blank <- Seq("", " ")) {
+      val e = intercept[IllegalArgumentException](read(Map(name -> blank)))
+      assert(e.getMessage.contains(name) && e.getMessage.contains(s"'$blank'"), e.getMessage)
+    }
+  }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, StringType}
 
-import graft.SparkSuite
+import graft.{ProcessStarts, SparkSuite}
 
 /** [[Tables.table]] infers a table's parquet schema once per file version
   * and inference-conf setting, and still builds a fresh relation per call. */
@@ -60,6 +60,16 @@ class SchemaCacheSpec extends SparkSuite {
     }
     assert(jobs == 0, s"the second read started $jobs job(s)")
     assert(Tables.table(spark, dir, "t").count() == 10)
+  }
+
+  test("reading a table of several files starts no process") {
+    val dir = freshDir()
+    spark.range(100).repartition(4).toDF("a").write.parquet(s"$dir/t.parquet")
+    val starts = ProcessStarts.during {
+      for (_ <- 1 to 3) assert(Tables.table(spark, dir, "t").columns.toSeq == Seq("a"))
+    }
+    assert(starts.isEmpty,
+      s"${starts.size} process start(s); first: ${starts.headOption.fold("")(_.take(16).mkString(" <- "))}")
   }
 
   test("a table rewritten with a different schema is read with the new schema") {

@@ -8,8 +8,6 @@ import java.nio.file.attribute.PosixFilePermission
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
-import jdk.jfr.Recording
-import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumException, DelegateToFileSystem, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
@@ -17,7 +15,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryException}
 
-import graft.SparkSuite
+import graft.{ProcessStarts, SparkSuite}
 import graft.core.TempDirs
 
 /** The checkpoint file-manager swap (StateStores.LocalFsCheckpointManager —
@@ -181,30 +179,10 @@ class CheckpointManagerSpec extends SparkSuite {
     }
   }
 
-  /** The stacks (`class.method` frames) of every process the JVM started
-    * while `body` ran, from an in-process flight recording. */
-  private def processStarts(body: => Unit): Seq[Seq[String]] = {
-    val rec = new Recording()
-    val out = Files.createTempFile("graft-ckpt-", ".jfr")
-    try {
-      rec.enable("jdk.ProcessStart").withStackTrace()
-      rec.start()
-      try body finally rec.stop()
-      rec.dump(out)
-      RecordingFile.readAllEvents(out).asScala.toSeq
-        .filter(_.getEventType.getName == "jdk.ProcessStart")
-        .map(e => Option(e.getStackTrace).fold(Seq.empty[String])(
-          _.getFrames.asScala.toSeq.map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}")))
-    } finally {
-      rec.close()
-      Files.deleteIfExists(out)
-    }
-  }
-
   test("file: checkpoint I/O starts no chmod process") {
     srcDir // written before recording: the parquet writer runs on the stock FileSystem
     val dir = TempDirs.create("graft_ckpt_nofork_").toAbsolutePath
-    val starts = processStarts {
+    val starts = ProcessStarts.during {
       val manager = CheckpointFileManager.create(new Path(s"file://$dir/direct"), schemeConf())
       for (i <- 0 until 10) {
         manager.mkdirs(new Path(s"file://$dir/direct/d$i"))
