@@ -4,6 +4,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 
 import graft.core.Event
+import graft.core.StreamOps._
+import graft.core.WindowMakers.WindowMaker
 
 /** Lower a [[StreamGraph]] to executing Spark Datasets. The graph's params
   * are opaque `Any => Any` closures (the graph IR is the reference's
@@ -17,6 +19,11 @@ import graft.core.Event
   * the typed `Dataset[Event[A]]` operators or the DataFrame formulations,
   * where Catalyst sees real schemas and can optimize; a lowered graph
   * executes but is opaque to Catalyst by construction.
+  *
+  * The operators are [[graft.core.StreamOps]]' typed ones at payload type
+  * `Any`; only Expand (which also passes a non-list value through) and
+  * Merge (`streamMerge` sorts on a `time` column, and kryo rows have one
+  * binary column) are written here.
   */
 object Lowering {
 
@@ -37,12 +44,8 @@ object Lowering {
       val ds: Dataset[Event[Any]] = v.op match {
         case OpSource(_) => sources(v.id)
         case OpSink      => in0
-        case OpMap =>
-          val f = v.params.head.fn.asInstanceOf[Any => Any]
-          in0.map(e => Event(e.time, e.value.map(f)))
-        case OpFilter(_) =>
-          val p = v.params.head.fn.asInstanceOf[Any => Boolean]
-          in0.filter((e: Event[Any]) => e.value.forall(p))
+        case OpMap       => in0.streamMap(v.params.head.fn.asInstanceOf[Any => Any])
+        case OpFilter(_) => in0.streamFilter(v.params.head.fn.asInstanceOf[Any => Boolean])
         case OpExpand =>
           in0.flatMap { e =>
             e.value match {
@@ -52,20 +55,8 @@ object Lowering {
             }
           }
         case OpFilterAcc(_) =>
-          val accfn = v.params(0).fn.asInstanceOf[(Any, Any) => Any]
-          val init = v.params(1).fn
-          val pred = v.params(2).fn.asInstanceOf[(Any, Any) => Boolean]
-          in0.coalesce(1).mapPartitions { it =>
-            var acc = init
-            it.flatMap { e =>
-              e.value match {
-                case Some(x) =>
-                  val keep = pred(x, acc); acc = accfn(acc, x)
-                  if (keep) Iterator.single(e) else Iterator.empty
-                case None => Iterator.single(e)
-              }
-            }
-          }
+          in0.streamFilterAcc(v.params(0).fn.asInstanceOf[(Any, Any) => Any], v.params(1).fn)(
+            v.params(2).fn.asInstanceOf[(Any, Any) => Boolean])
         case OpScan if v.params.length >= 3 =>
           // MONOID scan: a third `merge` param declares the fold associative
           // with `init` as identity (merge(a, fold-from-init(xs)) ==
@@ -75,59 +66,25 @@ object Lowering {
           // init, combine the (numPartitions-sized) partials on the driver
           // into per-partition offsets, then re-fold each partition from its
           // offset. Two passes over a localCheckpoint'ed sort, one tiny
-          // driver combine — no single ordered partition anywhere.
-          distributedScan(spark, in0,
-            v.params(0).fn.asInstanceOf[(Any, Any) => Any],
-            v.params(1).fn,
+          // driver combine — no single ordered partition anywhere (eager:
+          // the partial combine is an action).
+          in0.streamScanMonoid(v.params(0).fn.asInstanceOf[(Any, Any) => Any], v.params(1).fn,
             v.params(2).fn.asInstanceOf[(Any, Any) => Any])
         case OpScan =>
-          val f = v.params(0).fn.asInstanceOf[(Any, Any) => Any]
-          val init = v.params(1).fn
-          in0.coalesce(1).mapPartitions { it =>
-            var acc = init
-            it.map { e =>
-              e.value match {
-                case Some(x) => acc = f(acc, x); Event(e.time, Some(acc))
-                case None    => Event[Any](e.time, None)
-              }
-            }
-          }
+          in0.streamScan(v.params(0).fn.asInstanceOf[(Any, Any) => Any], v.params(1).fn)
         case OpWindow =>
-          val wm = v.params.head.fn.asInstanceOf[List[Event[Any]] => List[List[Event[Any]]]]
-          in0.coalesce(1).mapPartitions { it =>
-            wm(it.toList).iterator.map {
-              case Nil => Event[Any](None, Some(Nil: List[Any]))
-              case w   => Event(w.head.time, Some(w.filter(_.isData).map(_.value.get): Any))
-            }
-          }
+          in0.streamWindow(v.params.head.fn.asInstanceOf[WindowMaker[Any]])(
+            Encoders.kryo[Event[Seq[Any]]]).as(enc)
         case OpMerge =>
           // n-ary union, re-ordered by event time (reference merge-sort)
           val union: RDD[Event[Any]] = ins.map(_.rdd).reduce(_ union _)
           spark.createDataset(union.sortBy(keyOf, ascending = true, numPartitions = 1))
         case OpJoin =>
-          val l = ins(0).coalesce(1).rdd
-          val r = ins(1).coalesce(1).rdd
-          spark.createDataset(l.zipPartitions(r) { (li, ri) =>
-            li.filter(_.isData).zip(ri.filter(_.isData)).map { case (a, b) =>
-              Event(a.time, Some((a.value.get, b.value.get): Any))
-            }
-          })
+          ins(0).streamZipJoin(ins(1))(Encoders.kryo[Event[(Any, Any)]]).as(enc)
       }
       out += v.id -> ds
     }
     out
-  }
-
-  /** Distributed prefix-scan for monoid folds (see the OpScan 3-param
-    * case) — delegates to the typed surface's
-    * [[graft.core.StreamOps.RichStream.streamScanMonoid]], which owns the
-    * algorithm (range-partitioned sort, per-partition folds, driver
-    * combine of numPartitions accumulators, offset re-fold; eager). */
-  private def distributedScan(spark: SparkSession, in0: Dataset[Event[Any]],
-                              f: (Any, Any) => Any, init: Any,
-                              merge: (Any, Any) => Any): Dataset[Event[Any]] = {
-    import graft.core.StreamOps._
-    in0.streamScanMonoid[Any](f, init, merge)
   }
 
   /** Lower and collect each sink's stream (ordering as produced). */

@@ -27,6 +27,18 @@ import graft.core.Event
   * one exchange, one stateful stage and its state-store commits per extra
   * member and trigger. A single-operator run is the one-step case.
   *
+  * ONE DEFINITION PER OPERATOR, ONE RUNNER. Each stateful operator's
+  * per-micro-batch semantics is one step here ([[filterAccStep]],
+  * [[scanStep]], [[chopStep]], [[chopTimeStep]], [[slidingStep]],
+  * [[slidingTimeStep]]), generic in the payload type with typed state.
+  * A run member calls it on its `graft-state-v5` slot through that
+  * slot's `decode*State` adapter; [[graft.streaming.StreamingOps]]' keyed
+  * operators call the same step per key, on the typed state their
+  * encoders store. Every stateful streaming path — the keyed operators
+  * and [[statefulLower]] (one constant key, no timeout, its version
+  * envelope) — runs through [[runStateful]], the one
+  * `flatMapGroupsWithState` call, which owns the state protocol.
+  *
   * Supported: Source, Map, Filter, Expand, Merge (unordered union —
   * downstream event-time logic re-imposes order, matching SURVEY §2.1's
   * merge relaxation), FilterAcc, Scan, Sink, Join (stateful zip — both
@@ -54,9 +66,7 @@ import graft.core.Event
 object StreamingLowering {
 
   implicit private val enc: Encoder[Event[Any]] = Encoders.kryo[Event[Any]]
-  implicit private val encKeyed: Encoder[(Int, Event[Any])] =
-    Encoders.tuple(Encoders.scalaInt, enc)
-  implicit private val encState: Encoder[Any] = Encoders.kryo[Any]
+  private val encState: Encoder[Any] = Encoders.kryo[Any]
 
   /** Lower every vertex. A run's Dataset is built once, for its last
     * vertex; a vertex INSIDE a run has no Dataset of its own in the
@@ -122,10 +132,17 @@ object StreamingLowering {
       case _        => chainStep(v)
     }
 
-  /** A stateful member's per-micro-batch step: its input events in stream
-    * order and its state slot (null before its first event) in, emitted
-    * events and the new slot out. */
-  private type Step = (IndexedSeq[Event[Any]], Any) => (IndexedSeq[Event[Any]], Any)
+  /** A stateful operator's per-micro-batch step: its input events in
+    * stream order and its state in, emitted rows and the new state out. */
+  private[graft] type StepOf[A, O, S] = (IndexedSeq[Event[A]], S) => (IndexedSeq[O], S)
+
+  /** A member's step as a run holds it: its state slot is null before its
+    * first event. */
+  private type Step = StepOf[Any, Event[Any], Any]
+
+  /** A typed step on a run's state slot, through the slot's decoder. */
+  private def onSlot[S](decode: Any => S)(step: StepOf[Any, Event[Any], S]): Step =
+    (events, st) => step(events, decode(st))
 
   /** A member as [[statefulLower]] runs it: the per-event steps of the
     * stateless vertices before it in the run, then its own step. */
@@ -201,34 +218,14 @@ object StreamingLowering {
     * fused `chain`. */
   private def stepOf(v: StreamVertex, chain: List[StreamVertex]): Step = v.op match {
     case OpFilterAcc(_) =>
-      val accfn = v.params(0).fn.asInstanceOf[(Any, Any) => Any]
       val init = v.params(1).fn
-      val pred = v.params(2).fn.asInstanceOf[(Any, Any) => Boolean]
-      (events, acc0) => {
-        var acc = if (acc0 == null) init else acc0
-        val kept = events.flatMap { e =>
-          e.value match {
-            case Some(x) =>
-              val keep = pred(x, acc); acc = accfn(acc, x)
-              if (keep) Some(e) else None
-            case None => Some(e)
-          }
-        }
-        (kept, acc)
-      }
+      onSlot(acc => if (acc == null) init else acc)(filterAccStep(
+        v.params(0).fn.asInstanceOf[(Any, Any) => Any],
+        v.params(2).fn.asInstanceOf[(Any, Any) => Boolean]))
     case OpScan =>
-      val f = v.params(0).fn.asInstanceOf[(Any, Any) => Any]
       val init = v.params(1).fn
-      (events, acc0) => {
-        var acc = if (acc0 == null) init else acc0
-        val outEvs = events.map { e =>
-          e.value match {
-            case Some(x) => acc = f(acc, x); Event(e.time, Some(acc))
-            case None    => Event[Any](e.time, None)
-          }
-        }
-        (outEvs, acc)
-      }
+      onSlot(acc => if (acc == null) init else acc)(
+        scanStep(v.params(0).fn.asInstanceOf[(Any, Any) => Any]))
     case OpWindow =>
       recognizedWindowStep(v) match {
         case Some(mk) => mk(chainEmit(chain))
@@ -256,6 +253,37 @@ object StreamingLowering {
     case other => throw new IllegalStateException(s"not a stateful operator: $other")
   }
 
+  /** `streamFilterAcc` (FunctionalProcessing.hs:181-185): the accumulator
+    * is updated on every data event, which is kept iff
+    * `pred(value, accBefore)`; value-less events pass and leave it. */
+  private[graft] def filterAccStep[A, B](accfn: (B, A) => B,
+      pred: (A, B) => Boolean): StepOf[A, Event[A], B] =
+    (events, acc0) => {
+      var acc = acc0
+      val kept = events.filter { e =>
+        e.value match {
+          case Some(x) => val keep = pred(x, acc); acc = accfn(acc, x); keep
+          case None    => true
+        }
+      }
+      (kept, acc)
+    }
+
+  /** `streamScan` (FunctionalProcessing.hs:188-191): each data event
+    * emits the new accumulator at its time; value-less events pass as
+    * value-less events and leave it. */
+  private[graft] def scanStep[A, B](f: (B, A) => B): StepOf[A, Event[B], B] =
+    (events, acc0) => {
+      var acc = acc0
+      val out = events.map { e =>
+        e.value match {
+          case Some(x) => acc = f(acc, x); Event(e.time, Some(acc))
+          case None    => Event[B](e.time, None)
+        }
+      }
+      (out, acc)
+    }
+
   /** How each recognized window window-maker form steps, parameterized by
     * the per-closed-window emit (identity, or a fused Filter/Map chain).
     * Range-checked extractors, not `forall(_.isDigit)`: an out-of-range
@@ -263,11 +291,15 @@ object StreamingLowering {
     * path, not throw a bare NumberFormatException. */
   private def recognizedWindowStep(v: StreamVertex): Option[WindowEmit => Step] =
     v.params.head.src.trim.split("\\s+").toList match {
-      case "chop" :: AsPosInt(n) :: Nil          => Some(chopStep(n, _))
-      case "chopTime" :: AsPosLong(ms) :: Nil    => Some(chopTimeStep(ms, _))
-      case "sliding" :: AsPosInt(n) :: Nil       => Some(slidingStep(n, _))
-      case "slidingTime" :: AsPosLong(ms) :: Nil => Some(slidingTimeStep(ms, _))
-      case _                                     => None
+      case "chop" :: AsPosInt(n) :: Nil =>
+        Some(emit => onSlot(decodeChopState)(chopStep(n, emit)))
+      case "chopTime" :: AsPosLong(ms) :: Nil =>
+        Some(emit => onSlot(decodeChopTimeState)(chopTimeStep(ms, emit)))
+      case "sliding" :: AsPosInt(n) :: Nil =>
+        Some(emit => onSlot(decodeSlidingState)(slidingStep(n, emit)))
+      case "slidingTime" :: AsPosLong(ms) :: Nil =>
+        Some(emit => onSlot(decodeSlidingTimeState)(slidingTimeStep(ms, emit)))
+      case _ => None
     }
 
   /** WINDOW-CHAIN FUSION: the maximal linear chain of stateless Filter/Map
@@ -299,18 +331,25 @@ object StreamingLowering {
     * object, no Option, no cast per element — the per-element cost drops
     * from a kryo'd-object walk to two or three flops. Defaults
     * materialize the list, so un-fused pipelines are untouched. */
-  private[plans] trait WindowEmitter extends Serializable {
-    def apply(w: List[Event[Any]]): Option[Event[Any]]
-    def fromIterator(it: Iterator[Event[Any]]): Option[Event[Any]] = apply(it.toList)
-    def fromRange(evs: Array[Event[Any]], isData: Array[Boolean], vals: Array[Double],
-                  from: Int, until: Int): Option[Event[Any]] = {
-      val b = List.newBuilder[Event[Any]]
+  private[graft] trait WindowEmitter[A, O] extends Serializable {
+    def apply(w: List[Event[A]]): Option[O]
+    def fromIterator(it: Iterator[Event[A]]): Option[O] = apply(it.toList)
+    def fromRange(evs: Array[Event[A]], isData: Array[Boolean], vals: Array[Double],
+                  from: Int, until: Int): Option[O] = {
+      val b = List.newBuilder[Event[A]]
       var i = from
       while (i < until) { b += evs(i); i += 1 }
       apply(b.result())
     }
   }
-  private type WindowEmit = WindowEmitter
+  private[plans] type WindowEmit = WindowEmitter[Any, Event[Any]]
+
+  /** Every closed window as its [[windowEvent]]: the keyed window
+    * operators' emit. */
+  private[graft] def windowEvents[A]: WindowEmitter[A, Event[List[A]]] =
+    new WindowEmitter[A, Event[List[A]]] {
+      def apply(w: List[Event[A]]): Option[Event[List[A]]] = Some(windowEvent(w))
+    }
 
   /** Recheck cadence for fused window folds: every Nth window the fold
     * result is re-verified against the real chain closures (see
@@ -362,7 +401,7 @@ object StreamingLowering {
   private[plans] def chainEmit(chain: List[StreamVertex]): WindowEmit = {
     val steps = chain.map(chainStep)
     val listEmit: List[Event[Any]] => Option[Event[Any]] =
-      w => steps.foldLeft(Option(windowEvent(w))) {
+      w => steps.foldLeft(Option(anyWindowEvent(w))) {
         case (None, _)       => None
         case (Some(e), step) => step(e)
       }
@@ -370,7 +409,7 @@ object StreamingLowering {
       case List(("Filter", "nonEmpty"), ("Map", name)) if RecognizedFoldNames(name) =>
         new FoldEmitter(name, listEmit)
       case _ =>
-        new WindowEmitter {
+        new WindowEmit {
           def apply(w: List[Event[Any]]): Option[Event[Any]] = listEmit(w)
         }
     }
@@ -399,7 +438,7 @@ object StreamingLowering {
     * for the name↔closure contract and the periodic recheck. */
   private[plans] final class FoldEmitter(
       name: String, listEmit: List[Event[Any]] => Option[Event[Any]])
-      extends WindowEmitter {
+      extends WindowEmit {
     @transient private var sinceCheck = 0L
 
     def apply(w: List[Event[Any]]): Option[Event[Any]] = listEmit(w)
@@ -571,20 +610,26 @@ object StreamingLowering {
     def unapply(s: String): Option[Long] = s.toLongOption.filter(_ > 0)
   }
 
-  private def windowEvent(w: List[Event[Any]]): Event[Any] = w match {
-    case Nil => Event[Any](None, Some(Nil: List[Any]))
-    case _   => Event(w.head.time, Some(w.filter(_.isData).map(_.value.get): Any))
+  /** A window as one event: stamped with its first event's time, carrying
+    * its data values; the empty window is `Event(None, Some(Nil))`. */
+  private[graft] def windowEvent[A](w: List[Event[A]]): Event[List[A]] = w match {
+    case Nil => Event[List[A]](None, Some(Nil))
+    case _   => Event(w.head.time, Some(w.filter(_.isData).map(_.value.get)))
   }
+
+  private def anyWindowEvent(w: List[Event[Any]]): Event[Any] =
+    windowEvent(w).asInstanceOf[Event[Any]]
 
   /** `chop n` (FunctionalProcessing.hs:113-116): state = the open window's
     * data events (≤ n−1 between batches), kept REVERSED with an explicit
     * count so each event costs O(1) (a `buf :+ e` + `buf.length` formulation
     * is O(buffer) per event — O(n²) per window on this single-threaded hot
     * path). */
-  private def chopStep(n: Int, emit: WindowEmit): Step = {
+  private[graft] def chopStep[A, O](n: Int,
+      emit: WindowEmitter[A, O]): StepOf[A, O, (Int, List[Event[A]])] = {
     (events, st) =>
-      var (count, rev) = decodeChopState(st)
-      val out = IndexedSeq.newBuilder[Event[Any]]
+      var (count, rev) = st
+      val out = IndexedSeq.newBuilder[O]
       events.filter(_.isData).foreach { e =>
         rev = e :: rev
         count += 1
@@ -611,7 +656,8 @@ object StreamingLowering {
     * gaps keep the faithful one-empty-per-period semantics. */
   private[plans] val MaxEmptyWindowsPerGap = 10000L
 
-  private def chopTimeStep(ms: Long, emit: WindowEmit): Step = {
+  private def chopTimeStep[A, O](ms: Long,
+      emit: WindowEmitter[A, O]): StepOf[A, O, (Long, List[Event[A]])] = {
     (events, st) =>
       // Long.MinValue = "no window open yet": a -1 sentinel would re-trigger
       // initialization on every PRE-EPOCH (negative) timestamp, resetting
@@ -621,8 +667,8 @@ object StreamingLowering {
       // getTime's ms granularity would misplace events within 1 ms of a
       // window boundary on µs-granular streams.
       val msUs = ms * 1000L
-      var (start, rev) = decodeChopTimeState(st)
-      val out = IndexedSeq.newBuilder[Event[Any]]
+      var (start, rev) = st
+      val out = IndexedSeq.newBuilder[O]
       events.filter(_.isTimed).foreach { e =>
         val t = Event.micros(e.time.get)
         if (start == Long.MinValue) start = t
@@ -647,10 +693,11 @@ object StreamingLowering {
     * of the next n events; state = the last ≤ n−1 data events, in a FIFO
     * queue with an explicit count so enqueue/dequeue are O(1) per event
     * (the window materializes O(n) only when one closes — unavoidable). */
-  private def slidingStep(n: Int, emit: WindowEmit): Step = {
+  private[graft] def slidingStep[A, O](n: Int, emit: WindowEmitter[A, O])
+      : StepOf[A, O, (Int, scala.collection.immutable.Queue[Event[A]])] = {
     (events, st) =>
-      var (count, buf) = decodeSlidingState(st)
-      val out = IndexedSeq.newBuilder[Event[Any]]
+      var (count, buf) = st
+      val out = IndexedSeq.newBuilder[O]
       events.filter(_.isData).foreach { e =>
         buf = buf.enqueue(e)
         count += 1
@@ -682,16 +729,16 @@ object StreamingLowering {
     * element of every window). Payloads that are not Doubles fall back
     * to the original queue-iterator path (same order, same windows —
     * the arrays are an acceleration, never a semantic). */
-  private def slidingTimeStep(ms: Long, emit: WindowEmit): Step = {
-    (events, st) =>
+  private[graft] def slidingTimeStep[A, O](ms: Long, emit: WindowEmitter[A, O])
+      : StepOf[A, O, scala.collection.immutable.Queue[Event[A]]] = {
+    (events, buf) =>
       // µs arithmetic (see chopTimeStep)
       val msUs = ms * 1000L
-      val buf = decodeSlidingTimeState(st)
-      val out = IndexedSeq.newBuilder[Event[Any]]
+      val out = IndexedSeq.newBuilder[O]
       val timed = events.filter(_.isTimed)
       val carried = buf.length
       val n = carried + timed.length
-      val evs = new Array[Event[Any]](n)
+      val evs = new Array[Event[A]](n)
       locally { var i = 0; buf.foreach { e => evs(i) = e; i += 1 }
         timed.foreach { e => evs(i) = e; i += 1 } }
       val times = new Array[Long](n)
@@ -741,7 +788,7 @@ object StreamingLowering {
           }
           idx += 1
         }
-        var rest = scala.collection.immutable.Queue.empty[Event[Any]]
+        var rest = scala.collection.immutable.Queue.empty[Event[A]]
         while (h < n) { rest = rest.enqueue(evs(h)); h += 1 }
         (out.result(), rest)
       } else {
@@ -828,7 +875,7 @@ object StreamingLowering {
       }
       val windows = maker(rev.reverse)
       val closed = if (windows.isEmpty) Nil else windows.init
-      val replayPrefix = closed.take(emitted).map(windowEvent)
+      val replayPrefix = closed.take(emitted).map(anyWindowEvent)
       val replayHash = scala.util.hashing.MurmurHash3.orderedHash(replayPrefix)
       // the boundary (most recently emitted) window is checked by EXACT
       // equality — it is where a non-monotone maker rewrites first;
@@ -844,9 +891,9 @@ object StreamingLowering {
             "so this maker has no faithful incremental lowering — run it on the " +
             "batch surface (StreamOps.streamWindow) instead.")
       }
-      val fresh = closed.drop(emitted).map(windowEvent).toIndexedSeq
+      val fresh = closed.drop(emitted).map(anyWindowEvent).toIndexedSeq
       emittedHash = scala.util.hashing.MurmurHash3
-        .orderedHash(closed.map(windowEvent))
+        .orderedHash(closed.map(anyWindowEvent))
       emitted = closed.length
       lastEmitted = fresh.lastOption.orElse(lastEmitted)
       (fresh, (emitted, emittedHash, lastEmitted, rev))
@@ -937,7 +984,7 @@ object StreamingLowering {
         (IndexedSeq.empty[Event[Any]], rev)
       } else {
         val open = windows.last
-        val out = windows.init.map(windowEvent).toIndexedSeq
+        val out = windows.init.map(anyWindowEvent).toIndexedSeq
         val expected = List(open)
         val cap = math.min(maxEvents, rev.length)
         def reproduces(k: Int): Boolean = maker(rev.take(k).reverse) == expected
@@ -1065,34 +1112,55 @@ object StreamingLowering {
     * not invoked) and keeps its slot. */
   private[plans] def statefulLower(ds: Dataset[Event[Any]], members: List[Member]): Dataset[Event[Any]] = {
     val arity = members.length
-    ds.map(e => (0, e))
-      .groupByKey(_._1)(Encoders.scalaInt)
-      .flatMapGroupsWithState[Any, Event[Any]](OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Int, it: Iterator[(Int, Event[Any])], state: GroupState[Any]) =>
-          val slots = state.getOption.orNull match {
-            case null                    => decodeRunState(null, arity)
-            case (StateVersion, payload) => decodeRunState(payload, arity)
-            case other => throw new IllegalStateException(
-              s"incompatible streaming checkpoint state (${other.getClass.getName}): " +
-                s"this build's state encoding is '$StateVersion'; the checkpoint was " +
-                "written by a build with a different encoding. Restart the query with " +
-                "a fresh checkpointLocation (streaming state is not migrated across " +
-                "encoding changes).")
+    runStateful[Event[Any], Int, Any, Event[Any]](ds, _ => 0, null, idleTimeoutMs = None) {
+      (_, st, it) =>
+        val slots = st match {
+          case null                    => decodeRunState(null, arity)
+          case (StateVersion, payload) => decodeRunState(payload, arity)
+          case other => throw new IllegalStateException(
+            s"incompatible streaming checkpoint state (${other.getClass.getName}): " +
+              s"this build's state encoding is '$StateVersion'; the checkpoint was " +
+              "written by a build with a different encoding. Restart the query with " +
+              "a fresh checkpointLocation (streaming state is not migrated across " +
+              "encoding changes).")
+        }
+        var evs = inStreamOrder(it.toIndexedSeq)
+        members.iterator.zipWithIndex.foreach { case (m, i) =>
+          if (i > 0) evs = inStreamOrder(m.pre.foldLeft(evs)((xs, f) => xs.flatMap(f)))
+          if (evs.nonEmpty) {
+            val (o, s) = m.step(evs, slots(i))
+            evs = o; slots(i) = s
           }
-          var evs = inStreamOrder(it.map(_._2).toIndexedSeq)
-          members.iterator.zipWithIndex.foreach { case (m, i) =>
-            if (i > 0) evs = inStreamOrder(m.pre.foldLeft(evs)((xs, f) => xs.flatMap(f)))
-            if (evs.nonEmpty) {
-              val (o, s) = m.step(evs, slots(i))
-              evs = o; slots(i) = s
-            }
-          }
-          state.update((StateVersion, slots.toList))
-          evs.iterator
-      }
+        }
+        (evs, (StateVersion, slots.toList))
+    }(Encoders.scalaInt, encState, enc)
   }
 
+  /** The one `flatMapGroupsWithState` call: the state protocol every
+    * stateful streaming path shares. A group whose idle timeout fired
+    * removes its state and emits nothing. Otherwise `f` gets the group's
+    * key, its stored state (`init` before the group's first batch) and
+    * its rows of the micro-batch, and returns the rows to emit and the
+    * state to store; with `idleTimeoutMs` the group's processing-time
+    * timeout is re-armed. Without it a group's state lives forever — the
+    * reference's semantics for an accumulator. */
+  private[graft] def runStateful[R, K, S, O](ds: Dataset[R], key: R => K, init: S,
+      idleTimeoutMs: Option[Long])(f: (K, S, Iterator[R]) => (Iterable[O], S))(
+      implicit encK: Encoder[K], encS: Encoder[S], encO: Encoder[O]): Dataset[O] =
+    ds.groupByKey(key)
+      .flatMapGroupsWithState[S, O](OutputMode.Append,
+        if (idleTimeoutMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
+        else GroupStateTimeout.NoTimeout) { (k: K, it: Iterator[R], state: GroupState[S]) =>
+        if (state.hasTimedOut) { state.remove(); Iterator.empty }
+        else {
+          val (out, s) = f(k, state.getOption.getOrElse(init), it)
+          state.update(s)
+          idleTimeoutMs.foreach(state.setTimeoutDuration)
+          out.iterator
+        }
+      }
+
   /** Stable sort by `Event.orderKey`, each key computed once. */
-  private def inStreamOrder(evs: IndexedSeq[Event[Any]]): IndexedSeq[Event[Any]] =
+  private[graft] def inStreamOrder[A](evs: IndexedSeq[Event[A]]): IndexedSeq[Event[A]] =
     evs.map(e => (Event.orderKey(e), e)).sortBy(_._1).map(_._2)
 }

@@ -459,7 +459,7 @@ object StreamQueries {
           bandsNew.write.mode("overwrite").parquet(s"$idxDir/b$batchId")
         }
       }
-      s.read.parquet(s"$outDir/b*")
+      Gate.readAll(s.read, outDir)
     }),
 
     // Streaming ANN SERVING — the online face of the PQ pipeline: query

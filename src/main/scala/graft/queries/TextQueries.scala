@@ -367,7 +367,7 @@ object TextQueries {
         }
       }
       val P = 2147483647L
-      val seqs = s.read.schema(binSchema).parquet(s"$binDir/b*")
+      val seqs = Gate.readAll(s.read.schema(binSchema), binDir)
         .groupBy(col("source"), col("bin"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("seq_tokens"),
           min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.Path
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 /** The one runner for the streaming GATES, the finite-replay,
@@ -48,8 +48,13 @@ object Gate {
       .parquet(if (mode == OutputMode.Complete()) s"$dir/result" else s"$dir/result/b$batchId")
 
   /** Everything [[writeBatch]] left under `dir`, in either mode. */
-  def readBack(spark: SparkSession, dir: Path): DataFrame =
-    spark.read.option("recursiveFileLookup", "true").parquet(s"$dir/result")
+  def readBack(spark: SparkSession, dir: Path): DataFrame = readAll(spark.read, s"$dir/result")
+
+  /** Every parquet file under `dir`, through its per-batch subdirectories
+    * (`recursiveFileLookup`; a `dir/b*` glob logs a FileNotFoundException
+    * stack trace on every read). */
+  def readAll(reader: DataFrameReader, dir: String): DataFrame =
+    reader.option("recursiveFileLookup", "true").parquet(dir)
 
   /** The common gate: drain `stream` into a fresh `prefix` temp dir
     * through [[writeBatch]] and read the result back. */

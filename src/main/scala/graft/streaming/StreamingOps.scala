@@ -2,16 +2,25 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.core.Event
+import graft.plans.StreamingLowering
 
 /** Structured Streaming surface: the reference's runtime layer
   * (`src/Striot/Nodes.hs` — sources stamping ingest time, per-node stream
   * functions, sinks) maps to `readStream` → transforms → `writeStream`;
-  * the stateful operators (`streamScan`/`streamFilterAcc`) become
-  * `flatMapGroupsWithState` with per-key state, and windows become
-  * watermarked event-time aggregations.
+  * the stateful operators (`streamScan`/`streamFilterAcc`, the window
+  * makers) run per key, and windows over columns become watermarked
+  * event-time aggregations.
+  *
+  * The keyed stateful operators (`*ByKey`) share their semantics and
+  * their runner with the lowered graphs: `scanByKey`, `filterAccByKey`,
+  * `chopByKey`, `slidingByKey` and `slidingTimeByKey` call
+  * [[graft.plans.StreamingLowering]]'s step for the operator on each
+  * key's events, with the typed state their encoders store, and every
+  * keyed operator runs on [[graft.plans.StreamingLowering.runStateful]],
+  * the one `flatMapGroupsWithState` call. A fix to an operator's step
+  * reaches both surfaces.
   *
   * The reference has NO watermarks (lazy lists close windows when the next
   * element arrives) and assumes time order; in streaming mode the window
@@ -92,6 +101,26 @@ object StreamingOps {
     df.withWatermark(tsName, watermark)
       .dropDuplicatesWithinWatermark(keys)
 
+  /** A keyed operator on [[StreamingLowering.runStateful]]: each key's
+    * events of a micro-batch, its typed state (`init` before the key's
+    * first batch), and its outputs tagged with the key. */
+  private def byKey[K, A, S, O](ds: Dataset[(K, Event[A])], init: S,
+      idleTimeoutMs: Option[Long])(f: (K, S, Iterator[Event[A]]) => (Iterable[O], S))(
+      implicit encK: Encoder[K], encS: Encoder[S], encO: Encoder[O]): Dataset[O] =
+    StreamingLowering.runStateful[(K, Event[A]), K, S, O](ds, _._1, init, idleTimeoutMs) {
+      (k, s, it) => f(k, s, it.map(_._2))
+    }
+
+  /** A stateful operator's step — the one the lowered graphs run — per
+    * key, over the key's events in [[Event.orderKey]] order. */
+  private def stepByKey[K, A, S, O](ds: Dataset[(K, Event[A])], init: S,
+      idleTimeoutMs: Option[Long])(step: StreamingLowering.StepOf[A, O, S])(
+      implicit encK: Encoder[K], encOut: Encoder[(K, O)], encS: Encoder[S]): Dataset[(K, O)] =
+    byKey[K, A, S, (K, O)](ds, init, idleTimeoutMs) { (k, s, it) =>
+      val (out, next) = step(StreamingLowering.inStreamOrder(it.toIndexedSeq), s)
+      (out.map(o => (k, o)), next)
+    }
+
   /** Streaming `streamScan` per key (reference
     * `FunctionalProcessing.hs:188-191`): running fold with state in
     * `flatMapGroupsWithState`; events within each micro-batch are folded
@@ -115,25 +144,7 @@ object StreamingOps {
                          idleTimeoutMs: Option[Long] = None)(
       implicit encK: Encoder[K], encOut: Encoder[(K, Event[B])],
       encState: Encoder[B]): Dataset[(K, Event[B])] =
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[B, (K, Event[B])](OutputMode.Append, timeoutConf(idleTimeoutMs)) {
-        (k: K, it: Iterator[(K, Event[A])], state: GroupState[B]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var acc = state.getOption.getOrElse(init)
-            val sorted = it.map(_._2).toIndexedSeq
-              .sortBy(Event.orderKey)
-            val out = sorted.map { e =>
-              e.value match {
-                case Some(v) => acc = f(acc, v); (k, Event(e.time, Some(acc)))
-                case None    => (k, Event[B](e.time, None))
-              }
-            }
-            state.update(acc)
-            idleTimeoutMs.foreach(state.setTimeoutDuration)
-            out.iterator
-          }
-      }
+    stepByKey(ds, init, idleTimeoutMs)(StreamingLowering.scanStep(f))
 
   /** Streaming `streamFilterAcc` per key (reference
     * `FunctionalProcessing.hs:181-185`): stateful filter; accumulator
@@ -145,28 +156,7 @@ object StreamingOps {
       idleTimeoutMs: Option[Long] = None)(
       implicit encK: Encoder[K], encOut: Encoder[(K, Event[A])],
       encState: Encoder[B]): Dataset[(K, Event[A])] =
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[B, (K, Event[A])](OutputMode.Append, timeoutConf(idleTimeoutMs)) {
-        (k: K, it: Iterator[(K, Event[A])], state: GroupState[B]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var acc = state.getOption.getOrElse(init)
-            val sorted = it.map(_._2).toIndexedSeq
-              .sortBy(Event.orderKey)
-            val out = sorted.flatMap { e =>
-              e.value match {
-                case Some(v) =>
-                  val keep = pred(v, acc)
-                  acc = accfn(acc, v)
-                  if (keep) Some((k, e)) else None
-                case None => Some((k, e))
-              }
-            }
-            state.update(acc)
-            idleTimeoutMs.foreach(state.setTimeoutDuration)
-            out.iterator
-          }
-      }
+    stepByKey(ds, init, idleTimeoutMs)(StreamingLowering.filterAccStep(accfn, pred))
 
   /** Streaming as-of enrichment per key — the streaming twin of
     * [[graft.operators.Relational.asofJoin]] (engine primitive absent
@@ -197,41 +187,32 @@ object StreamingOps {
       idleTimeoutMs: Option[Long] = None)(
       implicit encK: Encoder[K], encOut: Encoder[(K, Event[(A, Option[A])])],
       encState: Encoder[Option[(Long, A)]]): Dataset[(K, Event[(A, Option[A])])] =
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[Option[(Long, A)], (K, Event[(A, Option[A])])](
-        OutputMode.Append, timeoutConf(idleTimeoutMs)) {
-        (k: K, it: Iterator[(K, Event[A])], state: GroupState[Option[(Long, A)]]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            // stored right as (µs ts, payload); Long.MinValue = untimed right
-            var last: Option[(Long, A)] = state.getOption.getOrElse(None)
-            val sorted = it.map(_._2).toIndexedSeq
-              .sortBy { e =>
-                val (t, h) = Event.orderKey(e)
-                (t, if (e.value.exists(isRight)) 0 else 1, h)
-              }
-            val out = sorted.flatMap { e =>
-              val us = e.time.map(Event.micros).getOrElse(Long.MinValue)
-              e.value match {
-                case Some(v) if isRight(v) =>
-                  // never regress: an older-ts right from a later batch loses
-                  if (last.forall(_._1 <= us)) last = Some((us, v))
-                  None
-                case Some(v) =>
-                  // a straggler left older than the stored right must not see
-                  // a future right; untimed lefts (us = MinValue vs untimed
-                  // right's MinValue) still enrich — <= keeps both contracts
-                  val atOrBefore =
-                    last.filter { case (rts, _) => rts <= (if (e.time.isDefined) us else Long.MaxValue) }
-                  Some((k, Event(e.time, Some((v, atOrBefore.map(_._2))))))
-                case None => Some((k, Event[(A, Option[A])](e.time, None)))
-              }
-            }
-            state.update(last)
-            idleTimeoutMs.foreach(state.setTimeoutDuration)
-            out.iterator
-          }
+    byKey(ds, None: Option[(Long, A)], idleTimeoutMs) { (k, stored, it) =>
+      // stored right as (µs ts, payload); Long.MinValue = untimed right
+      var last = stored
+      val sorted = it.toIndexedSeq.sortBy { e =>
+        val (t, h) = Event.orderKey(e)
+        (t, if (e.value.exists(isRight)) 0 else 1, h)
       }
+      val out = sorted.flatMap { e =>
+        val us = e.time.map(Event.micros).getOrElse(Long.MinValue)
+        e.value match {
+          case Some(v) if isRight(v) =>
+            // never regress: an older-ts right from a later batch loses
+            if (last.forall(_._1 <= us)) last = Some((us, v))
+            None
+          case Some(v) =>
+            // a straggler left older than the stored right must not see
+            // a future right; untimed lefts (us = MinValue vs untimed
+            // right's MinValue) still enrich — <= keeps both contracts
+            val atOrBefore =
+              last.filter { case (rts, _) => rts <= (if (e.time.isDefined) us else Long.MaxValue) }
+            Some((k, Event(e.time, Some((v, atOrBefore.map(_._2))))))
+          case None => Some((k, Event[(A, Option[A])](e.time, None)))
+        }
+      }
+      (out, last)
+    }
 
   /** Streaming ordered funnel per key — the incremental twin of
     * [[graft.operators.Relational.funnelStages]]: state is the per-stage
@@ -251,42 +232,35 @@ object StreamingOps {
       implicit encK: Encoder[K], encOut: Encoder[(K, Int, Long)],
       encState: Encoder[Array[Long]]): Dataset[(K, Int, Long)] = {
     require(stages.nonEmpty, "funnelByKey needs at least one stage")
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[Array[Long], (K, Int, Long)](
-        OutputMode.Append, timeoutConf(idleTimeoutMs)) {
-        (k: K, it: Iterator[(K, Event[String])], state: GroupState[Array[Long]]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val entered = state.getOption.getOrElse(Array.fill(stages.length)(-1L))
-            val sorted = it.map(_._2).toIndexedSeq.sortBy(Event.orderKey)
-            val out = scala.collection.mutable.ArrayBuffer.empty[(K, Int, Long)]
-            sorted.foreach { e =>
-              (e.time, e.value) match {
-                case (Some(t), Some(v)) =>
-                  val us = Event.micros(t)
-                  val i = stages.indexOf(v)
-                  if (i >= 0 && entered(i) < 0 &&
-                      (i == 0 || (entered(i - 1) >= 0 && us > entered(i - 1)))) {
-                    entered(i) = us
-                    out += ((k, i + 1, us))
-                  }
-                case _ => ()
-              }
+    byKey(ds, Array.fill(stages.length)(-1L), idleTimeoutMs) { (k, stored, it) =>
+      // a copy: `init` is one array shared by every key of the task
+      val entered = stored.clone()
+      val out = scala.collection.mutable.ArrayBuffer.empty[(K, Int, Long)]
+      it.toIndexedSeq.sortBy(Event.orderKey).foreach { e =>
+        (e.time, e.value) match {
+          case (Some(t), Some(v)) =>
+            val us = Event.micros(t)
+            val i = stages.indexOf(v)
+            if (i >= 0 && entered(i) < 0 &&
+                (i == 0 || (entered(i - 1) >= 0 && us > entered(i - 1)))) {
+              entered(i) = us
+              out += ((k, i + 1, us))
             }
-            state.update(entered)
-            idleTimeoutMs.foreach(state.setTimeoutDuration)
-            out.iterator
-          }
+          case _ => ()
+        }
       }
+      (out, entered)
+    }
   }
 
   /** Streaming `chopTimeAligned` per key: stamp each timed event with the
     * FIRST-EVENT-aligned window start for its key (the reference's
     * chopTime alignment, `FunctionalProcessing.hs:118-129`) — the
     * streaming twin of [[graft.operators.Relational.chopTimeAligned]].
-    * State per key is ONE long (the key's first event time in µs), so
-    * state size is #keys × 8 bytes regardless of stream length. Downstream
-    * aggregation is an ordinary `groupBy(key, window_start)`.
+    * State per key is ONE long (the key's first event time in µs;
+    * Long.MinValue until it has one), so state size is #keys × 8 bytes
+    * regardless of stream length. Downstream aggregation is an ordinary
+    * `groupBy(key, window_start)`.
     *
     * Deviation inherent to streaming: an out-of-order event arriving
     * BEFORE its key's recorded first event keeps the recorded alignment
@@ -299,116 +273,56 @@ object StreamingOps {
       idleTimeoutMs: Option[Long] = None)(
       implicit encK: Encoder[K],
       encOut: Encoder[(K, java.sql.Timestamp, Event[A])],
-      encState: Encoder[Long]): Dataset[(K, java.sql.Timestamp, Event[A])] =
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[Long, (K, java.sql.Timestamp, Event[A])](
-        OutputMode.Append, timeoutConf(idleTimeoutMs)) {
-        (k: K, it: Iterator[(K, Event[A])], state: GroupState[Long]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val durUs = durationMs * 1000L
-            var first = state.getOption.getOrElse(Long.MinValue)
-            val sorted = it.map(_._2).toIndexedSeq
-              .sortBy(Event.orderKey)
-            val out = sorted.flatMap { e =>
-              e.time.map { t =>
-                // µs, not Timestamp.getTime's ms — the testdata (and the
-                // batch form's unix_micros) are µs-precision
-                val us = Event.micros(t)
-                if (first == Long.MinValue) first = us
-                val start = first + Math.floorDiv(us - first, durUs) * durUs
-                val ws = new java.sql.Timestamp(Math.floorDiv(start, 1000L))
-                ws.setNanos((Math.floorMod(start, 1000000L) * 1000L).toInt)
-                (k, ws, e)
-              }
-            }
-            if (first != Long.MinValue) state.update(first)
-            idleTimeoutMs.foreach(state.setTimeoutDuration)
-            out.iterator
-          }
+      encState: Encoder[Long]): Dataset[(K, java.sql.Timestamp, Event[A])] = {
+    val durUs = durationMs * 1000L
+    byKey(ds, Long.MinValue, idleTimeoutMs) { (k, stored, it) =>
+      var first = stored
+      val out = it.toIndexedSeq.sortBy(Event.orderKey).flatMap { e =>
+        e.time.map { t =>
+          // µs, not Timestamp.getTime's ms — the testdata (and the
+          // batch form's unix_micros) are µs-precision
+          val us = Event.micros(t)
+          if (first == Long.MinValue) first = us
+          val start = first + Math.floorDiv(us - first, durUs) * durUs
+          val ws = new java.sql.Timestamp(Math.floorDiv(start, 1000L))
+          ws.setNanos((Math.floorMod(start, 1000000L) * 1000L).toInt)
+          (k, ws, e)
+        }
       }
+      (out, first)
+    }
+  }
 
   /** Streaming `chop n` per key (count-tumbling windows, reference
     * `FunctionalProcessing.hs:113-116` per-key): every n data events of a
     * key become one window stamped with its first event's time; the open
-    * window (≤ n−1 events, kept reversed for O(1) append) carries across
-    * micro-batches in state. The trailing partial window never emits (an
-    * unbounded stream never ends) — same contract as the single-group
-    * lowering. Completes the keyed stateful family (scanByKey,
-    * filterAccByKey, chopTimeAlignedByKey). State lifetime contract as in
+    * window carries across micro-batches in state. The trailing partial
+    * window never emits (an unbounded stream never ends). The lowered
+    * graphs' chop step, per key. State lifetime contract as in
     * [[scanByKey]] (`idleTimeoutMs`). */
   def chopByKey[K, A](ds: Dataset[(K, Event[A])], n: Int,
       idleTimeoutMs: Option[Long] = None)(
       implicit encK: Encoder[K], encOut: Encoder[(K, Event[List[A]])],
       encState: Encoder[(Int, List[Event[A]])]): Dataset[(K, Event[List[A]])] = {
     require(n >= 1, s"window size must be >= 1 (got $n)")
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[(Int, List[Event[A]]), (K, Event[List[A]])](
-        OutputMode.Append, timeoutConf(idleTimeoutMs)) {
-        (k: K, it: Iterator[(K, Event[A])], state: GroupState[(Int, List[Event[A]])]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var (count, rev) = state.getOption.getOrElse((0, Nil: List[Event[A]]))
-            val sorted = it.map(_._2).toIndexedSeq
-              .sortBy(Event.orderKey)
-            val out = IndexedSeq.newBuilder[(K, Event[List[A]])]
-            sorted.filter(_.isData).foreach { e =>
-              rev = e :: rev
-              count += 1
-              if (count == n) {
-                val w = rev.reverse
-                out += ((k, Event(w.head.time, Some(w.map(_.value.get)))))
-                rev = Nil
-                count = 0
-              }
-            }
-            state.update((count, rev))
-            idleTimeoutMs.foreach(state.setTimeoutDuration)
-            out.result().iterator
-          }
-      }
+    stepByKey(ds, (0, Nil: List[Event[A]]), idleTimeoutMs)(
+      StreamingLowering.chopStep(n, StreamingLowering.windowEvents[A]))
   }
 
   /** Streaming `sliding n` per key (count-based sliding windows, reference
     * `FunctionalProcessing.hs:93-97` per-key): per data event of a key,
     * the window of the next n events; a window emits when its n-th event
-    * arrives and the FIFO queue drops its head. State per key = the last
-    * ≤ n−1 data events. The trailing n−1 partial windows never emit. */
+    * arrives. State per key = the last ≤ n−1 data events. The trailing
+    * n−1 partial windows never emit. The lowered graphs' sliding step,
+    * per key. */
   def slidingByKey[K, A](ds: Dataset[(K, Event[A])], n: Int,
       idleTimeoutMs: Option[Long] = None)(
       implicit encK: Encoder[K], encOut: Encoder[(K, Event[List[A]])],
       encState: Encoder[(Int, scala.collection.immutable.Queue[Event[A]])])
       : Dataset[(K, Event[List[A]])] = {
     require(n >= 1, s"window size must be >= 1 (got $n)")
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[(Int, scala.collection.immutable.Queue[Event[A]]),
-                              (K, Event[List[A]])](
-        OutputMode.Append, timeoutConf(idleTimeoutMs)) {
-        (k: K, it: Iterator[(K, Event[A])],
-         state: GroupState[(Int, scala.collection.immutable.Queue[Event[A]])]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var (count, buf) = state.getOption
-              .getOrElse((0, scala.collection.immutable.Queue.empty[Event[A]]))
-            val sorted = it.map(_._2).toIndexedSeq
-              .sortBy(Event.orderKey)
-            val out = IndexedSeq.newBuilder[(K, Event[List[A]])]
-            sorted.filter(_.isData).foreach { e =>
-              buf = buf.enqueue(e)
-              count += 1
-              if (count == n) {
-                val w = buf.toList
-                out += ((k, Event(w.head.time, Some(w.map(_.value.get)))))
-                val (_, rest) = buf.dequeue
-                buf = rest
-                count -= 1
-              }
-            }
-            state.update((count, buf))
-            idleTimeoutMs.foreach(state.setTimeoutDuration)
-            out.result().iterator
-          }
-      }
+    stepByKey(ds, (0, scala.collection.immutable.Queue.empty[Event[A]]), idleTimeoutMs)(
+      StreamingLowering.slidingStep(n, StreamingLowering.windowEvents[A]))
   }
 
   /** Streaming trailing-window integer stats per key — the incremental
@@ -432,32 +346,17 @@ object StreamingOps {
       encState: Encoder[scala.collection.immutable.Queue[Long]])
       : Dataset[(K, Long, Long, Long, Long, Long)] = {
     require(lookback >= 1, s"lookback must be >= 1 (got $lookback)")
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[scala.collection.immutable.Queue[Long],
-                              (K, Long, Long, Long, Long, Long)](
-        OutputMode.Append, timeoutConf(idleTimeoutMs)) {
-        (k: K, it: Iterator[(K, Event[(Long, Long)])],
-         state: GroupState[scala.collection.immutable.Queue[Long]]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var buf = state.getOption
-              .getOrElse(scala.collection.immutable.Queue.empty[Long])
-            val sorted = it.map(_._2).toIndexedSeq
-              .collect { case e if e.time.isDefined && e.value.isDefined =>
-                (Event.micros(e.time.get), e.value.get._1, e.value.get._2) }
-              .sortBy(t => (t._1, t._2))
-            val out = sorted.map { case (_, id, v) =>
-              buf = buf.enqueue(v)
-              if (buf.length > lookback) buf = buf.dequeue._2
-              var s = 0L; var q = 0L
-              buf.foreach { x => s += x; q += x * x }
-              (k, id, v, buf.length.toLong, s, q)
-            }
-            state.update(buf)
-            idleTimeoutMs.foreach(state.setTimeoutDuration)
-            out.iterator
-          }
+    byKey(ds, scala.collection.immutable.Queue.empty[Long], idleTimeoutMs) { (k, stored, it) =>
+      var buf = stored
+      val out = timedById(it).map { case (id, v) =>
+        buf = buf.enqueue(v)
+        if (buf.length > lookback) buf = buf.dequeue._2
+        var s = 0L; var q = 0L
+        buf.foreach { x => s += x; q += x * x }
+        (k, id, v, buf.length.toLong, s, q)
       }
+      (out, buf)
+    }
   }
 
   /** Streaming binary-weighted trailing fold per key — the incremental
@@ -480,36 +379,27 @@ object StreamingOps {
       : Dataset[(K, Long, Long, Long, Int)] = {
     require(lookback >= 1 && lookback <= 62,
       s"lookback must be in 1..62 (got $lookback): weights are 2^i longs")
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[scala.collection.immutable.Queue[Long],
-                              (K, Long, Long, Long, Int)](
-        OutputMode.Append, timeoutConf(idleTimeoutMs)) {
-        (k: K, it: Iterator[(K, Event[(Long, Long)])],
-         state: GroupState[scala.collection.immutable.Queue[Long]]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var buf = state.getOption
-              .getOrElse(scala.collection.immutable.Queue.empty[Long])
-            val sorted = it.map(_._2).toIndexedSeq
-              .collect { case e if e.time.isDefined && e.value.isDefined =>
-                (Event.micros(e.time.get), e.value.get._1, e.value.get._2) }
-              .sortBy(t => (t._1, t._2))
-            val out = sorted.map { case (_, id, v) =>
-              buf = buf.enqueue(v)
-              if (buf.length > lookback) buf = buf.dequeue._2
-              // newest value carries weight 2^(lookback-1); older values
-              // halve per step — identical to the batch lag-term weights
-              var num = 0L
-              var w = 1L << (lookback - buf.length)
-              buf.foreach { x => num += x * w; w <<= 1 }
-              (k, id, v, num, buf.length)
-            }
-            state.update(buf)
-            idleTimeoutMs.foreach(state.setTimeoutDuration)
-            out.iterator
-          }
+    byKey(ds, scala.collection.immutable.Queue.empty[Long], idleTimeoutMs) { (k, stored, it) =>
+      var buf = stored
+      val out = timedById(it).map { case (id, v) =>
+        buf = buf.enqueue(v)
+        if (buf.length > lookback) buf = buf.dequeue._2
+        // newest value carries weight 2^(lookback-1); older values
+        // halve per step — identical to the batch lag-term weights
+        var num = 0L
+        var w = 1L << (lookback - buf.length)
+        buf.foreach { x => num += x * w; w <<= 1 }
+        (k, id, v, num, buf.length)
       }
+      (out, buf)
+    }
   }
+
+  /** A key's timed data events `(id, payload)` in (time, id) order — the
+    * batch windows' (ts, event_id) ordering. */
+  private def timedById[P](it: Iterator[Event[(Long, P)]]): IndexedSeq[(Long, P)] =
+    it.collect { case Event(Some(t), Some(p)) => (Event.micros(t), p) }
+      .toIndexedSeq.sortBy { case (us, (id, _)) => (us, id) }.map(_._2)
 
   /** Streaming last-touch attribution (the online form of the batch
     * q_attribution window): per timed event `(id, channel, cents)`, a
@@ -531,27 +421,16 @@ object StreamingOps {
       : Dataset[(K, Long, String, Long)] = {
     implicit val encState: Encoder[String] =
       org.apache.spark.sql.Encoders.STRING
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[String, (K, Long, String, Long)](
-        OutputMode.Append, timeoutConf(idleTimeoutMs)) {
-        (k: K, it: Iterator[(K, Event[(Long, String, Long)])],
-         state: GroupState[String]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var channel = state.getOption.getOrElse(defaultChannel)
-            val sorted = it.map(_._2).toIndexedSeq
-              .collect { case e if e.time.isDefined && e.value.isDefined =>
-                (Event.micros(e.time.get), e.value.get) }
-              .sortBy(t => (t._1, t._2._1))
-            val out = sorted.flatMap { case (_, (id, ch, cents)) =>
-              if (ch == creditType) Some((k, id, channel, cents))
-              else { channel = ch; None }
-            }
-            state.update(channel)
-            idleTimeoutMs.foreach(state.setTimeoutDuration)
-            out.iterator
-          }
+    byKey(ds, defaultChannel, idleTimeoutMs) { (k, stored, it) =>
+      var channel = stored
+      val sorted = it.collect { case Event(Some(t), Some(p)) => (Event.micros(t), p) }
+        .toIndexedSeq.sortBy(t => (t._1, t._2._1))
+      val out = sorted.flatMap { case (_, (id, ch, cents)) =>
+        if (ch == creditType) Some((k, id, channel, cents))
+        else { channel = ch; None }
       }
+      (out, channel)
+    }
   }
 
   /** Streaming `slidingTime ms` per key (reference
@@ -561,60 +440,18 @@ object StreamingOps {
     * the FIFO queue of events still inside some pending window —
     * O(window), not O(history). Windows whose end lies beyond the key's
     * last event never close. Untimed events are dropped (no window to
-    * anchor). */
+    * anchor). The lowered graphs' slidingTime step, per key: under late
+    * data across micro-batches a window is the pending prefix before the
+    * first event at/after its end. */
   def slidingTimeByKey[K, A](ds: Dataset[(K, Event[A])], ms: Long,
       idleTimeoutMs: Option[Long] = None)(
       implicit encK: Encoder[K], encOut: Encoder[(K, Event[List[A]])],
       encState: Encoder[scala.collection.immutable.Queue[Event[A]]])
       : Dataset[(K, Event[List[A]])] = {
     require(ms >= 1, s"window duration must be >= 1 ms (got $ms)")
-    val msUs = ms * 1000L
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[scala.collection.immutable.Queue[Event[A]],
-                              (K, Event[List[A]])](
-        OutputMode.Append, timeoutConf(idleTimeoutMs)) {
-        (k: K, it: Iterator[(K, Event[A])],
-         state: GroupState[scala.collection.immutable.Queue[Event[A]]]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            // Time-ordered vector with two ADVANCING indices instead of a
-            // Queue rescanned per close: `i` anchors the oldest pending
-            // window, `j` is its exclusive window-end bound. Both ends are
-            // nondecreasing (anchor times ascend, so end = anchor + ms
-            // ascends too), so each close costs O(emitted window) with no
-            // re-scan of the shared prefix — a dense same-key burst of w
-            // events closes in O(total output), where the Queue form paid
-            // an extra O(w) per close re-walking (and re-reversing) the
-            // buffer: quadratic on hot keys.
-            var vec = state.getOption
-              .getOrElse(scala.collection.immutable.Queue.empty[Event[A]])
-              .toVector
-            var i = 0
-            var j = 0
-            val sorted = it.map(_._2).toIndexedSeq.sortBy(Event.orderKey)
-            val out = IndexedSeq.newBuilder[(K, Event[List[A]])]
-            sorted.filter(_.isTimed).foreach { e =>
-              val t = Event.micros(e.time.get)
-              while (i < vec.length && Event.micros(vec(i).time.get) + msUs <= t) {
-                val end = Event.micros(vec(i).time.get) + msUs
-                if (j <= i) j = i // the window always contains its anchor
-                while (j < vec.length && Event.micros(vec(j).time.get) < end) j += 1
-                val w = vec.slice(i, j)
-                out += ((k, Event(w.head.time, Some(w.filter(_.isData).map(_.value.get).toList))))
-                i += 1
-              }
-              vec = vec :+ e
-            }
-            state.update(scala.collection.immutable.Queue.from(vec.drop(i)))
-            idleTimeoutMs.foreach(state.setTimeoutDuration)
-            out.result().iterator
-          }
-      }
+    stepByKey(ds, scala.collection.immutable.Queue.empty[Event[A]], idleTimeoutMs)(
+      StreamingLowering.slidingTimeStep(ms, StreamingLowering.windowEvents[A]))
   }
-
-  private def timeoutConf(idleTimeoutMs: Option[Long]): GroupStateTimeout =
-    if (idleTimeoutMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-    else GroupStateTimeout.NoTimeout
 
   /** Kafka producer sink (reference `sendStreamKafka`,
     * `Nodes/Kafka.hs:24-119`): serialize a value column to the topic.
