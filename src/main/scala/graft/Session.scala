@@ -1,6 +1,11 @@
 package graft
 
+import java.net.URI
+
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.SparkSession
+
+import graft.streaming.{ForkFreeLocalFileSystem, StateStores, StreamDebug}
 
 /** The one local SparkSession policy. Bench, Verify, Explain, the test
   * suite and the dev probes all build their session here, so the plans
@@ -13,11 +18,13 @@ object Session {
     graft.core.Knobs.int("SPARK_GRAFT_CPUS", default = 4, min = 1, env)
 
   /** A `local[cpus]` session with the graft extensions, the env-selected
-    * state store and checkpoint manager (`StateStores.configure`), UTC
-    * session time, tmpfs-first scratch, log level WARN, and the
-    * `StreamDebug` listener when `SPARK_GRAFT_STREAM_DEBUG` asks for it. */
+    * state store, the scheme-chosen checkpoint manager and the fork-free
+    * `file:` FileSystem (`StateStores.configure`), UTC session time,
+    * tmpfs-first scratch, log level WARN, and the `StreamDebug` listener
+    * when `SPARK_GRAFT_STREAM_DEBUG` asks for it. Fails if `file:` does not
+    * resolve to `ForkFreeLocalFileSystem` (see [[checkLocalFs]]). */
   def local(cpus: Int): SparkSession = {
-    val spark = graft.streaming.StateStores.configure(SparkSession.builder()
+    val spark = StateStores.configure(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       // a non-UTC host would otherwise group windows and dates differently
@@ -53,8 +60,23 @@ object Session {
       .config("spark.ui.retainedTasks", "1000")
       .config("spark.ui.retainedDeadExecutors", "1"))
       .getOrCreate()
+    checkLocalFs(spark)
     spark.sparkContext.setLogLevel("WARN")
-    if (graft.streaming.StreamDebug.requested) graft.streaming.StreamDebug.install(spark)
+    if (StreamDebug.requested) StreamDebug.install(spark)
     spark
+  }
+
+  /** The Hadoop FileSystem cache is keyed by scheme, authority and user,
+    * not by the conf: a `file:` FileSystem created before this session
+    * (or a session built without `StateStores.configure`) keeps serving
+    * every `file:` path, and every file and directory it creates forks a
+    * `chmod`. Fail loudly instead. */
+  private def checkLocalFs(spark: SparkSession): Unit = {
+    val fs = FileSystem.get(URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    if (!fs.isInstanceOf[ForkFreeLocalFileSystem]) throw new IllegalStateException(
+      s"file: resolves to ${fs.getClass.getName}, not ${classOf[ForkFreeLocalFileSystem].getName}: " +
+        "a file: FileSystem was created before this session, and the Hadoop FileSystem cache " +
+        s"ignores the session's spark.hadoop.${StateStores.LocalFsKey}; every file it creates " +
+        "would fork a chmod process. Build the session before touching file: paths.")
   }
 }

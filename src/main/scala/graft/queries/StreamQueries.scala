@@ -65,84 +65,69 @@ object StreamQueries {
         Encoders.kryo[Event[Any]])
   }
 
-  /** Source→Window(form)→Map(count,sum)→Sink through the stateful lowering
-    * ([[graft.plans.StreamingLowering]]), emitted as (window_start, n,
-    * sum_value) with the stamp the window's FIRST event time. Drops empty
-    * windows (chopTime's period-spanning gaps emit faithful EMPTY windows;
-    * they carry no stamp and no rows). */
-  private def loweredWindowAgg(s: SparkSession, dir: String, onlyType: Option[String],
-                               windowParamSrc: String,
-                               maker: graft.core.WindowMakers.WindowMaker[Any],
-                               tmpPrefix: String): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    import graft.core.Event
-    import graft.plans._
-    val g = StreamGraph.path(Seq(
-      StreamVertex(0, OpSource(1), Nil, "Double", "Double", 1),
-      StreamVertex(1, OpWindow, List(Param(windowParamSrc,
-        (st: List[Event[Any]]) => maker(st))), "Double", "[Double]", 1),
-      StreamVertex(2, OpFilter(0.99), List(Param("nonEmpty",
-        (v: Any) => v.asInstanceOf[List[Any]].nonEmpty)), "[Double]", "[Double]", 1),
-      StreamVertex(3, OpMap, List(Param("countAndSum",
-        (v: Any) => {
-          val vs = v.asInstanceOf[List[Any]]
-          var n = 0L; var sum = 0.0
-          vs.foreach { x => n += 1; sum += x.asInstanceOf[Double] }
-          (n, sum): Any
-        })), "[Double]", "(Long,Double)", 1),
-      StreamVertex(4, OpSink, Nil, "(Long,Double)", "(Long,Double)", 1)))
-    val lowered = StreamingLowering.lower(
-      s, g, Map(0 -> loweredValueSource(s, dir, onlyType)))(4)
-    val typed = lowered.map { e =>
-      val (n, sum) = e.value.get.asInstanceOf[(Long, Double)]
-      (e.time.get, n, sum)
-    }(Encoders.tuple(Encoders.TIMESTAMP, Encoders.scalaLong, Encoders.scalaDouble))
-    Gate.toParquet(typed.toDF("window_start", "n", "sum_raw"), OutputMode.Append, tmpPrefix, 1)
-  }
-
-  /** [[loweredWindowAgg]]'s four-moment sibling: Source→Window(form)→
-    * Filter(nonEmpty)→Map(stats)→Sink, where `stats` is the recognized
-    * (n, sum, min, max) fold name — the chain fuses into the window state
-    * machine through the SAME generalized FoldEmitter the countAndSum
-    * path takes, so this query proves the fold algebra's min/max lanes
+  /** The recognized fused folds the lowered window gates emit, each with
+    * its output columns after `window_start`: a count, then one double per
+    * lane. `countAndSum` is (n, sum); `stats` is the four-moment
+    * (n, sum, min, max), which proves the fold algebra's min/max lanes
     * end-to-end (stamp rule, left-to-right order, recheck) against a SQL
-    * oracle, not just in the unit spec. */
-  private def loweredWindowStats(s: SparkSession, dir: String, onlyType: Option[String],
-                                 windowParamSrc: String,
-                                 maker: graft.core.WindowMakers.WindowMaker[Any],
-                                 tmpPrefix: String): DataFrame = {
-    import org.apache.spark.sql.Encoders
+    * oracle, not just in the unit spec. The fused-fold recheck compares the
+    * lowering's fold against these closures. */
+  private val countAndSum = graft.plans.Param("countAndSum",
+    (v: Any) => {
+      val vs = v.asInstanceOf[List[Any]]
+      var n = 0L; var sum = 0.0
+      vs.foreach { x => n += 1; sum += x.asInstanceOf[Double] }
+      (n, sum): Any
+    }) -> Seq("n", "sum_raw")
+
+  private val stats = graft.plans.Param("stats",
+    (v: Any) => {
+      val vs = v.asInstanceOf[List[Any]]
+      var n = 0L; var sum = 0.0
+      var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
+      vs.foreach { x =>
+        val d = x.asInstanceOf[Double]
+        n += 1; sum += d
+        mn = math.min(mn, d); mx = math.max(mx, d)
+      }
+      (n, sum, mn, mx): Any
+    }) -> Seq("n", "sum_raw", "min_raw", "max_raw")
+
+  /** Source→Window(form)→Filter(nonEmpty)→Map(fold)→Sink through the
+    * stateful lowering ([[graft.plans.StreamingLowering]]), emitted as
+    * (window_start, fold columns…) with the stamp the window's FIRST event
+    * time. The chain fuses into the window state machine through the
+    * generalized FoldEmitter. Drops empty windows (chopTime's
+    * period-spanning gaps emit faithful EMPTY windows; they carry no stamp
+    * and no rows). */
+  private def loweredWindowFold(s: SparkSession, dir: String, onlyType: Option[String],
+                                windowParamSrc: String,
+                                maker: graft.core.WindowMakers.WindowMaker[Any],
+                                fold: (graft.plans.Param, Seq[String]),
+                                tmpPrefix: String): DataFrame = {
+    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType, TimestampType}
     import graft.core.Event
     import graft.plans._
+    val (foldParam, cols) = fold
+    val foldType = cols.tail.map(_ => "Double").mkString("(Long,", ",", ")")
     val g = StreamGraph.path(Seq(
       StreamVertex(0, OpSource(1), Nil, "Double", "Double", 1),
       StreamVertex(1, OpWindow, List(Param(windowParamSrc,
         (st: List[Event[Any]]) => maker(st))), "Double", "[Double]", 1),
       StreamVertex(2, OpFilter(0.99), List(Param("nonEmpty",
         (v: Any) => v.asInstanceOf[List[Any]].nonEmpty)), "[Double]", "[Double]", 1),
-      StreamVertex(3, OpMap, List(Param("stats",
-        (v: Any) => {
-          val vs = v.asInstanceOf[List[Any]]
-          var n = 0L; var sum = 0.0
-          var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
-          vs.foreach { x =>
-            val d = x.asInstanceOf[Double]
-            n += 1; sum += d
-            mn = math.min(mn, d); mx = math.max(mx, d)
-          }
-          (n, sum, mn, mx): Any
-        })), "[Double]", "(Long,Double,Double,Double)", 1),
-      StreamVertex(4, OpSink, Nil,
-        "(Long,Double,Double,Double)", "(Long,Double,Double,Double)", 1)))
+      StreamVertex(3, OpMap, List(foldParam), "[Double]", foldType, 1),
+      StreamVertex(4, OpSink, Nil, foldType, foldType, 1)))
     val lowered = StreamingLowering.lower(
       s, g, Map(0 -> loweredValueSource(s, dir, onlyType)))(4)
-    val typed = lowered.map { e =>
-      val (n, sum, mn, mx) = e.value.get.asInstanceOf[(Long, Double, Double, Double)]
-      (e.time.get, n, sum, mn, mx)
-    }(Encoders.tuple(Encoders.TIMESTAMP, Encoders.scalaLong,
-      Encoders.scalaDouble, Encoders.scalaDouble, Encoders.scalaDouble))
-    Gate.toParquet(typed.toDF("window_start", "n", "sum_raw", "min_raw", "max_raw"),
-      OutputMode.Append, tmpPrefix, 1)
+    val schema = StructType(StructField("window_start", TimestampType, nullable = false) +:
+      StructField(cols.head, LongType, nullable = false) +:
+      cols.tail.map(StructField(_, DoubleType, nullable = false)))
+    val rows = lowered.map { e =>
+      Row.fromSeq(e.time.get +: e.value.get.asInstanceOf[Product].productIterator.toSeq)
+    }(Encoders.row(schema))
+    Gate.toParquet(rows, OutputMode.Append, tmpPrefix, 1)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -478,7 +463,7 @@ object StreamQueries {
       val e = Tables.embeddings(s, dir)
       val cbs = graft.similarity.Pq.seedCodebooks(e, "vec_id", "embedding", m = 4, ksub = 8)
       val (srcDir, schema) = Tables.writeChunkedReplay(
-        e.filter(col("vec_id") < 50), "vec_id", nChunks = 3, "graft_knn_src_")
+        e.filter(col("vec_id") < 50), col("vec_id"), nChunks = 3, "graft_knn_src_")
       val gateDir = graft.core.TempDirs.create("graft_knn_").toAbsolutePath
       Gate.run(s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(srcDir),
           OutputMode.Append, gateDir, GateTuning.statePartitions) { (b, batchId) =>
@@ -555,7 +540,7 @@ object StreamQueries {
     "q_streaming_merge" -> ((s, dir) => {
       val base = Tables.documents(s, dir)
       val (srcDir, schema) = Tables.writeChunkedReplay(
-        TextQueries.mergeChangeset(base), "doc_id", nChunks = 3, "graft_merge_src_")
+        TextQueries.mergeChangeset(base), col("doc_id"), nChunks = 3, "graft_merge_src_")
       val tableDir = graft.core.TempDirs.create("graft_merge_tbl_").toAbsolutePath
       // guardMergeBase: the v0 write scans every base row once, so the
       // offset-collision precondition rides along as a codegen'd
@@ -939,8 +924,8 @@ object StreamQueries {
     "q_streaming_choptime" -> ((s, dir) => {
       val ms = 6L * 3600 * 1000
       val msUs = ms * 1000L
-      val res = loweredWindowAgg(s, dir, onlyType = None, s"chopTime $ms",
-        graft.core.WindowMakers.chopTime[Any](ms), "graft_stream_ct_")
+      val res = loweredWindowFold(s, dir, onlyType = None, s"chopTime $ms",
+        graft.core.WindowMakers.chopTime[Any](ms), countAndSum, "graft_stream_ct_")
       // the raw stamp is the window's first EVENT's time — normalize to the
       // window BOUNDARY: anchor + k*period, anchor = global first event =
       // the first window's stamp. A global window min (one partition over
@@ -962,8 +947,8 @@ object StreamQueries {
     // sliding, a window closes on arrival of its own last event, so ALL
     // complete groups emit; only the final partial group stays pending.
     "q_streaming_chop" -> ((s, dir) =>
-      loweredWindowAgg(s, dir, onlyType = Some("click"), "chop 5",
-          graft.core.WindowMakers.chop[Any](5), "graft_stream_ch_")
+      loweredWindowFold(s, dir, onlyType = Some("click"), "chop 5",
+          graft.core.WindowMakers.chop[Any](5), countAndSum, "graft_stream_ch_")
         .select(col("window_start"), col("n"), roundp(col("sum_raw"), 2).as("sum_value"))),
 
     // slidingTime(ms) through the stateful lowering: the time-sliding
@@ -974,8 +959,8 @@ object StreamQueries {
     // oracle drops them the same way.
     "q_streaming_slidingtime" -> ((s, dir) => {
       val ms = 6L * 3600 * 1000
-      loweredWindowAgg(s, dir, onlyType = Some("click"), s"slidingTime $ms",
-          graft.core.WindowMakers.slidingTime[Any](ms), "graft_stream_st_")
+      loweredWindowFold(s, dir, onlyType = Some("click"), s"slidingTime $ms",
+          graft.core.WindowMakers.slidingTime[Any](ms), countAndSum, "graft_stream_st_")
         .select(col("window_start"), col("n"), roundp(col("sum_raw"), 2).as("sum_value"))
     }),
 
@@ -984,8 +969,8 @@ object StreamQueries {
     // lanes through the streaming lowering against a SQL oracle
     "q_streaming_slidingtime_stats" -> ((s, dir) => {
       val ms = 6L * 3600 * 1000
-      loweredWindowStats(s, dir, onlyType = Some("click"), s"slidingTime $ms",
-          graft.core.WindowMakers.slidingTime[Any](ms), "graft_stream_sts_")
+      loweredWindowFold(s, dir, onlyType = Some("click"), s"slidingTime $ms",
+          graft.core.WindowMakers.slidingTime[Any](ms), stats, "graft_stream_sts_")
         .select(col("window_start"), col("n"),
           roundp(col("sum_raw"), 2).as("sum_value"),
           roundp(col("min_raw"), 2).as("min_value"),
@@ -1003,8 +988,8 @@ object StreamQueries {
     // emit (an unbounded stream never ends) — the oracle drops the last
     // n−1 starts for the same reason.
     "q_streaming_sliding" -> ((s, dir) =>
-      loweredWindowAgg(s, dir, onlyType = Some("click"), "sliding 5",
-          graft.core.WindowMakers.sliding[Any](5), "graft_stream_sl_")
+      loweredWindowFold(s, dir, onlyType = Some("click"), "sliding 5",
+          graft.core.WindowMakers.sliding[Any](5), countAndSum, "graft_stream_sl_")
         .select(col("window_start"), col("n"), roundp(col("sum_raw"), 2).as("sum_value"))),
 
     // streamJoin zip executed THROUGH the stateful streaming lowering:

@@ -3,7 +3,7 @@ package graft.queries
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
 
@@ -177,27 +177,8 @@ object Tables {
   private def chunkedEventsDir(spark: SparkSession, sfDir: String,
       nChunks: Int): (String, StructType) =
     chunkedCache.computeIfAbsent(s"$sfDir#$nChunks", { _ =>
-      val normalized = events(spark, sfDir)
-      val ev = normalized.withColumn("__us", unix_micros(col("ts")))
-      val cuts = ev.stat
-        .approxQuantile("__us", (1 until nChunks).map(_.toDouble / nChunks).toArray, 0.001)
-        .map(_.toLong).distinct.sorted
-      val bounds = (Long.MinValue +: cuts).zip(cuts :+ Long.MaxValue)
-      val d = graft.core.TempDirs.create("graft_events_chunks_")
-      val base = System.currentTimeMillis() - 3600000L
-      bounds.zipWithIndex.foreach { case ((lo, hi), i) =>
-        val sub = graft.core.TempDirs.create("graft_chunk_build_")
-        ev.filter(col("__us") >= lo && col("__us") < hi).drop("__us")
-          .coalesce(1).write.mode("overwrite").parquet(sub.toString)
-        val part = findPartFile(sub)
-        val target = d.resolve(f"chunk-$i%02d.parquet")
-        java.nio.file.Files.move(part, target)
-        // mtime drives FileStreamSource's processing order; 10s apart so
-        // no filesystem granularity can tie two chunks
-        java.nio.file.Files.setLastModifiedTime(target,
-          java.nio.file.attribute.FileTime.fromMillis(base + i * 10000L))
-      }
-      (d.toString, normalized.schema)
+      writeChunkedReplay(events(spark, sfDir), unix_micros(col("ts")), nChunks,
+        "graft_events_chunks_")
     })
 
   private val flushChunkedCache = new java.util.concurrent.ConcurrentHashMap[
@@ -270,7 +251,7 @@ object Tables {
     * across micro-batch increments rather than in one big batch. */
   def streamDocsChunked(spark: SparkSession, sfDir: String, nChunks: Int = 2): DataFrame = {
     val (dir, schema) = docsChunkedCache.computeIfAbsent(s"$sfDir#$nChunks", { _ =>
-      writeChunkedReplay(table(spark, sfDir, "documents"), "doc_id", nChunks,
+      writeChunkedReplay(table(spark, sfDir, "documents"), col("doc_id"), nChunks,
         "graft_docs_chunks_")
     })
     spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir)
@@ -289,22 +270,27 @@ object Tables {
         .getOrElse(throw new IllegalStateException(s"no part file written under $sub"))
     }
 
-  /** Write `df` as (at most) `nChunks` key-contiguous parquet files with
-    * strictly increasing mtimes under a fresh temp dir — the raw material
-    * for a `maxFilesPerTrigger=1` micro-batch replay (mtime drives
-    * FileStreamSource order). Shared by [[streamDocsChunked]] and gates
-    * that replay a DERIVED frame (e.g. a CDC changeset) incrementally. */
-  private[queries] def writeChunkedReplay(df: DataFrame, keyCol: String, nChunks: Int,
+  /** Write `df` as (at most) `nChunks` parquet files, contiguous in the
+    * long-valued `key` (cut at its approximate quantiles), with strictly
+    * increasing mtimes under a fresh temp dir — the raw material for a
+    * `maxFilesPerTrigger=1` micro-batch replay (mtime drives
+    * FileStreamSource order; 10 s apart so no filesystem granularity can
+    * tie two chunks). The key is cut on as a temporary column and not
+    * written. Shared by [[streamEventsChunked]], [[streamDocsChunked]] and
+    * gates that replay a DERIVED frame (e.g. a CDC changeset)
+    * incrementally. */
+  private[queries] def writeChunkedReplay(df: DataFrame, key: Column, nChunks: Int,
       prefix: String): (String, StructType) = {
-    val cuts = df.stat
-      .approxQuantile(keyCol, (1 until nChunks).map(_.toDouble / nChunks).toArray, 0.001)
+    val keyed = df.withColumn("__key", key)
+    val cuts = keyed.stat
+      .approxQuantile("__key", (1 until nChunks).map(_.toDouble / nChunks).toArray, 0.001)
       .map(_.toLong).distinct.sorted
     val bounds = (Long.MinValue +: cuts).zip(cuts :+ Long.MaxValue)
     val d = graft.core.TempDirs.create(prefix)
     val base = System.currentTimeMillis() - 3600000L
     bounds.zipWithIndex.foreach { case ((lo, hi), i) =>
       val sub = graft.core.TempDirs.create("graft_chunk_build_")
-      df.filter(col(keyCol) >= lo && col(keyCol) < hi)
+      keyed.filter(col("__key") >= lo && col("__key") < hi).drop("__key")
         .coalesce(1).write.mode("overwrite").parquet(sub.toString)
       val part = findPartFile(sub)
       val target = d.resolve(f"chunk-$i%02d.parquet")

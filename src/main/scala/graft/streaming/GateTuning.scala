@@ -8,18 +8,16 @@ package graft.streaming
   * partition loads, versions, and commits its own store file per batch —
   * measured round 19: a chained agg→join gate at 4 partitions pays 3
   * stateful operators x 4 partitions x 2-4 store instances of commit per
-  * batch, dominating addBatch wall). Central so experiments can sweep it
-  * (GRAFT_STREAM_STATE_PARTITIONS) and so the certified value is one
+  * batch, dominating addBatch wall). Central so the certified value is one
   * committed constant rather than 17 scattered literals.
   */
 object GateTuning {
-  /** Shuffle/state partitions for keyed streaming gates. Default 2: still
+  /** Shuffle/state partitions for keyed streaming gates: 2, which still
     * exercises cross-partition keyed state sharding (the production 100 TB
     * shape — multiple stores, keys hash-routed between them) at half the
     * per-batch commit tax of the previous 4. 1 would be cheaper still but
     * would stop demonstrating sharded state. */
-  lazy val statePartitions: Int =
-    graft.core.Knobs.int("GRAFT_STREAM_STATE_PARTITIONS", default = 2, min = 1)
+  val statePartitions: Int = 2
 
   /** The same value as the string `conf.set` wants. */
   def statePartitionsStr: String = statePartitions.toString

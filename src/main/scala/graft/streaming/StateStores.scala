@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
-import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
@@ -80,51 +79,43 @@ object StateStores {
     * same-session A/B on the gates read join_w 3.7→2.3 s, taxi_q2
     * 4.6→2.8 s, stateless 1.0→0.75 s per run. The FileSystem-based manager
     * keeps the identical write-temp-then-rename protocol but renames via
-    * `File.renameTo`, atomic on POSIX.
-    *
-    * That alone does not make it fork-free. On Hadoop's stock `file:`
-    * FileSystem every created file and every created directory is
-    * `chmod`ed, and when libhadoop's native code is not loaded
-    * `RawLocalFileSystem.setPermission` runs `chmod` as a child process. A
-    * JFR recording of one untraced perfbench taxi replay (seed 501, 4-core
-    * VM) counted 865 process starts, 847 of them `chmod` under this
-    * manager: 671 in `createTempFile`, 164 in `mkdirs` and 12 in
-    * `createCheckpointDirectory`. So for `file:` locations
-    * [[SchemeCheckpointFileManager]] runs this manager on
-    * [[ForkFreeLocalFileSystem]] instead, which sets the same mode bits
-    * through `java.nio` and writes the same `.crc` files. One thing does
-    * change: with hive-exec on the classpath `file:` resolves to Hive's
-    * `ProxyLocalFileSystem`, whose rename refuses to replace a file, so an
-    * overwriting `createAtomic` (a re-run batch's state-store delta) kept
-    * the old file and left its temp file behind; here it replaces it, as
-    * Spark's FileContext-based manager does. The tax is per metadata
-    * write, not per row, so this is the right manager for local checkpoint
-    * dirs at ANY scale. It is not pinned: HDFS/S3/… keep Spark's own
-    * choice. */
+    * `File.renameTo`, atomic on POSIX, on the process's `file:` FileSystem
+    * — [[ForkFreeLocalFileSystem]] (see [[configure]]), so creating a
+    * checkpoint file or directory starts no `chmod` process either. The tax
+    * is per metadata write, not per row, so this is the right manager for
+    * local checkpoint dirs at ANY scale. It is not pinned:
+    * [[SchemeCheckpointFileManager]] gives HDFS/S3/… Spark's own choice. */
   val LocalFsCheckpointManager =
     "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 
   /** The session conf that names the checkpoint file-manager class. */
   val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
 
-  /** `SPARK_GRAFT_CKPT_MANAGER`: unset → [[SchemeCheckpointFileManager]],
-    * `default` → Spark's own choice for every scheme, anything else → that
-    * manager class; a blank value fails. */
-  private[streaming] def checkpointManagerFromEnv(env: Map[String, String]): Option[String] =
-    Knobs.string("SPARK_GRAFT_CKPT_MANAGER", env) match {
-      case None => Some(classOf[SchemeCheckpointFileManager].getName)
-      case Some("default") => None // Spark's own choice (FileContext-based)
-      case cls => cls
-    }
+  /** The Hadoop conf that names the `file:` FileSystem class. */
+  val LocalFsKey = "fs.file.impl"
 
-  /** Apply the env-selected provider (+ its companion confs) and the
-    * checkpoint file manager to a session builder (provider is a no-op
-    * when SPARK_GRAFT_STATE_STORE is unset — Spark's default applies). */
+  /** Apply the env-selected provider (+ its companion confs), the
+    * scheme-chosen checkpoint file manager and the fork-free `file:`
+    * FileSystem to a session builder (provider is a no-op when
+    * SPARK_GRAFT_STATE_STORE is unset — Spark's default applies).
+    *
+    * Without libhadoop's native code, Hadoop's stock local FileSystem runs
+    * `chmod` as a child process — a fork of the whole JVM — for every file
+    * and directory it creates: checkpoint logs, state-store deltas, every
+    * parquet part file, `_temporary` dir, `_SUCCESS` and `.crc`. A JFR
+    * recording of one untraced perfbench taxi replay (seed 501, 4-core VM)
+    * counted 865 process starts, 847 of them `chmod` under the checkpoint
+    * manager, and one catalog_batch run 55 more in its parquet writes.
+    * Naming [[ForkFreeLocalFileSystem]] here makes it what `file:` resolves
+    * to for every reader and writer in the process. `Session.local` checks
+    * that it took: the Hadoop FileSystem cache ignores the conf, so a
+    * `file:` FileSystem created before the session keeps serving. */
   def configure(b: SparkSession.Builder, env: Map[String, String] = sys.env)
       : SparkSession.Builder = {
-    val withCkpt = checkpointManagerFromEnv(env).fold(b)(b.config(CheckpointManagerKey, _))
-    fromEnv(env).fold(withCkpt) { case (provider, extras) =>
-      extras.foldLeft(withCkpt.config("spark.sql.streaming.stateStore.providerClass", provider)) {
+    val base = b.config(CheckpointManagerKey, classOf[SchemeCheckpointFileManager].getName)
+      .config(s"spark.hadoop.$LocalFsKey", classOf[ForkFreeLocalFileSystem].getName)
+    fromEnv(env).fold(base) { case (provider, extras) =>
+      extras.foldLeft(base.config("spark.sql.streaming.stateStore.providerClass", provider)) {
         case (bb, (k, v)) => bb.config(k, v)
       }
     }
@@ -133,8 +124,8 @@ object StateStores {
 
 /** Checkpoint file manager chosen by the checkpoint location's URI scheme
   * (a path without one takes the default filesystem's): `file:` gets the
-  * FileSystem-based manager on [[ForkFreeLocalFileSystem]]
-  * ([[StateStores.LocalFsCheckpointManager]] says why), every other scheme
+  * FileSystem-based manager ([[StateStores.LocalFsCheckpointManager]]
+  * says why) on the process's cached `file:` FileSystem, every other scheme
   * gets what `CheckpointFileManager.create` picks when no manager class is
   * configured — the FileContext-based manager where the scheme has an
   * `AbstractFileSystem`, as on HDFS. */
@@ -145,7 +136,7 @@ final class SchemeCheckpointFileManager(path: Path, hadoopConf: Configuration)
     val scheme = Option(path.toUri.getScheme)
       .getOrElse(FileSystem.getDefaultUri(hadoopConf).getScheme)
     if (scheme == "file")
-      new FileSystemBasedCheckpointFileManager(path, ForkFreeLocalFileSystem.conf(hadoopConf))
+      new FileSystemBasedCheckpointFileManager(path, hadoopConf)
     else {
       val sparkChoice = new Configuration(hadoopConf)
       sparkChoice.unset(StateStores.CheckpointManagerKey)
@@ -167,33 +158,14 @@ final class SchemeCheckpointFileManager(path: Path, hadoopConf: Configuration)
 }
 
 /** Hadoop's checksummed `file:` FileSystem (`.crc` files written and
-  * verified as on the stock one) over [[ForkFreeRawLocalFileSystem]]. */
+  * verified as on the stock one) over [[ForkFreeRawLocalFileSystem]]: the
+  * process's `file:` FileSystem ([[StateStores.configure]]). It replaces
+  * Hive's `ProxyLocalFileSystem`, which `file:` resolves to with hive-exec
+  * on the classpath and whose only override, `rename`, refuses to replace
+  * an existing file: an overwriting `createAtomic` (a re-run batch's
+  * state-store delta) kept the old file and left its temp file behind.
+  * Here it replaces it, as Spark's FileContext-based manager does. */
 final class ForkFreeLocalFileSystem extends LocalFileSystem(new ForkFreeRawLocalFileSystem)
-
-object ForkFreeLocalFileSystem {
-  /** What the local FileSystem reads from its conf. */
-  private val LocalFsKeys = Seq(
-    "fs.permissions.umask-mode", "file.bytes-per-checksum", "file.stream-buffer-size",
-    "io.file.buffer.size", "fs.local.block.size", "fs.file.checksum.verify")
-
-  private val confs = new ConcurrentHashMap[Seq[String], Configuration]()
-
-  /** A conf under which `file:` paths resolve to a new
-    * [[ForkFreeLocalFileSystem]]. The FileSystem cache is keyed without the
-    * conf, so it is bypassed: the cached stock instance would win. One copy
-    * of `hadoopConf` per distinct value of [[LocalFsKeys]], not one per
-    * manager: every stream and every state store makes a manager, and a
-    * copy per manager measured 5–10 MB more heap after GC in a perfbench
-    * taxi replay (4-core VM). */
-  def conf(hadoopConf: Configuration): Configuration =
-    confs.computeIfAbsent(LocalFsKeys.map(hadoopConf.get), _ => {
-      val c = new Configuration(hadoopConf)
-      c.setClass("fs.file.impl", classOf[ForkFreeLocalFileSystem], classOf[FileSystem])
-      c.setBoolean("fs.file.impl.disable.cache", true)
-      c.setClassLoader(classOf[ForkFreeLocalFileSystem].getClassLoader)
-      c
-    })
-}
 
 /** `RawLocalFileSystem` whose `setPermission` sets the mode bits through
   * `java.nio` instead of running `chmod` as a child process, as the stock

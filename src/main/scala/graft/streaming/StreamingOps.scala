@@ -253,46 +253,6 @@ object StreamingOps {
     }
   }
 
-  /** Streaming `chopTimeAligned` per key: stamp each timed event with the
-    * FIRST-EVENT-aligned window start for its key (the reference's
-    * chopTime alignment, `FunctionalProcessing.hs:118-129`) — the
-    * streaming twin of [[graft.operators.Relational.chopTimeAligned]].
-    * State per key is ONE long (the key's first event time in µs;
-    * Long.MinValue until it has one), so state size is #keys × 8 bytes
-    * regardless of stream length. Downstream aggregation is an ordinary
-    * `groupBy(key, window_start)`.
-    *
-    * Deviation inherent to streaming: an out-of-order event arriving
-    * BEFORE its key's recorded first event keeps the recorded alignment
-    * (it lands in a negative bucket — `floorDiv`, same as the batch
-    * `floor`); an unbounded stream cannot retro-shift already-emitted
-    * windows, where the batch form recomputes the true min. Untimed
-    * events are dropped (no window to assign). State lifetime contract as
-    * in [[scanByKey]] (`idleTimeoutMs`). */
-  def chopTimeAlignedByKey[K, A](ds: Dataset[(K, Event[A])], durationMs: Long,
-      idleTimeoutMs: Option[Long] = None)(
-      implicit encK: Encoder[K],
-      encOut: Encoder[(K, java.sql.Timestamp, Event[A])],
-      encState: Encoder[Long]): Dataset[(K, java.sql.Timestamp, Event[A])] = {
-    val durUs = durationMs * 1000L
-    byKey(ds, Long.MinValue, idleTimeoutMs) { (k, stored, it) =>
-      var first = stored
-      val out = it.toIndexedSeq.sortBy(Event.orderKey).flatMap { e =>
-        e.time.map { t =>
-          // µs, not Timestamp.getTime's ms — the testdata (and the
-          // batch form's unix_micros) are µs-precision
-          val us = Event.micros(t)
-          if (first == Long.MinValue) first = us
-          val start = first + Math.floorDiv(us - first, durUs) * durUs
-          val ws = new java.sql.Timestamp(Math.floorDiv(start, 1000L))
-          ws.setNanos((Math.floorMod(start, 1000000L) * 1000L).toInt)
-          (k, ws, e)
-        }
-      }
-      (out, first)
-    }
-  }
-
   /** Streaming `chop n` per key (count-tumbling windows, reference
     * `FunctionalProcessing.hs:113-116` per-key): every n data events of a
     * key become one window stamped with its first event's time; the open

@@ -62,20 +62,6 @@ class CheckpointManagerSpec extends SparkSuite {
     }
   }
 
-  test("StateStores checkpoint-manager env resolution: unset, default, custom") {
-    assert(StateStores.checkpointManagerFromEnv(Map.empty)
-      .contains(classOf[SchemeCheckpointFileManager].getName))
-    assert(StateStores.checkpointManagerFromEnv(
-      Map("SPARK_GRAFT_CKPT_MANAGER" -> "default")).isEmpty)
-    assert(StateStores.checkpointManagerFromEnv(
-      Map("SPARK_GRAFT_CKPT_MANAGER" -> "com.example.MyManager"))
-      .contains("com.example.MyManager"))
-    val e = intercept[IllegalArgumentException] {
-      StateStores.checkpointManagerFromEnv(Map("SPARK_GRAFT_CKPT_MANAGER" -> " "))
-    }
-    assert(e.getMessage.contains("SPARK_GRAFT_CKPT_MANAGER"), e.getMessage)
-  }
-
   test("the session's checkpoint manager is chosen by the location's scheme") {
     val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
     conf.set(confKey, classOf[SchemeCheckpointFileManager].getName)
@@ -110,15 +96,31 @@ class CheckpointManagerSpec extends SparkSuite {
   private def mode(p: JPath): Set[PosixFilePermission] =
     Files.getPosixFilePermissions(p).asScala.toSet
 
+  /** What `file:` resolved to before the session named its FileSystem:
+    * a new instance built from a copy of `conf` with `fs.file.impl` unset
+    * (Hive's ProxyLocalFileSystem when hive-exec is on the classpath). */
+  private def stockFs(conf: Configuration): FileSystem = {
+    val c = new Configuration(conf)
+    c.unset(StateStores.LocalFsKey)
+    val fs = FileSystem.newInstance(URI.create("file:///"), c)
+    assert(fs.isInstanceOf[LocalFileSystem] && !fs.isInstanceOf[ForkFreeLocalFileSystem])
+    fs
+  }
+
+  /** The confs of the two umask cases. The cached `file:` FileSystem was
+    * built from the session's conf and ignores a later one, as the Hadoop
+    * FileSystem cache always does; so the non-default umask case bypasses
+    * the cache for the conf under test to reach the FileSystem at all. */
+  private val umasks: Seq[(Option[String], Seq[(String, String)])] = Seq(
+    None -> Nil,
+    Some("077") -> Seq("fs.permissions.umask-mode" -> "077", "fs.file.impl.disable.cache" -> "true"))
+
   test("file: checkpoint files and directories get the stock local FileSystem's modes and .crc files") {
-    for (umask <- Seq(None, Some("077"))) {
-      val conf = schemeConf(umask.map("fs.permissions.umask-mode" -> _).toSeq: _*)
+    for ((umask, extra) <- umasks) {
+      val conf = schemeConf(extra: _*)
       val dir = TempDirs.create("graft_ckpt_mode_")
-      val stock = FileSystem.newInstance(URI.create("file:///"), conf)
+      val stock = stockFs(conf)
       try {
-        // whatever `file:` resolves to without the manager (Hive's
-        // ProxyLocalFileSystem when hive-exec is on the classpath)
-        assert(stock.isInstanceOf[LocalFileSystem] && !stock.isInstanceOf[ForkFreeLocalFileSystem])
         val manager = CheckpointFileManager.create(new Path(dir.toUri), conf)
         manager.mkdirs(new Path(s"$dir/ckpt/a/b"))
         val viaManager = manager.createAtomic(new Path(s"$dir/ckpt/a/b/f"), false)
@@ -134,6 +136,30 @@ class CheckpointManagerSpec extends SparkSuite {
           assert(mode(got) == mode(want), s"umask=$umask: $rel")
         }
       } finally stock.close()
+    }
+  }
+
+  /** Every path under `root`, relative, with the write's job UUID masked. */
+  private def tree(root: JPath): Map[String, Set[PosixFilePermission]] =
+    Using.resource(Files.walk(root))(_.iterator.asScala.toSeq).map { p =>
+      root.relativize(p).toString
+        .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "<uuid>") -> mode(p)
+    }.toMap
+
+  test("a parquet write on the session's file: FileSystem gets the stock one's files, modes and .crc files") {
+    for ((umask, extra) <- umasks) {
+      val dir = TempDirs.create("graft_parquet_mode_")
+      val stockClass = Using.resource(stockFs(schemeConf()))(_.getClass.getName)
+      def write(sub: String, opts: Seq[(String, String)]): Unit =
+        spark.range(0, 100).repartition(2).write.options(opts.toMap).parquet(s"$dir/$sub")
+      write("session", extra)
+      write("stock", extra ++ Seq(StateStores.LocalFsKey -> stockClass,
+        "fs.file.impl.disable.cache" -> "true"))
+      val (got, want) = (tree(dir.resolve("session")), tree(dir.resolve("stock")))
+      assert(got.keySet == want.keySet, s"umask=$umask")
+      assert(got.keySet.exists(_.matches("\\.part-.*\\.parquet\\.crc")) && got.contains("._SUCCESS.crc"),
+        s"umask=$umask: ${got.keySet}")
+      for (rel <- want.keySet) assert(got(rel) == want(rel), s"umask=$umask: $rel")
     }
   }
 
@@ -180,7 +206,7 @@ class CheckpointManagerSpec extends SparkSuite {
   }
 
   test("file: checkpoint I/O starts no chmod process") {
-    srcDir // written before recording: the parquet writer runs on the stock FileSystem
+    srcDir // written before recording, so only the checkpoint I/O is recorded
     val dir = TempDirs.create("graft_ckpt_nofork_").toAbsolutePath
     val starts = ProcessStarts.during {
       val manager = CheckpointFileManager.create(new Path(s"file://$dir/direct"), schemeConf())

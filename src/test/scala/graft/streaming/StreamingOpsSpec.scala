@@ -207,33 +207,6 @@ class StreamingOpsSpec extends SparkSuite {
     assert(got == expected)
   }
 
-  test("streaming chopTimeAlignedByKey matches the batch first-event alignment per key") {
-    val stream = spark.readStream
-      .schema(eventsBatch.schema).parquet(replayDir)
-      .select(col("user_id"), col("ts"), col("value"))
-      .as[(Long, java.sql.Timestamp, Double)]
-      .map { case (u, ts, v) => (u, Event(Some(ts), Some(v))) }
-    val windowed = StreamingOps.chopTimeAlignedByKey(stream, 6L * 3600 * 1000)
-    val q = windowed
-      .map { case (u, ws, e) => (u, ws, e.value.get) }
-      .toDF("user_id", "window_start", "value")
-      .writeStream.format("memory").queryName("cta_test").outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    def summarize(df: org.apache.spark.sql.DataFrame) = df
-      .groupBy(col("user_id"), col("window_start"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("s"))
-      .collect()
-      .map(r => (r.getLong(0), r.getTimestamp(1).getTime, r.getLong(2), r.getDouble(3)))
-      .toSet
-    val got = summarize(spark.table("cta_test"))
-    val expected = summarize(graft.operators.Relational.chopTimeAligned(
-      eventsBatch, col("ts"), 6L * 3600 * 1000, Seq(col("user_id")))
-      .select(col("user_id"), col("window_start"), col("value")))
-    assert(got == expected)
-    assert(got.nonEmpty)
-  }
-
   test("chopByKey/slidingByKey n=1: every data event its own window; require on n=0") {
     import org.apache.spark.sql.Encoders
     implicit val encOut: org.apache.spark.sql.Encoder[(Long, Event[List[Double]])] =
