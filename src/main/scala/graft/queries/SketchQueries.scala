@@ -169,7 +169,7 @@ object SketchQueries {
       val exact = toWords(Tables.documents(s, dir))
         .groupBy(col("word")).agg(count(lit(1)).as("n"))
       val gateDir = graft.core.TempDirs.create("graft_stream_freq_").toAbsolutePath
-      Gate.run(summary, OutputMode.Complete, gateDir, GateTuning.statePartitions) { (b, batchId) =>
+      Gate.run(summary, OutputMode.Complete, gateDir, GateTuning.shardedStatePartitions) { (b, batchId) =>
         val sm = b.select(col("total"), explode(col("mg")).as(Seq("word", "mg_est")))
         val verified = exact.join(broadcast(sm), "word")
           .filter(col("n") > col("total") / (k + 1))

@@ -127,7 +127,7 @@ object StreamQueries {
     val rows = lowered.map { e =>
       Row.fromSeq(e.time.get +: e.value.get.asInstanceOf[Product].productIterator.toSeq)
     }(Encoders.row(schema))
-    Gate.toParquet(rows, OutputMode.Append, tmpPrefix, 1)
+    Gate.toParquet(rows, OutputMode.Append, tmpPrefix, GateTuning.statePartitions)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -221,7 +221,7 @@ object StreamQueries {
           aggs = Seq(count(lit(1)).as("n"), roundp(sum(col("value")), 2).as("sum_value")))
         .select(col("window.start").as("window_start"), col("event_type"),
           col("n"), col("sum_value"))
-      Gate.toParquet(agg, OutputMode.Complete, "graft_stream_", GateTuning.statePartitions)
+      Gate.toParquet(agg, OutputMode.Complete, "graft_stream_", GateTuning.shardedStatePartitions)
     }),
 
     // The KEYED stateful streaming forms — the production 100 TB path
@@ -258,7 +258,7 @@ object StreamQueries {
         e.value.map { case (id, sum) => (id, u, sum) }
       }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaDouble))
       Gate.toParquet(typed.toDF("event_id", "user_id", "sum_raw"),
-        OutputMode.Append, "graft_stream_sbk_", GateTuning.statePartitions)
+        OutputMode.Append, "graft_stream_sbk_", GateTuning.shardedStatePartitions)
         .select(col("event_id"), col("user_id"), roundp(col("sum_raw"), 2).as("running_sum"))
     }),
 
@@ -289,7 +289,7 @@ object StreamQueries {
         e.value.map { case (id, t) => (id, u, t) }
       }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.STRING))
       Gate.toParquet(typed.toDF("event_id", "user_id", "event_type"),
-        OutputMode.Append, "graft_stream_cbk_", GateTuning.statePartitions)
+        OutputMode.Append, "graft_stream_cbk_", GateTuning.shardedStatePartitions)
     }),
 
     // Streaming as-of enrichment through StreamingOps.asofEnrichByKey:
@@ -325,7 +325,7 @@ object StreamQueries {
       }(Encoders.product[(Long, Long, Long, Double, Long, Long)])
       Gate.toParquet(
         typed.toDF("event_id", "user_id", "p_us", "value", "click_id", "c_us"),
-        OutputMode.Append, "graft_stream_asof_", GateTuning.statePartitions)
+        OutputMode.Append, "graft_stream_asof_", GateTuning.shardedStatePartitions)
         .select(col("event_id"), col("user_id"),
           timestamp_micros(col("p_us")).as("ts"), col("value"),
           col("click_id"), timestamp_micros(col("c_us")).as("click_ts"),
@@ -386,7 +386,7 @@ object StreamQueries {
         (e.time.get, id, v)
       }(Encoders.tuple(Encoders.TIMESTAMP, Encoders.scalaLong, Encoders.scalaDouble))
       Gate.toParquet(typed.toDF("ts2", "event_id", "value"),
-        OutputMode.Append, "graft_stream_cw_", 1)
+        OutputMode.Append, "graft_stream_cw_", GateTuning.statePartitions)
         // the flush sentinel (event_id -1) is the one withheld pending
         // window and never reaches the sink; the filter is defensive —
         // it must not appear in the oracle-compared output either way
@@ -412,7 +412,7 @@ object StreamQueries {
       val (idxDir, outDir) = (s"$gateDir/idx", s"$gateDir/out")
       val bandSchema = "doc_id BIGINT, band_idx INT, band_hash BIGINT"
       Gate.run(Tables.streamDocsChunked(s, dir), OutputMode.Append, gateDir,
-          GateTuning.statePartitions) { (b, batchId) =>
+          GateTuning.shardedStatePartitions) { (b, batchId) =>
         if (!b.isEmpty) {
           val bandsNew = graft.dedup.Dedup.minhashBands(
             graft.dedup.Dedup.minhashSignatures(b, col("doc_id"), col("text"),
@@ -466,7 +466,7 @@ object StreamQueries {
         e.filter(col("vec_id") < 50), col("vec_id"), nChunks = 3, "graft_knn_src_")
       val gateDir = graft.core.TempDirs.create("graft_knn_").toAbsolutePath
       Gate.run(s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(srcDir),
-          OutputMode.Append, gateDir, GateTuning.statePartitions) { (b, batchId) =>
+          OutputMode.Append, gateDir, GateTuning.shardedStatePartitions) { (b, batchId) =>
         if (!b.isEmpty) Gate.writeBatch(OutputMode.Append, gateDir)(
           graft.similarity.Pq.adcKnn(e, b, cbs, k = 5), batchId)
       }
@@ -488,7 +488,7 @@ object StreamQueries {
         .localCheckpoint()
       val gateDir = graft.core.TempDirs.create("graft_dsir_").toAbsolutePath
       Gate.run(Tables.streamDocsChunked(s, dir), OutputMode.Append, gateDir,
-          GateTuning.statePartitions) { (b, batchId) =>
+          GateTuning.shardedStatePartitions) { (b, batchId) =>
         // per-batch widen STAYS ON: a chunk-file micro-batch arrives as
         // ONE partition, so scoring 1/4 of the corpus would run
         // single-threaded — measured at 26x data, the widened batch
@@ -524,7 +524,7 @@ object StreamQueries {
       val trans = graft.streaming.StreamingOps.funnelByKey[Long](keyed,
         Seq("view", "click", "purchase"))
       Gate.toParquet(trans.toDF("user_id", "stage", "us"),
-        OutputMode.Append, "graft_stream_funnel_", GateTuning.statePartitions)
+        OutputMode.Append, "graft_stream_funnel_", GateTuning.shardedStatePartitions)
         .select(col("user_id"), col("stage"),
           timestamp_micros(col("us")).as("ts"))
     }),
@@ -553,7 +553,7 @@ object StreamQueries {
       // same output path — instead of crashing on errorifexists.
       @volatile var lastVersion = 0L
       Gate.run(s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(srcDir),
-          OutputMode.Append, tableDir, GateTuning.statePartitions) { (b, batchId) =>
+          OutputMode.Append, tableDir, GateTuning.shardedStatePartitions) { (b, batchId) =>
         val cur = s.read.parquet(s"$tableDir/v$batchId")
         graft.operators.Relational.mergeUpsert(cur, b, "doc_id")
           .write.mode("overwrite").parquet(s"$tableDir/v${batchId + 1}")
@@ -595,7 +595,7 @@ object StreamQueries {
         }(Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[(Long, Long)]]))
       val stats = graft.streaming.StreamingOps.ewmaByKey[Long](keyed, lookback = 16)
       Gate.toParquet(stats.toDF("user_id", "event_id", "cents", "ewma_num", "n_terms"),
-        OutputMode.Append, "graft_stream_ewma_", GateTuning.statePartitions)
+        OutputMode.Append, "graft_stream_ewma_", GateTuning.shardedStatePartitions)
         .select(col("event_id"), col("user_id"), col("cents"),
           col("ewma_num"), col("n_terms"))
     }),
@@ -614,7 +614,7 @@ object StreamQueries {
         .groupBy(col("bin"))
         .agg(count(lit(1)).as("n"), sum(col("c")).as("sum_cents"),
           min(col("c")).as("min_cents"), max(col("c")).as("max_cents"))
-      Gate.toParquet(binned, OutputMode.Complete, "graft_stream_hist_", GateTuning.statePartitions)
+      Gate.toParquet(binned, OutputMode.Complete, "graft_stream_hist_", GateTuning.shardedStatePartitions)
     }),
 
     // Streaming last-touch attribution: purchases credited at ARRIVAL to
@@ -641,7 +641,7 @@ object StreamQueries {
       val credited = graft.streaming.StreamingOps.attributeByKey[Long](
         keyed, creditType = "purchase", defaultChannel = "direct")
       Gate.toParquet(credited.toDF("user_id", "event_id", "channel", "cents"),
-        OutputMode.Append, "graft_stream_attr_", GateTuning.statePartitions)
+        OutputMode.Append, "graft_stream_attr_", GateTuning.shardedStatePartitions)
         .select(col("event_id"), col("user_id"), col("channel"), col("cents"))
     }),
 
@@ -666,7 +666,7 @@ object StreamQueries {
         }(Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[(Long, Long)]]))
       val stats = graft.streaming.StreamingOps.trailingStatsByKey[Long](keyed, lookback = 10)
       Gate.toParquet(stats.toDF("user_id", "event_id", "cents", "n_win", "s", "q"),
-        OutputMode.Append, "graft_stream_zscore_", GateTuning.statePartitions)
+        OutputMode.Append, "graft_stream_zscore_", GateTuning.shardedStatePartitions)
         .select(col("event_id"), col("user_id"), col("cents"),
           col("n_win"), col("s"), col("q"),
           ((col("n_win") * col("cents") - col("s"))
@@ -699,7 +699,7 @@ object StreamQueries {
       }(Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
         Encoders.scalaLong, Encoders.scalaDouble))
       Gate.toParquet(typed.toDF("user_id", "window_start", "n", "sum_raw"),
-        OutputMode.Append, "graft_stream_chbk_", GateTuning.statePartitions)
+        OutputMode.Append, "graft_stream_chbk_", GateTuning.shardedStatePartitions)
         .select(col("user_id"), col("window_start"), col("n"),
           roundp(col("sum_raw"), 2).as("sum_value"))
     }),
@@ -729,7 +729,7 @@ object StreamQueries {
       }(Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
         Encoders.scalaLong, Encoders.scalaDouble))
       Gate.toParquet(typed.toDF("user_id", "window_start", "n", "sum_raw"),
-        OutputMode.Append, "graft_stream_slbk_", GateTuning.statePartitions)
+        OutputMode.Append, "graft_stream_slbk_", GateTuning.shardedStatePartitions)
         .select(col("user_id"), col("window_start"), col("n"),
           roundp(col("sum_raw"), 2).as("sum_value"))
     }),
@@ -761,7 +761,7 @@ object StreamQueries {
       }(Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
         Encoders.scalaLong, Encoders.scalaDouble))
       Gate.toParquet(typed.toDF("user_id", "window_start", "n", "sum_raw"),
-        OutputMode.Append, "graft_stream_stbk_", GateTuning.statePartitions)
+        OutputMode.Append, "graft_stream_stbk_", GateTuning.shardedStatePartitions)
         .select(col("user_id"), col("window_start"), col("n"),
           roundp(col("sum_raw"), 2).as("sum_value"))
     }),
@@ -776,7 +776,7 @@ object StreamQueries {
       val dedup = Tables.streamEventsChunked(s, dir)
         .select(col("user_id"), col("event_type"))
         .dropDuplicates("user_id", "event_type")
-      Gate.toParquet(dedup, OutputMode.Append, "graft_stream_dd_", GateTuning.statePartitions)
+      Gate.toParquet(dedup, OutputMode.Append, "graft_stream_dd_", GateTuning.shardedStatePartitions)
     }),
 
     // STREAM-STREAM interval join — Structured Streaming's hardest
@@ -804,7 +804,7 @@ object StreamQueries {
           watermark = "2 hours", windowMs = 3600000L,
           keys = col("user_id") === col("p_user"))
         .select(col("click_id"), col("purchase_id"), col("user_id"))
-      Gate.toParquet(joined, OutputMode.Append, "graft_stream_ij_", GateTuning.statePartitions)
+      Gate.toParquet(joined, OutputMode.Append, "graft_stream_ij_", GateTuning.shardedStatePartitions)
     }),
 
     // streamJoinW executed as a STREAMING aggregate→join chain (Spark 4
@@ -822,7 +822,7 @@ object StreamQueries {
         leftAggs = Seq(count(lit(1)).as("n_clicks")),
         rightAggs = Seq(roundp(sum(col("value")), 2).as("purchase_total")))
         .select(col("w.start").as("window_start"), col("n_clicks"), col("purchase_total"))
-      Gate.toParquet(joined, OutputMode.Append, "graft_stream_wj_", GateTuning.statePartitions)
+      Gate.toParquet(joined, OutputMode.Append, "graft_stream_wj_", GateTuning.shardedStatePartitions)
     }),
 
     // streamJoinW with DIFFERING per-side window lengths — the reference's
@@ -844,7 +844,7 @@ object StreamQueries {
         rightAggs = Seq(roundp(sum(col("value")), 2).as("purchase_total")))
         .select(col("w.start").as("window_start"), col("wl.start").as("sub_start"),
           col("n_clicks"), col("purchase_total"))
-      Gate.toParquet(joined, OutputMode.Append, "graft_stream_wj2_", GateTuning.statePartitions)
+      Gate.toParquet(joined, OutputMode.Append, "graft_stream_wj2_", GateTuning.shardedStatePartitions)
     }),
 
     // STREAMING session windows — Spark's native session_window aggregate
@@ -857,7 +857,7 @@ object StreamQueries {
         .agg(count(lit(1)).as("n"), roundp(sum(col("value")), 2).as("sum_value"))
         .select(col("w.start").as("session_start"), col("user_id"),
           col("n"), col("sum_value"))
-      Gate.toParquet(agg, OutputMode.Complete, "graft_stream_ss_", GateTuning.statePartitions)
+      Gate.toParquet(agg, OutputMode.Complete, "graft_stream_ss_", GateTuning.shardedStatePartitions)
     }),
 
     // APPEND-MODE session windows — the unbounded-stream configuration:
@@ -877,7 +877,7 @@ object StreamQueries {
           aggs = Seq(count(lit(1)).as("n"), roundp(sum(col("value")), 2).as("sum_value")))
         .select(col("session_window.start").as("session_start"), col("user_id"),
           col("n"), col("sum_value"))
-      Gate.toParquet(agg, OutputMode.Append, "graft_stream_ssa_", GateTuning.statePartitions)
+      Gate.toParquet(agg, OutputMode.Append, "graft_stream_ssa_", GateTuning.shardedStatePartitions)
     }),
 
     // streamJoinE as a STREAMING stream-stream join (the last §2.3
@@ -905,7 +905,7 @@ object StreamQueries {
         // the epoch-aligned 1h window start IS date_trunc('hour', c_ts)
         .select(col("w.start").as("hour"), col("user_id"),
           col("click_id"), col("purchase_id"))
-      Gate.toParquet(joined, OutputMode.Append, "graft_stream_je_", GateTuning.statePartitions)
+      Gate.toParquet(joined, OutputMode.Append, "graft_stream_je_", GateTuning.shardedStatePartitions)
     }),
 
     // chopTime executed THROUGH the stateful streaming lowering
@@ -1033,7 +1033,7 @@ object StreamQueries {
         Encoders.scalaDouble, Encoders.scalaDouble))
       Gate.toParquet(
         typed.toDF("click_id", "purchase_id", "click_value", "purchase_value"),
-        OutputMode.Append, "graft_stream_zip_", 1)
+        OutputMode.Append, "graft_stream_zip_", GateTuning.statePartitions)
     }),
 
     // streamFilterAcc executed THROUGH the stateful streaming lowering:
@@ -1067,7 +1067,8 @@ object StreamQueries {
         val (id, b) = e.value.get.asInstanceOf[(Long, Long)]
         (id, b)
       }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-      Gate.toParquet(typed.toDF("event_id", "bucket"), OutputMode.Append, "graft_stream_chg_", 1)
+      Gate.toParquet(typed.toDF("event_id", "bucket"), OutputMode.Append, "graft_stream_chg_",
+        GateTuning.statePartitions)
     }),
 
     // streamScan executed THROUGH the stateful streaming lowering
@@ -1094,7 +1095,8 @@ object StreamQueries {
         val (id, sum) = e.value.get.asInstanceOf[(Long, Double)]
         (id, sum)
       }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble))
-      Gate.toParquet(typed.toDF("event_id", "sum_raw"), OutputMode.Append, "graft_stream_scan_", 1)
+      Gate.toParquet(typed.toDF("event_id", "sum_raw"), OutputMode.Append, "graft_stream_scan_",
+        GateTuning.statePartitions)
         .select(col("event_id"), roundp(col("sum_raw"), 2).as("running_sum"))
     }),
 
@@ -1136,7 +1138,7 @@ object StreamQueries {
         (id, part, v)
       }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong))
       Gate.toParquet(typed.toDF("event_id", "part_idx", "part_val"),
-        OutputMode.Append, "graft_stream_sl2_", 1)
+        OutputMode.Append, "graft_stream_sl2_", GateTuning.statePartitions)
     }),
 
     // streamMerge (FunctionalProcessing.hs:135-144): order-preserving UNION
@@ -1321,7 +1323,7 @@ object StreamQueries {
         .groupBy(window(col("ts"), "1 hour"))                   // stepCount
         .agg(count(lit(1)).as("n_steps"))
         .select(col("window.start").as("window_start"), col("n_steps"))
-      Gate.toParquet(counts, OutputMode.Append, "graft_stream_wear_", GateTuning.statePartitions)
+      Gate.toParquet(counts, OutputMode.Append, "graft_stream_wear_", GateTuning.shardedStatePartitions)
     })
   )
 

@@ -160,7 +160,7 @@ object TaxiQueries {
         .select(col("w.start").as("window_start"), col("s_clat"), col("s_clon"),
           col("e_clat"), col("e_clon"), col("n"))
       val gateDir = graft.core.TempDirs.create("graft_stream_taxi1_").toAbsolutePath
-      Gate.run(counts, OutputMode.Append, gateDir, GateTuning.statePartitions) { (b, batchId) =>
+      Gate.run(counts, OutputMode.Append, gateDir, GateTuning.shardedStatePartitions) { (b, batchId) =>
         val top = Relational.topKPerGroup(b, 10, Seq(col("window_start")),
           Seq(col("n").desc, col("s_clat"), col("s_clon"), col("e_clat"), col("e_clon")))
         Gate.writeBatch(OutputMode.Append, gateDir)(top, batchId)
@@ -210,7 +210,7 @@ object TaxiQueries {
         .select(col("w.start").as("window_start"), col("wl.start").as("sub_start"),
           col("clat"), col("clon"), col("n_empty"),
           roundp(col("profit"), 2).as("profit"), col("profitability"))
-      Gate.toParquet(joined, OutputMode.Append, "graft_stream_taxi2_", GateTuning.statePartitions)
+      Gate.toParquet(joined, OutputMode.Append, "graft_stream_taxi2_", GateTuning.shardedStatePartitions)
     })
   )
 

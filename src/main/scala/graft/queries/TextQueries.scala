@@ -314,7 +314,7 @@ object TextQueries {
       val binSchema = "doc_id BIGINT, source STRING, n_tokens BIGINT, bin BIGINT"
       val carrySchema = "source STRING, carry BIGINT"
       Gate.run(Tables.streamDocsChunked(s, dir), OutputMode.Append, gateDir,
-          GateTuning.statePartitions) { (b, batchId) =>
+          GateTuning.shardedStatePartitions) { (b, batchId) =>
         if (!b.isEmpty) {
           val withH = b.select(col("doc_id"), col("source"), col("text"))
             .withColumn("h", md5(col("text")))

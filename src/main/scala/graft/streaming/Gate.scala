@@ -16,13 +16,15 @@ object Gate {
 
   /** Drain `stream` in `mode`, checkpointing at `dir/ckpt`, and call
     * `perBatch` with every micro-batch and its id. The stream runs with
-    * `statePartitions` shuffle (= state-store) partitions: 1 for a
-    * single-group state machine, whose one ordered stream would otherwise
-    * create, snapshot and commit a store per partition, all but one
-    * forever empty; [[GateTuning.statePartitions]] for keyed state. The
-    * pin is captured into the query at `start` and the session's value is
-    * restored straight after, even when `start` throws, so whatever reads
-    * the result gets the session default. */
+    * `statePartitions` shuffle (= state-store) partitions:
+    * [[GateTuning.statePartitions]] (1) for a lowered StreamGraph, whose
+    * one constant-key group would otherwise create, snapshot and commit a
+    * store per partition, all but one forever empty;
+    * [[GateTuning.shardedStatePartitions]] (2) for a keyed gate, whose
+    * keys are hash-routed between the stores. The pin is captured into the
+    * query's checkpoint at `start`, so a restart keeps it, and the
+    * session's value is restored straight after, even when `start` throws,
+    * so whatever reads the result gets the session default. */
   def run(stream: DataFrame, mode: OutputMode, dir: Path, statePartitions: Int)(
       perBatch: (DataFrame, Long) => Unit): Unit = {
     val conf = stream.sparkSession.conf

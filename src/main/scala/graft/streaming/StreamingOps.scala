@@ -46,11 +46,21 @@ object StreamingOps {
     * per-element `getCurrentTime` (`Nodes.hs:309-319`) — a
     * `current_timestamp()` column would pin every row of a micro-batch to
     * the single batch timestamp, quantizing downstream event-time windows
-    * to trigger boundaries. */
+    * to trigger boundaries.
+    *
+    * One partition per micro-batch: one TCP connection is one stream,
+    * and Spark's socket source deals its lines round-robin into
+    * `defaultParallelism` slices that a single-group state machine would
+    * only shuffle back together. The partition holds the slices one after
+    * another, not in arrival order; downstream state machines re-sort by
+    * event time. Over this `SinglePartition` input, a state operator at
+    * [[GateTuning.statePartitions]] needs no exchange, so a trigger runs
+    * as one stage of one task. */
   def socketSource(spark: SparkSession, host: String, port: Int): DataFrame = {
     import spark.implicits._
     spark.readStream.format("socket")
       .option("host", host).option("port", port).load()
+      .coalesce(1)
       .as[String]
       .map(v => (new java.sql.Timestamp(System.currentTimeMillis()), v))
       .toDF("time", "value")

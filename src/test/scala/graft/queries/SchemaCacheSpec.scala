@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.conf.Configuration
@@ -13,37 +12,27 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, StringType}
 
-import graft.{ProcessStarts, SparkSuite}
+import graft.{ListenerFence, ProcessStarts, SparkSuite}
 
 /** [[Tables.table]] infers a table's parquet schema once per file version
   * and inference-conf setting, and still builds a fresh relation per call. */
 class SchemaCacheSpec extends SparkSuite {
 
-  private val FenceProp = "graft.spec.fence"
-
-  /** Spark jobs started while `body` runs. Listener events arrive in order
-    * on one bus, so a marked job run after `body` fences off its events. */
+  /** Spark jobs started while `body` runs, fenced on both sides by
+    * [[ListenerFence]]. */
   private def jobsStartedBy(body: => Unit): Int = {
     val sc = spark.sparkContext
     val started = new AtomicInteger
-    @volatile var fence = new CountDownLatch(1)
-    def runFence(): Unit = {
-      fence = new CountDownLatch(1)
-      sc.setLocalProperty(FenceProp, "1")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(FenceProp, null)
-      assert(fence.await(60, TimeUnit.SECONDS), "fence job never reached the listener")
-    }
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(FenceProp) != null)) fence.countDown()
-        else started.incrementAndGet()
+        if (!ListenerFence.isFence(e.properties)) started.incrementAndGet()
     }
     sc.addSparkListener(listener)
     try {
-      runFence()
+      ListenerFence.await(sc)
       started.set(0)
       body
-      runFence()
+      ListenerFence.await(sc)
       started.get
     } finally sc.removeSparkListener(listener)
   }
