@@ -25,6 +25,7 @@ class SessionSpec extends SparkSuite {
     assert(conf.get("spark.sql.ui.retainedExecutions") == "8")
     assert(spark.conf.get(StateStores.CheckpointManagerKey) ==
       classOf[SchemeCheckpointFileManager].getName)
+    assert(spark.conf.get(StateStores.ArtifactIsolationKey) == "false")
   }
 
   test("file: is the fork-free FileSystem, and a parquet gate drain starts no process") {
