@@ -9,18 +9,15 @@ import org.apache.spark.sql.SparkSession
   * median therefore reflects steady state while still charging repeatable
   * per-run work. SPARK_GRAFT_ONLY=q_a,q_b restricts to a subset (dev loop).
   *
-  * Environment hygiene knobs (a certification run sets them; dev default is
-  * measure-and-annotate only):
-  *  - SPARK_GRAFT_IDLE_WAIT_S: total seconds the run may spend waiting for
-  *    OTHER processes' CPU (measured from /proc/stat minus /proc/self/stat —
-  *    loadavg can't tell a co-tenant from our own last burst) to drop below
-  *    SPARK_GRAFT_MAX_EXT_CPUS (default 2.0) before timing each query.
-  *  - The JSON carries per-query "loads" (1-min loadavg) and "ext_cpus"
-  *    (other-process busy cores at gate time), plus "io_probe_ms" (mean
-  *    4KiB write+fsync latency in the cwd) and "cpu_probe_ms" (a fixed
-  *    single-thread integer-mix loop — the epoch's serial CPU speed, for
-  *    normalizing totals across host epochs) so environment skew is
-  *    machine-detectable next to the numbers it would distort.
+  * Every result is forced through a "noop"-sink write (the JSON's "force"
+  * field). The JSON carries per-query "loads" (1-min loadavg) and
+  * "ext_cpus" (OTHER processes' busy cores just before the query's first
+  * run, measured from /proc/stat minus /proc/self/stat — loadavg can't tell
+  * a co-tenant from our own last burst), plus "io_probe_ms" (mean 4KiB
+  * write+fsync latency in the cwd) and "cpu_probe_ms" (a fixed
+  * single-thread integer-mix loop — the epoch's serial CPU speed, for
+  * normalizing totals across host epochs) so environment skew is
+  * machine-detectable next to the numbers it would distort.
   */
 object Bench {
   /** The artifact a full run writes and reads its retry priors from:
@@ -49,8 +46,7 @@ object Bench {
     // process's jiffies over a short sample window. Loadavg cannot separate
     // a co-tenant from the bench's own 32-thread bursts (and decays over a
     // minute — it stays high after OUR heavy query on an otherwise idle
-    // host); this measures other-process CPU directly and instantaneously,
-    // which is what the idle gate below must key on.
+    // host); this measures other-process CPU directly and instantaneously.
     def extBusyCores(sampleMs: Long = 250): Double = try {
       def hostBusy(): Long = {
         val f = java.nio.file.Files.readAllLines(
@@ -72,22 +68,6 @@ object Bench {
       val elapsed = (t1 - t0) / 1e9
       (((h1 - h0) - (s1 - s0)).max(0L) / hz) / elapsed
     } catch { case _: Throwable => -1.0 }
-    // Idle gate: before timing each query, wait (bounded by a shared budget)
-    // until other-process CPU drops below the threshold. Default budget 0 =
-    // never wait (dev loop); a certification run sets SPARK_GRAFT_IDLE_WAIT_S
-    // so a co-tenant burst delays the measurement instead of poisoning it.
-    val maxExt = graft.core.Knobs.double("SPARK_GRAFT_MAX_EXT_CPUS", default = 2.0, min = 0.0)
-    var idleWaitBudgetMs = graft.core.Knobs.long("SPARK_GRAFT_IDLE_WAIT_S", default = 0L, min = 0L) * 1000L
-    def awaitIdle(): Double = {
-      var ext = extBusyCores()
-      while (ext >= 0 && ext > maxExt && idleWaitBudgetMs > 0) {
-        val napMs = 5000L.min(idleWaitBudgetMs)
-        Thread.sleep(napMs)
-        idleWaitBudgetMs -= napMs
-        ext = extBusyCores()
-      }
-      ext
-    }
     // IO-health probe: mean latency of ~100 4KiB write+fsync cycles against
     // the working directory's filesystem. Round 9 lost hours to a host-side
     // fsync degradation diagnosed by hand; recording the probe next to the
@@ -211,22 +191,18 @@ object Bench {
     // inference), so q_dsir under count() measured reading one column of
     // documents, not DSIR. A "noop"-sink write forces every output column
     // of every output row through the full plan without paying a real
-    // sink — the standard Spark benchmarking harness shape, and the
-    // default here. SPARK_GRAFT_FORCE=count keeps the old behavior for
-    // comparing against pre-r14 artifacts (the JSON self-identifies via
-    // the "force" field).
-    // fail fast on anything else: a typo ("Count", "cnt") would silently
-    // run the noop sink while the artifact's "force" field records the
-    // raw string — a self-misidentifying measurement
-    val force = graft.core.Knobs.oneOf("SPARK_GRAFT_FORCE", "noop", Seq("noop", "count"))
+    // sink — the standard Spark benchmarking harness shape. The JSON's
+    // "force" field still names it: tools/bench_min_sessions.py and the
+    // scale merges check it matches across artifacts (pre-r14 artifacts
+    // read "count").
+    val force = "noop"
+    def forceResult(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.mode("overwrite").format("noop").save()
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Double = {
       val t0 = System.nanoTime()
-      try {
-        val df = fn(spark, sfDir)
-        if (force == "count") df.count()
-        else df.write.mode("overwrite").format("noop").save()
-      } catch {
+      try forceResult(fn(spark, sfDir))
+      catch {
         case e: Throwable =>
           errors.getOrElseUpdate(name, Option(e.getMessage).getOrElse(e.getClass.getName))
       }
@@ -272,13 +248,8 @@ object Bench {
           // errors swallowed to -1: a canary failure must not void the
           // query's real measurement in the main pass (timeOnce's errors
           // map is keyed by query name and excludes entries from results).
-          // Force the SAME way the timed passes do (r18 ADVICE): a
-          // count-mode session's canaries must qualify count-mode numbers.
-          try {
-            val df = fn(spark, sfDir)
-            if (force == "count") df.count()
-            else df.write.mode("overwrite").format("noop").save()
-          } catch { case _: Throwable => return -1.0 }
+          try forceResult(fn(spark, sfDir))
+          catch { case _: Throwable => return -1.0 }
           val dt = (System.nanoTime() - t0) / 1e9
           spark.catalog.clearCache()
           spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
@@ -308,29 +279,26 @@ object Bench {
     // it, so even the median was poisoned. Interleaved, one bad window
     // touches at most one sample of many queries and the per-query median
     // shrugs it off. Pass 1 is the cold run for every query (codegen +
-    // persist build), exactly as before; the idle gate + load snapshot
-    // stay per-query on pass 1 (a 250 ms /proc sample per (pass, query)
-    // would cost minutes at 155 queries), and re-arm on later passes only
-    // while the certification idle budget remains.
+    // persist build), exactly as before; the ext_cpus + load snapshot is
+    // per-query on pass 1 only (a 250 ms /proc sample per (pass, query)
+    // would cost minutes at 155 queries).
     val samples = scala.collection.mutable.LinkedHashMap.empty[String, List[Double]]
     for (pass <- 1 to runs; (name, fn) <- selected) {
-      if (pass == 1) { exts(name) = awaitIdle(); loads(name) = loadAvg() }
-      else if (idleWaitBudgetMs > 0) awaitIdle()
+      if (pass == 1) { exts(name) = extBusyCores(); loads(name) = loadAvg() }
       if (!errors.contains(name))
         samples(name) = samples.getOrElse(name, Nil) :+ timeOnce(name, fn)
     }
     val results = selected.map { case (name, fn) =>
       val first = median(samples.getOrElse(name, List(Double.NaN)))
-      // >2x the prior round's median with an idle gate reading and no
-      // error: re-measure once (back-to-back, same process) and keep the
-      // better — a loaded-machine artifact vanishes on retry, a real
+      // >2x the prior round's median and no error: re-measure once
+      // (back-to-back, same process) and keep the better — a
+      // loaded-machine artifact vanishes on retry, a real
       // regression reproduces (and stays flagged by the retried map
       // carrying the first measurement). The threshold was 3x through
       // r10; the readings it failed to catch were 2-2.5x.
       val best = prior.get(name) match {
         case Some(p) if first > 2 * p && !errors.contains(name) =>
           retried(name) = first
-          awaitIdle()
           val second = median((1 to runs).map(_ => timeOnce(name, fn)))
           if (errors.contains(name)) {
             // the retry run failed where the first succeeded — a retry

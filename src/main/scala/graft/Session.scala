@@ -5,7 +5,7 @@ import java.net.URI
 import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.SparkSession
 
-import graft.streaming.{ForkFreeLocalFileSystem, StateStores, StreamDebug}
+import graft.streaming.{ForkFreeLocalFileSystem, StateStores}
 
 /** The one local SparkSession policy. Bench, Verify, Explain, the test
   * suite and the dev probes all build their session here, so the plans
@@ -20,8 +20,7 @@ object Session {
   /** A `local[cpus]` session with the graft extensions, the env-selected
     * state store, the scheme-chosen checkpoint manager and the fork-free
     * `file:` FileSystem (`StateStores.configure`), UTC session time,
-    * tmpfs-first scratch, log level WARN, and the `StreamDebug` listener
-    * when `SPARK_GRAFT_STREAM_DEBUG` asks for it. Fails if `file:` does not
+    * tmpfs-first scratch and log level WARN. Fails if `file:` does not
     * resolve to `ForkFreeLocalFileSystem` (see [[checkLocalFs]]). */
   def local(cpus: Int): SparkSession = {
     val spark = StateStores.configure(SparkSession.builder()
@@ -62,7 +61,6 @@ object Session {
       .getOrCreate()
     checkLocalFs(spark)
     spark.sparkContext.setLogLevel("WARN")
-    if (StreamDebug.requested) StreamDebug.install(spark)
     spark
   }
 

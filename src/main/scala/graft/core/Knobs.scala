@@ -8,15 +8,12 @@ package graft.core
 object Knobs {
   def int(name: String, default: Int, min: Int,
       env: Map[String, String] = sys.env): Int =
-    read(name, default, min, env)(_.toIntOption)
-
-  def long(name: String, default: Long, min: Long,
-      env: Map[String, String] = sys.env): Long =
-    read(name, default, min, env)(_.toLongOption)
-
-  def double(name: String, default: Double, min: Double,
-      env: Map[String, String] = sys.env): Double =
-    read(name, default, min, env)(_.toDoubleOption)(Ordering.Double.IeeeOrdering)
+    env.get(name) match {
+      case None => default
+      case Some(raw) =>
+        raw.trim.toIntOption.filter(_ >= min).getOrElse(throw new IllegalArgumentException(
+          s"$name='$raw': expected a number >= $min"))
+    }
 
   /** A knob that takes one of `allowed` (compared after trimming); the
     * error calls a value outside them "not a known `what`". */
@@ -36,14 +33,5 @@ object Knobs {
       if (raw.trim.isEmpty) throw new IllegalArgumentException(
         s"$name='$raw': expected a non-blank value")
       raw.trim
-    }
-
-  private def read[A](name: String, default: A, min: A, env: Map[String, String])(
-      parse: String => Option[A])(implicit ord: Ordering[A]): A =
-    env.get(name) match {
-      case None => default
-      case Some(raw) =>
-        parse(raw.trim).filter(ord.gteq(_, min)).getOrElse(throw new IllegalArgumentException(
-          s"$name='$raw': expected a number >= $min"))
     }
 }

@@ -59,9 +59,8 @@ object ScalableWindows {
     * near 200 MB — inside the "a few hundred MB is usually fine" envelope
     * and far under Spark's 8 GB / 512 M-row hard cap — while any sanely
     * sized deployment (chunkWidth 1-10 M ids) stays under it up to
-    * ~10^13 input rows. Env-overridable for experiments. */
-  lazy val MaxBroadcastCarryRows: Long =
-    graft.core.Knobs.long("GRAFT_MAX_BROADCAST_CARRY_ROWS", default = 2000000L, min = 0L)
+    * ~10^13 input rows. */
+  val MaxBroadcastCarryRows: Long = 2000000L
 
   /** Materialize the model-sized carry table and pick the join strategy
     * from its MEASURED size: persist + count (the aggregate runs exactly

@@ -164,7 +164,7 @@ object Tables {
     * round 15: the extra boundaries re-proved the same carry property
     * while each extra micro-batch charged every streaming gate ~200 ms
     * of fixed trigger overhead (offset WAL + commit log + source listing
-    * + re-planning — measured via SPARK_GRAFT_STREAM_DEBUG, constant on
+    * + re-planning — measured from each trigger's `durationMs`, constant on
     * tmpfs checkpoints, so it is framework floor, not IO). At 38 gates x
     * 3 bench runs that duplication was ~25% of the streaming tier's
     * wall. ChunkReplaySpec pins the >= 2 data-micro-batch contract so

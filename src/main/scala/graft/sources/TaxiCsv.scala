@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -42,16 +42,6 @@ object TaxiCsv {
     df.withColumn("payment_type",
         when(col("payment_type") === "CRD", "Card").otherwise("Cash"))
       .withColumn("event_time", col("dropoff_datetime")) // tripSource stamping
-
-  /** Batch read of trip CSV files. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    normalize(spark.read.schema(schema)
-      .option("timestampFormat", "yyyy-M-d HH:mm:ss").csv(path))
-
-  /** Streaming read (the reference replays sorteddata.csv as a stream). */
-  def readStream(spark: SparkSession, path: String): DataFrame =
-    normalize(spark.readStream.schema(schema)
-      .option("timestampFormat", "yyyy-M-d HH:mm:ss").csv(path))
 
   /** Parse trip lines already held in a string column (the reference's
     * line-at-a-time `stringsToTrip` as a `from_csv` expression), once per

@@ -184,4 +184,15 @@ class StreamOpsSpec extends SparkSuite {
       .collect().toSeq.sortBy(_.time.get.getTime)
     assert(out.map(_.value.get) == Seq(1, 2, 4, 6))
   }
+
+  test("streamRestamp and streamReduce on the typed surface") {
+    val evs = Seq(
+      Event.data(0L, (new java.sql.Timestamp(500L), 1)),
+      Event.data(10L, (new java.sql.Timestamp(900L), 2))).toDS()
+    val restamped = evs.streamRestamp(_._1).collect().toList
+    assert(restamped.map(_.time.get.getTime) == List(500L, 900L))
+    val ints = Seq(Event.data(0L, 3), Event.tick[Int](5L), Event.data(10L, 4)).toDS()
+    assert(ints.streamReduce(_ + _).contains(7))
+    assert(Seq.empty[Event[Int]].toDS().streamReduce(_ + _).isEmpty)
+  }
 }

@@ -2,15 +2,16 @@ package graft.dev
 
 import org.apache.spark.sql.catalyst.rules.RuleExecutor
 
-/** Diagnostic main (test scope): per-micro-batch phase attribution plus
-  * Catalyst rule-level timing for selected streaming gates.
+/** Diagnostic main (test scope): Catalyst rule-level timing for selected
+  * streaming gates.
   *
-  * The `StreamDebug` listener, always on here, answers "WHICH phase is
-  * slow per batch" (queryPlanning / addBatch / walCommit ...) on stderr;
-  * this probe additionally answers "WHICH optimizer/analyzer rules the repeated
-  * incremental planning spends its time in", via
-  * `RuleExecutor.dumpTimeSpent()` deltas around each query — the
-  * measurement VERDICT r19 task #1 needs before touching gate plan shapes.
+  * It answers "WHICH optimizer/analyzer rules the repeated incremental
+  * planning spends its time in", via `RuleExecutor.dumpTimeSpent()` deltas
+  * around each query. "WHICH phase is slow per batch" (queryPlanning /
+  * addBatch / walCommit ..., state rows and memory) is in Spark's own
+  * `QueryProgressEvent`s: run with `-Dspark.eventLog.enabled=true
+  * -Dspark.eventLog.dir=file:///...` and read the decompressed log with
+  * `tools/trigger_shape.py`.
   *
   * Usage: sbt "Test/runMain graft.dev.StreamPlanProbe q_streaming_join_w q_streaming_taxi_q2"
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 4),
@@ -35,8 +36,6 @@ object StreamPlanProbe {
     val qargs = args.filterNot(a => a.matches("\\d+") || a.startsWith("--ab=")).toSeq
     val names = if (qargs.nonEmpty) qargs else Seq("q_streaming_join_w")
     val spark = graft.Session.local(graft.Session.cpus())
-    // per-batch phase breakdown for every stream the probe runs
-    graft.streaming.StreamDebug.install(spark)
     val phases: Seq[(String, Boolean)] = abConf match {
       case Some(_) => Seq(("A", false), ("B", true))
       case None => Seq(("", false))

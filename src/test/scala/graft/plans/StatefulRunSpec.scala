@@ -5,12 +5,15 @@ import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.SparkSuite
+import graft.{ListenerFence, SparkSuite}
 import graft.core.{Event, WindowMakers}
+import graft.streaming.GateTuning
 
 /** A linear run of stateful vertices lowers to ONE state machine, and it
   * emits what the interpreter does: each graph is replayed as four
@@ -36,10 +39,16 @@ class StatefulRunSpec extends SparkSuite {
     }
   }
 
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  private def sessionPartitions: Int = spark.conf.get(ShufflePartitions).toInt
+
   /** Replays `batches` through `build` into a foreachBatch sink keyed by
     * batch id: batches 0-1, stop, restart on the same checkpoint, batches
-    * 2-3. Returns every row emitted and the restarted query. */
-  private def replay(name: String)(
+    * 2-3. The query starts under `partitions._1` shuffle (= state)
+    * partitions and restarts under `partitions._2`, the session's own by
+    * default. Returns every row emitted and the restarted query. */
+  private def replay(name: String, partitions: (Int, Int) = (sessionPartitions, sessionPartitions))(
       build: Dataset[Event[Any]] => Dataset[(Int, Event[Any])]): (Seq[(Int, Event[Any])], StreamingQuery) = {
     val dir = Files.createTempDirectory(s"graft-run-$name-src")
     val ckpt = Files.createTempDirectory(s"graft-run-$name-ckpt").toString
@@ -62,19 +71,23 @@ class StatefulRunSpec extends SparkSuite {
       .as[Row]
       .map(asEvent)(Encoders.kryo[Event[Any]])
     val out = new java.util.concurrent.ConcurrentHashMap[Long, Seq[(Int, Event[Any])]]()
-    def run(): StreamingQuery = {
-      val q = build(src).writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: Dataset[(Int, Event[Any])], id: Long) => out.put(id, b.collect().toSeq); () }
-        .start()
+    def run(shufflePartitions: Int): StreamingQuery = {
+      val prev = spark.conf.get(ShufflePartitions)
+      val q = try {
+        spark.conf.set(ShufflePartitions, shufflePartitions.toString)
+        build(src).writeStream
+          .option("checkpointLocation", ckpt)
+          .foreachBatch { (b: Dataset[(Int, Event[Any])], id: Long) => out.put(id, b.collect().toSeq); () }
+          .start()
+      } finally spark.conf.set(ShufflePartitions, prev)
       q.processAllAvailable()
       q.stop()
       q
     }
     writeBatch(0); writeBatch(1)
-    run()
+    run(partitions._1)
     writeBatch(2); writeBatch(3)
-    val q = run()
+    val q = run(partitions._2)
     assert(out.size == 4, s"expected four micro-batches, got ${out.keySet}")
     (out.asScala.toSeq.sortBy(_._1).flatMap(_._2), q)
   }
@@ -91,8 +104,32 @@ class StatefulRunSpec extends SparkSuite {
     Interpreter.runToSinks(g, Map(0 -> batches.flatten.map(asEvent).toList))
 
   private def statefulOps(q: StreamingQuery): Int =
+    plan(q).collect { case p if p.getClass.getSimpleName == "FlatMapGroupsWithStateExec" => p }.size
+
+  private def plan(q: StreamingQuery) =
     q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
-      .collect { case p if p.getClass.getSimpleName == "FlatMapGroupsWithStateExec" => p }.size
+
+  /** `body`'s result, and the stages and tasks of every streaming
+    * micro-batch's jobs while it ran, per (query run, batch id). */
+  private def withTriggerShapes[A](body: => A): (A, Map[(String, String), (Int, Int)]) = {
+    val sc = spark.sparkContext
+    val shapes = new java.util.concurrent.ConcurrentHashMap[(String, String), (Int, Int)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")).map { b =>
+          (p.getProperty("spark.jobGroup.id"), b)
+        }).foreach { trigger =>
+          shapes.merge(trigger, (e.stageInfos.size, e.stageInfos.map(_.numTasks).sum),
+            (a, b) => (a._1 + b._1, a._2 + b._2))
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val result = body
+      ListenerFence.await(sc)
+      (result, shapes.asScala.toMap)
+    } finally sc.removeSparkListener(listener)
+  }
 
   private def windowLength(e: Event[Any]): Int = e.value.get.asInstanceOf[List[Any]].length
 
@@ -111,20 +148,50 @@ class StatefulRunSpec extends SparkSuite {
 
   private def sink(id: Int, t: String) = StreamVertex(id, OpSink, Nil, t, t, 1)
 
+  /** The wearable pipeline's shape: a falling-edge filter, 1 s windows,
+    * their lengths. */
+  private def wearable = StreamGraph.path(Seq(source, fallingEdge(1),
+    StreamVertex(2, OpWindow, List(Param("chopTime 1000",
+      (s: List[Event[Any]]) => WindowMakers.chopTime[Any](1000)(s))), "Double", "[Double]", 1),
+    StreamVertex(3, OpMap, List(Param("length",
+      (w: Any) => w.asInstanceOf[List[Any]].length: Any)), "[Double]", "Int", 1),
+    sink(4, "Int")))
+
+  /** The interpreter's wearable output, less the window holding the last
+    * event, which is still open. */
+  private def wearableExpected: List[Event[Any]] = interp(wearable)(4).dropRight(1)
+
   test("FilterAcc -> chopTime -> Map runs as one state machine and matches the interpreter") {
-    val g = StreamGraph.path(Seq(source, fallingEdge(1),
-      StreamVertex(2, OpWindow, List(Param("chopTime 1000",
-        (s: List[Event[Any]]) => WindowMakers.chopTime[Any](1000)(s))), "Double", "[Double]", 1),
-      StreamVertex(3, OpMap, List(Param("length",
-        (w: Any) => w.asInstanceOf[List[Any]].length: Any)), "[Double]", "Int", 1),
-      sink(4, "Int")))
-    val (got, q) = replay("wearable")(src => tag(StreamingLowering.lower(spark, g, Map(0 -> src)), 4))
-    // the window holding the last event is still open
-    val expected = interp(g)(4).dropRight(1)
-    assert(expected.length >= 15)
-    assert(canon(got.map(_._2)) == canon(expected))
+    val (got, q) = replay("wearable")(src => tag(StreamingLowering.lower(spark, wearable, Map(0 -> src)), 4))
+    assert(wearableExpected.length >= 15)
+    assert(canon(got.map(_._2)) == canon(wearableExpected))
     assert(statefulOps(q) == 1)
     assert(q.lastProgress.stateOperators.length == 1)
+  }
+
+  test("over a single-partition input at GateTuning.statePartitions, each micro-batch runs " +
+      "as one task with no exchange") {
+    val n = GateTuning.statePartitions
+    val ((got, q), shapes) = withTriggerShapes {
+      // coalesce(1): the SinglePartition input StreamingOps.socketSource gives
+      replay("one-stage", (n, n)) { src =>
+        tag(StreamingLowering.lower(spark, wearable, Map(0 -> src.coalesce(1))), 4)
+      }
+    }
+    assert(canon(got.map(_._2)) == canon(wearableExpected))
+    assert(plan(q).collect { case e: ShuffleExchangeExec => e }.size == 0)
+    assert(statefulOps(q) == 1)
+    assert(q.lastProgress.stateOperators.map(_.numShufflePartitions).toSeq == Seq(1L))
+    assert(shapes.size == 4, s"expected four micro-batches with a job, got $shapes")
+    assert(shapes.values.toSet == Set((1, 1)), s"(stages, tasks) per micro-batch: $shapes")
+  }
+
+  test("a restart keeps the state-partition count its checkpoint was created with") {
+    val (got, q) = replay("restart", (1, 2)) { src =>
+      tag(StreamingLowering.lower(spark, wearable, Map(0 -> src)), 4)
+    }
+    assert(canon(got.map(_._2)) == canon(wearableExpected))
+    assert(q.lastProgress.stateOperators.map(_.numShufflePartitions).toSeq == Seq(1L))
   }
 
   test("Scan -> Map -> sliding fuses across the stateless Map and matches the interpreter") {

@@ -42,18 +42,4 @@ class StreamJoinsSpec extends SparkSuite {
       col("r_ts") <= col("l_ts") + expr("INTERVAL 30 MINUTES")).count()
     assert(got == expected)
   }
-
-  test("metrics listener accumulates per-query progress") {
-    val m = Metrics.attach(spark)
-    val stream = spark.readStream.schema(eventsBatch.schema).parquet(replayDir)
-      .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-    val q = stream.writeStream.format("memory").queryName("metrics_test")
-      .outputMode("complete").start()
-    q.processAllAvailable()
-    q.stop()
-    val snap = m.snapshot
-    assert(snap.contains("metrics_test"))
-    assert(snap("metrics_test").rowsProcessed > 0)
-    spark.streams.removeListener(m)
-  }
 }

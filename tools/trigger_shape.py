@@ -4,11 +4,14 @@ log (one JSON event per line). Usage:
     python3 tools/trigger_shape.py [events.json]    # stdin when absent or "-"
 
 Prints, for every completed stage of a streaming micro-batch, its task count
-and duration; then, over all triggers of the log: the medians of stages and
-tasks per trigger, of the trigger's `triggerExecution`, `addBatch` and
-`queryPlanning` durations and its state operators' summed `commitTimeMs`;
-and the median start offset of a micro-batch's jobs from the start of their
-trigger, with the median job duration. Turn the log on for one run with
+and duration; for every trigger, its input rows, `triggerExecution`,
+`addBatch` and state commit durations, and its state operators' summed
+`numRowsTotal` and `memoryUsedBytes`; then, over all triggers of the log:
+the medians of stages and tasks per trigger, of the trigger's
+`triggerExecution`, `addBatch` and `queryPlanning` durations and its state
+operators' summed `commitTimeMs`; and the median start offset of a
+micro-batch's jobs from the start of their trigger, with the median job
+duration. Turn the log on for one run with
 `-Dspark.eventLog.enabled=true -Dspark.eventLog.dir=file:///...` and
 decompress it with `zstd -dc`.
 """
@@ -74,6 +77,13 @@ def main(argv):
     for s in sorted(stages):
         (_, batch), tasks, ms = stages[s]
         print(f"{s:5d}  {batch:5d}  {tasks:5d}  {ms:7d}")
+    print("\nbatch   rows  trigger_ms  addBatch_ms  commit_ms  state_rows  state_bytes")
+    for p in sorted(triggers.values(), key=lambda p: p["timestamp"]):
+        ops, d = p["stateOperators"], p["durationMs"]
+        rows = sum(src["numInputRows"] for src in p["sources"])
+        print(f"{p['batchId']:5d}  {rows:5d}  {d.get('triggerExecution', 0):10d}  "
+              f"{d.get('addBatch', 0):11d}  {sum(o['commitTimeMs'] for o in ops):9d}  "
+              f"{sum(o['numRowsTotal'] for o in ops):10d}  {sum(o['memoryUsedBytes'] for o in ops):11d}")
     per_trigger = {}
     for trig, tasks, _ in stages.values():
         n, t = per_trigger.get(trig, (0, 0))
