@@ -76,7 +76,12 @@ object ScalableWindows {
     * per-key-unique `order` column: out(r) = sum of value over rows of the
     * same key strictly before r. Equals
     * `sum(value) over (partition by keys order by order rows unbounded
-    * preceding to -1)` exactly. */
+    * preceding to -1)` exactly.
+    *
+    * Eager: building the result runs a Spark job (the carry table's
+    * `count()`, see `carrySide`) before any action on it, and registers
+    * two persists with [[graft.core.CacheRegistry]] (the chunked input and
+    * the carry table); release them with `CacheRegistry.unpersistAll`. */
   def exclusivePrefixSum(df: DataFrame, keys: Seq[String], order: String,
       value: Column, out: String, chunkWidth: Long = 1024L,
       maxBroadcastCarryRows: Long = MaxBroadcastCarryRows): DataFrame = {
@@ -107,7 +112,11 @@ object ScalableWindows {
   /** Keyed `row_number() over (partition by keys order by order*)`, chunked
     * on the FIRST order column (numeric; the full order tuple must be
     * per-key-unique, e.g. tie-broken by a unique id). Row counting is
-    * associative, so positions equal the direct window's exactly. */
+    * associative, so positions equal the direct window's exactly.
+    *
+    * Eager, like [[exclusivePrefixSum]]: building the result runs the
+    * carry table's `count()` job and registers two persists with
+    * [[graft.core.CacheRegistry]]. */
   def keyedRowNumber(df: DataFrame, keys: Seq[String], order: Seq[String],
       out: String, chunkWidth: Long = 1024L,
       maxBroadcastCarryRows: Long = MaxBroadcastCarryRows): DataFrame = {

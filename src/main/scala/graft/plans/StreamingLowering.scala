@@ -321,19 +321,18 @@ object StreamingLowering {
       .map(_.get).toList
 
   /** Per-closed-window emission hook for the recognized window lowerings:
-    * `apply` consumes the materialized window list; `fromIterator` lets a
+    * `apply` consumes the materialized window list; `fromRange` lets a
     * lowering whose windows OVERLAP (slidingTime — each event is in
-    * ~window-many windows) hand over the window as an iterator so a
-    * recognized fold can run allocation-free; `fromRange` goes one step
-    * further and hands over a PRIMITIVE mirror of the window (parallel
-    * `vals`/`isData` arrays built once per micro-batch by
-    * [[slidingTimeStep]]), so a recognized fold touches no Event
-    * object, no Option, no cast per element — the per-element cost drops
-    * from a kryo'd-object walk to two or three flops. Defaults
-    * materialize the list, so un-fused pipelines are untouched. */
+    * ~window-many windows) hand over the window as index range
+    * `[from, until)` of a PRIMITIVE mirror (parallel `vals`/`isData`
+    * arrays built once per micro-batch by [[slidingTimeStep]]), so a
+    * recognized fold touches no Event object, no Option, no cast per
+    * element — the per-element cost drops from a kryo'd-object walk to
+    * two or three flops. `vals` mirrors Double payloads only (any other
+    * payload reads NaN). The default materializes the list from `evs`,
+    * so un-fused pipelines and any payload type are untouched. */
   private[graft] trait WindowEmitter[A, O] extends Serializable {
     def apply(w: List[Event[A]]): Option[O]
-    def fromIterator(it: Iterator[Event[A]]): Option[O] = apply(it.toList)
     def fromRange(evs: Array[Event[A]], isData: Array[Boolean], vals: Array[Double],
                   from: Int, until: Int): Option[O] = {
       val b = List.newBuilder[Event[A]]
@@ -367,7 +366,7 @@ object StreamingLowering {
     *
     * A `nonEmpty`→`<recognized aggregate>` chain (recognized by Param
     * source, the same convention as the window forms) additionally
-    * overrides `fromIterator`/`fromRange` with a direct streaming fold:
+    * overrides `fromRange` with a direct streaming fold:
     * same stamp rule, same left-to-right accumulation order — so the
     * emitted values are bit-identical — but ZERO per-window allocation,
     * where the list path allocates the window contents 3× per window
@@ -453,16 +452,6 @@ object StreamingLowering {
     // N-1, not N: the recheck window itself counts toward the cadence,
     // so "every 1024th window" means 1023 fold-only windows between
     // rechecks
-    override def fromIterator(it: Iterator[Event[Any]]): Option[Event[Any]] =
-      if (sinceCheck == 0L) {
-        sinceCheck = FusedFoldRecheckEvery - 1
-        val w = it.toList
-        val viaFold = foldList(w)
-        val viaChain = listEmit(w)
-        if (viaFold != viaChain) throw mismatch(viaFold, viaChain)
-        viaFold
-      } else { sinceCheck -= 1; foldList(it) }
-
     override def fromRange(evs: Array[Event[Any]], isData: Array[Boolean],
                            vals: Array[Double], from: Int, until: Int): Option[Event[Any]] =
       if (sinceCheck == 0L) {
@@ -482,29 +471,10 @@ object StreamingLowering {
         foldRange(evs, isData, vals, from, until)
       }
 
-    private def foldList(it: IterableOnce[Event[Any]]): Option[Event[Any]] = {
-      var stamp: Option[java.sql.Timestamp] = None
-      var started = false
-      var n = 0L; var sum = 0.0
-      var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
-      var fst = 0.0; var lst = 0.0
-      it.iterator.foreach { e =>
-        if (!started) { stamp = e.time; started = true }
-        if (e.isData) {
-          val x = e.value.get.asInstanceOf[Double]
-          if (n == 0) fst = x
-          lst = x; n += 1; sum += x
-          mn = math.min(mn, x); mx = math.max(mx, x)
-        }
-      }
-      project(stamp, n, sum, mn, mx, fst, lst)
-    }
-
     // count/sum/countAndSum read only (n, sum): their hot loop skips the
     // min/max/first/last lanes (project never looks at them) — the
     // O(events × window) fromRange path is the single-threaded arithmetic
     // floor of the slidingTime machine, so every per-element op counts.
-    // The lanes the name DOES read are computed identically to foldList.
     private val leanLanes: Boolean =
       name == "count" || name == "sum" || name == "countAndSum"
 
@@ -725,10 +695,8 @@ object StreamingLowering {
     * `isData` arrays, the close loop walks indices, and the emit takes
     * [[WindowEmitter.fromRange]] — a recognized fused fold then touches
     * no Event object, no Option, no Timestamp re-decode per element per
-    * window (the old iterator path re-ran `Event.micros` on every
-    * element of every window). Payloads that are not Doubles fall back
-    * to the original queue-iterator path (same order, same windows —
-    * the arrays are an acceleration, never a semantic). */
+    * window. One loop serves every payload type: `vals` mirrors Double
+    * payloads, and the default `fromRange` reads the events themselves. */
   private[graft] def slidingTimeStep[A, O](ms: Long, emit: WindowEmitter[A, O])
       : StepOf[A, O, scala.collection.immutable.Queue[Event[A]]] = {
     (events, buf) =>
@@ -744,70 +712,51 @@ object StreamingLowering {
       val times = new Array[Long](n)
       val isData = new Array[Boolean](n)
       val vals = new Array[Double](n)
-      var primOk = true
       locally { var i = 0
         while (i < n) {
           val e = evs(i)
           times(i) = Event.micros(e.time.get)
           isData(i) = e.isData
-          if (e.isData) e.value.get match {
-            case d: java.lang.Double => vals(i) = d
-            case _                   => primOk = false
+          if (e.isData) vals(i) = e.value.get match {
+            case d: java.lang.Double => d
+            case _                   => Double.NaN
           }
           i += 1
         } }
-      if (primOk) {
-        var h = 0
-        var idx = carried
-        // window-end boundary carried across windows: when ends
-        // (= times(h)+ms) are non-decreasing in h — the sorted-batch
-        // common case — every index the scan has passed satisfied
-        // `times < end` against an end no larger than the current one,
-        // so the bound resumes where the previous window stopped and
-        // the scan is O(n) total instead of O(n·window). Late data
-        // across micro-batches makes the combined carried++batch array
-        // non-monotone (each batch is sorted, but a new batch can start
-        // earlier than carried state): there an end can REGRESS, and a
-        // resumed bound would overshoot — include events at/after the
-        // window end that the fallback path's first-stop takeWhile
-        // excludes. Detect the regression and restart the scan at h:
-        // first-stop semantics are restored exactly, still O(n) total
-        // for sorted input (regressions cost a local re-scan only).
-        var upTo = 0
-        var prevEnd = Long.MinValue
-        while (idx < n) {
-          val t = times(idx)
-          while (h < idx && times(h) + msUs <= t) {
-            val end = times(h) + msUs
-            if (end < prevEnd) upTo = h
-            prevEnd = end
-            if (upTo < h) upTo = h
-            while (upTo < idx && times(upTo) < end) upTo += 1
-            emit.fromRange(evs, isData, vals, h, upTo).foreach(out += _)
-            h += 1
-          }
-          idx += 1
+      var h = 0
+      var idx = carried
+      // A window is the pending events from its anchor h up to the FIRST
+      // one at/after its end (first-stop). Window-end boundary carried
+      // across windows: when ends (= times(h)+ms) are non-decreasing in h
+      // — the sorted-batch common case — every index the scan has passed
+      // satisfied `times < end` against an end no larger than the current
+      // one, so the bound resumes where the previous window stopped and
+      // the scan is O(n) total instead of O(n·window). Late data across
+      // micro-batches makes the combined carried++batch array
+      // non-monotone (each batch is sorted, but a new batch can start
+      // earlier than carried state): there an end can REGRESS, and a
+      // resumed bound would overshoot the first stop and include events
+      // at/after the window end. Detect the regression and restart the
+      // scan at h: first-stop semantics are restored exactly, still O(n)
+      // total for sorted input (regressions cost a local re-scan only).
+      var upTo = 0
+      var prevEnd = Long.MinValue
+      while (idx < n) {
+        val t = times(idx)
+        while (h < idx && times(h) + msUs <= t) {
+          val end = times(h) + msUs
+          if (end < prevEnd) upTo = h
+          prevEnd = end
+          if (upTo < h) upTo = h
+          while (upTo < idx && times(upTo) < end) upTo += 1
+          emit.fromRange(evs, isData, vals, h, upTo).foreach(out += _)
+          h += 1
         }
-        var rest = scala.collection.immutable.Queue.empty[Event[A]]
-        while (h < n) { rest = rest.enqueue(evs(h)); h += 1 }
-        (out.result(), rest)
-      } else {
-        // non-Double payloads: the original queue path, windows and
-        // order bit-identical
-        var q = buf
-        timed.foreach { e =>
-          val t = Event.micros(e.time.get)
-          while (q.nonEmpty && Event.micros(q.head.time.get) + msUs <= t) {
-            val end = Event.micros(q.head.time.get) + msUs
-            emit.fromIterator(q.iterator.takeWhile(x => Event.micros(x.time.get) < end))
-              .foreach(out += _)
-            val (_, rest) = q.dequeue
-            q = rest
-          }
-          q = q.enqueue(e)
-        }
-        (out.result(), q)
+        idx += 1
       }
+      var rest = scala.collection.immutable.Queue.empty[Event[A]]
+      while (h < n) { rest = rest.enqueue(evs(h)); h += 1 }
+      (out.result(), rest)
     }
 
   /** Cap on the generic window fallback's buffered stream prefix — the
@@ -1143,7 +1092,9 @@ object StreamingLowering {
     * its rows of the micro-batch, and returns the rows to emit and the
     * state to store; with `idleTimeoutMs` the group's processing-time
     * timeout is re-armed. Without it a group's state lives forever — the
-    * reference's semantics for an accumulator. */
+    * reference's semantics for an accumulator. A `null` state (a `null`
+    * init left unchanged by a batch of value-less events) is stored as no
+    * state, since Spark rejects `null`: the next batch starts from `init`. */
   private[graft] def runStateful[R, K, S, O](ds: Dataset[R], key: R => K, init: S,
       idleTimeoutMs: Option[Long])(f: (K, S, Iterator[R]) => (Iterable[O], S))(
       implicit encK: Encoder[K], encS: Encoder[S], encO: Encoder[O]): Dataset[O] =
@@ -1154,8 +1105,11 @@ object StreamingLowering {
         if (state.hasTimedOut) { state.remove(); Iterator.empty }
         else {
           val (out, s) = f(k, state.getOption.getOrElse(init), it)
-          state.update(s)
-          idleTimeoutMs.foreach(state.setTimeoutDuration)
+          if (s == null) state.remove()
+          else {
+            state.update(s)
+            idleTimeoutMs.foreach(state.setTimeoutDuration)
+          }
           out.iterator
         }
       }

@@ -1,13 +1,15 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.core.Event
 import graft.operators.Relational
 import graft.operators.Relational.roundp
-import graft.streaming.{Gate, GateTuning}
+import graft.streaming.{Gate, GateTuning, StreamingOps}
+import graft.streaming.StreamingOps.keyedEvents
 
 /** The reference's stream-operator semantics expressed over the `events`
   * table (event_id, ts, user_id, event_type, value, props), each paired with
@@ -28,6 +30,10 @@ object StreamQueries {
 
   private def ev(s: SparkSession, dir: String): DataFrame = Tables.events(s, dir)
 
+  /** The lowered graphs' event rows, kryo-encoded (keyed event rows are
+    * [[StreamingOps.keyedEvents]]). */
+  private val events: Encoder[Event[Any]] = Encoders.kryo[Event[Any]]
+
   /** Per-key stream order: event time with event_id as the deterministic
     * tiebreaker (reference streams are totally ordered lists). */
   private val byUser = Seq(col("user_id"))
@@ -37,32 +43,49 @@ object StreamQueries {
     * events, optionally filtered to one event_type (whose timestamps are
     * unique — the fold order and a ts-ordered oracle then coincide). */
   private def loweredValueSource(s: SparkSession, dir: String, onlyType: Option[String])
-      : org.apache.spark.sql.Dataset[graft.core.Event[Any]] = {
-    import org.apache.spark.sql.Encoders
-    import graft.core.Event
+      : Dataset[Event[Any]] = {
+    import s.implicits._
     val base = Tables.streamEventsChunked(s, dir)
     val filtered = onlyType.fold(base)(t => base.filter(col("event_type") === t))
     filtered
       .select(col("ts"), col("value"))
-      .as[(java.sql.Timestamp, Double)](
-        Encoders.tuple(Encoders.TIMESTAMP, Encoders.scalaDouble))
-      .map { case (ts, v) => Event(Some(ts), Some(v: Any)) }(Encoders.kryo[Event[Any]])
+      .as[(java.sql.Timestamp, Double)]
+      .map { case (ts, v) => Event(Some(ts), Some(v: Any)) }(events)
   }
 
   /** The chunked events replay as a typed single stream of (event_id, value)
     * payloads for one event_type — the id travels in the payload so the
     * oracle can join the lowered output back to rows. */
   private def loweredIdValueSource(s: SparkSession, dir: String, onlyType: String)
-      : org.apache.spark.sql.Dataset[graft.core.Event[Any]] = {
-    import org.apache.spark.sql.Encoders
-    import graft.core.Event
+      : Dataset[Event[Any]] = {
+    import s.implicits._
     Tables.streamEventsChunked(s, dir)
       .filter(col("event_type") === onlyType)
       .select(col("ts"), col("event_id"), col("value"))
-      .as[(java.sql.Timestamp, Long, Double)](
-        Encoders.tuple(Encoders.TIMESTAMP, Encoders.scalaLong, Encoders.scalaDouble))
-      .map { case (ts, id, v) => Event(Some(ts), Some((id, v): Any)) }(
-        Encoders.kryo[Event[Any]])
+      .as[(java.sql.Timestamp, Long, Double)]
+      .map { case (ts, id, v) => Event(Some(ts), Some((id, v): Any)) }(events)
+  }
+
+  /** The chunked events replay keyed by user, each event's value. */
+  private def valuesByUser(s: SparkSession, dir: String): Dataset[(Long, Event[Double])] = {
+    import s.implicits._
+    Tables.streamEventsChunked(s, dir)
+      .select(col("user_id"), col("ts"), col("value"))
+      .as[(Long, java.sql.Timestamp, Double)]
+      .map { case (u, ts, v) => (u, Event(Some(ts), Some(v))) }(keyedEvents)
+  }
+
+  /** The chunked events replay keyed by user, each event's (event_id,
+    * value in integer cents). */
+  private def centsByUser(s: SparkSession, dir: String): Dataset[(Long, Event[(Long, Long)])] = {
+    import s.implicits._
+    Tables.streamEventsChunked(s, dir)
+      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
+      .as[(Long, java.sql.Timestamp, Long, Double)]
+      .map { case (u, ts, id, v) =>
+        // identical IEEE ops to the batch floor(value*100 + 0.5) column
+        (u, Event(Some(ts), Some((id, math.floor(v * 100 + 0.5).toLong))))
+      }(keyedEvents)
   }
 
   /** The recognized fused folds the lowered window gates emit, each with
@@ -105,9 +128,8 @@ object StreamQueries {
                                 maker: graft.core.WindowMakers.WindowMaker[Any],
                                 fold: (graft.plans.Param, Seq[String]),
                                 tmpPrefix: String): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType, TimestampType}
-    import graft.core.Event
     import graft.plans._
     val (foldParam, cols) = fold
     val foldType = cols.tail.map(_ => "Double").mkString("(Long,", ",", ")")
@@ -236,27 +258,18 @@ object StreamQueries {
     // differently on the two sides. Same assumption as the chop/changes
     // bykey gates below.
     "q_streaming_scan_bykey" -> ((s, dir) => {
-      import org.apache.spark.sql.Encoders
-      import graft.core.Event
-      implicit val encK: org.apache.spark.sql.Encoder[Long] = Encoders.scalaLong
-      implicit val encOut: org.apache.spark.sql.Encoder[(Long, Event[(Long, Double)])] =
-        Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[(Long, Double)]])
-      implicit val encB: org.apache.spark.sql.Encoder[(Long, Double)] =
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble)
+      import s.implicits._
       val keyed = Tables.streamEventsChunked(s, dir)
         .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-        .as[(Long, java.sql.Timestamp, Long, Double)](
-          Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-            Encoders.scalaLong, Encoders.scalaDouble))
-        .map { case (u, ts, id, v) => (u, Event(Some(ts), Some((id, v)))) }(
-          Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[(Long, Double)]]))
-      val scanned = graft.streaming.StreamingOps.scanByKey[Long, (Long, Double), (Long, Double)](
+        .as[(Long, java.sql.Timestamp, Long, Double)]
+        .map { case (u, ts, id, v) => (u, Event(Some(ts), Some((id, v)))) }(keyedEvents)
+      val scanned = StreamingOps.scanByKey[Long, (Long, Double), (Long, Double)](
         keyed,
         (acc, x) => (x._1, acc._2 + x._2),
         (0L, 0.0))
       val typed = scanned.flatMap { case (u, e) =>
         e.value.map { case (id, sum) => (id, u, sum) }
-      }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaDouble))
+      }
       Gate.toParquet(typed.toDF("event_id", "user_id", "sum_raw"),
         OutputMode.Append, "graft_stream_sbk_", GateTuning.shardedStatePartitions)
         .select(col("event_id"), col("user_id"), roundp(col("sum_raw"), 2).as("running_sum"))
@@ -267,27 +280,19 @@ object StreamQueries {
     // differs from the user's previous one — state is ONE string per user.
     // Reuses the batch q_changes oracle.
     "q_streaming_changes_bykey" -> ((s, dir) => {
-      import org.apache.spark.sql.Encoders
-      import graft.core.Event
-      implicit val encK: org.apache.spark.sql.Encoder[Long] = Encoders.scalaLong
-      implicit val encOut: org.apache.spark.sql.Encoder[(Long, Event[(Long, String)])] =
-        Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[(Long, String)]])
-      implicit val encB: org.apache.spark.sql.Encoder[String] = Encoders.STRING
+      import s.implicits._
       val keyed = Tables.streamEventsChunked(s, dir)
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-        .as[(Long, java.sql.Timestamp, Long, String)](
-          Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-            Encoders.scalaLong, Encoders.STRING))
-        .map { case (u, ts, id, t) => (u, Event(Some(ts), Some((id, t)))) }(
-          Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[(Long, String)]]))
-      val kept = graft.streaming.StreamingOps.filterAccByKey[Long, (Long, String), String](
+        .as[(Long, java.sql.Timestamp, Long, String)]
+        .map { case (u, ts, id, t) => (u, Event(Some(ts), Some((id, t)))) }(keyedEvents)
+      val kept = StreamingOps.filterAccByKey[Long, (Long, String), String](
         keyed,
         (_, x) => x._2,
         null.asInstanceOf[String],
         (x, acc) => acc == null || acc != x._2)
       val typed = kept.flatMap { case (u, e) =>
         e.value.map { case (id, t) => (id, u, t) }
-      }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.STRING))
+      }
       Gate.toParquet(typed.toDF("event_id", "user_id", "event_type"),
         OutputMode.Append, "graft_stream_cbk_", GateTuning.shardedStatePartitions)
     }),
@@ -300,29 +305,21 @@ object StreamQueries {
     // streaming fold's "last click seen" IS the batch argmax. Inner
     // semantics via the state=None drop in the flatMap.
     "q_streaming_asof" -> ((s, dir) => {
-      import org.apache.spark.sql.Encoders
-      import graft.core.Event
+      import s.implicits._
       // payload: (isClick, event_id, ts_us, value)
       type P = (Boolean, Long, Long, Double)
-      implicit val encK: org.apache.spark.sql.Encoder[Long] = Encoders.scalaLong
-      implicit val encOut: org.apache.spark.sql.Encoder[(Long, Event[(P, Option[P])])] =
-        Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[(P, Option[P])]])
-      implicit val encState: org.apache.spark.sql.Encoder[Option[(Long, P)]] =
-        Encoders.kryo[Option[(Long, P)]]
       val keyed = Tables.streamEventsChunked(s, dir)
         .filter(col("event_type").isin("click", "purchase"))
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"), col("value"))
-        .as[(Long, java.sql.Timestamp, Long, String, Double)](
-          Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-            Encoders.scalaLong, Encoders.STRING, Encoders.scalaDouble))
+        .as[(Long, java.sql.Timestamp, Long, String, Double)]
         .map { case (u, ts, id, t, v) =>
           (u, Event(Some(ts), Some((t == "click", id, Event.micros(ts), v)): Option[P]))
-        }(Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[P]]))
-      val enriched = graft.streaming.StreamingOps.asofEnrichByKey[Long, P](keyed, _._1)
+        }(keyedEvents)
+      val enriched = StreamingOps.asofEnrichByKey[Long, P](keyed, _._1)
       val typed = enriched.flatMap { case (u, e) =>
         for { (p, lastOpt) <- e.value.toSeq; c <- lastOpt.toSeq }
           yield (p._2, u, p._3, p._4, c._2, c._3)
-      }(Encoders.product[(Long, Long, Long, Double, Long, Long)])
+      }
       Gate.toParquet(
         typed.toDF("event_id", "user_id", "p_us", "value", "click_id", "c_us"),
         OutputMode.Append, "graft_stream_asof_", GateTuning.shardedStatePartitions)
@@ -349,9 +346,8 @@ object StreamQueries {
     // last-row exclusion that would silently assume max(ts) is unique
     // (it is not on the isomorphic-copy scale datasets).
     "q_streaming_custom_window" -> ((s, dir) => {
-      import org.apache.spark.sql.Encoders
+      import s.implicits._
       import graft.plans._
-      import graft.core.Event
       val tripTimes = (st: List[Event[Any]]) => st.map { e =>
         (e.time, e.value) match {
           case (Some(t), Some(p)) =>
@@ -375,16 +371,13 @@ object StreamQueries {
       val src = Tables.streamEventsChunkedWithFlush(s, dir)
         .select(col("ts"), col("event_id"), col("value"),
           regexp_extract(col("props"), "\"k\": (\\d+)", 1).cast("long").as("k"))
-        .as[(java.sql.Timestamp, Long, Double, Long)](
-          Encoders.tuple(Encoders.TIMESTAMP, Encoders.scalaLong,
-            Encoders.scalaDouble, Encoders.scalaLong))
-        .map { case (ts, id, v, k) => Event(Some(ts), Some((id, v, k): Any)) }(
-          Encoders.kryo[Event[Any]])
+        .as[(java.sql.Timestamp, Long, Double, Long)]
+        .map { case (ts, id, v, k) => Event(Some(ts), Some((id, v, k): Any)) }(events)
       val lowered = StreamingLowering.lower(s, g, Map(0 -> src))(3)
       val typed = lowered.map { e =>
         val (id, v, _) = e.value.get.asInstanceOf[(Long, Double, Long)]
         (e.time.get, id, v)
-      }(Encoders.tuple(Encoders.TIMESTAMP, Encoders.scalaLong, Encoders.scalaDouble))
+      }
       Gate.toParquet(typed.toDF("ts2", "event_id", "value"),
         OutputMode.Append, "graft_stream_cw_", GateTuning.statePartitions)
         // the flush sentinel (event_id -1) is the one withheld pending
@@ -508,20 +501,12 @@ object StreamQueries {
     // the greedy online rule reaches exactly the batch funnelStages
     // minima, so the oracle is the batch funnel CTE chain unpivoted.
     "q_streaming_funnel" -> ((s, dir) => {
-      import org.apache.spark.sql.Encoders
-      import graft.core.Event
-      implicit val encK: org.apache.spark.sql.Encoder[Long] = Encoders.scalaLong
-      implicit val encOut: org.apache.spark.sql.Encoder[(Long, Int, Long)] =
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaInt, Encoders.scalaLong)
-      implicit val encState: org.apache.spark.sql.Encoder[Array[Long]] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
+      import s.implicits._
       val keyed = Tables.streamEventsChunked(s, dir)
         .select(col("user_id"), col("ts"), col("event_type"))
-        .as[(Long, java.sql.Timestamp, String)](
-          Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP, Encoders.STRING))
-        .map { case (u, ts, t) => (u, Event(Some(ts), Some(t))) }(
-          Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[String]]))
-      val trans = graft.streaming.StreamingOps.funnelByKey[Long](keyed,
+        .as[(Long, java.sql.Timestamp, String)]
+        .map { case (u, ts, t) => (u, Event(Some(ts), Some(t))) }(keyedEvents)
+      val trans = StreamingOps.funnelByKey[Long](keyed,
         Seq("view", "click", "purchase"))
       Gate.toParquet(trans.toDF("user_id", "stage", "us"),
         OutputMode.Append, "graft_stream_funnel_", GateTuning.shardedStatePartitions)
@@ -575,25 +560,8 @@ object StreamQueries {
     // term count emitted per event. All-integer emissions are final at
     // arrival, so the replayed stream reuses the batch oracle verbatim.
     "q_streaming_ewma" -> ((s, dir) => {
-      import org.apache.spark.sql.Encoders
-      import graft.core.Event
-      implicit val encK: org.apache.spark.sql.Encoder[Long] = Encoders.scalaLong
-      implicit val encOut
-          : org.apache.spark.sql.Encoder[(Long, Long, Long, Long, Int)] =
-        Encoders.product[(Long, Long, Long, Long, Int)]
-      implicit val encState
-          : org.apache.spark.sql.Encoder[scala.collection.immutable.Queue[Long]] =
-        Encoders.kryo[scala.collection.immutable.Queue[Long]]
-      val keyed = Tables.streamEventsChunked(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-        .as[(Long, java.sql.Timestamp, Long, Double)](
-          Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-            Encoders.scalaLong, Encoders.scalaDouble))
-        .map { case (u, ts, id, v) =>
-          // identical IEEE ops to the batch floor(value*100 + 0.5) column
-          (u, Event(Some(ts), Some((id, math.floor(v * 100 + 0.5).toLong))))
-        }(Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[(Long, Long)]]))
-      val stats = graft.streaming.StreamingOps.ewmaByKey[Long](keyed, lookback = 16)
+      import s.implicits._
+      val stats = StreamingOps.ewmaByKey[Long](centsByUser(s, dir), lookback = 16)
       Gate.toParquet(stats.toDF("user_id", "event_id", "cents", "ewma_num", "n_terms"),
         OutputMode.Append, "graft_stream_ewma_", GateTuning.shardedStatePartitions)
         .select(col("event_id"), col("user_id"), col("cents"),
@@ -622,23 +590,16 @@ object StreamQueries {
     // string of state per key). In-order replay ⇒ row-for-row the batch
     // q_attribution window's per-purchase assignment.
     "q_streaming_attribution" -> ((s, dir) => {
-      import org.apache.spark.sql.Encoders
-      import graft.core.Event
-      implicit val encK: org.apache.spark.sql.Encoder[Long] = Encoders.scalaLong
-      implicit val encOut
-          : org.apache.spark.sql.Encoder[(Long, Long, String, Long)] =
-        Encoders.product[(Long, Long, String, Long)]
+      import s.implicits._
       val keyed = Tables.streamEventsChunked(s, dir)
         .select(col("user_id"), col("ts"), col("event_id"),
           col("event_type"), col("value"))
-        .as[(Long, java.sql.Timestamp, Long, String, Double)](
-          Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-            Encoders.scalaLong, Encoders.STRING, Encoders.scalaDouble))
+        .as[(Long, java.sql.Timestamp, Long, String, Double)]
         .map { case (u, ts, id, ty, v) =>
           // identical IEEE ops to the batch floor(value*100 + 0.5) column
           (u, Event(Some(ts), Some((id, ty, math.floor(v * 100 + 0.5).toLong))))
-        }(Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[(Long, String, Long)]]))
-      val credited = graft.streaming.StreamingOps.attributeByKey[Long](
+        }(keyedEvents)
+      val credited = StreamingOps.attributeByKey[Long](
         keyed, creditType = "purchase", defaultChannel = "direct")
       Gate.toParquet(credited.toDF("user_id", "event_id", "channel", "cents"),
         OutputMode.Append, "graft_stream_attr_", GateTuning.shardedStatePartitions)
@@ -646,25 +607,8 @@ object StreamQueries {
     }),
 
     "q_streaming_zscore" -> ((s, dir) => {
-      import org.apache.spark.sql.Encoders
-      import graft.core.Event
-      implicit val encK: org.apache.spark.sql.Encoder[Long] = Encoders.scalaLong
-      implicit val encOut
-          : org.apache.spark.sql.Encoder[(Long, Long, Long, Long, Long, Long)] =
-        Encoders.product[(Long, Long, Long, Long, Long, Long)]
-      implicit val encState
-          : org.apache.spark.sql.Encoder[scala.collection.immutable.Queue[Long]] =
-        Encoders.kryo[scala.collection.immutable.Queue[Long]]
-      val keyed = Tables.streamEventsChunked(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-        .as[(Long, java.sql.Timestamp, Long, Double)](
-          Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-            Encoders.scalaLong, Encoders.scalaDouble))
-        .map { case (u, ts, id, v) =>
-          // identical IEEE ops to the batch floor(value*100 + 0.5) column
-          (u, Event(Some(ts), Some((id, math.floor(v * 100 + 0.5).toLong))))
-        }(Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[(Long, Long)]]))
-      val stats = graft.streaming.StreamingOps.trailingStatsByKey[Long](keyed, lookback = 10)
+      import s.implicits._
+      val stats = StreamingOps.trailingStatsByKey[Long](centsByUser(s, dir), lookback = 10)
       Gate.toParquet(stats.toDF("user_id", "event_id", "cents", "n_win", "s", "q"),
         OutputMode.Append, "graft_stream_zscore_", GateTuning.shardedStatePartitions)
         .select(col("event_id"), col("user_id"), col("cents"),
@@ -680,24 +624,11 @@ object StreamQueries {
     // full windows; the oracle drops each user's trailing partial group
     // the same way. Per-user ts are unique, so fold order == oracle order.
     "q_streaming_chop_bykey" -> ((s, dir) => {
-      import org.apache.spark.sql.Encoders
-      import graft.core.Event
-      implicit val encK: org.apache.spark.sql.Encoder[Long] = Encoders.scalaLong
-      implicit val encOut: org.apache.spark.sql.Encoder[(Long, Event[List[Double]])] =
-        Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[List[Double]]])
-      implicit val encState: org.apache.spark.sql.Encoder[(Int, List[Event[Double]])] =
-        Encoders.kryo[(Int, List[Event[Double]])]
-      val keyed = Tables.streamEventsChunked(s, dir)
-        .select(col("user_id"), col("ts"), col("value"))
-        .as[(Long, java.sql.Timestamp, Double)](
-          Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP, Encoders.scalaDouble))
-        .map { case (u, ts, v) => (u, Event(Some(ts), Some(v))) }(
-          Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[Double]]))
-      val chopped = graft.streaming.StreamingOps.chopByKey[Long, Double](keyed, n = 5)
+      import s.implicits._
+      val chopped = StreamingOps.chopByKey[Long, Double](valuesByUser(s, dir), n = 5)
       val typed = chopped.flatMap { case (u, e) =>
         e.value.map { w => (u, e.time.get, w.length.toLong, w.sum) }
-      }(Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-        Encoders.scalaLong, Encoders.scalaDouble))
+      }
       Gate.toParquet(typed.toDF("user_id", "window_start", "n", "sum_raw"),
         OutputMode.Append, "graft_stream_chbk_", GateTuning.shardedStatePartitions)
         .select(col("user_id"), col("window_start"), col("n"),
@@ -709,25 +640,11 @@ object StreamQueries {
     // queue in state across micro-batches; each user's trailing 4 partial
     // windows never emit — the oracle drops them identically).
     "q_streaming_sliding_bykey" -> ((s, dir) => {
-      import org.apache.spark.sql.Encoders
-      import graft.core.Event
-      implicit val encK: org.apache.spark.sql.Encoder[Long] = Encoders.scalaLong
-      implicit val encOut: org.apache.spark.sql.Encoder[(Long, Event[List[Double]])] =
-        Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[List[Double]]])
-      implicit val encState
-          : org.apache.spark.sql.Encoder[(Int, scala.collection.immutable.Queue[Event[Double]])] =
-        Encoders.kryo[(Int, scala.collection.immutable.Queue[Event[Double]])]
-      val keyed = Tables.streamEventsChunked(s, dir)
-        .select(col("user_id"), col("ts"), col("value"))
-        .as[(Long, java.sql.Timestamp, Double)](
-          Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP, Encoders.scalaDouble))
-        .map { case (u, ts, v) => (u, Event(Some(ts), Some(v))) }(
-          Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[Double]]))
-      val slid = graft.streaming.StreamingOps.slidingByKey[Long, Double](keyed, n = 5)
+      import s.implicits._
+      val slid = StreamingOps.slidingByKey[Long, Double](valuesByUser(s, dir), n = 5)
       val typed = slid.flatMap { case (u, e) =>
         e.value.map { w => (u, e.time.get, w.length.toLong, w.sum) }
-      }(Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-        Encoders.scalaLong, Encoders.scalaDouble))
+      }
       Gate.toParquet(typed.toDF("user_id", "window_start", "n", "sum_raw"),
         OutputMode.Append, "graft_stream_slbk_", GateTuning.shardedStatePartitions)
         .select(col("user_id"), col("window_start"), col("n"),
@@ -740,26 +657,12 @@ object StreamQueries {
     // beyond their last event never close — the oracle drops them the
     // same way).
     "q_streaming_slidingtime_bykey" -> ((s, dir) => {
-      import org.apache.spark.sql.Encoders
-      import graft.core.Event
-      implicit val encK: org.apache.spark.sql.Encoder[Long] = Encoders.scalaLong
-      implicit val encOut: org.apache.spark.sql.Encoder[(Long, Event[List[Double]])] =
-        Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[List[Double]]])
-      implicit val encState
-          : org.apache.spark.sql.Encoder[scala.collection.immutable.Queue[Event[Double]]] =
-        Encoders.kryo[scala.collection.immutable.Queue[Event[Double]]]
-      val keyed = Tables.streamEventsChunked(s, dir)
-        .select(col("user_id"), col("ts"), col("value"))
-        .as[(Long, java.sql.Timestamp, Double)](
-          Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP, Encoders.scalaDouble))
-        .map { case (u, ts, v) => (u, Event(Some(ts), Some(v))) }(
-          Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[Double]]))
-      val slid = graft.streaming.StreamingOps.slidingTimeByKey[Long, Double](
-        keyed, ms = 6L * 3600 * 1000)
+      import s.implicits._
+      val slid = StreamingOps.slidingTimeByKey[Long, Double](
+        valuesByUser(s, dir), ms = 6L * 3600 * 1000)
       val typed = slid.flatMap { case (u, e) =>
         e.value.map { w => (u, e.time.get, w.length.toLong, w.sum) }
-      }(Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-        Encoders.scalaLong, Encoders.scalaDouble))
+      }
       Gate.toParquet(typed.toDF("user_id", "window_start", "n", "sum_raw"),
         OutputMode.Append, "graft_stream_stbk_", GateTuning.shardedStatePartitions)
         .select(col("user_id"), col("window_start"), col("n"),
@@ -1005,17 +908,14 @@ object StreamQueries {
     // tail stays in state, matching the oracle's inner join on k. Reuses
     // the batch q_zip_join oracle verbatim.
     "q_streaming_zip" -> ((s, dir) => {
-      import org.apache.spark.sql.{Encoders, Dataset}
-      import graft.core.Event
+      import s.implicits._
       import graft.plans._
       val raw = Tables.streamEventsChunked(s, dir)
       def side(t: String): Dataset[Event[Any]] =
         raw.filter(col("event_type") === t)
           .select(col("ts"), col("event_id"), col("value"))
-          .as[(java.sql.Timestamp, Long, Double)](
-            Encoders.tuple(Encoders.TIMESTAMP, Encoders.scalaLong, Encoders.scalaDouble))
-          .map { case (ts, id, v) => Event(Some(ts), Some((id, v): Any)) }(
-            Encoders.kryo[Event[Any]])
+          .as[(java.sql.Timestamp, Long, Double)]
+          .map { case (ts, id, v) => Event(Some(ts), Some((id, v): Any)) }(events)
       val g = StreamGraph(
         Vector(
           StreamVertex(0, OpSource(1), Nil, "(Long,Double)", "(Long,Double)", 1),
@@ -1029,8 +929,7 @@ object StreamQueries {
         val ((cid, cv), (pid, pv)) =
           e.value.get.asInstanceOf[((Long, Double), (Long, Double))]
         (cid, pid, cv, pv)
-      }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-        Encoders.scalaDouble, Encoders.scalaDouble))
+      }
       Gate.toParquet(
         typed.toDF("click_id", "purchase_id", "click_value", "purchase_value"),
         OutputMode.Append, "graft_stream_zip_", GateTuning.statePartitions)
@@ -1045,7 +944,7 @@ object StreamQueries {
     // oracle order); Map coarsens value to floor(value/25) buckets so the
     // changes-dedup actually drops consecutive repeats.
     "q_streaming_changes" -> ((s, dir) => {
-      import org.apache.spark.sql.Encoders
+      import s.implicits._
       import graft.plans._
       val g = StreamGraph.path(Seq(
         StreamVertex(0, OpSource(1), Nil, "(Long,Double)", "(Long,Double)", 1),
@@ -1066,7 +965,7 @@ object StreamQueries {
       val typed = lowered.map { e =>
         val (id, b) = e.value.get.asInstanceOf[(Long, Long)]
         (id, b)
-      }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+      }
       Gate.toParquet(typed.toDF("event_id", "bucket"), OutputMode.Append, "graft_stream_chg_",
         GateTuning.statePartitions)
     }),
@@ -1077,7 +976,7 @@ object StreamQueries {
     // boundaries of the 4-file replay. Clicks only; each event emits the
     // accumulator (id, running sum so far), rounded portably on read-back.
     "q_streaming_scan" -> ((s, dir) => {
-      import org.apache.spark.sql.Encoders
+      import s.implicits._
       import graft.plans._
       val g = StreamGraph.path(Seq(
         StreamVertex(0, OpSource(1), Nil, "(Long,Double)", "(Long,Double)", 1),
@@ -1094,7 +993,7 @@ object StreamQueries {
       val typed = lowered.map { e =>
         val (id, sum) = e.value.get.asInstanceOf[(Long, Double)]
         (id, sum)
-      }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble))
+      }
       Gate.toParquet(typed.toDF("event_id", "sum_raw"), OutputMode.Append, "graft_stream_scan_",
         GateTuning.statePartitions)
         .select(col("event_id"), roundp(col("sum_raw"), 2).as("running_sum"))
@@ -1110,7 +1009,7 @@ object StreamQueries {
     // keeps positive parts. No state store involved — stateless arms
     // parallelize freely.
     "q_streaming_stateless" -> ((s, dir) => {
-      import org.apache.spark.sql.Encoders
+      import s.implicits._
       import graft.plans._
       val g = {
         val s0 = StreamVertex(0, OpSource(1), Nil, "(Long,Double)", "(Long,Double)", 1)
@@ -1136,7 +1035,7 @@ object StreamQueries {
       val typed = lowered.map { e =>
         val (id, part, v) = e.value.get.asInstanceOf[(Long, Long, Long)]
         (id, part, v)
-      }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong))
+      }
       Gate.toParquet(typed.toDF("event_id", "part_idx", "part_val"),
         OutputMode.Append, "graft_stream_sl2_", GateTuning.statePartitions)
     }),
@@ -1294,30 +1193,21 @@ object StreamQueries {
     // mirrored in the oracle exactly like q_streaming_taxi_q1's post-filter
     // horizon.
     "q_streaming_wearable" -> ((s, dir) => {
-      import org.apache.spark.sql.Encoders
-      import graft.core.Event
+      import s.implicits._
       type P = (Long, Double) // (event_id, norm)
       val keyed = Tables.streamEventsChunked(s, dir)
         .filter(col("event_type") =!= "error")                  // vibe == 0
         .withColumn("norm", roundp(sqrt(col("value") * col("value") + 1), 4)) // ed
         .select(col("user_id"), col("ts"), col("event_id"), col("norm"))
-        .as[(Long, java.sql.Timestamp, Long, Double)](
-          Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-            Encoders.scalaLong, Encoders.scalaDouble))
+        .as[(Long, java.sql.Timestamp, Long, Double)]
         .map { case (u, ts, id, n) => (u, Event(Some(ts), Some((id, n)): Option[P])) }(
-          Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[P]]))
-      implicit val encK: org.apache.spark.sql.Encoder[Long] = Encoders.scalaLong
-      implicit val encOut: org.apache.spark.sql.Encoder[(Long, Event[P])] =
-        Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[P]])
-      implicit val encState: org.apache.spark.sql.Encoder[Option[Double]] =
-        Encoders.kryo[Option[Double]]
-      val steps = graft.streaming.StreamingOps.filterAccByKey[Long, P, Option[Double]](
+          keyedEvents)
+      val steps = StreamingOps.filterAccByKey[Long, P, Option[Double]](
         keyed, (_, v) => Some(v._2), None,
         (v, prev) => prev.exists(_ > 50.0) && v._2 <= 50.0)  // stepEvent
       val stepRows = steps.flatMap { case (_, e) =>
         e.value.flatMap(v => e.time.map(t => (t, v._1)))
-      }(Encoders.tuple(Encoders.TIMESTAMP, Encoders.scalaLong))
-        .toDF("ts", "event_id")
+      }.toDF("ts", "event_id")
       val counts = stepRows
         .withWatermark("ts", "1 minute")
         .groupBy(window(col("ts"), "1 hour"))                   // stepCount

@@ -1,7 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import scala.collection.immutable.Queue
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.core.Event
 import graft.plans.StreamingLowering
@@ -17,10 +21,18 @@ import graft.plans.StreamingLowering
   * their runner with the lowered graphs: `scanByKey`, `filterAccByKey`,
   * `chopByKey`, `slidingByKey` and `slidingTimeByKey` call
   * [[graft.plans.StreamingLowering]]'s step for the operator on each
-  * key's events, with the typed state their encoders store, and every
-  * keyed operator runs on [[graft.plans.StreamingLowering.runStateful]],
-  * the one `flatMapGroupsWithState` call. A fix to an operator's step
-  * reaches both surfaces.
+  * key's events, and every keyed operator runs on
+  * [[graft.plans.StreamingLowering.runStateful]], the one
+  * `flatMapGroupsWithState` call. A fix to an operator's step reaches
+  * both surfaces.
+  *
+  * A keyed operator asks only for its key's `Encoder[K]`. The output and
+  * state types follow from the operator, so it builds their encoders
+  * itself: events travel as [[keyedEvents]] rows (the key, then the
+  * kryo-encoded event), flat outputs as primitive tuples after the key,
+  * and state in the layout noted on each operator. `scanByKey` and
+  * `filterAccByKey` store a caller-typed accumulator kryo-encoded, as the
+  * lowered graphs store their state slots.
   *
   * The reference has NO watermarks (lazy lists close windows when the next
   * element arrives) and assumes time order; in streaming mode the window
@@ -111,22 +123,35 @@ object StreamingOps {
     df.withWatermark(tsName, watermark)
       .dropDuplicatesWithinWatermark(keys)
 
+  /** A keyed event row: the key through its encoder, the event
+    * kryo-encoded. Every keyed operator reads these rows, and the ones
+    * that emit events emit them. */
+  def keyedEvents[K, A](implicit encK: Encoder[K]): Encoder[(K, Event[A])] =
+    Encoders.tuple(encK, Encoders.kryo[Event[A]])
+
+  /** A caller-typed state, kryo-encoded as `Any`, the encoding of the
+    * lowered graphs' state slots. `Encoders.kryo[S]` would reject a
+    * primitive `S` such as `Double`; through `Any` it is boxed. */
+  private def kryoState[S]: Encoder[S] = Encoders.kryo[Any].asInstanceOf[Encoder[S]]
+
   /** A keyed operator on [[StreamingLowering.runStateful]]: each key's
     * events of a micro-batch, its typed state (`init` before the key's
-    * first batch), and its outputs tagged with the key. */
-  private def byKey[K, A, S, O](ds: Dataset[(K, Event[A])], init: S,
-      idleTimeoutMs: Option[Long])(f: (K, S, Iterator[Event[A]]) => (Iterable[O], S))(
-      implicit encK: Encoder[K], encS: Encoder[S], encO: Encoder[O]): Dataset[O] =
+    * first batch) stored through `encS`, and its outputs tagged with the
+    * key, encoded by `encO`. */
+  private def byKey[K, A, S, O](ds: Dataset[(K, Event[A])], init: S, idleTimeoutMs: Option[Long],
+      encS: Encoder[S], encO: Encoder[O])(f: (K, S, Iterator[Event[A]]) => (Iterable[O], S))(
+      implicit encK: Encoder[K]): Dataset[O] =
     StreamingLowering.runStateful[(K, Event[A]), K, S, O](ds, _._1, init, idleTimeoutMs) {
       (k, s, it) => f(k, s, it.map(_._2))
-    }
+    }(encK, encS, encO)
 
   /** A stateful operator's step — the one the lowered graphs run — per
-    * key, over the key's events in [[Event.orderKey]] order. */
-  private def stepByKey[K, A, S, O](ds: Dataset[(K, Event[A])], init: S,
-      idleTimeoutMs: Option[Long])(step: StreamingLowering.StepOf[A, O, S])(
-      implicit encK: Encoder[K], encOut: Encoder[(K, O)], encS: Encoder[S]): Dataset[(K, O)] =
-    byKey[K, A, S, (K, O)](ds, init, idleTimeoutMs) { (k, s, it) =>
+    * key, over the key's events in [[Event.orderKey]] order; its output
+    * events leave as [[keyedEvents]] rows. */
+  private def stepByKey[K: Encoder, A, S, O](ds: Dataset[(K, Event[A])], init: S,
+      idleTimeoutMs: Option[Long], encS: Encoder[S])(
+      step: StreamingLowering.StepOf[A, Event[O], S]): Dataset[(K, Event[O])] =
+    byKey(ds, init, idleTimeoutMs, encS, keyedEvents[K, O]) { (k, s, it) =>
       val (out, next) = step(StreamingLowering.inStreamOrder(it.toIndexedSeq), s)
       (out.map(o => (k, o)), next)
     }
@@ -149,24 +174,24 @@ object StreamingOps {
     * forever, which on a stream with unbounded key cardinality grows the
     * state store without bound). Pass `idleTimeoutMs` to evict state for
     * keys idle (no new events, processing time) longer than the horizon;
-    * a key that reappears later restarts from `init`. */
-  def scanByKey[K, A, B](ds: Dataset[(K, Event[A])], f: (B, A) => B, init: B,
-                         idleTimeoutMs: Option[Long] = None)(
-      implicit encK: Encoder[K], encOut: Encoder[(K, Event[B])],
-      encState: Encoder[B]): Dataset[(K, Event[B])] =
-    stepByKey(ds, init, idleTimeoutMs)(StreamingLowering.scanStep(f))
+    * a key that reappears later restarts from `init`. A `null`
+    * accumulator is stored as no state, which the next batch reads as
+    * `init` again.
+    *
+    * State: the accumulator, kryo-encoded. */
+  def scanByKey[K: Encoder, A, B](ds: Dataset[(K, Event[A])], f: (B, A) => B, init: B,
+                                  idleTimeoutMs: Option[Long] = None): Dataset[(K, Event[B])] =
+    stepByKey(ds, init, idleTimeoutMs, kryoState[B])(StreamingLowering.scanStep(f))
 
   /** Streaming `streamFilterAcc` per key (reference
     * `FunctionalProcessing.hs:181-185`): stateful filter; accumulator
     * updated on every data event, emission iff pred(value, accBefore);
-    * value-less events pass. State lifetime contract as in
-    * [[scanByKey]] (`idleTimeoutMs`). */
-  def filterAccByKey[K, A, B](ds: Dataset[(K, Event[A])],
+    * value-less events pass. State lifetime and layout as in
+    * [[scanByKey]]. */
+  def filterAccByKey[K: Encoder, A, B](ds: Dataset[(K, Event[A])],
       accfn: (B, A) => B, init: B, pred: (A, B) => Boolean,
-      idleTimeoutMs: Option[Long] = None)(
-      implicit encK: Encoder[K], encOut: Encoder[(K, Event[A])],
-      encState: Encoder[B]): Dataset[(K, Event[A])] =
-    stepByKey(ds, init, idleTimeoutMs)(StreamingLowering.filterAccStep(accfn, pred))
+      idleTimeoutMs: Option[Long] = None): Dataset[(K, Event[A])] =
+    stepByKey(ds, init, idleTimeoutMs, kryoState[B])(StreamingLowering.filterAccStep(accfn, pred))
 
   /** Streaming as-of enrichment per key — the streaming twin of
     * [[graft.operators.Relational.asofJoin]] (engine primitive absent
@@ -192,12 +217,12 @@ object StreamingOps {
     * so at-or-before is vacuous). State is ONE `(ts, right)` per key —
     * bounded regardless of stream length; `idleTimeoutMs` evicts idle
     * keys ([[scanByKey]]'s lifetime contract). Value-less events pass
-    * through unenriched (payload None). */
-  def asofEnrichByKey[K, A](ds: Dataset[(K, Event[A])], isRight: A => Boolean,
-      idleTimeoutMs: Option[Long] = None)(
-      implicit encK: Encoder[K], encOut: Encoder[(K, Event[(A, Option[A])])],
-      encState: Encoder[Option[(Long, A)]]): Dataset[(K, Event[(A, Option[A])])] =
-    byKey(ds, None: Option[(Long, A)], idleTimeoutMs) { (k, stored, it) =>
+    * through unenriched (payload None). State: `Option[(Long, A)]`,
+    * kryo-encoded. */
+  def asofEnrichByKey[K: Encoder, A](ds: Dataset[(K, Event[A])], isRight: A => Boolean,
+      idleTimeoutMs: Option[Long] = None): Dataset[(K, Event[(A, Option[A])])] =
+    byKey(ds, None: Option[(Long, A)], idleTimeoutMs,
+        Encoders.kryo[Option[(Long, A)]], keyedEvents[K, (A, Option[A])]) { (k, stored, it) =>
       // stored right as (µs ts, payload); Long.MinValue = untimed right
       var last = stored
       val sorted = it.toIndexedSeq.sortBy { e =>
@@ -236,13 +261,12 @@ object StreamingOps {
     * minima, so the emitted log unpivots to `funnelStages`' m1..mN (the
     * q_streaming_funnel gate's oracle). Untimed or value-less events
     * cannot advance a funnel (nothing to order on) and are dropped.
-    * `idleTimeoutMs` as in [[scanByKey]]. */
+    * `idleTimeoutMs` as in [[scanByKey]]. State: an `Array[Long]` column. */
   def funnelByKey[K](ds: Dataset[(K, Event[String])], stages: Seq[String],
-      idleTimeoutMs: Option[Long] = None)(
-      implicit encK: Encoder[K], encOut: Encoder[(K, Int, Long)],
-      encState: Encoder[Array[Long]]): Dataset[(K, Int, Long)] = {
+      idleTimeoutMs: Option[Long] = None)(implicit encK: Encoder[K]): Dataset[(K, Int, Long)] = {
     require(stages.nonEmpty, "funnelByKey needs at least one stage")
-    byKey(ds, Array.fill(stages.length)(-1L), idleTimeoutMs) { (k, stored, it) =>
+    byKey(ds, Array.fill(stages.length)(-1L), idleTimeoutMs, ExpressionEncoder[Array[Long]](),
+        Encoders.tuple(encK, Encoders.scalaInt, Encoders.scalaLong)) { (k, stored, it) =>
       // a copy: `init` is one array shared by every key of the task
       val entered = stored.clone()
       val out = scala.collection.mutable.ArrayBuffer.empty[(K, Int, Long)]
@@ -269,13 +293,12 @@ object StreamingOps {
     * window carries across micro-batches in state. The trailing partial
     * window never emits (an unbounded stream never ends). The lowered
     * graphs' chop step, per key. State lifetime contract as in
-    * [[scanByKey]] (`idleTimeoutMs`). */
-  def chopByKey[K, A](ds: Dataset[(K, Event[A])], n: Int,
-      idleTimeoutMs: Option[Long] = None)(
-      implicit encK: Encoder[K], encOut: Encoder[(K, Event[List[A]])],
-      encState: Encoder[(Int, List[Event[A]])]): Dataset[(K, Event[List[A]])] = {
+    * [[scanByKey]] (`idleTimeoutMs`). State: the open window's count and
+    * events, kryo-encoded. */
+  def chopByKey[K: Encoder, A](ds: Dataset[(K, Event[A])], n: Int,
+      idleTimeoutMs: Option[Long] = None): Dataset[(K, Event[List[A]])] = {
     require(n >= 1, s"window size must be >= 1 (got $n)")
-    stepByKey(ds, (0, Nil: List[Event[A]]), idleTimeoutMs)(
+    stepByKey(ds, (0, Nil: List[Event[A]]), idleTimeoutMs, Encoders.kryo[(Int, List[Event[A]])])(
       StreamingLowering.chopStep(n, StreamingLowering.windowEvents[A]))
   }
 
@@ -284,14 +307,11 @@ object StreamingOps {
     * the window of the next n events; a window emits when its n-th event
     * arrives. State per key = the last ≤ n−1 data events. The trailing
     * n−1 partial windows never emit. The lowered graphs' sliding step,
-    * per key. */
-  def slidingByKey[K, A](ds: Dataset[(K, Event[A])], n: Int,
-      idleTimeoutMs: Option[Long] = None)(
-      implicit encK: Encoder[K], encOut: Encoder[(K, Event[List[A]])],
-      encState: Encoder[(Int, scala.collection.immutable.Queue[Event[A]])])
-      : Dataset[(K, Event[List[A]])] = {
+    * per key. State: the count and the queue, kryo-encoded. */
+  def slidingByKey[K: Encoder, A](ds: Dataset[(K, Event[A])], n: Int,
+      idleTimeoutMs: Option[Long] = None): Dataset[(K, Event[List[A]])] = {
     require(n >= 1, s"window size must be >= 1 (got $n)")
-    stepByKey(ds, (0, scala.collection.immutable.Queue.empty[Event[A]]), idleTimeoutMs)(
+    stepByKey(ds, (0, Queue.empty[Event[A]]), idleTimeoutMs, Encoders.kryo[(Int, Queue[Event[A]])])(
       StreamingLowering.slidingStep(n, StreamingLowering.windowEvents[A]))
   }
 
@@ -308,15 +328,14 @@ object StreamingOps {
     * the batch window's (ts, event_id) ordering, so on an in-order replay
     * the emitted stats hash-match the batch oracle. Untimed or value-less
     * events are dropped (no window position). `idleTimeoutMs` as in
-    * [[scanByKey]]. */
+    * [[scanByKey]]. State: the FIFO, kryo-encoded. */
   def trailingStatsByKey[K](ds: Dataset[(K, Event[(Long, Long)])], lookback: Int,
       idleTimeoutMs: Option[Long] = None)(
-      implicit encK: Encoder[K],
-      encOut: Encoder[(K, Long, Long, Long, Long, Long)],
-      encState: Encoder[scala.collection.immutable.Queue[Long]])
-      : Dataset[(K, Long, Long, Long, Long, Long)] = {
+      implicit encK: Encoder[K]): Dataset[(K, Long, Long, Long, Long, Long)] = {
     require(lookback >= 1, s"lookback must be >= 1 (got $lookback)")
-    byKey(ds, scala.collection.immutable.Queue.empty[Long], idleTimeoutMs) { (k, stored, it) =>
+    val long = Encoders.scalaLong
+    val encOut = Bridge.tuple[(K, Long, Long, Long, Long, Long)](encK, long, long, long, long, long)
+    byKey(ds, Queue.empty[Long], idleTimeoutMs, Encoders.kryo[Queue[Long]], encOut) { (k, stored, it) =>
       var buf = stored
       val out = timedById(it).map { case (id, v) =>
         buf = buf.enqueue(v)
@@ -340,16 +359,15 @@ object StreamingOps {
     * ≤ lookback−1 longs per key, O(lookback) work per event. The batch
     * window's (ts, event_id) ordering is reproduced by the per-batch
     * (time, id) sort, so an in-order replay hash-matches the batch
-    * oracle. */
+    * oracle. State: the FIFO, kryo-encoded. */
   def ewmaByKey[K](ds: Dataset[(K, Event[(Long, Long)])], lookback: Int,
       idleTimeoutMs: Option[Long] = None)(
-      implicit encK: Encoder[K],
-      encOut: Encoder[(K, Long, Long, Long, Int)],
-      encState: Encoder[scala.collection.immutable.Queue[Long]])
-      : Dataset[(K, Long, Long, Long, Int)] = {
+      implicit encK: Encoder[K]): Dataset[(K, Long, Long, Long, Int)] = {
     require(lookback >= 1 && lookback <= 62,
       s"lookback must be in 1..62 (got $lookback): weights are 2^i longs")
-    byKey(ds, scala.collection.immutable.Queue.empty[Long], idleTimeoutMs) { (k, stored, it) =>
+    val long = Encoders.scalaLong
+    val encOut = Encoders.tuple(encK, long, long, long, Encoders.scalaInt)
+    byKey(ds, Queue.empty[Long], idleTimeoutMs, Encoders.kryo[Queue[Long]], encOut) { (k, stored, it) =>
       var buf = stored
       val out = timedById(it).map { case (id, v) =>
         buf = buf.enqueue(v)
@@ -382,16 +400,13 @@ object StreamingOps {
     * idle timeout can evict even those). Emissions are exact and final
     * at arrival — no watermark, no retraction; the per-batch (time, id)
     * sort reproduces the batch window's ordering, so an in-order replay
-    * hash-matches the batch oracle row-for-row. */
+    * hash-matches the batch oracle row-for-row. State: a string column. */
   def attributeByKey[K](ds: Dataset[(K, Event[(Long, String, Long)])],
       creditType: String, defaultChannel: String,
       idleTimeoutMs: Option[Long] = None)(
-      implicit encK: Encoder[K],
-      encOut: Encoder[(K, Long, String, Long)])
-      : Dataset[(K, Long, String, Long)] = {
-    implicit val encState: Encoder[String] =
-      org.apache.spark.sql.Encoders.STRING
-    byKey(ds, defaultChannel, idleTimeoutMs) { (k, stored, it) =>
+      implicit encK: Encoder[K]): Dataset[(K, Long, String, Long)] = {
+    val encOut = Encoders.tuple(encK, Encoders.scalaLong, Encoders.STRING, Encoders.scalaLong)
+    byKey(ds, defaultChannel, idleTimeoutMs, Encoders.STRING, encOut) { (k, stored, it) =>
       var channel = stored
       val sorted = it.collect { case Event(Some(t), Some(p)) => (Event.micros(t), p) }
         .toIndexedSeq.sortBy(t => (t._1, t._2._1))
@@ -412,14 +427,11 @@ object StreamingOps {
     * last event never close. Untimed events are dropped (no window to
     * anchor). The lowered graphs' slidingTime step, per key: under late
     * data across micro-batches a window is the pending prefix before the
-    * first event at/after its end. */
-  def slidingTimeByKey[K, A](ds: Dataset[(K, Event[A])], ms: Long,
-      idleTimeoutMs: Option[Long] = None)(
-      implicit encK: Encoder[K], encOut: Encoder[(K, Event[List[A]])],
-      encState: Encoder[scala.collection.immutable.Queue[Event[A]]])
-      : Dataset[(K, Event[List[A]])] = {
+    * first event at/after its end. State: the queue, kryo-encoded. */
+  def slidingTimeByKey[K: Encoder, A](ds: Dataset[(K, Event[A])], ms: Long,
+      idleTimeoutMs: Option[Long] = None): Dataset[(K, Event[List[A]])] = {
     require(ms >= 1, s"window duration must be >= 1 ms (got $ms)")
-    stepByKey(ds, scala.collection.immutable.Queue.empty[Event[A]], idleTimeoutMs)(
+    stepByKey(ds, Queue.empty[Event[A]], idleTimeoutMs, Encoders.kryo[Queue[Event[A]]])(
       StreamingLowering.slidingTimeStep(ms, StreamingLowering.windowEvents[A]))
   }
 

@@ -438,8 +438,10 @@ class StreamingLoweringSpec extends SparkSuite {
     // (500+2000=2500) REGRESSES below the previous window's (103000).
     // The carried scan bound must restart at the window head, or the
     // emitted window would include events at/after its end (here 5000).
-    // The non-Double queue path's first-stop takeWhile defines the
-    // contract; the primitive-array fast path must match it exactly.
+    // The contract is first-stop: a window is the pending prefix before
+    // the first event at/after its end. String payloads take the step's
+    // default list emit, Double payloads the same loop with the primitive
+    // mirror filled; both must give exactly that.
     def windows(tag: String, toPayload: Double => Any,
                 fromPayload: Any => Double): List[(Long, String)] = {
       val raw = twoBatchSource(
@@ -466,11 +468,11 @@ class StreamingLoweringSpec extends SparkSuite {
       (0L, "0.0,1.0"), (1000L, "1.0,2.0"), (2000L, "2.0"),
       (500L, "0.5"), (5000L, "5.0"),
       (100000L, "100.0,101.0,0.5,5.0"), (101000L, "101.0,0.5,5.0")).sorted
-    val fallback = windows("fb", v => v.toString: Any,
+    val strings = windows("fb", v => v.toString: Any,
       v => v.asInstanceOf[String].toDouble)
-    assert(fallback == expected, s"queue-path contract: $fallback")
-    val fast = windows("fast", identity, _.asInstanceOf[Double])
-    assert(fast == expected, s"carried-bound path diverged under regression: $fast")
+    assert(strings == expected, s"first-stop contract, String payloads: $strings")
+    val doubles = windows("fast", identity, _.asInstanceOf[Double])
+    assert(doubles == expected, s"carried bound diverged under regression: $doubles")
   }
 
   test("generic window fallback bounds its buffered prefix") {
@@ -628,30 +630,33 @@ class StreamingLoweringSpec extends SparkSuite {
         (v: Any) => v.asInstanceOf[List[Any]].nonEmpty)), "[Double]", "[Double]", 1),
       StreamVertex(3, OpMap, List(Param("countAndSum", lying)), "[Double]", "(Long,Double)", 1))
     val emitter = StreamingLowering.chainEmit(chain)
-    def window(vs: Double*): Iterator[Event[Any]] =
-      vs.zipWithIndex.map { case (v, i) => Event.data(1000L * i, v: Any) }.iterator
+    def window(vs: Double*): Option[Event[Any]] = {
+      val evs: Array[Event[Any]] =
+        vs.zipWithIndex.map { case (v, i) => Event.data(1000L * i, v: Any) }.toArray
+      emitter.fromRange(evs, evs.map(_.isData), vs.toArray, 0, evs.length)
+    }
     // call 1: honest — the first-window recheck passes
-    assert(emitter.fromIterator(window(1.0, 2.0)).isDefined)
+    assert(window(1.0, 2.0).isDefined)
     // call 2: divergent but between rechecks — the fold's own (correct)
     // arithmetic is emitted; no error (the documented residual)
-    assert(emitter.fromIterator(window(marker)).exists(
+    assert(window(marker).exists(
       _.value.contains((1L, marker): Any)))
     // calls 3..recheckEvery: honest folds, draining the recheck counter
     // (call 1's recheck armed it at N-1; the marker call spent one)
     (0L until (StreamingLowering.FusedFoldRecheckEvery - 2)).foreach { _ =>
-      assert(emitter.fromIterator(window(3.0)).isDefined)
+      assert(window(3.0).isDefined)
     }
     // next call lands on the periodic recheck: divergence now detected
     val err = intercept[IllegalStateException] {
-      emitter.fromIterator(window(marker))
+      window(marker)
     }
     assert(err.getMessage.contains("fused 'countAndSum' fold disagrees"))
   }
 
   test("generalized fold algebra matches the canonical closures on every recognized name") {
     // canonical closures per the chainEmit name contract; each emitter is
-    // driven through BOTH fromIterator and fromRange and must agree with
-    // the materialized chain bit-for-bit
+    // driven through fromRange and must agree with the materialized chain
+    // bit-for-bit
     val canon: Map[String, Any => Any] = Map(
       "count" -> ((v: Any) => v.asInstanceOf[List[Any]].length.toLong: Any),
       "sum" -> ((v: Any) => v.asInstanceOf[List[Any]]
@@ -687,7 +692,6 @@ class StreamingLoweringSpec extends SparkSuite {
       assert(em.isInstanceOf[StreamingLowering.FoldEmitter], s"$name not recognized")
       for (w <- windows) {
         val expected = em(w) // materialized chain = ground truth
-        assert(em.fromIterator(w.iterator) == expected, s"$name fromIterator on $w")
         val evs = w.toArray
         val isData = evs.map(_.isData)
         val vals = evs.map(e =>

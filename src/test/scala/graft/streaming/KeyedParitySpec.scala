@@ -5,7 +5,7 @@ import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Dataset, Encoders}
 
 import graft.SparkSuite
 import graft.core.Event
@@ -25,9 +25,9 @@ class KeyedParitySpec extends SparkSuite {
   private def ts(ms: Long) = new Timestamp(ms)
 
   /** (key, ms, value) per micro-batch; a None value is a timed tick. Key 1
-    * is the late-data input that once split the two slidingTime loops:
-    * batch 2 opens at 500 ms, below the 100000 ms state batch 1 left. Key
-    * 2's batch 2 and batch 3 open with late events too. */
+    * is late data across micro-batches: batch 2 opens at 500 ms, below
+    * the 100000 ms state batch 1 left. Key 2's batch 2 and batch 3 open
+    * with late events too. */
   private val batches: Seq[Seq[(Long, Long, Option[Double])]] = Seq(
     Seq(0L, 1000L, 2000L, 100000L, 101000L).map(ms => (1L, ms, Some(ms / 1000.0))) ++
       Seq((2L, 10000L, Some(4.0)), (2L, 12500L, Some(7.0)), (2L, 15000L, Some(3.0))),
@@ -60,8 +60,7 @@ class KeyedParitySpec extends SparkSuite {
       .option("maxFilesPerTrigger", 1)
       .parquet(replayDir)
       .as[(Long, Timestamp, Option[Double])]
-      .map { case (k, t, v) => (k, Event(Some(t), v)) }(
-        Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[Double]]))
+      .map { case (k, t, v) => (k, Event(Some(t), v)) }(StreamingOps.keyedEvents)
 
   /** Every row a streaming Dataset emits over the three micro-batches. */
   private def drain[T](name: String, ds: Dataset[T]): Seq[T] = {
@@ -103,22 +102,16 @@ class KeyedParitySpec extends SparkSuite {
   private def window(src: String) =
     StreamVertex(1, OpWindow, List(Param(src, null)), "Double", "[Double]", 1)
 
-  private val encK: Encoder[Long] = Encoders.scalaLong
-  private val encWindows: Encoder[(Long, Event[List[Double]])] =
-    Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[List[Double]]])
-
   /** A typed keyed output as the lowering's erased row type. */
   private def erased[B](ds: Dataset[(Long, Event[B])]): Dataset[(Long, Event[Any])] =
-    ds.map { case (k, e) => (k, e.asInstanceOf[Event[Any]]) }(
-      Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[Any]]))
+    ds.map { case (k, e) => (k, e.asInstanceOf[Event[Any]]) }(StreamingOps.keyedEvents)
 
   test("scanByKey is the lowered scan per key") {
     val sum = (acc: Double, v: Double) => acc + v
     assertParity("scan", StreamVertex(1, OpScan, List(
       Param("sum", (acc: Any, v: Any) => sum(acc.asInstanceOf[Double], v.asInstanceOf[Double]): Any),
       Param("0.0", 0.0: Any)), "Double", "Double", 1)) { ds =>
-      erased(StreamingOps.scanByKey[Long, Double, Double](ds, sum, 0.0)(
-        encK, Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[Double]]), Encoders.scalaDouble))
+      erased(StreamingOps.scanByKey[Long, Double, Double](ds, sum, 0.0))
     }
   }
 
@@ -133,29 +126,25 @@ class KeyedParitySpec extends SparkSuite {
       Param("(>)", (v: Any, acc: Any) => pred(v.asInstanceOf[Double], acc.asInstanceOf[Double]))),
       "Double", "Double", 1)) { ds =>
       erased(StreamingOps.filterAccByKey[Long, Double, Double](
-        ds, accfn, Double.NegativeInfinity, pred)(
-        encK, Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[Double]]), Encoders.scalaDouble))
+        ds, accfn, Double.NegativeInfinity, pred))
     }
   }
 
   test("chopByKey is the lowered chop per key") {
     assertParity("chop", window("chop 2")) { ds =>
-      erased(StreamingOps.chopByKey[Long, Double](ds, 2)(
-        encK, encWindows, Encoders.kryo[(Int, List[Event[Double]])]))
+      erased(StreamingOps.chopByKey[Long, Double](ds, 2))
     }
   }
 
   test("slidingByKey is the lowered sliding per key") {
     assertParity("sliding", window("sliding 3")) { ds =>
-      erased(StreamingOps.slidingByKey[Long, Double](ds, 3)(
-        encK, encWindows, Encoders.kryo[(Int, scala.collection.immutable.Queue[Event[Double]])]))
+      erased(StreamingOps.slidingByKey[Long, Double](ds, 3))
     }
   }
 
   test("slidingTimeByKey is the lowered slidingTime per key, late data included") {
     val got = assertParity("slidingtime", window("slidingTime 2000")) { ds =>
-      erased(StreamingOps.slidingTimeByKey[Long, Double](ds, 2000L)(
-        encK, encWindows, Encoders.kryo[scala.collection.immutable.Queue[Event[Double]]]))
+      erased(StreamingOps.slidingTimeByKey[Long, Double](ds, 2000L))
     }
     // the window anchored at the late 500 ms event ends at 2500 ms: the
     // 5000 ms event after it is outside

@@ -2,7 +2,11 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSuite
 import graft.core.Event
@@ -87,14 +91,16 @@ class StreamingOpsSpec extends SparkSuite {
       .as[(Long, java.sql.Timestamp, Double)]
       .map { case (u, ts, v) => (u, Event(Some(ts), Some(v))) }
     val scanned = StreamingOps.scanByKey[Long, Double, Double](stream, _ + _, 0.0)
-    val q = scanned.toDF().writeStream.format("memory")
+    // the operator's events are kryo-encoded: unpack each running sum
+    val q = scanned.flatMap { case (u, e) => e.value.map(v => (u, v)) }
+      .toDF("user_id", "acc").writeStream.format("memory")
       .queryName("scan_test").outputMode("append").start()
     q.processAllAvailable()
     q.stop()
     // values are positive, so the max running sum per key = the key's total
     val got = spark.table("scan_test")
-      .groupBy(col("_1").as("user_id"))
-      .agg(round(max(col("_2.value")), 2).as("total"))
+      .groupBy(col("user_id"))
+      .agg(round(max(col("acc")), 2).as("total"))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
     val expected = eventsBatch
       .groupBy(col("user_id"))
@@ -208,14 +214,6 @@ class StreamingOpsSpec extends SparkSuite {
   }
 
   test("chopByKey/slidingByKey n=1: every data event its own window; require on n=0") {
-    import org.apache.spark.sql.Encoders
-    implicit val encOut: org.apache.spark.sql.Encoder[(Long, Event[List[Double]])] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[List[Double]]])
-    implicit val encChop: org.apache.spark.sql.Encoder[(Int, List[Event[Double]])] =
-      Encoders.kryo[(Int, List[Event[Double]])]
-    implicit val encSlide
-        : org.apache.spark.sql.Encoder[(Int, scala.collection.immutable.Queue[Event[Double]])] =
-      Encoders.kryo[(Int, scala.collection.immutable.Queue[Event[Double]])]
     val keyed = spark.readStream
       .schema(eventsBatch.schema).parquet(replayDir)
       .select(col("user_id"), col("ts"), col("value"))
@@ -338,12 +336,6 @@ class StreamingOpsSpec extends SparkSuite {
     // micro-batch — 9.9k closing windows of 100 events each. The close is
     // O(total emitted output); the old per-close queue rescan made dense
     // same-key bursts quadratic.
-    import org.apache.spark.sql.Encoders
-    implicit val encOut: org.apache.spark.sql.Encoder[(Long, Event[List[Double]])] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[List[Double]]])
-    implicit val encState
-        : org.apache.spark.sql.Encoder[scala.collection.immutable.Queue[Event[Double]]] =
-      Encoders.kryo[scala.collection.immutable.Queue[Event[Double]]]
     val n = 10000
     val dir = Files.createTempDirectory("graft-burst").toString
     (0 until n).map(i => (1L, new java.sql.Timestamp(i.toLong), i.toDouble))
@@ -385,9 +377,13 @@ class StreamingOpsSpec extends SparkSuite {
     // instance, same checkpoint) folds the rest; if state did not survive
     // the restart, run 2 would restart accumulators from init and the
     // final per-key running sums would diverge from the batch totals.
+    // A chopByKey over the same input holds an open window per key across
+    // the restart, and must emit what one uninterrupted run emits.
     val dir = Files.createTempDirectory("graft-restart").toString
     val ckpt = Files.createTempDirectory("graft-restart-ckpt").toString
     val res = Files.createTempDirectory("graft-restart-out").toString
+    val chopCkpt = Files.createTempDirectory("graft-restart-chop-ckpt").toString
+    val chopRes = Files.createTempDirectory("graft-restart-chop-out").toString
     def write(rows: (Long, java.sql.Timestamp, Double)*): Unit =
       rows.toDF("user_id", "ts", "value").write.mode("append").parquet(dir)
     def ts(ms: Long) = new java.sql.Timestamp(ms)
@@ -395,25 +391,30 @@ class StreamingOpsSpec extends SparkSuite {
     val secondHalf = (10 until 20).map(i => (i % 3.toLong, ts(i * 100L), (i + 1).toDouble))
     write(firstHalf: _*)
     val schema = spark.read.parquet(dir).schema
-    def runOnce(): Unit = {
-      val keyed = spark.readStream.schema(schema).parquet(dir)
-        .as[(Long, java.sql.Timestamp, Double)]
-        .map { case (u, t, v) => (u, Event(Some(t), Some(v))) }
-      val q = StreamingOps.scanByKey[Long, Double, Double](keyed, _ + _, 0.0)
-        .flatMap { case (u, e) => e.value.map(v => (u, v)) }
-        .toDF("user_id", "acc")
-        .writeStream.outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          b.write.mode("append").parquet(res)
-        }
+    def keyed = spark.readStream.schema(schema).parquet(dir)
+      .as[(Long, java.sql.Timestamp, Double)]
+      .map { case (u, t, v) => (u, Event(Some(t), Some(v))) }
+    def sums = StreamingOps.scanByKey[Long, Double, Double](keyed, _ + _, 0.0)
+      .flatMap { case (u, e) => e.value.map(v => (u, v)) }
+      .toDF("user_id", "acc")
+    // chop 4: at the stop keys 1 and 2 hold 3 events each and key 0 holds
+    // none, so two windows are open across the restart
+    def windows = StreamingOps.chopByKey[Long, Double](keyed, 4)
+      .map { case (u, e) => (u, e.time.get.getTime, e.value.get.mkString(",")) }
+      .toDF("user_id", "start_ms", "values")
+    def runOnce(rows: DataFrame, checkpoint: String, out: String): Unit = {
+      val q = rows.writeStream.outputMode("append")
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch { (b: Dataset[Row], _: Long) => b.write.mode("append").parquet(out) }
         .start()
       q.awaitTermination()
     }
-    runOnce() // run 1: first half only
+    runOnce(sums, ckpt, res) // run 1: first half only
+    runOnce(windows, chopCkpt, chopRes)
     write(secondHalf: _*)
-    runOnce() // run 2: fresh query instance resumes from the checkpoint
+    runOnce(sums, ckpt, res) // run 2: fresh query instance resumes from the checkpoint
+    runOnce(windows, chopCkpt, chopRes)
     val out = spark.read.parquet(res).collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(out.length == 20, "every event must emit exactly one running sum across both runs")
     val finalAcc = out.groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
@@ -421,6 +422,51 @@ class StreamingOpsSpec extends SparkSuite {
       .view.mapValues(_.map(_._3).sum).toMap
     assert(finalAcc == expected,
       s"restart must resume accumulators from checkpointed state: got $finalAcc, want $expected")
+    val uninterrupted = Files.createTempDirectory("graft-restart-chop-once").toString
+    runOnce(windows, Files.createTempDirectory("graft-restart-chop-once-ckpt").toString,
+      uninterrupted)
+    def windowRows(p: String) = spark.read.parquet(p).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    assert(windowRows(uninterrupted).size == 3, windowRows(uninterrupted))
+    assert(windowRows(chopRes) == windowRows(uninterrupted),
+      "an open chop window must carry across the restart")
+  }
+
+  test("a null accumulator is stored as no state: a tick-only first batch, then data") {
+    // q_streaming_changes_bykey's shape: filterAccByKey with a null init.
+    // The key's first micro-batch holds only a value-less event, which
+    // leaves the accumulator null; Spark rejects a null state value, so the
+    // operator stores none and the next batch starts from init again.
+    val dir = Files.createTempDirectory("graft-nullstate")
+    val base = System.currentTimeMillis() - 3600000L
+    def ts(ms: Long) = new java.sql.Timestamp(ms)
+    Seq(Seq((1L, ts(1000), Option.empty[String])),
+        Seq((1L, ts(2000), Some("a")), (1L, ts(3000), Some("a")), (1L, ts(4000), Some("b"))))
+      .zipWithIndex.foreach { case (rows, i) =>
+        val sub = Files.createTempDirectory("graft-nullstate-part")
+        rows.toDF("user_id", "ts", "ch").coalesce(1).write.mode("overwrite").parquet(sub.toString)
+        val part = scala.util.Using.resource(Files.list(sub)) {
+          _.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
+        }
+        val target = dir.resolve(f"b$i%02d.parquet")
+        Files.move(part, target)
+        target.toFile.setLastModified(base + 10000L * i)
+      }
+    val keyed = spark.readStream.schema(spark.read.parquet(dir.toString).schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir.toString)
+      .as[(Long, java.sql.Timestamp, Option[String])]
+      .map { case (u, t, v) => (u, Event(Some(t), v)) }(StreamingOps.keyedEvents)
+    val kept = StreamingOps.filterAccByKey[Long, String, String](
+      keyed, (_, v) => v, null, (v, acc) => acc == null || acc != v)
+    val q = kept.map { case (_, e) => (e.time.get.getTime, e.value) }.toDF("ms", "ch")
+      .writeStream.format("memory").queryName("nullstate_test").outputMode("append").start()
+    q.processAllAvailable()
+    val batchesRun = q.recentProgress.count(_.numInputRows > 0)
+    q.stop()
+    assert(batchesRun == 2, s"expected 2 data micro-batches, got $batchesRun")
+    val got = spark.table("nullstate_test").collect()
+      .map(r => (r.getLong(0), Option(r.getString(1)))).toList.sorted
+    assert(got == List((1000L, None), (2000L, Some("a")), (4000L, Some("b"))))
   }
 
   test("streaming filterAccByKey deduplicates consecutive values per key") {
@@ -445,8 +491,6 @@ class StreamingOpsSpec extends SparkSuite {
   test("attributeByKey: channel state carries ACROSS micro-batches, pre-touch " +
        "purchases get the default, consecutive purchases share one touch") {
     import org.apache.spark.sql.Encoders
-    implicit val encOut: org.apache.spark.sql.Encoder[(Long, Long, String, Long)] =
-      Encoders.product[(Long, Long, String, Long)]
     def ts(sec: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:00:$sec%02d")
     val dir = Files.createTempDirectory("graft-attr")
     val batches = Seq(
@@ -510,10 +554,6 @@ class StreamingOpsSpec extends SparkSuite {
     // payload: (isRight, id); constructed ties exercise the rights-before-
     // lefts ordering the batch asofJoin's __side column encodes
     type P = (Boolean, Long)
-    implicit val encOut: org.apache.spark.sql.Encoder[(Long, Event[(P, Option[P])])] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Event[(P, Option[P])]])
-    implicit val encState: org.apache.spark.sql.Encoder[Option[(Long, P)]] =
-      Encoders.kryo[Option[(Long, P)]]
     def ts(sec: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:00:$sec%02d")
     val dir = Files.createTempDirectory("graft-asof")
     // one parquet FILE per micro-batch (maxFilesPerTrigger=1, mtimes strictly
@@ -582,9 +622,6 @@ class StreamingOpsSpec extends SparkSuite {
   test("funnelByKey: stage state carries ACROSS micro-batches, pre-stage events " +
        "never count, equal-ts does not advance, stages emit at most once") {
     import org.apache.spark.sql.Encoders
-    implicit val encOut: org.apache.spark.sql.Encoder[(Long, Int, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaInt, Encoders.scalaLong)
-    // Array[Long] state encoder comes from the imported spark implicits
     def ts(sec: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:00:$sec%02d")
     val dir = Files.createTempDirectory("graft-funnel")
     val batches = Seq(
