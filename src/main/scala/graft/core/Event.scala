@@ -2,6 +2,8 @@ package graft.core
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{Encoder, Encoders}
+
 /** The atom of a stream: an optional event-time plus an optional payload.
   *
   * Mirrors the reference's `Event alpha` (optional timestamp, optional
@@ -20,6 +22,12 @@ case class Event[A](time: Option[Timestamp], value: Option[A]) {
 }
 
 object Event {
+  /** The row encoding of an event whose payload Spark cannot see: the whole
+    * event kryo-encoded in one binary column. A lowered graph's rows and a
+    * keyed operator's event column ([[graft.streaming.StreamingOps.keyedEvents]])
+    * are these. */
+  val kryo: Encoder[Event[Any]] = Encoders.kryo[Event[Any]]
+
   def data[A](t: Long, v: A): Event[A] = Event(Some(new Timestamp(t)), Some(v))
   def dataOnly[A](v: A): Event[A] = Event(None, Some(v))
   def tick[A](t: Long): Event[A] = Event(Some(new Timestamp(t)), None)

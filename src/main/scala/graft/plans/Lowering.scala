@@ -27,7 +27,7 @@ import graft.core.WindowMakers.WindowMaker
   */
 object Lowering {
 
-  implicit private val enc: Encoder[Event[Any]] = Encoders.kryo[Event[Any]]
+  implicit private val enc: Encoder[Event[Any]] = Event.kryo
 
   /** Merge sort key — the shared [[Event.orderKey]] (µs time + stable
     * content-hash tiebreak; untimed events keep the union's order,

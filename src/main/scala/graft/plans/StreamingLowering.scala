@@ -65,7 +65,7 @@ import graft.core.Event
   */
 object StreamingLowering {
 
-  implicit private val enc: Encoder[Event[Any]] = Encoders.kryo[Event[Any]]
+  implicit private val enc: Encoder[Event[Any]] = Event.kryo
   private val encState: Encoder[Any] = Encoders.kryo[Any]
 
   /** Lower every vertex. A run's Dataset is built once, for its last

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Event
@@ -35,7 +35,7 @@ object GraphQueries {
       val src = Tables.events(s, dir)
         .select(col("ts"), col("value"))
         .as[(java.sql.Timestamp, Double)]
-        .map { case (ts, v) => Event(Some(ts), Some(v: Any)) }(Encoders.kryo[Event[Any]])
+        .map { case (ts, v) => Event(Some(ts), Some(v: Any)) }(Event.kryo)
       val g = StreamGraph.path(Seq(
         StreamVertex(0, OpSource(1), Nil, "Double", "Double", 1),
         StreamVertex(1, OpMap,

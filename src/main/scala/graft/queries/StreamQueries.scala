@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -30,10 +30,6 @@ object StreamQueries {
 
   private def ev(s: SparkSession, dir: String): DataFrame = Tables.events(s, dir)
 
-  /** The lowered graphs' event rows, kryo-encoded (keyed event rows are
-    * [[StreamingOps.keyedEvents]]). */
-  private val events: Encoder[Event[Any]] = Encoders.kryo[Event[Any]]
-
   /** Per-key stream order: event time with event_id as the deterministic
     * tiebreaker (reference streams are totally ordered lists). */
   private val byUser = Seq(col("user_id"))
@@ -50,7 +46,7 @@ object StreamQueries {
     filtered
       .select(col("ts"), col("value"))
       .as[(java.sql.Timestamp, Double)]
-      .map { case (ts, v) => Event(Some(ts), Some(v: Any)) }(events)
+      .map { case (ts, v) => Event(Some(ts), Some(v: Any)) }(Event.kryo)
   }
 
   /** The chunked events replay as a typed single stream of (event_id, value)
@@ -63,7 +59,7 @@ object StreamQueries {
       .filter(col("event_type") === onlyType)
       .select(col("ts"), col("event_id"), col("value"))
       .as[(java.sql.Timestamp, Long, Double)]
-      .map { case (ts, id, v) => Event(Some(ts), Some((id, v): Any)) }(events)
+      .map { case (ts, id, v) => Event(Some(ts), Some((id, v): Any)) }(Event.kryo)
   }
 
   /** The chunked events replay keyed by user, each event's value. */
@@ -372,7 +368,7 @@ object StreamQueries {
         .select(col("ts"), col("event_id"), col("value"),
           regexp_extract(col("props"), "\"k\": (\\d+)", 1).cast("long").as("k"))
         .as[(java.sql.Timestamp, Long, Double, Long)]
-        .map { case (ts, id, v, k) => Event(Some(ts), Some((id, v, k): Any)) }(events)
+        .map { case (ts, id, v, k) => Event(Some(ts), Some((id, v, k): Any)) }(Event.kryo)
       val lowered = StreamingLowering.lower(s, g, Map(0 -> src))(3)
       val typed = lowered.map { e =>
         val (id, v, _) = e.value.get.asInstanceOf[(Long, Double, Long)]
@@ -710,9 +706,10 @@ object StreamQueries {
       Gate.toParquet(joined, OutputMode.Append, "graft_stream_ij_", GateTuning.shardedStatePartitions)
     }),
 
-    // streamJoinW executed as a STREAMING aggregate→join chain (Spark 4
-    // chained stateful operators): both sides' tumbling-hour aggregates
-    // join on the window struct, append mode. A window pair emits once
+    // streamJoinW executed as ONE streaming aggregation over both sides
+    // (`StreamJoins.windowAggJoin`): per tumbling hour, each side's
+    // aggregate reads only that side's rows, and an hour with rows on both
+    // sides is a pair; append mode. A window pair emits once
     // the watermark passes its end; on the finite replay that is every
     // window ending at/before max(ts) − 1min — the oracle excludes the
     // rest identically. The batch form is q_join_w.
@@ -730,11 +727,12 @@ object StreamQueries {
 
     // streamJoinW with DIFFERING per-side window lengths — the reference's
     // flagship shape (Taxi Q2 joins a 15-min window against a 30-min window,
-    // Taxi.hs:299-305): 15-min click counts re-bucketed into the 30-min grid
-    // by a nested time window, joined against 30-min purchase sums. A pair
-    // emits once the watermark passes the COARSE window's end (which implies
-    // every contained fine window has closed); the oracle excludes later
-    // windows identically.
+    // Taxi.hs:299-305): 15-min click counts paired with the 30-min purchase
+    // sum of the 30-min window holding them, in one streaming aggregation
+    // grouped by (30-min window, 15-min slot). A pair emits once the
+    // watermark passes the COARSE window's end (which implies every
+    // contained fine window has closed); the oracle excludes later windows
+    // identically.
     "q_streaming_join_w2" -> ((s, dir) => {
       val base = Tables.streamEventsChunked(s, dir)
       val joined = graft.streaming.StreamJoins.windowAggJoin(
@@ -915,7 +913,7 @@ object StreamQueries {
         raw.filter(col("event_type") === t)
           .select(col("ts"), col("event_id"), col("value"))
           .as[(java.sql.Timestamp, Long, Double)]
-          .map { case (ts, id, v) => Event(Some(ts), Some((id, v): Any)) }(events)
+          .map { case (ts, id, v) => Event(Some(ts), Some((id, v): Any)) }(Event.kryo)
       val g = StreamGraph(
         Vector(
           StreamVertex(0, OpSource(1), Nil, "(Long,Double)", "(Long,Double)", 1),

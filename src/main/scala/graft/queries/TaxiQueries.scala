@@ -171,12 +171,12 @@ object TaxiQueries {
     // COMPOSED STREAMING FLAGSHIP #2 — the full Q2 pipeline (Taxi.hs:
     // 269-305: per-cell 15-min profit median vs per-cell 30-min empty-taxi
     // counts, window-level combination, profitability rank inputs) through
-    // ONE watermarked streaming query: TWO keyed windowed aggregates of
-    // DIFFERENT durations chained into a stream-stream join (Spark 4
-    // multi-stateful-operator support), exercising the keyed
-    // `windowAggJoin`. A (coarse-window, cell) pair emits once the
+    // ONE watermarked streaming query: keyed windowed aggregates of
+    // DIFFERENT durations over the two sides, paired per cell in one
+    // streaming aggregation (the keyed `windowAggJoin`; one stateful
+    // operator). A (coarse-window, cell) pair emits once the
     // watermark passes the coarse window's end — which implies every
-    // contained fine window closed too. Inner join (cells with both a
+    // contained fine window closed too. Inner pairing (cells with both a
     // profit and an empty-taxi reading — the cells Q2 actually ranks); the
     // oracle mirrors the pairing and subtracts windows the final replay
     // watermark (min of the two sides' max post-filter ts − 1 min, the min

@@ -2,13 +2,16 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Streaming windowed joins: the reference's `streamJoinE` (window both
   * sides, pair windows, theta-join within the pair —
   * `FunctionalProcessing.hs:161-173`) maps to Spark's stream-stream join
   * with event-time range constraints + watermarks: events join when their
   * event times fall in the same window-sized band, and the watermark bounds
-  * the buffered state on both sides. */
+  * the buffered state on both sides. `streamJoinW` (pair both sides' window
+  * aggregates) needs no join at all: it is one streaming aggregation over
+  * the union of the two sides, [[StreamJoins.windowAggJoin]]. */
 object StreamJoins {
 
   /** Stream-stream equi+interval join: rows join when keys match AND the
@@ -54,7 +57,7 @@ object StreamJoins {
   }
 
   /** `streamJoinW`-shaped streaming join: aggregate both sides per tumbling
-    * window, then join the window aggregates (window-level combination,
+    * window and pair the window aggregates (window-level combination,
     * `FunctionalProcessing.hs:175-178`). Equal-duration convenience form of
     * the two-duration overload below. */
   def windowAggJoin(left: DataFrame, right: DataFrame,
@@ -66,25 +69,33 @@ object StreamJoins {
 
   /** `streamJoinW` with DIFFERING per-side window lengths — the reference's
     * flagship use joins a 15-min window against a 30-min window (Taxi Q2,
-    * `examples/taxi/Taxi.hs:299-305`). Each side aggregates on its OWN
-    * tumbling grid; the finer side is then re-bucketed into the coarser grid
-    * with a nested time window (`window` over a window column buckets by
-    * `window_time` = end − 1µs, so a fine window maps to the unique coarse
-    * window containing it — exact because the coarser duration must be a
-    * multiple of the finer). The join key is the COARSE window, which both
-    * carries the event-time metadata Spark needs to bound join state by the
-    * watermark and is the pairing the reference's window-level combination
-    * produces. Output keeps `w` (the coarse window) plus the finer side's
-    * own window (`wl`/`wr`) for callers to project.
+    * `examples/taxi/Taxi.hs:299-305`) — as ONE streaming aggregation over
+    * both sides. Each side keeps its own watermark (Spark takes the min),
+    * is tagged with its side and unioned by name. Rows group by (coarse
+    * window, fine slot, keys…): a fine-side row falls in its own slot, a
+    * coarse-side row is fanned out to every slot of its coarse window (the
+    * coarser duration must be a multiple of the finer). Every aggregate call
+    * of a side is restricted to that side's rows with an aggregate FILTER
+    * ([[org.apache.spark.sql.graftbridge.Bridge.filterAggregates]]), so a
+    * side's aggregate never reads the other side's rows; one that cannot be
+    * restricted fails here. A group with rows from both sides and no null
+    * key is the inner join's pair (the reference's window-level
+    * combination). Output: `w` (the coarse window), the keys, the finer
+    * side's own window (`wl`/`wr`, rebuilt from the slot), then each side's
+    * aggregates, in the order and under the names of their columns; a side
+    * as coarse as the other has no window of its own.
     *
-    * Scale note: both aggregates are partial (map-side combine) before their
-    * window shuffle, and the join's state is one row per closed window per
-    * side — O(windows in the watermark horizon), not O(events).
+    * Timing: a pair emits once the watermark passes the end of its COARSE
+    * window, and an input row is dropped as late only once the watermark has
+    * passed its coarse window, so a fine-side row behind its own fine window
+    * still counts while its coarse window is open. Columns the two sides
+    * share by name become one column of the union, so they must have
+    * compatible types.
     *
-    * `keys` adds per-key grouping (Taxi Q2 aggregates per CELL per window,
-    * `Taxi.hs:269-305`): both sides group on (window, keys…) and the join
-    * pairs on (coarse window, keys…). The window stays in the join key, so
-    * the watermark state bound is unchanged; keys only refine the pairing. */
+    * Scale note: the aggregation is partial (map-side combine) before its
+    * shuffle, and its state is one row per (coarse window, slot, key) in the
+    * watermark horizon: O(windows × keys), not O(events). A coarse-side row
+    * is counted in each of its window's slots (2 for Taxi Q2). */
   def windowAggJoin(left: DataFrame, right: DataFrame,
                     tsLeft: String, tsRight: String,
                     durationLeft: String, durationRight: String,
@@ -93,20 +104,35 @@ object StreamJoins {
                     keys: Seq[String] = Nil): DataFrame = {
     val lMs = durationMs(durationLeft)
     val rMs = durationMs(durationRight)
-    val coarse = if (lMs >= rMs) durationLeft else durationRight
     require(math.max(lMs, rMs) % math.min(lMs, rMs) == 0,
       s"finer window must align into the coarser grid (got $durationLeft vs $durationRight)")
-    val la0 = left.withWatermark(tsLeft, watermark)
-      .groupBy(window(col(tsLeft), durationLeft).as("wl") +: keys.map(col): _*)
-      .agg(leftAggs.head, leftAggs.tail: _*)
-    val ra0 = right.withWatermark(tsRight, watermark)
-      .groupBy(window(col(tsRight), durationRight).as("wr") +: keys.map(col): _*)
-      .agg(rightAggs.head, rightAggs.tail: _*)
-    val la = if (lMs < rMs) la0.withColumn("w", window(col("wl"), coarse))
-             else la0.withColumnRenamed("wl", "w")
-    val ra = if (rMs < lMs) ra0.withColumn("w", window(col("wr"), coarse))
-             else ra0.withColumnRenamed("wr", "w")
-    la.join(ra, "w" +: keys)
+    val coarse = if (lMs >= rMs) durationLeft else durationRight
+    val fineUs = math.min(lMs, rMs) * 1000L
+    val slots = math.max(lMs, rMs) / math.min(lMs, rMs)
+    val start = unix_micros(col("__w.start"))
+    def tag(df: DataFrame, ts: String, side: Int, fine: Boolean): DataFrame = {
+      val slot = if (fine) floor((unix_micros(col(ts)) - start) / fineUs)
+                 else if (slots == 1) lit(0L) else explode(sequence(lit(0L), lit(slots - 1)))
+      df.withWatermark(ts, watermark).withColumn("__w", window(col(ts), coarse))
+        .withColumn("__side", lit(side)).withColumn("__slot", slot)
+    }
+    val sides = tag(left, tsLeft, 0, lMs < rMs)
+      .unionByName(tag(right, tsRight, 1, rMs < lMs), allowMissingColumns = true)
+      .filter(keys.map(col(_).isNotNull).foldLeft(lit(true))(_ && _))
+    def onSide(aggs: Seq[Column], side: Int) =
+      aggs.map(Bridge.filterAggregates(sides, _, col("__side") === side))
+    val grouped = sides.groupBy(col("__w") +: col("__slot") +: keys.map(col): _*)
+      .agg(min("__side").as("__lo"), max("__side").as("__hi") +: (onSide(leftAggs, 0) ++ onSide(rightAggs, 1)): _*)
+    // aggregate columns by position: two sides may name theirs alike
+    val named = grouped.columns.drop(keys.size + 4)
+    val paired = grouped.toDF(grouped.columns.take(keys.size + 4) ++ named.indices.map(i => s"__a$i"): _*)
+      .filter(col("__lo") < col("__hi"))
+    val fineW = struct(timestamp_micros(start + col("__slot") * fineUs).as("start"),
+      timestamp_micros(start + (col("__slot") + 1) * fineUs).as("end"))
+    def aggCols(from: Int, n: Int) = (from until from + n).map(i => col(s"__a$i").as(named(i)))
+    paired.select(Seq(col("__w").as("w")) ++ keys.map(col) ++
+      (if (lMs < rMs) Seq(fineW.as("wl")) else Nil) ++ aggCols(0, leftAggs.size) ++
+      (if (rMs < lMs) Seq(fineW.as("wr")) else Nil) ++ aggCols(leftAggs.size, rightAggs.size): _*)
   }
 
   /** Fixed-length interval string ("15 minutes") → milliseconds. Month-based

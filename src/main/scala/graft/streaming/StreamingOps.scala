@@ -127,7 +127,7 @@ object StreamingOps {
     * kryo-encoded. Every keyed operator reads these rows, and the ones
     * that emit events emit them. */
   def keyedEvents[K, A](implicit encK: Encoder[K]): Encoder[(K, Event[A])] =
-    Encoders.tuple(encK, Encoders.kryo[Event[A]])
+    Encoders.tuple(encK, Event.kryo.asInstanceOf[Encoder[Event[A]]]) // kryo sees only the erased class
 
   /** A caller-typed state, kryo-encoded as `Any`, the encoding of the
     * lowered graphs' state slots. `Encoders.kryo[S]` would reject a

@@ -6,12 +6,13 @@ log (one JSON event per line). Usage:
 Prints, for every completed stage of a streaming micro-batch, its task count
 and duration; for every trigger, its input rows, `triggerExecution`,
 `addBatch` and state commit durations, and its state operators' summed
-`numRowsTotal` and `memoryUsedBytes`; then, over all triggers of the log:
-the medians of stages and tasks per trigger, of the trigger's
-`triggerExecution`, `addBatch` and `queryPlanning` durations and its state
-operators' summed `commitTimeMs`; and the median start offset of a
-micro-batch's jobs from the start of their trigger, with the median job
-duration. Turn the log on for one run with
+`numRowsTotal` and `memoryUsedBytes`; then one row of medians per streaming
+query, in the order the queries first triggered, each labelled with its id
+and its state operators' names: triggers, the stages and tasks per trigger,
+the trigger's `triggerExecution`, `addBatch` and `queryPlanning` durations,
+its state operators' summed `commitTimeMs`, the start offset of a
+micro-batch's jobs from the start of their trigger, and the job duration.
+Turn the log on for one run with
 `-Dspark.eventLog.enabled=true -Dspark.eventLog.dir=file:///...` and
 decompress it with `zstd -dc`.
 """
@@ -69,6 +70,34 @@ def read(lines):
     return stages, jobs, triggers
 
 
+MEDIANS_HEADER = ("trigs  stages  tasks  trigger_ms  addBatch_ms  planning_ms  "
+                  "commit_ms  job_offset_ms  job_ms")
+
+
+def kind(progress):
+    """A query's state operators' names in plan order ("stateless" for none),
+    e.g. "symmetricHashJoin+stateStoreSave*2"."""
+    names = [o.get("operatorName", "?") for o in progress["stateOperators"]]
+    seen = list(dict.fromkeys(names))
+    return "+".join(n if names.count(n) == 1 else f"{n}*{names.count(n)}" for n in seen) or "stateless"
+
+
+def medians(trigs, triggers, per_trigger, jobs):
+    """One row of medians over the triggers `trigs`."""
+    ps = [triggers[t] for t in trigs]
+    shapes = [per_trigger[t] for t in trigs if t in per_trigger]
+    commits = [sum(o["commitTimeMs"] for o in p["stateOperators"]) for p in ps if p["stateOperators"]]
+    mine = set(trigs)
+    offsets = [submitted - epoch_ms(triggers[trig]["timestamp"])
+               for trig, submitted, _ in jobs.values() if trig in mine]
+    job_ms = [ms for trig, _, ms in jobs.values() if trig in mine]
+    d = [median([p["durationMs"].get(k, 0) for p in ps])
+         for k in ("triggerExecution", "addBatch", "queryPlanning")]
+    return (f"{len(ps):5d}  {median([n for n, _ in shapes]):6.1f}  {median([t for _, t in shapes]):5.1f}  "
+            f"{d[0]:10.1f}  {d[1]:11.1f}  {d[2]:11.1f}  {median(commits):9.1f}  "
+            f"{median(offsets):13.1f}  {median(job_ms):6.1f}")
+
+
 def main(argv):
     src = sys.stdin if len(argv) < 2 or argv[1] == "-" else open(argv[1])
     with src:
@@ -89,17 +118,12 @@ def main(argv):
         n, t = per_trigger.get(trig, (0, 0))
         per_trigger[trig] = (n + 1, t + tasks)
     print(f"\n{len(triggers)} triggers, {len(per_trigger)} with a job")
-    print(f"stages per trigger   median {median([n for n, _ in per_trigger.values()])}")
-    print(f"tasks per trigger    median {median([t for _, t in per_trigger.values()])}")
-    ps = list(triggers.values())
-    for k in ("triggerExecution", "addBatch", "queryPlanning"):
-        print(f"{k + ' ms':20s} median {median([p['durationMs'].get(k, 0) for p in ps])}")
-    commits = [sum(o["commitTimeMs"] for o in p["stateOperators"]) for p in ps if p["stateOperators"]]
-    print(f"{'commitTimeMs':20s} median {median(commits)}")
-    offsets = [submitted - epoch_ms(triggers[trig]["timestamp"])
-               for trig, submitted, _ in jobs.values() if trig in triggers]
-    print(f"job start offset ms  median {median(offsets)}")
-    print(f"job ms               median {median([ms for _, _, ms in jobs.values()])}")
+    by_query = {}
+    for trig, p in sorted(triggers.items(), key=lambda kv: kv[1]["timestamp"]):
+        by_query.setdefault(p["id"], []).append(trig)
+    print(f"\n{'query  state operators':44s}  {MEDIANS_HEADER}")
+    for qid, trigs in by_query.items():
+        print(f"{qid[:8] + ' ' + kind(triggers[trigs[0]]):44s}  {medians(trigs, triggers, per_trigger, jobs)}")
     return 0
 
 
