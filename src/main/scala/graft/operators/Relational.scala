@@ -30,9 +30,6 @@ object Relational {
   def evalOnce(df: DataFrame, fields: Column, keep: Column*): DataFrame =
     df.select(keep :+ inline(array(fields)): _*)
 
-  /** Deterministic intra-key ordering: event time plus a tiebreaker. */
-  def ordering(time: Column, tiebreak: Column*): Seq[Column] = time +: tiebreak
-
   /** Portable fixed-point rounding: `floor(x·10ⁿ + 0.5) / 10ⁿ`. Unlike
     * `round()` (whose tie-breaking differs between Spark's BigDecimal
     * HALF_UP and DuckDB's C-double rounding — observed flips on exact

@@ -21,9 +21,10 @@ import graft.core.WindowMakers.WindowMaker
   * executes but is opaque to Catalyst by construction.
   *
   * The operators are [[graft.core.StreamOps]]' typed ones at payload type
-  * `Any`; only Expand (which also passes a non-list value through) and
-  * Merge (`streamMerge` sorts on a `time` column, and kryo rows have one
-  * binary column) are written here.
+  * `Any`; Expand (which also passes a non-list value through) takes
+  * [[StreamingLowering]]'s per-event step, and only Merge (`streamMerge`
+  * sorts on a `time` column, and kryo rows have one binary column) is
+  * written here.
   */
 object Lowering {
 
@@ -46,14 +47,7 @@ object Lowering {
         case OpSink      => in0
         case OpMap       => in0.streamMap(v.params.head.fn.asInstanceOf[Any => Any])
         case OpFilter(_) => in0.streamFilter(v.params.head.fn.asInstanceOf[Any => Boolean])
-        case OpExpand =>
-          in0.flatMap { e =>
-            e.value match {
-              case Some(vs: Seq[_]) => vs.map(x => Event(e.time, Some(x: Any)))
-              case Some(other)      => Seq(Event(e.time, Some(other)))
-              case None             => Seq(Event[Any](e.time, None))
-            }
-          }
+        case OpExpand    => in0.flatMap(StreamingLowering.expandEvent)
         case OpFilterAcc(_) =>
           in0.streamFilterAcc(v.params(0).fn.asInstanceOf[(Any, Any) => Any], v.params(1).fn)(
             v.params(2).fn.asInstanceOf[(Any, Any) => Boolean])

@@ -118,7 +118,7 @@ object StreamingLowering {
       case other    => throw new IllegalStateException(s"not a stateless operator: $other")
     }
 
-  private def expandEvent(e: Event[Any]): Seq[Event[Any]] = e.value match {
+  private[plans] def expandEvent(e: Event[Any]): Seq[Event[Any]] = e.value match {
     case Some(vs: Seq[_]) => vs.map(x => Event(e.time, Some(x: Any)))
     case Some(other)      => Seq(Event(e.time, Some(other)))
     case None             => Seq(Event[Any](e.time, None))

@@ -45,6 +45,32 @@ object TaxiQueries {
       .drop("__k")
   }
 
+  /** Q1's journeys (`Taxi.hs:172-176`): each event's pickup and dropoff
+    * cells, kept when both lie in the Q1 grid. */
+  private def q1Journeys(events: DataFrame): DataFrame =
+    withGeo(events)
+      .select(col("ts"),
+        Taxi.cellLatQ1(col("p_lat")).as("s_clat"), Taxi.cellLonQ1(col("p_lon")).as("s_clon"),
+        Taxi.cellLatQ1(col("d_lat")).as("e_clat"), Taxi.cellLonQ1(col("d_lon")).as("e_clon"))
+      .filter(Taxi.inRangeQ1(col("s_clat"), col("s_clon")) &&
+              Taxi.inRangeQ1(col("e_clat"), col("e_clon")))
+
+  /** Q1's per-route journey counts per 30-min tumbling window. A streaming
+    * caller passes its journeys already watermarked. */
+  private def q1Counts(journeys: DataFrame): DataFrame =
+    journeys
+      .groupBy(window(col("ts"), "30 minutes").as("w"),
+        col("s_clat"), col("s_clon"), col("e_clat"), col("e_clon"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("w.start").as("window_start"), col("s_clat"), col("s_clon"),
+        col("e_clat"), col("e_clon"), col("n"))
+
+  /** Q1's exact top-10 routes per window by frequency, with a deterministic
+    * tiebreak on the cells. */
+  private def q1Top10(counts: DataFrame): DataFrame =
+    Relational.topKPerGroup(counts, 10, Seq(col("window_start")),
+      Seq(col("n").desc, col("s_clat"), col("s_clon"), col("e_clat"), col("e_clon")))
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // toCell + inRange (Taxi.hs:98-118): map to Q1 cells, drop out-of-grid.
@@ -59,22 +85,7 @@ object TaxiQueries {
 
     // Q1 frequent routes (Taxi.hs:172-178): per 30-min window, exact top-10
     // routes by frequency, deterministic tiebreak.
-    "q_taxi_q1" -> ((s, dir) => {
-      val journeys = withGeo(Tables.events(s, dir))
-        .select(col("ts"),
-          Taxi.cellLatQ1(col("p_lat")).as("s_clat"), Taxi.cellLonQ1(col("p_lon")).as("s_clon"),
-          Taxi.cellLatQ1(col("d_lat")).as("e_clat"), Taxi.cellLonQ1(col("d_lon")).as("e_clon"))
-        .filter(Taxi.inRangeQ1(col("s_clat"), col("s_clon")) &&
-                Taxi.inRangeQ1(col("e_clat"), col("e_clon")))
-      val counts = journeys
-        .groupBy(window(col("ts"), "30 minutes").as("w"),
-          col("s_clat"), col("s_clon"), col("e_clat"), col("e_clon"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("w.start").as("window_start"), col("s_clat"), col("s_clon"),
-          col("e_clat"), col("e_clon"), col("n"))
-      Relational.topKPerGroup(counts, 10, Seq(col("window_start")),
-        Seq(col("n").desc, col("s_clat"), col("s_clon"), col("e_clat"), col("e_clon")))
-    }),
+    "q_taxi_q1" -> ((s, dir) => q1Top10(q1Counts(q1Journeys(Tables.events(s, dir))))),
 
     // Q2's empty-taxi logic, faithfully shaped
     // (newestPickup/taxisDroppedOffandNotPickedUp, Taxi.hs:257-287): a
@@ -147,23 +158,11 @@ object TaxiQueries {
       // measured: both placements yield the identical final watermark. The
       // oracle therefore keys its closed-window horizon on max(journey ts),
       // the semantics Spark actually executes.
-      val journeys = withGeo(Tables.streamEventsChunked(s, dir))
-        .select(col("ts"),
-          Taxi.cellLatQ1(col("p_lat")).as("s_clat"), Taxi.cellLonQ1(col("p_lon")).as("s_clon"),
-          Taxi.cellLatQ1(col("d_lat")).as("e_clat"), Taxi.cellLonQ1(col("d_lon")).as("e_clon"))
-        .filter(Taxi.inRangeQ1(col("s_clat"), col("s_clon")) &&
-                Taxi.inRangeQ1(col("e_clat"), col("e_clon")))
-      val counts = journeys.withWatermark("ts", "1 minute")
-        .groupBy(window(col("ts"), "30 minutes").as("w"),
-          col("s_clat"), col("s_clon"), col("e_clat"), col("e_clon"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("w.start").as("window_start"), col("s_clat"), col("s_clon"),
-          col("e_clat"), col("e_clon"), col("n"))
+      val counts = q1Counts(
+        q1Journeys(Tables.streamEventsChunked(s, dir)).withWatermark("ts", "1 minute"))
       val gateDir = graft.core.TempDirs.create("graft_stream_taxi1_").toAbsolutePath
       Gate.run(counts, OutputMode.Append, gateDir, GateTuning.shardedStatePartitions) { (b, batchId) =>
-        val top = Relational.topKPerGroup(b, 10, Seq(col("window_start")),
-          Seq(col("n").desc, col("s_clat"), col("s_clon"), col("e_clat"), col("e_clon")))
-        Gate.writeBatch(OutputMode.Append, gateDir)(top, batchId)
+        Gate.writeBatch(OutputMode.Append, gateDir)(q1Top10(b), batchId)
       }
       Gate.readBack(s, gateDir)
     }),

@@ -613,44 +613,51 @@ class StreamingLoweringSpec extends SparkSuite {
   }
 
   test("fused fold re-verifies periodically, catching input-dependent divergence") {
-    // A closure that agrees with the fold on every window EXCEPT ones
+    // Closures that agree with their fold on every window EXCEPT ones
     // whose first payload is the marker -1.0: the first-window check
     // passes, a divergent window BETWEEN rechecks slips through (the
     // documented residual), and a divergent window landing ON a recheck
     // is caught — bounding silent divergence to one recheck period.
     val marker = -1.0
-    val lying = (v: Any) => {
+    val countAndSum = (v: Any) => {
       val vs = v.asInstanceOf[List[Any]].map(_.asInstanceOf[Double])
       var n = 0L; var sum = 0.0
       vs.foreach { x => n += 1; sum += x }
       if (vs.headOption.contains(marker)) (n, sum * 2): Any else (n, sum): Any
     }
-    val chain = List(
-      StreamVertex(2, OpFilter(0.99), List(Param("nonEmpty",
-        (v: Any) => v.asInstanceOf[List[Any]].nonEmpty)), "[Double]", "[Double]", 1),
-      StreamVertex(3, OpMap, List(Param("countAndSum", lying)), "[Double]", "(Long,Double)", 1))
-    val emitter = StreamingLowering.chainEmit(chain)
-    def window(vs: Double*): Option[Event[Any]] = {
-      val evs: Array[Event[Any]] =
-        vs.zipWithIndex.map { case (v, i) => Event.data(1000L * i, v: Any) }.toArray
-      emitter.fromRange(evs, evs.map(_.isData), vs.toArray, 0, evs.length)
+    val max = (v: Any) => {
+      val vs = v.asInstanceOf[List[Any]].map(_.asInstanceOf[Double])
+      if (vs.headOption.contains(marker)) vs.max * 2: Any else vs.max: Any
     }
-    // call 1: honest — the first-window recheck passes
-    assert(window(1.0, 2.0).isDefined)
-    // call 2: divergent but between rechecks — the fold's own (correct)
-    // arithmetic is emitted; no error (the documented residual)
-    assert(window(marker).exists(
-      _.value.contains((1L, marker): Any)))
-    // calls 3..recheckEvery: honest folds, draining the recheck counter
-    // (call 1's recheck armed it at N-1; the marker call spent one)
-    (0L until (StreamingLowering.FusedFoldRecheckEvery - 2)).foreach { _ =>
-      assert(window(3.0).isDefined)
+    // (name, lying closure, the fold's own value on the marker window)
+    for ((name, lying, onMarker) <- Seq(
+        ("countAndSum", countAndSum, (1L, marker): Any), ("max", max, marker: Any))) {
+      val chain = List(
+        StreamVertex(2, OpFilter(0.99), List(Param("nonEmpty",
+          (v: Any) => v.asInstanceOf[List[Any]].nonEmpty)), "[Double]", "[Double]", 1),
+        StreamVertex(3, OpMap, List(Param(name, lying)), "[Double]", "x", 1))
+      val emitter = StreamingLowering.chainEmit(chain)
+      def window(vs: Double*): Option[Event[Any]] = {
+        val evs: Array[Event[Any]] =
+          vs.zipWithIndex.map { case (v, i) => Event.data(1000L * i, v: Any) }.toArray
+        emitter.fromRange(evs, evs.map(_.isData), vs.toArray, 0, evs.length)
+      }
+      // call 1: honest — the first-window recheck passes
+      assert(window(1.0, 2.0).isDefined, name)
+      // call 2: divergent but between rechecks — the fold's own (correct)
+      // arithmetic is emitted; no error (the documented residual)
+      assert(window(marker).exists(_.value.contains(onMarker)), name)
+      // calls 3..recheckEvery: honest folds, draining the recheck counter
+      // (call 1's recheck armed it at N-1; the marker call spent one)
+      (0L until (StreamingLowering.FusedFoldRecheckEvery - 2)).foreach { _ =>
+        assert(window(3.0).isDefined, name)
+      }
+      // next call lands on the periodic recheck: divergence now detected
+      val err = intercept[IllegalStateException] {
+        window(marker)
+      }
+      assert(err.getMessage.contains(s"fused '$name' fold disagrees"), err.getMessage)
     }
-    // next call lands on the periodic recheck: divergence now detected
-    val err = intercept[IllegalStateException] {
-      window(marker)
-    }
-    assert(err.getMessage.contains("fused 'countAndSum' fold disagrees"))
   }
 
   test("generalized fold algebra matches the canonical closures on every recognized name") {
@@ -700,37 +707,5 @@ class StreamingLoweringSpec extends SparkSuite {
           s"$name fromRange on $w")
       }
     }
-  }
-
-  test("a lying recognized fold closure is caught by the fromRange periodic recheck") {
-    val lyingMax = (v: Any) => {
-      val vs = v.asInstanceOf[List[Any]].map(_.asInstanceOf[Double])
-      if (vs.headOption.contains(-1.0)) vs.max * 2 else vs.max
-    }
-    val chain = List(
-      StreamVertex(2, OpFilter(0.99), List(Param("nonEmpty",
-        (v: Any) => v.asInstanceOf[List[Any]].nonEmpty)), "[Double]", "[Double]", 1),
-      StreamVertex(3, OpMap, List(Param("max", lyingMax)), "[Double]", "Double", 1))
-    val em = StreamingLowering.chainEmit(chain)
-    def range(vs: Double*): (Array[Event[Any]], Array[Boolean], Array[Double]) = {
-      val evs: Array[Event[Any]] =
-        vs.zipWithIndex.map { case (v, i) => Event.data(1000L * i, v: Any) }.toArray
-      (evs, evs.map(_ => true), vs.toArray)
-    }
-    // window 1 honest: the arming recheck passes
-    val (e1, d1, v1) = range(1.0, 2.0)
-    assert(em.fromRange(e1, d1, v1, 0, 2).isDefined)
-    // divergent window between rechecks: fold's own (correct) max emitted
-    val (e2, d2, v2) = range(-1.0)
-    assert(em.fromRange(e2, d2, v2, 0, 1).exists(_.value.contains(-1.0: Any)))
-    // drain the counter with honest windows
-    (0L until (StreamingLowering.FusedFoldRecheckEvery - 2)).foreach { _ =>
-      val (e, d, v) = range(3.0)
-      assert(em.fromRange(e, d, v, 0, 1).isDefined)
-    }
-    // next window lands on the recheck: divergence detected
-    val (e3, d3, v3) = range(-1.0)
-    val err = intercept[IllegalStateException] { em.fromRange(e3, d3, v3, 0, 1) }
-    assert(err.getMessage.contains("fused 'max' fold disagrees"))
   }
 }

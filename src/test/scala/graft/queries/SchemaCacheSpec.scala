@@ -1,14 +1,11 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, StringType}
 
@@ -18,32 +15,13 @@ import graft.{ListenerFence, ProcessStarts, SparkSuite}
   * and inference-conf setting, and still builds a fresh relation per call. */
 class SchemaCacheSpec extends SparkSuite {
 
-  /** Spark jobs started while `body` runs, fenced on both sides by
-    * [[ListenerFence]]. */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val started = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (!ListenerFence.isFence(e.properties)) started.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      ListenerFence.await(sc)
-      started.set(0)
-      body
-      ListenerFence.await(sc)
-      started.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   private def freshDir(): String = graft.core.TempDirs.create("graft_schema_cache_").toString
 
   test("a second read of an unchanged table starts no Spark job") {
     val dir = freshDir()
     spark.range(10).toDF("a").write.parquet(s"$dir/t.parquet")
     assert(Tables.table(spark, dir, "t").columns.toSeq == Seq("a"))
-    val jobs = jobsStartedBy {
+    val jobs = ListenerFence.jobsStartedBy(spark.sparkContext) {
       val again = Tables.table(spark, dir, "t")
       assert(again.schema.fieldNames.toSeq == Seq("a"))
     }
