@@ -612,52 +612,59 @@ class StreamingLoweringSpec extends SparkSuite {
     assert(spark.table("slower_complete").count() == 0)
   }
 
+  // One recheck body, run for two recognized aggregates. Each closure
+  // agrees with its fold on every window EXCEPT ones whose first payload
+  // is the marker -1.0: the first-window check passes, a divergent window
+  // BETWEEN rechecks slips through (the documented residual), and a
+  // divergent window landing ON a recheck is caught — bounding silent
+  // divergence to one recheck period.
+  private val recheckMarker = -1.0
+
+  private def assertPeriodicRecheck(name: String, lying: Any => Any, onMarker: Any): Unit = {
+    val marker = recheckMarker
+    val chain = List(
+      StreamVertex(2, OpFilter(0.99), List(Param("nonEmpty",
+        (v: Any) => v.asInstanceOf[List[Any]].nonEmpty)), "[Double]", "[Double]", 1),
+      StreamVertex(3, OpMap, List(Param(name, lying)), "[Double]", "x", 1))
+    val emitter = StreamingLowering.chainEmit(chain)
+    def window(vs: Double*): Option[Event[Any]] = {
+      val evs: Array[Event[Any]] =
+        vs.zipWithIndex.map { case (v, i) => Event.data(1000L * i, v: Any) }.toArray
+      emitter.fromRange(evs, evs.map(_.isData), vs.toArray, 0, evs.length)
+    }
+    // call 1: honest — the first-window recheck passes
+    assert(window(1.0, 2.0).isDefined, name)
+    // call 2: divergent but between rechecks — the fold's own (correct)
+    // arithmetic is emitted; no error (the documented residual)
+    assert(window(marker).exists(_.value.contains(onMarker)), name)
+    // calls 3..recheckEvery: honest folds, draining the recheck counter
+    // (call 1's recheck armed it at N-1; the marker call spent one)
+    (0L until (StreamingLowering.FusedFoldRecheckEvery - 2)).foreach { _ =>
+      assert(window(3.0).isDefined, name)
+    }
+    // next call lands on the periodic recheck: divergence now detected
+    val err = intercept[IllegalStateException] {
+      window(marker)
+    }
+    assert(err.getMessage.contains(s"fused '$name' fold disagrees"), err.getMessage)
+  }
+
   test("fused fold re-verifies periodically, catching input-dependent divergence") {
-    // Closures that agree with their fold on every window EXCEPT ones
-    // whose first payload is the marker -1.0: the first-window check
-    // passes, a divergent window BETWEEN rechecks slips through (the
-    // documented residual), and a divergent window landing ON a recheck
-    // is caught — bounding silent divergence to one recheck period.
-    val marker = -1.0
     val countAndSum = (v: Any) => {
       val vs = v.asInstanceOf[List[Any]].map(_.asInstanceOf[Double])
       var n = 0L; var sum = 0.0
       vs.foreach { x => n += 1; sum += x }
-      if (vs.headOption.contains(marker)) (n, sum * 2): Any else (n, sum): Any
+      if (vs.headOption.contains(recheckMarker)) (n, sum * 2): Any else (n, sum): Any
     }
+    assertPeriodicRecheck("countAndSum", countAndSum, (1L, recheckMarker): Any)
+  }
+
+  test("a lying recognized fold closure is caught by the fromRange periodic recheck") {
     val max = (v: Any) => {
       val vs = v.asInstanceOf[List[Any]].map(_.asInstanceOf[Double])
-      if (vs.headOption.contains(marker)) vs.max * 2: Any else vs.max: Any
+      if (vs.headOption.contains(recheckMarker)) vs.max * 2: Any else vs.max: Any
     }
-    // (name, lying closure, the fold's own value on the marker window)
-    for ((name, lying, onMarker) <- Seq(
-        ("countAndSum", countAndSum, (1L, marker): Any), ("max", max, marker: Any))) {
-      val chain = List(
-        StreamVertex(2, OpFilter(0.99), List(Param("nonEmpty",
-          (v: Any) => v.asInstanceOf[List[Any]].nonEmpty)), "[Double]", "[Double]", 1),
-        StreamVertex(3, OpMap, List(Param(name, lying)), "[Double]", "x", 1))
-      val emitter = StreamingLowering.chainEmit(chain)
-      def window(vs: Double*): Option[Event[Any]] = {
-        val evs: Array[Event[Any]] =
-          vs.zipWithIndex.map { case (v, i) => Event.data(1000L * i, v: Any) }.toArray
-        emitter.fromRange(evs, evs.map(_.isData), vs.toArray, 0, evs.length)
-      }
-      // call 1: honest — the first-window recheck passes
-      assert(window(1.0, 2.0).isDefined, name)
-      // call 2: divergent but between rechecks — the fold's own (correct)
-      // arithmetic is emitted; no error (the documented residual)
-      assert(window(marker).exists(_.value.contains(onMarker)), name)
-      // calls 3..recheckEvery: honest folds, draining the recheck counter
-      // (call 1's recheck armed it at N-1; the marker call spent one)
-      (0L until (StreamingLowering.FusedFoldRecheckEvery - 2)).foreach { _ =>
-        assert(window(3.0).isDefined, name)
-      }
-      // next call lands on the periodic recheck: divergence now detected
-      val err = intercept[IllegalStateException] {
-        window(marker)
-      }
-      assert(err.getMessage.contains(s"fused '$name' fold disagrees"), err.getMessage)
-    }
+    assertPeriodicRecheck("max", max, recheckMarker: Any)
   }
 
   test("generalized fold algebra matches the canonical closures on every recognized name") {
